@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -105,17 +104,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     val barriers = sys.env.get("SPARK_GRAFT_BENCH_BARRIERS")
-      .forall(v => parseBool(v, "SPARK_GRAFT_BENCH_BARRIERS"))
+      .forall(v => Session.parseBool(v, "SPARK_GRAFT_BENCH_BARRIERS"))
     // Bench knob for the production-hash variant (default: oracle md5).
     // Validated here, once, at startup: PortableHash.enabled calls
     // String.toBoolean, so an unvalidated "1"/"yes" would otherwise
     // surface as an IllegalArgumentException inside EVERY
     // hash-consulting query at plan-build time.
     val prodHash = sys.env.get("SPARK_GRAFT_PRODUCTION_HASH")
-      .map(v => parseBool(v, "SPARK_GRAFT_PRODUCTION_HASH"))
+      .map(v => Session.parseBool(v, "SPARK_GRAFT_PRODUCTION_HASH"))
     // Dev-only knob: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run to
     // the named queries — for iterating on one query's cost without
     // paying the full-suite wall clock. The driver never sets it.
@@ -141,23 +140,14 @@ object Bench {
     // unset = Spark's default sizing (right on a real cluster's
     // per-executor heaps).
     val pageBytes = sys.env.get("SPARK_GRAFT_PAGE_BYTES")
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Note: an initialPartitionNum=8×cores + AQE-coalesce variant was
-      // MEASURED and rejected (r12): it OOM'd dedup_containment at sf10
-      // and slowed rel_dominant_supplier 25→30 s — the spill relief for
-      // wide aggregates came from restructuring the operators instead
-      // (see containment's in-bucket verification).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    maxPartitionBytes.foreach(b =>
-      builder.config("spark.sql.files.maxPartitionBytes", b.toLong))
-    pageBytes.foreach(b =>
-      builder.config("spark.buffer.pageSize", b.toLong))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Note: an initialPartitionNum=8×cores + AQE-coalesce variant was
+    // MEASURED and rejected (r12): it OOM'd dedup_containment at sf10
+    // and slowed rel_dominant_supplier 25→30 s — the spill relief for
+    // wide aggregates came from restructuring the operators instead
+    // (see containment's in-bucket verification).
+    val spark = Session("graft-bench", cpus,
+      maxPartitionBytes.map("spark.sql.files.maxPartitionBytes" -> _.toLong.toString).toMap ++
+        pageBytes.map("spark.buffer.pageSize" -> _.toLong.toString))
     prodHash.foreach(b =>
       spark.conf.set(graft.functions.PortableHash.ConfKey, b.toString))
 
@@ -189,14 +179,11 @@ object Bench {
       listener.reset()
       HeapPeak.reset()
       // Scoped conf overrides (wide-agg reduce partitions ∝ data):
-      // set around this query only, restored below — plans are built
+      // set around this query only, then restored — plans are built
       // lazily inside materialize(), so the override is live at
       // planning time for every sample.
-      val overrides = SparkEntry.queryConfs(name, sfDir, cpus.toInt)
-      val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
       val times =
-        try {
+        try Session.withScopedConf(spark, SparkEntry.queryConfs(name, sfDir, cpus)) {
           (1 to iters).map { _ =>
             // Per-SAMPLE cache barrier: internally-persisted frames are
             // deduped by logical plan in the CacheManager, so without
@@ -210,9 +197,6 @@ object Bench {
         } catch { case e: Throwable =>
           errors :+= (name -> String.valueOf(e.getMessage).take(200))
           Vector.empty[Double]
-        } finally saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
         }
       metrics :+= (name -> (listener.snapshot() :+
         ("peak_heap" -> HeapPeak.peakBytes)))
@@ -277,17 +261,4 @@ object Bench {
     Console.out.println(line)
     Console.out.flush()
   }
-
-  /** Lenient-but-fail-fast boolean env parsing: 1/true/yes/on and
-    * 0/false/no/off (case-insensitive); anything else aborts at startup
-    * with the offending name, instead of per-query plan-time errors.
-    */
-  private def parseBool(v: String, name: String): Boolean =
-    v.trim.toLowerCase(java.util.Locale.ROOT) match {
-      case "1" | "true" | "yes" | "on" => true
-      case "0" | "false" | "no" | "off" => false
-      case other =>
-        throw new IllegalArgumentException(
-          s"$name must be a boolean (1/true/yes/on or 0/false/no/off), got: '$other'")
-    }
 }

@@ -30,16 +30,9 @@ object ChiSquareCli {
     }.toMap
     val k = opts.get("--k").map(_.toInt).getOrElse(ChiSquarePipeline.DefaultK)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-chi-square")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER points the job at a cluster; unset, it runs local.
+    implicit val spark: SparkSession = Session("graft-chi-square",
+      conf = sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
 
     val stopwords = opts.get("--stopwords")
       .map(p => ReviewSource.loadStopwords(spark, p))

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes docs/PLANS.md: the formatted physical plan of each headline
   * query plus the scale-relevant observations to look for in it. Run
   * after plan-affecting changes: `sbt "runMain graft.PlanDump"`.
@@ -71,14 +69,7 @@ object PlanDump {
       "Correlated subquery (qty < 0.2x the part's avg) decorrelated into sum/count windows over ONE l_partkey exchange - lineitem is scanned once where the textbook aggregate+join-back scans and shuffles it twice (RelationalSpec pins the one-scan shape); the predicate stays in exact integer-valued DECIMAL (5*qty*cnt < sum), and the part join is unhinted so AQE broadcasts at fixture scale / shuffles on the already-partitioned key at full scale.")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-plandump")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
 
     val sb = new StringBuilder
@@ -92,45 +83,24 @@ object PlanDump {
         |The registry contract is lazy-at-build: constructing a query's
         |DataFrame (what `explain` does) schedules no Spark job beyond the
         |parquet footer read every `spark.read.parquet` performs. The
-        |entries below are deliberate exceptions — each runs a BOUNDED
-        |collect at build time, so `explain`/`queries(name)(...)` on them
-        |executes Spark work. Three of them (`dedup_near_apply`,
-        |`dedup_cluster_sizes`, `chi2_streaming_replay`) are MEMOIZED per
-        |fixture dir: eager on the first build, zero jobs on every later
-        |build of the same fixture. RegistrySpec listener-counts
-        |build-time jobs and fails if this table drifts in either
-        |direction.
+        |entries below are the exceptions each family module declares in
+        |its `specs` map, and this table is generated from them. `Eager`
+        |entries run a bounded job at every build, so `explain` on them
+        |executes Spark work; `Memoized` entries run theirs once per
+        |(app, fixture dir), and later builds of the same fixture schedule
+        |nothing. RegistrySpec listener-counts build-time jobs and fails if
+        |the declarations drift in either direction.
         |
-        || Entry | What it collects at build | Bound |
-        ||---|---|---|
-        || `dedup_bucket_stats` | the 3-row cap-audit summary (result re-entered as a local frame so no state survives the return) | 3 rows |
-        || `chi2_streaming_replay` | nothing collected — the maintainer replay (NumReplayBatches mergeBatch rounds) WRITES the versioned count store (vocabulary-sized, KBs) ONCE per fixture dir behind a completion marker; later builds read the existing store | ≤ 2 vocabulary-sized snapshots |
-        || `dedup_near_apply` | NOTHING to the driver — the FIXPOINT label-propagation rounds run as Spark jobs on first build per fixture (`nearDupLabels`: edges + each round's node-bounded label table materialized via `localCheckpoint`/reliable `checkpoint`, convergence decided by a changed-flag probe over the fresh blocks); the final labels enter one corpus left-join lazily, and the label table is cached per (app, dir) | O(log diameter)+1 distributed jobs on first build; labels ≤ 2·pairs nodes |
-        || `dedup_cluster_sizes` | the SAME cached label pass (zero extra chain work after near_apply, or vice versa); the histogram is two bounded aggregates on executors | same |
-        || `dedup_source_overlap` | the (src_a, src_b) presence/co-presence counts off ONE corpus scan (shk-keyed collect_set + in-array pair expansion — a distinct+self-join formulation planned the corpus subtree four times); the dense grid + Jaccard assemble on the driver | ≤ sources² rows |
-        || `dedup_decontaminate_bloom` | the bloom sketch over the eval side's distinct shingle keys, re-entered as a foldable literal predicate on the corpus scan (false positives removed by the exact semi-join, so the result is hash-identical to `dedup_decontaminate`) | DecontamBloomKeys·10 bits ≈ 1.3 MB |
-        || `sim_ann_recall` | the exact top-k side input both ANN variants are scored against | NumQueries·TopK = 50 rows |
-        || `sim_cosine_ann_ivf` | the `vec_id < TrainN` training sample for driver-side Lloyd (centroids re-enter the plan as literals) | ≤256 rows × 64 doubles |
-        || `sim_cosine_ann_pq` | the same IVF training sample, feeding BOTH the coarse quantizer and the 8 per-subspace PQ codebooks (all re-enter as literals) | ≤256 rows × 64 doubles |
-        || `sim_semdedup` | the same IVF training sample (cell assignment embeds the trained centroids as literals) | ≤256 rows × 64 doubles |
-        || `sim_bucket_stats` | the same IVF training sample, for the `ivf_cell` cap-audit row's cell assignment | ≤256 rows × 64 doubles |
-        || `rel_salted_join` | the key-skew audit frame (one row per candidate join column) whose hottest flagged column becomes the salted join key | 2 rows |
-|| `dedup_substring` | NOTHING to the driver — the df-capped candidate-pair table and the semi-join-pruned positional postings are lazy-localCheckpointed (r16: three resp. two consumers each re-planned the gram-seq corpus subtree — 38 Exchanges → the documented two corpus scans), and under AQE wrapping a plan in a checkpoint RDD materializes its stages at build | pairs ≤ Σ df²/2 per capped anchor bucket; postings = candidate docs only |
-        |
-        |(`sim_ann_recall` composes `ivfTopK`, so it also performs the IVF
-        |sample collect; its own bound is the 50-row exact result.)
-        |
-        |Through r9, `dedup_near_apply` / `dedup_cluster_sizes` COLLECTED
-        |the verified pair stream and propagated labels on the driver —
-        |a driver bottleneck growing with corpus size. Since r10 the
-        |propagation is distributed; since r11 it iterates to FIXPOINT
-        |(exact components on any graph — the r10 fixed 4-round budget
-        |silently split components deeper than 4) with a pointer-doubling
-        |hop keeping rounds at O(log diameter), and the two queries share
-        |ONE label pass per fixture. They still use the pre-distinct pair
-        |stream — label propagation is duplicate-insensitive (a repeated
-        |edge never moves a min), so the distinct exchange stays skipped.
-        |
+        || Entry | Build | What it runs at build | Bound |
+        ||---|---|---|---|
+        |""".stripMargin
+    for ((name, spec) <- SparkEntry.specs.toSeq.sortBy(_._1)) spec.build match {
+      case QuerySpec.Eager(what, bound) => sb ++= s"| `$name` | eager | $what | $bound |\n"
+      case QuerySpec.Memoized(what, bound) => sb ++= s"| `$name` | memoized | $what | $bound |\n"
+      case QuerySpec.Lazy => ()
+    }
+    sb ++=
+      """
         |## Rows-only registry entries
         |
         |None (as of r10). Every registered query is fully oracle-hashed.

@@ -26,70 +26,38 @@ object SparkEntry {
       streaming.StreamingChiSquare.queries ++
       streaming.StreamingDedup.queries
 
-  /** Queries whose FIRST build per (app, fixture dir) runs a one-time
-    * memoized pass (CC label fixpoint / replay-store merge) that later
-    * builds skip. Named here — in main, not test, scope — because the
-    * bench must PRICE that build into its headline (a median over
-    * warm-memo samples measures a cache read, not the operator;
-    * Bench adds max−median for exactly these entries) and RegistrySpec
-    * must assert the memo actually prevents re-scheduling.
+  /** The non-default facts of each query (scoped conf, eager or
+    * memoized build); a query without an entry is lazy and runs under
+    * the session conf. Adding a query is one edit to its family module:
+    * `queries`, `oracleSql` and, only if it needs one, `specs`.
     */
-  val memoizedBuildQueries: Set[String] = Set(
-    "dedup_near_apply", "dedup_cluster_sizes", "chi2_streaming_replay",
-    // r13: the df-ordered docsets table is built once per (app, dir,
-    // hash mode) and shared by both pair queries AND the CC label
-    // build (Dedup.docsetsFor) — whichever consumer runs first pays it
-    "dedup_ngram_jaccard", "dedup_containment",
-    // r16: the streaming dedup replay builds its kept-set store once
-    // per (app, dir) — same marker discipline as chi2_streaming_replay
-    "dedup_streaming_replay")
+  val specs: Map[String, QuerySpec] =
+    rel.Relational.specs ++
+      dedup.Dedup.specs ++
+      sim.Similarity.specs ++
+      text.Analysis.specs ++
+      ops.Salted.specs ++
+      streaming.StreamingChiSquare.specs ++
+      streaming.StreamingDedup.specs
 
-  /** Scoped per-query session-conf overrides. The harnesses (Bench,
-    * Verify) save the touched keys, set these around ONE query's
-    * build+execution, and restore — so a data-sized knob (today: the
-    * wide-aggregate reduce-partition count) applies to exactly the
-    * queries that need it and the session default stays put for the
-    * other ~120. Values never change results: every covered query is
-    * exact-typed (spec-pinned).
+  /** Queries whose FIRST build per (app, fixture dir) runs a one-time
+    * memoized pass that later builds skip. Bench prices that build into
+    * its headline (a median over warm-memo samples measures a cache
+    * read, not the operator) and RegistrySpec asserts the memo prevents
+    * re-scheduling.
     */
-  def queryConfs(name: String, sfDir: String, cpus: Int): Map[String, String] = {
-    // Experiment arms (`<base>_e<arm>`, see Relational.experimentQueries)
-    // inherit their base query's scoped conf automatically — the r15 A/B
-    // that ran an unconf'd arm spilled 95.6 GB and OOM'd the JVM
-    // (docs/BENCH_NOTES.md r15); the protocol lesson is now enforced in
-    // code rather than remembered per run. SPARK_GRAFT_WIDEAGG_EXTRA
-    // remains for arms that are NOT name-derived from a covered base.
-    val base = name.replaceAll("_e\\w+$", "")
-    // MEASURED NEGATIVE RESULT (r17, VERDICT r16 ask #5): a global
-    // `spark.sql.adaptive.coalescePartitions.parallelismFirst=false`
-    // (Spark's own busy-cluster recommendation — respect the byte-based
-    // advisory target instead of splitting to defaultParallelism) was
-    // A/B'd over the full suite at sf0.1 and LOST: 76.31 → 80.87 s
-    // (geomean ×1.06), with the losses concentrated exactly where
-    // coalescing serializes a window or wide aggregate onto one task
-    // (rel_dominant_supplier 0.90 → 1.94 s, rel_window_running
-    // 0.95 → 1.93, rel_small_qty_revenue 0.64 → 1.22) and only
-    // sub-noise wins on the scheduling-floor tail. The two-SF gate
-    // (graduate only if sf0.1 AND sf10 agree) therefore fails at the
-    // first SF; the suite's stage outputs at bench scale sit well under
-    // one advisory unit, so byte-targeted coalescing and "keep the
-    // cores busy" are directly opposed here. Not graduated — details in
-    // docs/BENCH_NOTES.md r17.
-    if (sys.env.get("SPARK_GRAFT_SCOPED_CONFS").contains("false")) Map.empty
-    else if (rel.Relational.wideAggQueries(name) ||
-      rel.Relational.wideAggQueries(base))
-      rel.Relational.wideAggConf(sfDir, cpus)
-    else if (dedup.Dedup.pairShuffleQueries(name) ||
-      dedup.Dedup.pairShuffleQueries(base))
-      dedup.Dedup.pairShuffleConf(sfDir, cpus)
-    else if (text.Analysis.sortHeavyQueries(name) ||
-      text.Analysis.sortHeavyQueries(base))
-      text.Analysis.sortHeavyConf(sfDir, cpus)
-    else if (streaming.StreamingDedup.replayQueries(name) ||
-      streaming.StreamingDedup.replayQueries(base))
-      streaming.StreamingDedup.replayConf(sfDir, cpus)
-    else Map.empty
-  }
+  val memoizedBuildQueries: Set[String] = specs.collect {
+    case (n, QuerySpec(_, _: QuerySpec.Memoized)) => n
+  }.toSet
+
+  /** Scoped per-query session-conf overrides. The harnesses set these
+    * around ONE query's build+execution and restore them
+    * ([[Session.withScopedConf]]), so a data-sized knob applies to
+    * exactly the queries that need it. Values never change results:
+    * every covered query is exact-typed (spec-pinned).
+    */
+  def queryConfs(name: String, sfDir: String, cpus: Int): Map[String, String] =
+    specs.get(name).fold(Map.empty[String, String])(_.conf(sfDir, cpus))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,15 +12,8 @@ object Verify {
     val outDir = args(1)
     val only = args.lift(2)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session("graft-verify", cpus)
     // Production-hash dump mode (r13, verdict ask #4): the xxhash64
     // mode a real cluster would run. The DuckDB oracle mirrors md5
     // only, so dumps made in this mode are compared Spark-vs-Spark
@@ -30,12 +22,7 @@ object Verify {
     // hash-dependent set is invariant-checked instead.
     sys.env.get("SPARK_GRAFT_PRODUCTION_HASH").foreach(v =>
       spark.conf.set(graft.functions.PortableHash.ConfKey,
-        (v.trim.toLowerCase(java.util.Locale.ROOT) match {
-          case "1" | "true" | "yes" | "on" => true
-          case "0" | "false" | "no" | "off" => false
-          case other => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_PRODUCTION_HASH must be a boolean, got: '$other'")
-        }).toString))
+        Session.parseBool(v, "SPARK_GRAFT_PRODUCTION_HASH").toString))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
       .foreach { case (name, fn) =>
@@ -43,16 +30,11 @@ object Verify {
         // a no-op at gate SFs (the floor binds), load-bearing for the
         // sf≥10 scale-correctness runs. Exact-typed queries only, so
         // results are partition-count-invariant (spec-pinned).
-        val overrides = SparkEntry.queryConfs(name, sfDir, cpus.toInt)
-        val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-        overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        try Session.withScopedConf(spark, SparkEntry.queryConfs(name, sfDir, cpus)) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        } finally saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

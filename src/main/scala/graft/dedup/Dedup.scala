@@ -1235,22 +1235,17 @@ object Dedup {
     // callers sharing one session with concurrent planning should use
     // session.newSession() for isolation.
     val bloom = session.synchronized {
-      val saved = guards.map { case (k, _) => k -> conf.getOption(k) }
-      try {
-        guards.foreach { case (k, v) =>
-          // conf.get(k) with NO fallback resolves a registered conf to
-          // its default (4M items / 64M bits) when unset; a literal-"0"
-          // fallback would make the "raise" LOWER the guards whenever
-          // est sits below those defaults.
-          val current = scala.util.Try(conf.get(k).toLong).getOrElse(0L)
-          conf.set(k, math.max(v, current).toString)
-        }
+      // conf.get(k) with NO fallback resolves a registered conf to its
+      // default (4M items / 64M bits) when unset; a literal-"0" fallback
+      // would make the "raise" LOWER the guards whenever est sits below
+      // those defaults.
+      val raised = guards.map { case (k, v) =>
+        k -> math.max(v, scala.util.Try(conf.get(k).toLong).getOrElse(0L)).toString
+      }.toMap
+      graft.Session.withScopedConf(session, raised) {
         evalKeys.agg(graft.functions.GraftFunctions
             .graftBloomAgg(col("shk"), lit(est), lit(bits)).as("bf"))
           .head().getAs[Array[Byte]](0)
-      } finally saved.foreach {
-        case (k, Some(v)) => conf.set(k, v)
-        case (k, None) => conf.unset(k)
       }
     }
     val contaminated = decontamKeys(corpus, production)
@@ -1347,14 +1342,38 @@ object Dedup {
     * isn't crossed either way) and at sf0.1 the conf is a no-op (the
     * cpus floor binds).
     */
-  val pairShuffleQueries: Set[String] = Set(
-    "dedup_ngram_jaccard", "dedup_containment", "dedup_cluster_sizes",
-    "dedup_near_apply") ++
-    // Experiment hook, mirroring Relational.wideAggQueries: extend the
-    // scoped-conf set without a rebuild; winners graduate into the
-    // literal set with their measurements.
-    sys.env.get("SPARK_GRAFT_PAIRSHUFFLE_EXTRA").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+  private val pairShuffleQueries = Seq("dedup_ngram_jaccard",
+    "dedup_containment", "dedup_cluster_sizes", "dedup_near_apply")
+
+  /** Non-default registry facts: [[pairShuffleQueries]]' scoped conf,
+    * the memoized docsets / label builds, and the bounded eager builds.
+    */
+  val specs: Map[String, graft.QuerySpec] = {
+    import graft.QuerySpec.{Eager, Memoized}
+    val docsets = Memoized(
+      "NOTHING to the driver: the df-ordered docsets table (per-doc kept shingle-hash sets) is localCheckpointed once per (app, dir, hash mode) and shared by both pair queries and the label build; whichever consumer runs first pays it",
+      "one row per admitted document")
+    val labels = Memoized(
+      "NOTHING to the driver: the FIXPOINT label-propagation rounds run as Spark jobs on first build per fixture (edges + each round's node-bounded label table materialized via `localCheckpoint`/reliable `checkpoint`, convergence decided by a changed-flag probe over the fresh blocks); the final labels enter one corpus left-join lazily, and `dedup_near_apply` and `dedup_cluster_sizes` share the cached label table per (app, dir)",
+      "O(log diameter)+1 distributed jobs on first build; labels ≤ 2·pairs nodes")
+    val memo = Map("dedup_ngram_jaccard" -> docsets,
+      "dedup_containment" -> docsets, "dedup_near_apply" -> labels,
+      "dedup_cluster_sizes" -> labels)
+    pairShuffleQueries.map(n =>
+      n -> graft.QuerySpec(pairShuffleConf, memo(n))).toMap ++ Map(
+      "dedup_bucket_stats" -> graft.QuerySpec(build = Eager(
+        "the 3-row cap-audit summary (re-entered as a local frame so no state survives the return)",
+        "3 rows")),
+      "dedup_source_overlap" -> graft.QuerySpec(build = Eager(
+        "the (src_a, src_b) presence/co-presence counts off ONE corpus scan (shk-keyed collect_set + in-array pair expansion); the dense grid + Jaccard assemble on the driver",
+        "≤ sources² rows")),
+      "dedup_decontaminate_bloom" -> graft.QuerySpec(build = Eager(
+        "the bloom sketch over the eval side's distinct shingle keys, re-entered as a foldable literal predicate on the corpus scan (false positives removed by the exact semi-join, so the result is hash-identical to `dedup_decontaminate`)",
+        "DecontamBloomKeys·10 bits ≈ 1.3 MB")),
+      "dedup_substring" -> graft.QuerySpec(build = Eager(
+        "NOTHING to the driver: the df-capped candidate-pair table and the semi-join-pruned positional postings are lazy-localCheckpointed, and under AQE wrapping a plan in a checkpoint RDD materializes its stages at build",
+        "pairs ≤ Σ df²/2 per capped anchor bucket; postings = candidate docs only")))
+  }
 
   /** Reduce-task sizing for [[pairShuffleConf]]: one task per MB of
     * compressed documents parquet ≈ the measured-winning geometry

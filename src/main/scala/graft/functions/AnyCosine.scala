@@ -124,21 +124,7 @@ object AnyCosine {
     */
   private[functions] final class Mx(val flatF: Array[Float],
     val flatD: Array[Double], val offs: Array[Int], val lens: Array[Int],
-    val sqEn: Array[Double], val cnt: Int,
-    val q8: Array[Byte], val qs: Array[Double], val qe: Array[Double])
-
-  /** Cosine-domain slack for the int8 member screen, covering the
-    * floating-point rounding the screen's OWN arithmetic adds on top
-    * of the (exactly precomputed) quantization residual: the 64-term
-    * double fold of v·q accumulates ≤ n·eps relative to Σ|v_i·s·q_i|,
-    * and s·|q_i| ≤ max|e_i| ≤ ‖e‖ with ‖v‖₁ ≤ √n·‖v‖₂ bounds that
-    * mass by √n·‖v‖·‖e‖ — so after the cosine division the fold error
-    * is ≤ n^1.5·eps ≈ 1.1e-13 at n = 64, plus one multiply and one
-    * divide rounding each ≤ eps. 1e-9 is four orders above all of it
-    * and five below any quantization residual that matters, so a
-    * borderline member is RECHECKED EXACTLY, never misjudged.
-    */
-  private[functions] val QSlack = 1e-9
+    val sqEn: Array[Double], val cnt: Int)
 
   /** Per-task cache of the unpacked broadcast matrix, keyed on the
     * UNDERLYING buffer (base object identity + offset): the join's
@@ -233,19 +219,6 @@ object AnyCosine {
     val sqEn = new Array[Double](cnt)
     val flatF = if (floatExact) new Array[Float](total) else null
     val flatD = if (floatExact) null else new Array[Double](total)
-    // int8 member screen (the r15 bandwidth lever): per member an
-    // int8 code row q (scale s = maxAbs/127), the scale, and the
-    // COSINE-DOMAIN error radius qe = ‖e − s·q‖ / ‖e‖ — by
-    // Cauchy–Schwarz |cos(v,e) − s·(v·q)/(‖v‖‖e‖)| ≤ qe, with the
-    // residual norm computed EXACTLY (in doubles) at pack time. A
-    // member whose screened cosine clears t by more than qe + QSlack
-    // is a certain hit; short by more than that, a certain miss;
-    // only the borderline sliver pays the exact fold. Verdicts are
-    // therefore identical to the exact scan — the screen only decides
-    // where its own bound proves the decision.
-    val q8 = new Array[Byte](total)
-    val qs = new Array[Double](cnt)
-    val qe = new Array[Double](cnt)
     var o = 0
     j = 0
     while (j < cnt) {
@@ -254,38 +227,11 @@ object AnyCosine {
         var i = 0
         while (i < v.length) { flatF(o + i) = v(i).toFloat; i += 1 }
       } else System.arraycopy(v, 0, flatD, o, v.length)
-      var mx = 0.0
-      var i = 0
-      while (i < v.length) {
-        val a = math.abs(v(i))
-        if (a > mx) mx = a
-        i += 1
-      }
-      val s = mx / 127.0
-      var resid = 0.0
-      if (s > 0.0 && !java.lang.Double.isNaN(s) &&
-        !java.lang.Double.isInfinite(s)) {
-        i = 0
-        while (i < v.length) {
-          var c = Math.round(v(i) / s)
-          if (c > 127L) c = 127L else if (c < -127L) c = -127L
-          q8(o + i) = c.toByte
-          val r = v(i) - s * c
-          resid += r * r
-          i += 1
-        }
-      } else {
-        resid = Double.NaN // all-zero / degenerate row: never screened
-      }
-      qs(j) = s
-      // NaN sqEn or zero norm → NaN/∞ qe → both screen comparisons
-      // false → exact path (which returns no-match for NaN cosines)
-      qe(j) = math.sqrt(resid) / sqe(j)
       offs(j) = o; lens(j) = v.length; sqEn(j) = sqe(j)
       o += v.length
       j += 1
     }
-    new Mx(flatF, flatD, offs, lens, sqEn, cnt, q8, qs, qe)
+    new Mx(flatF, flatD, offs, lens, sqEn, cnt)
   }
 
   /** Called from generated code.
@@ -318,27 +264,12 @@ object AnyCosine {
     scanMx(vv, n, sq, mx, t)
   }
 
-  /** int8 member screen toggle (SPARK_GRAFT_INT8_SCREEN, default OFF).
-    * Verdicts are knob-invariant by construction (the screen only
-    * decides where its bound PROVES the exact comparison); measured at
-    * sf100 it is NEUTRAL on this fixture — two interleaved pairs read
-    * ON 85.5/78.4 vs OFF 81.1/82.0 s — because the member scan is
-    * COMPUTE-bound here (byte→double widening costs what the saved
-    * float traffic repays). The mechanism targets traffic-bound
-    * deployments (many executors contending a shared L3 at real
-    * cluster occupancy), so the capability ships behind the knob with
-    * both paths spec-pinned; a `var` so specs can cover both.
-    */
-  private[functions] var screenOn: Boolean =
-    sys.env.get("SPARK_GRAFT_INT8_SCREEN").contains("true")
-
-  /** One member block, screened when enabled — the single scan entry
-    * shared by the flat kernel and the cells kernel's member tests.
+  /** One member block — the single scan entry shared by the flat
+    * kernel and the cells kernel's member tests.
     */
   private[functions] def scanMx(vv: Array[Double], n: Int, sq: Double,
       mx: Mx, t: Double): Boolean =
-    if (screenOn) anyGeQ(vv, n, sq, mx, t)
-    else if (mx.flatF != null) anyGeF(vv, n, sq, mx, t)
+    if (mx.flatF != null) anyGeF(vv, n, sq, mx, t)
     else anyGeD(vv, n, sq, mx, t)
 
   private[functions] def anyGeF(vv: Array[Double], n: Int, sq: Double, mx: Mx,
@@ -381,75 +312,6 @@ object AnyCosine {
       j += 1
     }
     false
-  }
-
-  /** The screened scan: int8 bound first, exact fold only for members
-    * the bound cannot decide. Verdict-identical to [[anyGeF]]/
-    * [[anyGeD]] (the bound may only decide where it PROVES the exact
-    * comparison's outcome; see [[QSlack]] and the packing notes), ~4×
-    * less member traffic on decided members — the decontam screen is
-    * L3-bandwidth-bound, so traffic is the floor that matters.
-    */
-  private[functions] def anyGeQ(vv: Array[Double], n: Int, sq: Double, mx: Mx,
-      t: Double): Boolean = {
-    val q8 = mx.q8
-    val offs = mx.offs
-    val lens = mx.lens
-    val m = mx.cnt
-    var j = 0
-    while (j + 4 <= m &&
-        lens(j) == n && lens(j + 1) == n &&
-        lens(j + 2) == n && lens(j + 3) == n) {
-      val o0 = offs(j); val o1 = offs(j + 1)
-      val o2 = offs(j + 2); val o3 = offs(j + 3)
-      var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
-      var k = 0
-      while (k < n) {
-        val x = vv(k)
-        a0 += x * q8(o0 + k); a1 += x * q8(o1 + k)
-        a2 += x * q8(o2 + k); a3 += x * q8(o3 + k)
-        k += 1
-      }
-      if (decideQ(vv, n, sq, mx, t, j, a0)) return true
-      if (decideQ(vv, n, sq, mx, t, j + 1, a1)) return true
-      if (decideQ(vv, n, sq, mx, t, j + 2, a2)) return true
-      if (decideQ(vv, n, sq, mx, t, j + 3, a3)) return true
-      j += 4
-    }
-    while (j < m) {
-      if (lens(j) == n) {
-        val o = offs(j)
-        var acc = 0.0
-        var k = 0
-        while (k < n) { acc += vv(k) * q8(o + k); k += 1 }
-        if (decideQ(vv, n, sq, mx, t, j, acc)) return true
-      }
-      j += 1
-    }
-    false
-  }
-
-  /** Decide member j from its screened dot: certain miss → false,
-    * certain hit → true, borderline (or any NaN in the bound) → the
-    * exact in-order fold, bit-identical to the unscreened scan.
-    */
-  private def decideQ(vv: Array[Double], n: Int, sq: Double, mx: Mx,
-      t: Double, j: Int, dotq: Double): Boolean = {
-    val cosQ = mx.qs(j) * dotq / (sq * mx.sqEn(j))
-    val r = mx.qe(j) + QSlack
-    if (cosQ + r < t) return false // certain miss (NaN falls through)
-    if (cosQ - r >= t) return true // certain hit
-    val o = mx.offs(j)
-    var acc = 0.0
-    var k = 0
-    if (mx.flatF != null) {
-      val flat = mx.flatF
-      while (k < n) { acc += vv(k) * flat(o + k); k += 1 }
-    } else {
-      val flat = mx.flatD
-      while (k < n) { acc += vv(k) * flat(o + k); k += 1 }
-    }
-    acc / (sq * mx.sqEn(j)) >= t
   }
 
   private[functions] def anyGeD(vv: Array[Double], n: Int, sq: Double, mx: Mx,

@@ -69,9 +69,7 @@ import org.apache.spark.sql.types._
   * so a borderline cell is SCANNED, never skipped: pruning can drop
   * only cells that pass the test with ≥ Slack/2 to spare, and the
   * members that decide the verdict go through [[AnyCosine.scanMx]] —
-  * the int8-screened scan whose certain-hit/certain-miss bounds prove
-  * the exact comparison's outcome and whose borderline path is the
-  * same in-order fold as the flat kernel and the Column chain —
+  * the same in-order fold as the flat kernel and the Column chain —
   * verdict-identical at every level.
   *
   * Conservative fallbacks (scan, never skip) whenever the bound is

@@ -100,7 +100,7 @@ object Salted {
     * spread over `buckets` reduce tasks.
     *
     * The audit collect (one row per audited column) runs at BUILD —
-    * documented eager (docs/PLANS.md, RegistrySpec). The chosen key is
+    * declared eager in [[specs]]. The chosen key is
     * data-dependent by design — the wire, not a constant, decides — so
     * a fixture where the measurement flipped would hash-mismatch the
     * oracle and fail the gate loudly.
@@ -120,6 +120,11 @@ object Salted {
         .orderBy("doc_id")
     })
   )
+
+  val specs: Map[String, graft.QuerySpec] = Map(
+    "rel_salted_join" -> graft.QuerySpec(build = graft.QuerySpec.Eager(
+      "the key-skew audit frame (one row per candidate join column) whose hottest flagged column becomes the salted join key",
+      "2 rows")))
 
   def oracleSql: Map[String, String] = Map(
     // the salted join must be row-identical to the plain join; `lang`

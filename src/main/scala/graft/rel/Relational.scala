@@ -31,10 +31,7 @@ object Relational {
   private def dsum(c: org.apache.spark.sql.Column) =
     sum(c.cast("decimal(28,10)")).cast("double")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ experimentQueries
-
-  private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1-shaped scan+aggregate: the canonical pricing summary.
     "rel_pricing_summary" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
@@ -511,21 +508,6 @@ object Relational {
       dominantSupplier(t(s, dir, "lineitem"), t(s, dir, "supplier")))
   )
 
-  /** Experiment arms (see [[soleLateSupplierArm]]): bench-only,
-    * registered behind SPARK_GRAFT_EXPERIMENTS so the driver surface
-    * never sees them.
-    */
-  private def experimentQueries: Map[String, (SparkSession, String) => DataFrame] =
-    if (sys.env.contains("SPARK_GRAFT_EXPERIMENTS"))
-      Map(
-        "rel_sole_late_supplier_e0" -> ((s, dir) =>
-          soleLateSupplierArm(t(s, dir, "lineitem"), t(s, dir, "orders"),
-            t(s, dir, "supplier"), Arm.JoinFirst)),
-        "rel_sole_late_supplier_e3b" -> ((s, dir) =>
-          soleLateSupplierArm(t(s, dir, "lineitem"), t(s, dir, "orders"),
-            t(s, dir, "supplier"), Arm.PreAggNatural)))
-    else Map.empty
-
   /** TPC-H Q4 shape for [[queries]]' `rel_late_orders`, decorrelated:
     * the spec's correlated `EXISTS (line with lag > 90)` collapses to
     * `max(l_shipdate) lag > 90` because o_orderdate is constant within
@@ -641,58 +623,20 @@ object Relational {
     * composite-key pre-aggregate's 127.8/121.0 (10.8), which pays TWO
     * fact exchanges (26.7 GB: composite-key aggregate shuffle, then a
     * re-exchange for the join) because map-side combine collapses
-    * almost nothing (~4 lines/order scattered across scan tasks). Both
-    * losers stay reproducible under SPARK_GRAFT_EXPERIMENTS
-    * (`rel_sole_late_supplier_e0`/`_e3b`).
+    * almost nothing (~4 lines/order scattered across scan tasks).
     */
   def soleLateSupplier(lineitem: DataFrame, orders: DataFrame,
-      supplier: DataFrame): DataFrame =
-    soleLateSupplierArm(lineitem, orders, supplier, Arm.PreAggRepart)
-
-  /** Plan arms for [[soleLateSupplier]] — the registered query runs
-    * [[Arm.PreAggRepart]] (measured winner, numbers in the scaladoc
-    * above); the losers stay registered under SPARK_GRAFT_EXPERIMENTS
-    * (`rel_sole_late_supplier_e0`/`_e3b`) so the A/B is reproducible
-    * without a rebuild. All three are result-identical (sym-diff 0 at
-    * sf10, oracle-hash PASS at sf0.01 for the registered form).
-    */
-  object Arm extends Enumeration {
-    /** Join raw lines to orders first, collapse after (the r9–r14
-      * registered form): the join sorts/probes RAW line volume. */
-    val JoinFirst = Value
-    /** Collapse per (order, supplier) before the join, riding one
-      * explicit l_orderkey repartition that the aggregate (subset
-      * rule) and the join both reuse. */
-    val PreAggRepart = Value
-    /** Collapse before the join with a natural composite-key groupBy:
-      * map-side combine collapses almost nothing (~4 lines/order
-      * scattered across scan tasks), and the join re-exchanges —
-      * two fact-volume shuffles. */
-    val PreAggNatural = Value
-  }
-
-  def soleLateSupplierArm(lineitem: DataFrame, orders: DataFrame,
-      supplier: DataFrame, arm: Arm.Value): DataFrame = {
+      supplier: DataFrame): DataFrame = {
     val o = orders.select("o_orderkey", "o_orderdate")
-    val li0 = lineitem.select("l_orderkey", "l_suppkey", "l_shipdate")
-    val perSupp = arm match {
-      case Arm.JoinFirst =>
-        val late = datediff(col("l_shipdate").cast("date"),
-          col("o_orderdate").cast("date")) > 90
-        li0.join(o, col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("l_orderkey"), col("l_suppkey"))
-          .agg(max(late).as("late"))
-      case _ =>
-        val li =
-          if (arm == Arm.PreAggRepart) li0.repartition(col("l_orderkey"))
-          else li0
-        li.groupBy(col("l_orderkey"), col("l_suppkey"))
-          .agg(max(col("l_shipdate")).as("max_ship"))
-          .join(o, col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_orderkey"), col("l_suppkey"),
-            (datediff(col("max_ship").cast("date"),
-              col("o_orderdate").cast("date")) > 90).as("late"))
-    }
+    val perSupp = lineitem.select("l_orderkey", "l_suppkey", "l_shipdate")
+      .repartition(col("l_orderkey"))
+      .groupBy(col("l_orderkey"), col("l_suppkey"))
+      .agg(max(col("l_shipdate")).as("max_ship"))
+      .join(o, col("l_orderkey") === col("o_orderkey"))
+      .select(col("l_orderkey"), col("l_suppkey"),
+        (datediff(col("max_ship").cast("date"),
+          col("o_orderdate").cast("date")) > 90).as("late"))
+
     val perOrder = perSupp.groupBy("l_orderkey")
       .agg(count(lit(1)).as("n_supp"),
         sum(when(col("late"), 1L).otherwise(0L)).as("n_late"),
@@ -949,13 +893,9 @@ object Relational {
     * right shape (map-side partial collapse below every exchange);
     * only the REDUCE-side partition count needs to track the data.
     */
-  val wideAggQueries: Set[String] = Set(
-    "rel_dominant_supplier", "rel_sole_late_supplier", "rel_supplier_parts") ++
-    // Experiment hook: extend the scoped-conf set without a rebuild
-    // (isolated A/B runs on the second spill tier); winners graduate
-    // into the literal set above with their measurements.
-    sys.env.get("SPARK_GRAFT_WIDEAGG_EXTRA").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+  val specs: Map[String, graft.QuerySpec] = Seq(
+    "rel_dominant_supplier", "rel_sole_late_supplier", "rel_supplier_parts")
+    .map(_ -> graft.QuerySpec(conf = wideAggConf)).toMap
 
   /** Reduce-task input target for [[wideAggConf]]: one shuffle
     * partition per this many bytes of the driving fact's on-disk
@@ -966,7 +906,7 @@ object Relational {
     */
   val WideAggBytesPerTask: Long = 24L << 20
 
-  /** Scoped shuffle-partition override for [[wideAggQueries]]: one
+  /** Scoped shuffle-partition override for the [[specs]] above: one
     * reduce task per [[WideAggBytesPerTask]] of lineitem bytes,
     * floored at the session's parallelism, capped at 2048. Applied by
     * the harnesses around JUST these queries (set, run, restore) —

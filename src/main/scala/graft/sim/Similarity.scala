@@ -182,12 +182,10 @@ object Similarity {
     * directions agree), so sub-cells stay multi-member where pruning
     * leverage matters and only the diffuse mass spreads; past ~20 the
     * singleton-sub overhead (one bound dot standing in for one member
-    * dot) takes over. Sweepable via SPARK_GRAFT_SCREEN_SUBPLANES
-    * (pruning is exact at any value, so the verdict — and the oracle
-    * hash — is invariant under the knob).
+    * dot) takes over. Pruning is exact at any value, so the verdict —
+    * and the oracle hash — does not depend on it.
     */
-  val ScreenSubPlanes: Int = sys.env.get("SPARK_GRAFT_SCREEN_SUBPLANES")
-    .map(_.toInt).getOrElse(20)
+  val ScreenSubPlanes: Int = 20
   lazy val screenSubPlanes: IndexedSeq[IndexedSeq[Int]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     (ScreenPlanes until ScreenPlanes + ScreenSubPlanes).map { p =>
@@ -212,13 +210,11 @@ object Similarity {
     * the already-collected member block — no third exchange); level-3
     * bound dots are paid only by rows that survived level 2. Pruning
     * stays exact at any value (triangle inequality per level, member
-    * arithmetic bit-identical), so the verdict and the oracle hash are
-    * invariant under the knob; 0 disables the level (the r14
-    * two-level pack, byte-identical). Default from the r15 sf100
-    * sweep — see docs/BENCH_NOTES.md r15.
+    * arithmetic bit-identical), so the verdict and the oracle hash do
+    * not depend on it. Value from the r15 sf100 sweep — see
+    * docs/BENCH_NOTES.md r15.
     */
-  val ScreenSubSubPlanes: Int = sys.env.get("SPARK_GRAFT_SCREEN_SUBSUBPLANES")
-    .map(_.toInt).getOrElse(12)
+  val ScreenSubSubPlanes: Int = 12
   lazy val screenSubSubPlanes: IndexedSeq[IndexedSeq[Int]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val base = ScreenPlanes + ScreenSubPlanes
@@ -905,7 +901,7 @@ object Similarity {
       .withColumn("scv", meanOf(col("ms")))
       .withColumn("scn", dot(col("scv"), col("scv")))
       .withColumn("scr", radiusOf(col("ms"), col("scv"), col("scn")))
-    // Level 3 (optional, [[ScreenSubSubPlanes]] > 0): re-split each
+    // Level 3 ([[ScreenSubSubPlanes]] centered planes): re-split each
     // sub-cell's member block by CENTERED sign keys — sign of
     // dot(ev − scv, w_p), i.e. which side of a plane THROUGH THE
     // SUB-CELL MEAN the member falls on — entirely in-array (HOFs over
@@ -916,30 +912,27 @@ object Similarity {
     // members (null elements → null dot → `otherwise` branch) collapse
     // into one concrete key whose null-poisoned mean disables that
     // leaf's bound — the kernel scans it, conservative as ever.
-    val perSub2 =
-      if (ScreenSubSubPlanes > 0) {
-        def subStruct(ms2: org.apache.spark.sql.Column) = {
-          val cv2 = meanOf(ms2)
-          val cn2 = dot(cv2, cv2)
-          struct(cv2.as("cv"), radiusOf(ms2, cv2, cn2).as("cr"),
-            ms2.as("ms"))
-        }
-        def keyOf(ev: org.apache.spark.sql.Column) =
-          (0 until ScreenSubSubPlanes).map { p =>
-            val w = typedLit[Seq[Double]](screenSubSubPlanes(p).map(_.toDouble))
-            when(dot(ev, w) - dot(col("scv"), w) >= 0, lit(1L << p))
-              .otherwise(lit(0L))
-          }.reduce(_ + _)
-        perSub
-          .withColumn("mk", transform(col("ms"), m => keyOf(m.getField("ev"))))
-          .withColumn("tagged", zip_with(col("ms"), col("mk"),
-            (m, k) => struct(k.as("k"), m.as("m"))))
-          .withColumn("subs2", transform(array_sort(array_distinct(col("mk"))),
-            k => subStruct(transform(
-              filter(col("tagged"), tm => tm.getField("k") === k),
-              tm => tm.getField("m")))))
-          .drop("mk", "tagged")
-      } else perSub
+    def subStruct(ms2: org.apache.spark.sql.Column) = {
+      val cv2 = meanOf(ms2)
+      val cn2 = dot(cv2, cv2)
+      struct(cv2.as("cv"), radiusOf(ms2, cv2, cn2).as("cr"),
+        ms2.as("ms"))
+    }
+    def keyOf(ev: org.apache.spark.sql.Column) =
+      (0 until ScreenSubSubPlanes).map { p =>
+        val w = typedLit[Seq[Double]](screenSubSubPlanes(p).map(_.toDouble))
+        when(dot(ev, w) - dot(col("scv"), w) >= 0, lit(1L << p))
+          .otherwise(lit(0L))
+      }.reduce(_ + _)
+    val perSub2 = perSub
+      .withColumn("mk", transform(col("ms"), m => keyOf(m.getField("ev"))))
+      .withColumn("tagged", zip_with(col("ms"), col("mk"),
+        (m, k) => struct(k.as("k"), m.as("m"))))
+      .withColumn("subs2", transform(array_sort(array_distinct(col("mk"))),
+        k => subStruct(transform(
+          filter(col("tagged"), tm => tm.getField("k") === k),
+          tm => tm.getField("m")))))
+      .drop("mk", "tagged")
     // Level 1: per bucket, the sub-cells (sorted by sub-key — a
     // deterministic pack order) plus the bucket's own direction and a
     // radius over ALL its members (the flattened sub-cell blocks), so
@@ -947,24 +940,19 @@ object Similarity {
     // bucket-level `ms` is a typed NULL: every member lives in exactly
     // one sub-cell, and the kernel scans the union.
     val msType = "array<struct<ev:array<double>,en:double>>"
-    val subCols = Seq(col("sbkt"), col("scv"), col("scr"), col("ms")) ++
-      (if (ScreenSubSubPlanes > 0) Seq(col("subs2")) else Seq.empty)
     val perCell = perSub2.groupBy("bkt")
-      .agg(array_sort(collect_list(struct(subCols: _*))).as("subsRaw"))
+      .agg(array_sort(collect_list(struct(col("sbkt"), col("scv"),
+        col("scr"), col("ms"), col("subs2")))).as("subsRaw"))
       .withColumn("allms", flatten(transform(col("subsRaw"),
         x => x.getField("ms"))))
       .withColumn("cv", meanOf(col("allms")))
       .withColumn("cn", dot(col("cv"), col("cv")))
       .withColumn("cr", radiusOf(col("allms"), col("cv"), col("cn")))
+      // members live at the leaves; level 2 carries bounds + kids
       .withColumn("subs", transform(col("subsRaw"), x =>
-        if (ScreenSubSubPlanes > 0)
-          // members live at the leaves; level 2 carries bounds + kids
-          struct(x.getField("scv").as("cv"), x.getField("scr").as("cr"),
-            lit(null).cast(msType).as("ms"),
-            x.getField("subs2").as("subs"))
-        else
-          struct(x.getField("scv").as("cv"), x.getField("scr").as("cr"),
-            x.getField("ms").as("ms"))))
+        struct(x.getField("scv").as("cv"), x.getField("scr").as("cr"),
+          lit(null).cast(msType).as("ms"),
+          x.getField("subs2").as("subs"))))
     val idx = perCell.agg(sort_array(collect_list(
       struct(col("bkt"), col("cv"), col("cr"),
         lit(null).cast(msType).as("ms"), col("subs")))).as("cells"))
@@ -1172,6 +1160,26 @@ object Similarity {
           |  'nonfinite_values', nonfinite_values,
           |  'zero_norm', zero_norm) AS (issue, n)""".stripMargin))
       .orderBy("issue")
+  }
+
+  /** The eager builds: the exact top-k side input and the IVF training
+    * sample every trained-quantizer query collects for driver Lloyd.
+    */
+  val specs: Map[String, graft.QuerySpec] = {
+    val sample = graft.QuerySpec.Eager(_: String, "≤256 rows × 64 doubles")
+    Map(
+      "sim_ann_recall" -> graft.QuerySpec.Eager(
+        "the exact top-k side input both ANN variants are scored against (it composes `ivfTopK`, so it also performs the IVF sample collect)",
+        "NumQueries·TopK = 50 rows"),
+      "sim_cosine_ann_ivf" -> sample(
+        "the `vec_id < TrainN` training sample for driver-side Lloyd (centroids re-enter the plan as literals)"),
+      "sim_cosine_ann_pq" -> sample(
+        "the same IVF training sample, feeding BOTH the coarse quantizer and the 8 per-subspace PQ codebooks (all re-enter as literals)"),
+      "sim_semdedup" -> sample(
+        "the same IVF training sample (cell assignment embeds the trained centroids as literals)"),
+      "sim_bucket_stats" -> sample(
+        "the same IVF training sample, for the `ivf_cell` cap-audit row's cell assignment")
+    ).map { case (n, b) => n -> graft.QuerySpec(build = b) }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

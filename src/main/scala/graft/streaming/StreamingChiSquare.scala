@@ -70,19 +70,10 @@ object StreamingChiSquare {
         spark.read.parquet(s"$dir/cat_docs"))
     }
 
-  /** Recursively delete a store version directory. */
-  private def deleteRecursively(path: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(path)) {
-      val it = Files.list(path).iterator()
-      while (it.hasNext) deleteRecursively(it.next())
-    }
-    Files.deleteIfExists(path)
-  }
-
   /** Drop versions older than the newest `RetainPredecessors + 1`. */
   private def pruneVersions(storeDir: String): Unit =
     versionDirs(storeDir).dropRight(RetainPredecessors + 1)
-      .foreach { case (_, dir) => deleteRecursively(Paths.get(dir)) }
+      .foreach { case (_, dir) => ReplayStores.deleteRecursively(Paths.get(dir)) }
 
   /** Merge one micro-batch of raw documents into the count store. */
   def mergeBatch(batch: DataFrame, batchId: Long, storeDir: String,
@@ -169,7 +160,7 @@ object StreamingChiSquare {
       .resolve(dir.replaceAll("[^A-Za-z0-9.]", "_"))
     val marker = store.resolve("_REPLAY_DONE")
     if (!Files.exists(marker)) graft.BuildWall.timed("replay_store") {
-      deleteRecursively(store)
+      ReplayStores.deleteRecursively(store)
       Files.createDirectories(store)
       val d = graft.sources.Tables.parquet(s, dir, "documents")
       for (b <- 0 until NumReplayBatches)
@@ -179,6 +170,12 @@ object StreamingChiSquare {
     }
     topTermsFromStore(s, store.toString)
   }
+
+  val specs: Map[String, graft.QuerySpec] = Map(
+    "chi2_streaming_replay" -> graft.QuerySpec(StreamingDedup.replayConf,
+      graft.QuerySpec.Memoized(
+        "nothing collected: the maintainer replay (NumReplayBatches mergeBatch rounds) WRITES the versioned count store ONCE per (app, dir) behind a completion marker; later builds read the existing store",
+        "≤ 2 vocabulary-sized snapshots")))
 
   /** Driver-contract registry surface for the maintainer. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

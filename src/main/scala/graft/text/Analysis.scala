@@ -645,9 +645,8 @@ object Analysis {
     *     tf aggregation (exchange reuse covers the exchange, not the
     *     aggregate above it — the r15 measured finding); re-running
     *     the cheap scan+split tokenization for the vocab branch is
-    *     the lighter second pass. Both arms are registered behind
-    *     SPARK_GRAFT_EXPERIMENTS (`_etok` / `_etf`) and A/B'd —
-    *     docs/BENCH_NOTES.md r16.
+    *     the lighter second pass (A/B'd in docs/BENCH_NOTES.md r16:
+    *     re-tokenizing won by ~8 % at sf10).
     *
     * The grand total stays a NARROW map-side scan-sum (array size, no
     * explode, no shuffle) on a 1-row broadcast (chi2's G4 pattern),
@@ -662,32 +661,10 @@ object Analysis {
     * Docs with zero admitted tokens report n_tokens=0, bits 0.0 — no
     * silent drops.
     */
-  def unigramLogProb(d: DataFrame): DataFrame =
-    unigramLogProbArm(d, cntFromTf = false)
-
-  /** Fixed-point fraction bits for [[unigramLogProb]]'s per-document
-    * accumulation: q = floor(log2(cnt)·2^38 + 0.5). 38 keeps the
-    * quantization (2^-39 per token) ~4 orders below the portable log's
-    * own 7e-8 envelope while leaving 2^25 of headroom for
-    * n_tokens·log2(corpus) in the long sum — see [[unigramLogProb]].
-    */
-  val UnigramFpBits: Int = 38
-
-  /** 2^38 as an exact double; the oracle twin writes the same literal. */
-  val UnigramFpScale: Double = 274877906944.0
-
-  /** [[unigramLogProb]] with the vocab-count provenance switchable for
-    * the r16 A/B: `cntFromTf = false` re-tokenizes for the vocab branch
-    * (two scans, each map-only); `true` derives counts from the tf rows
-    * (one scan, but the post-shuffle tf aggregate executes twice).
-    * Bit-identical results either way — cnt is Σ tf over docs in both.
-    */
-  def unigramLogProbArm(d: DataFrame, cntFromTf: Boolean): DataFrame = {
+  def unigramLogProb(d: DataFrame): DataFrame = {
     val tok = d.select(col("doc_id"), explode(toksCol).as("t"))
     val tf = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-    val cnt =
-      if (cntFromTf) tf.groupBy("t").agg(sum(col("tf")).as("cnt"))
-      else tok.groupBy("t").agg(count(lit(1)).as("cnt"))
+    val cnt = tok.groupBy("t").agg(count(lit(1)).as("cnt"))
     val q = cnt.select(col("t"),
       floor(portableLog2(col("cnt").cast("double")) * lit(UnigramFpScale)
         + lit(0.5)).as("q"))
@@ -711,6 +688,17 @@ object Analysis {
           -(col("sum_log2p") / col("n_tokens").cast("double")))
           .otherwise(lit(0.0)))
   }
+
+  /** Fixed-point fraction bits for [[unigramLogProb]]'s per-document
+    * accumulation: q = floor(log2(cnt)·2^38 + 0.5). 38 keeps the
+    * quantization (2^-39 per token) ~4 orders below the portable log's
+    * own 7e-8 envelope while leaving 2^25 of headroom for
+    * n_tokens·log2(corpus) in the long sum — see [[unigramLogProb]].
+    */
+  val UnigramFpBits: Int = 38
+
+  /** 2^38 as an exact double; the oracle twin writes the same literal. */
+  val UnigramFpScale: Double = 274877906944.0
 
   /** Perplexity-bucket histogram (the CCNet-style head/middle/tail
     * slicing a pipeline uses to stage quality filtering): docs bucketed
@@ -1080,11 +1068,9 @@ object Analysis {
     * bucket merge (ppl) — checked by a conf-on vs conf-off sym-diff at
     * sf10 before graduation (docs/BENCH_NOTES.md r15).
     */
-  val sortHeavyQueries: Set[String] =
-    Set("text_unigram_logprob", "text_ppl_buckets")
-
-  def sortHeavyConf(sfDir: String, cpus: Int): Map[String, String] =
-    graft.dedup.Dedup.pairShuffleConf(sfDir, cpus)
+  val specs: Map[String, graft.QuerySpec] =
+    Seq("text_unigram_logprob", "text_ppl_buckets").map(_ ->
+      graft.QuerySpec(conf = graft.dedup.Dedup.pairShuffleConf)).toMap
 
   // ---- registry ---------------------------------------------------------
 
@@ -1132,24 +1118,7 @@ object Analysis {
     "text_dataset_card" -> ((s, dir) => datasetCard(docs(s, dir))),
     "text_langid_eval" -> ((s, dir) =>
       langIdEval(docs(s, dir)).orderBy("actual_lang", "predicted_lang"))
-  ) ++ experimentQueries
-
-  /** A/B arms for [[unigramLogProbArm]]'s vocab-count provenance
-    * (bench-only, behind SPARK_GRAFT_EXPERIMENTS like
-    * [[graft.rel.Relational]]'s). The `_e` suffix convention lets
-    * SparkEntry.queryConfs give both arms the base query's scoped conf
-    * automatically (r15 ADVICE).
-    */
-  private def experimentQueries: Map[String, (SparkSession, String) => DataFrame] =
-    if (sys.env.contains("SPARK_GRAFT_EXPERIMENTS"))
-      Map(
-        "text_unigram_logprob_etok" -> ((s, dir) =>
-          unigramLogProbArm(docs(s, dir), cntFromTf = false)
-            .orderBy("doc_id")),
-        "text_unigram_logprob_etf" -> ((s, dir) =>
-          unigramLogProbArm(docs(s, dir), cntFromTf = true)
-            .orderBy("doc_id")))
-    else Map.empty
+  )
 
   // ---- DuckDB oracle SQL ------------------------------------------------
 

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only measurement probe (guide §1: measure first). For each named
   * query it splits one invocation into the phases the bench's single
   * `materialize(fn(...))` wall conflates:
@@ -29,21 +27,12 @@ object QueryProbe {
     val plansDir = if (args.length > 2) Some(args(2)) else None
     val suffix = if (args.length > 3) args(3) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.cpus
+    val spark = graft.Session("graft-queryprobe", cpus)
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
-      val overrides = graft.SparkEntry.queryConfs(name, sfDir, cpus.toInt)
-      val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
+      graft.Session.withScopedConf(spark,
+          graft.SparkEntry.queryConfs(name, sfDir, cpus)) {
         for (i <- 1 to iters) {
           spark.catalog.clearCache()
           val t0 = System.nanoTime()
@@ -63,9 +52,6 @@ object QueryProbe {
             Files.writeString(Paths.get(pd, s"${name}_$suffix.txt"), txt)
           }
         }
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
       }
     }
     spark.stop()

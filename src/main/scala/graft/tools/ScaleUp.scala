@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator: produce an sf-N× replica of a driver fixture
@@ -69,15 +69,7 @@ object ScaleUp {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/testdata/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .appName("graft-scaleup")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-scaleup")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(t: String)(df: DataFrame): Unit = {

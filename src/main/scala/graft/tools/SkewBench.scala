@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -52,16 +52,7 @@ object SkewBench {
     val sfDir = args.lift(0).getOrElse("/root/repo/target/testdata/sf10")
     val inflate = args.lift(1).map(_.toInt).getOrElse(64)
     val iters = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-skewbench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-skewbench")
     val listener = new TaskTimes
     spark.sparkContext.addSparkListener(listener)
 
@@ -98,13 +89,8 @@ object SkewBench {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
-      val saved = aqeConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      aqeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try run(s"${shape}_aqe_smj", () =>
-        fact.join(d.hint("merge"), Seq("lang")))
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+      graft.Session.withScopedConf(spark, aqeConfs.toMap) {
+        run(s"${shape}_aqe_smj", () => fact.join(d.hint("merge"), Seq("lang")))
       }
     }
 

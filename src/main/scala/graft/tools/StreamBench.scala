@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -93,19 +93,10 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val batchSize = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "5000").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      // state-store partition count == shuffle partitions; the fixture
-      // volumes are small enough that the default is the honest setting
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-streambench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // state-store partition count == shuffle partitions (= cpus); the
+    // fixture volumes are small enough that this is the honest setting
+    val spark = graft.Session("graft-streambench")
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -11,39 +11,21 @@ class RegistrySpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** The registry's documented eager-at-build entries (see docs/PLANS.md
-    * §"Eager-at-build registry entries"): each runs a BOUNDED collect
-    * while the DataFrame is being constructed, so even a bare `explain`
-    * schedules jobs. Every other entry must stay fully lazy at build.
+  /** The declared eager-at-build entries (`QuerySpec.Eager`, listed in
+    * docs/PLANS.md): each runs a BOUNDED job while the DataFrame is
+    * being constructed, so even a bare `explain` schedules jobs. Every
+    * other entry must stay lazy at build.
     */
-  private val eagerAtBuild = Set(
-    "dedup_bucket_stats",   // 3-row cap-audit summary, re-entered locally
-    "dedup_source_overlap", // ≤|sources|² co-occurrence counts, grid re-entered locally
-    "dedup_decontaminate_bloom", // ~1.3 MB eval-key bloom sketch, re-entered as a literal
-    "sim_ann_recall",       // 50-row exact top-k side input
-    "sim_cosine_ann_ivf",   // ≤256-row training sample for driver Lloyd
-    "sim_cosine_ann_pq",    // same sample, feeding coarse + PQ codebook training
-    "sim_semdedup",         // same ≤256-row sample (literal-embedded quantizer)
-    "sim_bucket_stats",     // same sample, for the ivf_cell cap-audit row
-    "rel_salted_join",      // 2-row key-skew audit decides the salted key at build
-    // r16: the two bounded intermediates (df-capped candidate pairs +
-    // semi-join-pruned postings) are lazy-localCheckpointed so the
-    // verify pass stops re-planning the gram-seq corpus subtree ~5×;
-    // under AQE, wrapping a plan in a checkpoint RDD materializes its
-    // stages at build time (distributed jobs, nothing to the driver)
-    "dedup_substring"
-  )
+  private val eagerAtBuild = SparkEntry.specs.collect {
+    case (n, QuerySpec(_, _: QuerySpec.Eager)) => n
+  }.toSet
 
-  /** Entries whose build-time work is MEMOIZED per fixture dir: eager
-    * on the first build (CC label rounds / replay-store merges run as
-    * bounded Spark jobs), zero jobs on every later build. The
-    * executes-everything test above builds each query once, so by the
-    * time the laziness test runs these must hit their caches and
-    * schedule NOTHING — appearing in ranAtBuild means the memoization
-    * broke. The set itself lives in main scope
-    * ([[SparkEntry.memoizedBuildQueries]]) because Bench prices these
-    * entries' one-time build into its headline — one definition, two
-    * consumers.
+  /** Entries whose build-time work is MEMOIZED per fixture dir
+    * (`QuerySpec.Memoized`): eager on the first build, zero jobs on
+    * every later build. The executes-everything test above builds each
+    * query once, so by the time the laziness test runs these must hit
+    * their caches and schedule NOTHING — appearing in ranAtBuild means
+    * the memoization broke.
     */
   private val memoizedEager = SparkEntry.memoizedBuildQueries
 
@@ -153,10 +135,47 @@ class RegistrySpec extends SparkSpec {
           s"documented as eager (memoized-eager entries appearing here " +
           s"mean their cache broke): $offenders")
       assert(ranAtBuild == eagerAtBuild,
-        s"documented-eager entries no longer collect at build " +
-          s"(update docs/PLANS.md and eagerAtBuild): ${eagerAtBuild -- ranAtBuild}")
+        s"declared-eager entries no longer run a job at build " +
+          s"(update their QuerySpec): ${eagerAtBuild -- ranAtBuild}")
       assert(memoizedEager.subsetOf(SparkEntry.queries.keySet),
         s"memoizedEager names unknown queries: ${memoizedEager -- SparkEntry.queries.keySet}")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("query specs pin the eager, memoized and scoped-conf sets") {
+    assert(SparkEntry.specs.keySet.subsetOf(SparkEntry.queries.keySet),
+      s"specs for unknown queries: ${SparkEntry.specs.keySet -- SparkEntry.queries.keySet}")
+    assert(eagerAtBuild === Set("dedup_bucket_stats", "dedup_source_overlap",
+      "dedup_decontaminate_bloom", "dedup_substring", "sim_ann_recall",
+      "sim_cosine_ann_ivf", "sim_cosine_ann_pq", "sim_semdedup",
+      "sim_bucket_stats", "rel_salted_join"))
+    assert(memoizedEager === Set("dedup_near_apply", "dedup_cluster_sizes",
+      "chi2_streaming_replay", "dedup_ngram_jaccard", "dedup_containment",
+      "dedup_streaming_replay"))
+    val replay = Set("chi2_streaming_replay", "dedup_streaming_replay")
+    val covered = replay ++ Set(
+      "rel_dominant_supplier", "rel_sole_late_supplier", "rel_supplier_parts",
+      "dedup_ngram_jaccard", "dedup_containment", "dedup_cluster_sizes",
+      "dedup_near_apply", "text_unigram_logprob", "text_ppl_buckets")
+    def confed(sfDir: String) =
+      SparkEntry.queries.keySet.filter(SparkEntry.queryConfs(_, sfDir, 4).nonEmpty)
+    // every data-sized conf is a no-op at the gate fixture (the cpus
+    // floor binds); only the replay partition count always applies
+    assert(confed(dir) === replay)
+    // sparse tables large enough to clear the floor: every covered
+    // query gets its conf, and no other query does
+    val big = java.nio.file.Files.createTempDirectory("graft-bigfixture")
+    val tables = Seq("lineitem" -> (256L << 20), "documents" -> (64L << 20))
+      .map { case (t, bytes) => big.resolve(s"$t.parquet") -> bytes }
+    try {
+      for ((p, bytes) <- tables) {
+        val f = new java.io.RandomAccessFile(p.toFile, "rw")
+        try f.setLength(bytes) finally f.close()
+      }
+      assert(confed(big.toString) === covered)
+    } finally {
+      tables.foreach(t => java.nio.file.Files.deleteIfExists(t._1))
+      java.nio.file.Files.delete(big)
+    }
   }
 }

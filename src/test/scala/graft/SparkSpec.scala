@@ -10,18 +10,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Four slots whatever the host, so partition-dependent plans and
+    * results read the same everywhere.
+    */
+  lazy val session: SparkSession = Session("graft-test", cpus = 4,
+    conf = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }

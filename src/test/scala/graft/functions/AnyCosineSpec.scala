@@ -79,12 +79,10 @@ class AnyCosineSpec extends graft.SparkSpec {
     assert(kernelContaminated(corpus, eval) === Set.empty)
   }
 
-  test("int8 screen: exact ties and ±1-ulp thresholds decide exactly") {
-    // Adversarial for the screened scan (AnyCosine.scanMx): thresholds
-    // AT, just above, and just below a member's exact cosine force the
-    // borderline path, whose fold must be bit-identical to the chain's
-    // — a screen that judged these by its quantized bound would flip
-    // the 1-ulp cases.
+  test("exact ties and ±1-ulp thresholds decide exactly") {
+    // Thresholds AT, just above, and just below a member's exact cosine:
+    // the kernel's fold must be bit-identical to the chain's, or the
+    // 1-ulp cases flip.
     val rnd = new scala.util.Random(61)
     val vs = Seq.fill(6)(Seq.fill(8)(rnd.nextGaussian()))
     val corpus = vf(vs.zipWithIndex.map { case (v, i) => i.toLong -> v })
@@ -109,43 +107,14 @@ class AnyCosineSpec extends graft.SparkSpec {
           col("v"), col("evals"), lit(tt)), lit(false)))
         .select("id").collect().map(_.getLong(0)).toSet
     }
-    for (screened <- Seq(true, false)) {
-      val saved = AnyCosine.screenOn
-      AnyCosine.screenOn = screened
-      try cosines.zipWithIndex.foreach { case (c, i) =>
-        val id = i.toLong
-        assert(kernelAt(c).contains(id), s"tie at member $i must hit (>=), screen=$screened")
-        assert(kernelAt(Math.nextUp(c)) === cosines.zipWithIndex.collect {
-          case (c2, i2) if c2 >= Math.nextUp(c) => i2.toLong
-        }.toSet, s"t = nextUp(cos_$i), screen=$screened")
-        assert(kernelAt(Math.nextDown(c)).contains(id),
-          s"t = nextDown(cos_$i), screen=$screened")
-      } finally AnyCosine.screenOn = saved
+    cosines.zipWithIndex.foreach { case (c, i) =>
+      val id = i.toLong
+      assert(kernelAt(c).contains(id), s"tie at member $i must hit (>=)")
+      assert(kernelAt(Math.nextUp(c)) === cosines.zipWithIndex.collect {
+        case (c2, i2) if c2 >= Math.nextUp(c) => i2.toLong
+      }.toSet, s"t = nextUp(cos_$i)")
+      assert(kernelAt(Math.nextDown(c)).contains(id), s"t = nextDown(cos_$i)")
     }
-  }
-
-  test("int8 screen: randomized verdict parity screened vs unscreened") {
-    val rnd = new scala.util.Random(83)
-    def v(): Seq[Double] = Seq.fill(16)(rnd.nextGaussian())
-    // pure random corpus plus near-duplicates of eval rows
-    val evalVecs = (1000L until 1040L).map(_ -> v())
-    val evalDf2 = vf(evalVecs)
-    val corpus2 = vf((0L until 300L).map { i =>
-      if (i % 3 == 0) i -> v()
-      else {
-        val base = evalVecs((i % 40).toInt)._2
-        i -> base.map(x => x + rnd.nextGaussian() * 0.02)
-      }
-    })
-    val saved = AnyCosine.screenOn
-    try {
-      AnyCosine.screenOn = true
-      val on = kernelContaminated(corpus2, evalDf2)
-      AnyCosine.screenOn = false
-      val off = kernelContaminated(corpus2, evalDf2)
-      assert(on === off)
-      assert(on.nonEmpty)
-    } finally AnyCosine.screenOn = saved
   }
 
   test("randomized parity against the chain") {

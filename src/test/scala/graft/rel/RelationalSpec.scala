@@ -364,7 +364,7 @@ class RelationalSpec extends SparkSpec {
     // so the reduce-partition count must not change a single value.
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
-    def run() = Relational.wideAggQueries.toSeq.sorted.map { q =>
+    def run() = Relational.specs.keys.toSeq.sorted.map { q =>
       q -> SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq
     }
     val atDefault = run()

@@ -109,6 +109,35 @@ class StreamingDedupSpec extends SparkSpec {
         "(doc_id-ascending feed ⇒ first arrival ≡ min doc_id)")
   }
 
+  test("a fixture with no admitted text yields an empty kept store") {
+    val s = spark; import s.implicits._
+    val fixture = java.nio.file.Files.createTempDirectory("graft-replay-empty")
+    val store = java.nio.file.Files.createTempDirectory("graft-replay-store")
+    try {
+      Seq((1L, null: String), (2L, ""), (3L, null: String))
+        .toDF("doc_id", "text").write.parquet(s"$fixture/documents.parquet")
+      StreamingDedup.buildKeptStore(s, fixture.toString, store)
+      assert(s.read.parquet(store.resolve("kept.parquet").toString).count() === 0)
+    } finally Seq(fixture, store).foreach(ReplayStores.deleteRecursively)
+  }
+
+  test("deleteRecursively closes every directory it lists") {
+    import java.nio.file.{Files, Paths}
+    def openFds(): Long = {
+      val ls = Files.list(Paths.get("/proc/self/fd"))
+      try ls.count() finally ls.close()
+    }
+    val root = Files.createTempDirectory("graft-deep")
+    val leaf = (1 to 60).foldLeft(root)((p, i) => p.resolve(s"d$i"))
+    Files.createDirectories(leaf)
+    Files.write(leaf.resolve("part-0"), Array[Byte](1, 2, 3))
+    val before = openFds()
+    ReplayStores.deleteRecursively(root)
+    val after = openFds()
+    assert(!Files.exists(root))
+    assert(after <= before, s"$before descriptors open before, $after after")
+  }
+
   // ---- event-time TTL (dedupTtl) — same deterministic protocol as
   // StreamingNearDupSpec: the watermark for batch N is computed from
   // batches < N, so an eviction lands one batch after the timestamp

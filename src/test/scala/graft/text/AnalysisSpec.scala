@@ -503,11 +503,6 @@ class AnalysisSpec extends SparkSpec {
     val s2 = (q(2.0) + q(1.0)).toDouble / Analysis.UnigramFpScale - 2.0 * lgT
     assert(got(1L) === ((3L, s1, -(s1 / 3.0))))
     assert(got(2L) === ((2L, s2, -(s2 / 2.0))))
-    // both arms of the vocab-count A/B are bit-identical
-    val etf = Analysis.unigramLogProbArm(d, cntFromTf = true).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3))))
-      .toMap
-    assert(etf === got)
     // fixture run: every doc scored, bits positive (p < 1 throughout)
     val fx = Analysis.queries("text_unigram_logprob")(
       spark, "/root/testdata/sf0.001").collect()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape diagnostic: prints Exchange / ReusedExchange / scan
   * counts for a registered query's initial and AQE-final plans —
   * `Test/runMain graft.tools.PlanDiag <query> [sfDir]`. This is how
@@ -15,10 +13,7 @@ object PlanDiag {
   def main(args: Array[String]): Unit = {
     val q = args.headOption.getOrElse("dedup_ngram_jaccard")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().withExtensions(new graft.functions.GraftExtensions)
-      .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").appName("plan-diag").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session("plan-diag")
     val df = graft.SparkEntry.queries(q)(spark, dir)
     val p = df.queryExecution.executedPlan.toString
     def cnt(re: String, s: String) = re.r.findAllIn(s).size
