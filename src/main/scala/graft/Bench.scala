@@ -31,8 +31,10 @@ import java.util.concurrent.atomic.AtomicLong
   *    query persists internally can never make iterations 2..n
   *    warm-cache, and a GC is requested between queries so one query's
   *    heap pressure isn't paid inside a neighbor's window. The barriers
-  *    are toggleable (SPARK_GRAFT_BENCH_BARRIERS=false) to measure
-  *    their own tax — see docs/BENCH_NOTES.md.
+  *    are always on: their tax was measured once (31.99 s on vs
+  *    21.71 s off at sf0.1) and the reported number keeps them — see
+  *    docs/BENCH_NOTES.md §"Why barriers stay ON for the reported
+  *    number".
   */
 object Bench {
 
@@ -106,8 +108,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
-    val barriers = sys.env.get("SPARK_GRAFT_BENCH_BARRIERS")
-      .forall(v => Session.parseBool(v, "SPARK_GRAFT_BENCH_BARRIERS"))
     // Bench knob for the production-hash variant (default: oracle md5).
     // Validated here, once, at startup: PortableHash.enabled calls
     // String.toBoolean, so an unvalidated "1"/"yes" would otherwise
@@ -175,7 +175,7 @@ object Bench {
       // the dying QUERY attributable from the log; the r14 sf100 runs
       // cost three 25-minute attempts before this existed.
       Console.err.println(s"[bench] running $name")
-      if (barriers) System.gc()
+      System.gc()
       listener.reset()
       HeapPeak.reset()
       // Scoped conf overrides (wide-agg reduce partitions ∝ data):
@@ -189,7 +189,7 @@ object Bench {
             // deduped by logical plan in the CacheManager, so without
             // this, iterations 2..n of a persisting query measure a
             // warm cache and the median understates cold cost.
-            if (barriers) spark.catalog.clearCache()
+            spark.catalog.clearCache()
             val t0 = System.nanoTime()
             materialize(fn(spark, sfDir))
             (System.nanoTime() - t0) / 1e9

@@ -2,8 +2,8 @@ package graft
 
 /** Measured wall-clock registry for the one-time memoized builds named
   * in [[SparkEntry.memoizedBuildQueries]] (docsets table, CC label
-  * fixpoint, streaming replay-store merge). Each memo site wraps its
-  * COLD build in [[timed]]; warm cache reads record nothing.
+  * fixpoint, streaming replay stores, ingest mirrors). [[Memo]] wraps
+  * every COLD build in [[timed]]; warm reads record nothing.
   *
   * Why it exists: Bench's max−median estimator prices the build only
   * when ITERS ≥ 2. At ITERS=1 (the sf100 protocol) max = median = the

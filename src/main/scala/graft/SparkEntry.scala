@@ -32,7 +32,8 @@ object SparkEntry {
     * `queries`, `oracleSql` and, only if it needs one, `specs`.
     */
   val specs: Map[String, QuerySpec] =
-    rel.Relational.specs ++
+    pipeline.ChiSquareQueries.specs ++
+      rel.Relational.specs ++
       dedup.Dedup.specs ++
       sim.Similarity.specs ++
       text.Analysis.specs ++

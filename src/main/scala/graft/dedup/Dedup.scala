@@ -278,7 +278,7 @@ object Dedup {
       (0 until NumHashes).map(i =>
         element_at(col("sig"), i + 1).as(s"h$i")): _*)
     val pairs = bucketPairs(lshBuckets(featH), maxBucketSize)
-    // Exact verification, candidate-sized (the ngramJaccardPairsRaw
+    // Exact verification, candidate-sized (the ngramJaccardPairsOn
     // join-back shape): the tiny pair table attaches each side's
     // sorted key set and signature; the two-pointer kernel replaces
     // array_intersect.
@@ -484,23 +484,6 @@ object Dedup {
       .distinct()
       .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
   }
-
-  /** The verified pair stream (one row per qualifying pair — the
-    * candidate distinct collapses multi-prefix-key duplicates before
-    * verification). [[ngramJaccard]] keeps a defensive distinct for
-    * its one-row-per-pair contract; duplicate-insensitive consumers
-    * (the near-dup label propagation — repeated edges don't move a
-    * min) collect this directly.
-    */
-  private def ngramJaccardPairsRaw(d: DataFrame,
-      threshold: Double = JaccardThreshold,
-      maxShingleDf: Int = MaxShingleDf): DataFrame =
-    // 60-bit hash of each shingle: the inverted index aggregates on
-    // fixed-width longs instead of ~20-char strings (smaller shuffle,
-    // cheaper compares). Collisions (~|shingles|²/2⁶⁰) are shared by
-    // both engines — the oracle hashes identically.
-    ngramJaccardPairsOn(dfOrderedDocsets(d,
-      graft.functions.PortableHash.enabled(d), maxShingleDf), threshold)
 
   private def ngramJaccardPairsOn(docsets: DataFrame,
       threshold: Double): DataFrame = {
@@ -1517,20 +1500,16 @@ object Dedup {
     * table is computed once per (application, dir) and shared — the
     * product shape for a real pipeline, where labels are computed once
     * and every consumer (apply, histogram, audit) derives from them.
-    * The cache holds only checkpoint-backed label tables (node-bounded,
-    * KBs at fixture scale); keying by applicationId makes entries from
-    * stopped sessions unreachable. Raw (pre-distinct) pair stream in:
-    * label propagation is duplicate-insensitive, so the distinct
-    * exchange is skipped and the cap-bounded duplicates ride along.
+    * The memo ([[graft.Memo.frame]]) holds only checkpoint-backed label
+    * tables (node-bounded, KBs at fixture scale). Raw (pre-distinct)
+    * pair stream in: label propagation is duplicate-insensitive, so the
+    * distinct exchange is skipped and the cap-bounded duplicates ride
+    * along.
     */
-  private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def labelsFor(s: SparkSession, dir: String): DataFrame =
-    labelsCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
-      graft.BuildWall.timed("cc_labels")(
-        nearDupLabels(ngramJaccardPairsOn(docsetsFor(s, dir), JaccardThreshold)
-          .select("doc_a", "doc_b"))))
+    graft.Memo.frame(s, dir, "cc_labels")(
+      nearDupLabels(ngramJaccardPairsOn(docsetsFor(s, dir), JaccardThreshold)
+        .select("doc_a", "doc_b")))
 
   /** Standing per-fixture docsets table: `dedup_ngram_jaccard`,
     * `dedup_containment`, and the CC label build ([[labelsFor]]) all
@@ -1549,16 +1528,11 @@ object Dedup {
     * mode because the keys themselves differ under
     * [[graft.functions.PortableHash]] production mode.
     */
-  private val docsetsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def docsetsFor(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val production = graft.functions.PortableHash.enabled(d)
-    docsetsCache.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|$dir|$production",
-      _ => graft.BuildWall.timed("docsets")(
-        dfOrderedDocsets(d, production, MaxShingleDf).localCheckpoint()))
+    graft.Memo.frame(s, dir, "docsets", s"production=$production")(
+      dfOrderedDocsets(d, production, MaxShingleDf).localCheckpoint())
   }
 
   // ---- DuckDB oracle SQL ------------------------------------------------

@@ -28,9 +28,6 @@ object Events {
   private def ev(s: SparkSession, dir: String): DataFrame =
     graft.sources.EventSource.load(s, dir)
 
-  private def dsum(c: org.apache.spark.sql.Column) =
-    sum(c.cast("decimal(28,10)")).cast("double")
-
   val SessionGapMinutes = 30
 
   /** |z| floor for [[events_anomaly]] rows. 2.0 binds on the fixtures

@@ -121,10 +121,6 @@ object GraftFunctions {
   def graftLog2(c: Column): Column =
     call_function("graft_log2", c)
 
-  /** Column-API form of [[RunStats]]. */
-  def graftRunStats(c: Column): Column =
-    call_function("graft_run_stats", c)
-
   /** Column-API form of [[GramStats]]. */
   def graftGramStats(toks: Column, n: Column): Column =
     call_function("graft_gram_stats", toks, n)

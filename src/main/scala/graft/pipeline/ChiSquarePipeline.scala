@@ -37,9 +37,7 @@ object ChiSquarePipeline {
   def chi2Table(docsRaw: DataFrame, textCol: String, categoryCol: String,
       stopwords: Seq[String] = Tokenize.DefaultStopwords): DataFrame = {
     val (docs, toks) = tokens(docsRaw, textCol, categoryCol, stopwords)
-    Contingency.table(toks, docs)
-      .withColumn("chi2",
-        ChiSquare.chi2(col("a"), col("b"), col("c"), col("d"), col("n")))
+    withChi2(Contingency.table(toks, docs))
   }
 
   /** Flagship result: top-k terms per category, (category, term, chi2, rank),
@@ -48,13 +46,22 @@ object ChiSquarePipeline {
     */
   def topTerms(docsRaw: DataFrame, textCol: String, categoryCol: String,
       k: Int = DefaultK,
-      stopwords: Seq[String] = Tokenize.DefaultStopwords): DataFrame = {
-    val scored = chi2Table(docsRaw, textCol, categoryCol, stopwords)
+      stopwords: Seq[String] = Tokenize.DefaultStopwords): DataFrame =
+    ranked(chi2Table(docsRaw, textCol, categoryCol, stopwords), k)
+
+  /** Adds `chi2` to a contingency table (a, b, c, d, n). */
+  def withChi2(cont: DataFrame): DataFrame =
+    cont.withColumn("chi2",
+      ChiSquare.chi2(col("a"), col("b"), col("c"), col("d"), col("n")))
+
+  /** The ranking tail shared by the batch and streaming forms: top-k
+    * per category by (chi2 desc, term asc), ordered (category, rank).
+    */
+  def ranked(scored: DataFrame, k: Int): DataFrame =
     TopK.perGroup(scored, Seq(col("category")),
         Seq(col("chi2").desc, col("term").asc), k)
       .select("category", "term", "chi2", "rank")
       .orderBy(col("category"), col("rank"))
-  }
 
   /** Merged dictionary (SURVEY G6/T3): distinct selected terms, sorted. */
   def mergedDictionary(top: DataFrame): DataFrame =

@@ -442,10 +442,6 @@ object Similarity {
     }
   }
 
-  /** Subspace m of a double-array column (1-based slice). */
-  private def subCol(v: Column, m: Int): Column =
-    slice(v, m * PqSubDim + 1, PqSubDim)
-
   /** A constant double array as ONE Literal node (`typedLit`), not a
     * [[Dim]]-child `CreateArray(lit, …)` tree. Catalyst constant-folds
     * both to the same ArrayData, so runtime values are identical — but

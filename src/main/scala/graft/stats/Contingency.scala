@@ -33,19 +33,30 @@ object Contingency {
     * `docs` must be the admitted documents (one row per document, with a
     * `category` column) — it supplies G3/G4 denominators.
     */
-  def table(tokens: DataFrame, docs: DataFrame): DataFrame = {
+  def table(tokens: DataFrame, docs: DataFrame): DataFrame =
     // G1: A = #docs in category containing term (tokens are per-doc distinct)
-    val termCat = tokens.groupBy("term", "category").agg(count("*").as("a"))
+    fromCounts(tokens.groupBy("term", "category").agg(count("*").as("a")),
+      // G3: #docs per category
+      docs.groupBy("category").agg(count("*").as("c_total")),
+      // G4: N as a 1-row frame, keeping the DAG fully lazy
+      docs.agg(count("*").as("n")))
+
+  /** The count families → the same 2×2 table: `termCat` (term,
+    * category, a), `catDocs` (category, c_total) and the 1-row `n`. The
+    * batch pipeline counts them from tokens; the streaming maintainer
+    * reads them from its store. `catDocs` and `n` are by-name so they
+    * are built after G2: expression ids follow the G1→G4 order, which
+    * keeps the flagship plan in docs/PLANS.md stable.
+    */
+  def fromCounts(termCat: DataFrame, catDocs: => DataFrame, n: => DataFrame): DataFrame = {
     // G2: #docs containing term anywhere — derived from G1, not re-scanned
     val termTotal = termCat.groupBy("term").agg(sum("a").as("t_total"))
-    // G3: #docs per category (broadcast: category cardinality is tiny)
-    val catDocs = docs.groupBy("category").agg(count("*").as("c_total"))
-    // G4: N as a 1-row broadcast, keeping the DAG fully lazy
-    val nDf = docs.agg(count("*").as("n"))
-
+    // G3 broadcasts (category cardinality is tiny); G4 is a 1-row broadcast
+    val cd = catDocs
+    val nDf = n
     termCat
       .join(termTotal, "term")
-      .join(broadcast(catDocs), "category")
+      .join(broadcast(cd), "category")
       .crossJoin(broadcast(nDf))
       .withColumn("b", col("t_total") - col("a"))
       .withColumn("c", col("c_total") - col("a"))

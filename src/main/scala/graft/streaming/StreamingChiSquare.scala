@@ -6,8 +6,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.pipeline.ChiSquarePipeline
+import graft.stats.Contingency
 import graft.text.Tokenize
-import graft.stats.{ChiSquare, TopK}
 
 /** Streaming χ² (SURVEY §7.4's deferred design, made concrete).
   *
@@ -18,8 +19,8 @@ import graft.stats.{ChiSquare, TopK}
   * new documents, aggregates delta counts (the sufficient statistic —
   * per-(term, category) doc frequencies plus per-category doc counts),
   * and merges them into a versioned parquet count store. χ²/top-k are
-  * then a cheap BATCH query over the merged counts, identical math to
-  * [[graft.pipeline.ChiSquarePipeline]].
+  * then a cheap BATCH query over the merged counts, through the same
+  * contingency and ranking steps as [[ChiSquarePipeline]].
   *
   * Scale notes: per batch, work is O(new docs) tokenize + a
   * vocabulary-sized merge — the raw corpus is never reprocessed. The
@@ -73,20 +74,18 @@ object StreamingChiSquare {
   /** Drop versions older than the newest `RetainPredecessors + 1`. */
   private def pruneVersions(storeDir: String): Unit =
     versionDirs(storeDir).dropRight(RetainPredecessors + 1)
-      .foreach { case (_, dir) => ReplayStores.deleteRecursively(Paths.get(dir)) }
+      .foreach { case (_, dir) => graft.Memo.deleteRecursively(Paths.get(dir)) }
 
   /** Merge one micro-batch of raw documents into the count store. */
   def mergeBatch(batch: DataFrame, batchId: Long, storeDir: String,
       textCol: String, categoryCol: String,
       stopwords: Seq[String] = Tokenize.DefaultStopwords): Unit = {
     val spark = batch.sparkSession
-    val docs = Tokenize.admitted_docs(batch, textCol, categoryCol)
+    val (docs, toks) = ChiSquarePipeline.tokens(batch, textCol, categoryCol, stopwords)
     // Zero-delta batch: the merged table would be byte-identical to the
     // predecessor — skip the vocabulary-sized rewrite. latestCounts
     // tolerates the version-number gap (it takes the newest id < below).
     if (docs.isEmpty) return
-    val toks = docs.select(col("category"),
-      explode(Tokenize.tokenArray(col(textCol), stopwords)).as("term"))
     val deltaTermCat = toks.groupBy("term", "category").agg(count(lit(1)).as("a"))
     val deltaCatDocs = docs.groupBy("category").agg(count(lit(1)).as("c_total"))
 
@@ -105,28 +104,15 @@ object StreamingChiSquare {
     pruneVersions(storeDir)
   }
 
-  /** χ² + top-k over the CURRENT store contents — same contingency and
-    * formula as the batch pipeline, but fed from maintained counts.
+  /** χ² + top-k over the CURRENT store contents — the batch pipeline's
+    * contingency and ranking steps, fed from maintained counts.
     */
   def topTermsFromStore(spark: SparkSession, storeDir: String,
-      k: Int = graft.pipeline.ChiSquarePipeline.DefaultK): DataFrame = {
+      k: Int = ChiSquarePipeline.DefaultK): DataFrame = {
     val (termCat, catDocs) = latestCounts(spark, storeDir)
       .getOrElse(sys.error(s"empty chi-square store: $storeDir"))
-    val termTotal = termCat.groupBy("term").agg(sum(col("a")).as("t_total"))
-    val nDf = catDocs.agg(sum(col("c_total")).as("n"))
-    val cont = termCat
-      .join(termTotal, "term")
-      .join(broadcast(catDocs), "category")
-      .crossJoin(broadcast(nDf))
-      .withColumn("b", col("t_total") - col("a"))
-      .withColumn("c", col("c_total") - col("a"))
-      .withColumn("d", col("n") - col("t_total") - col("c_total") + col("a"))
-      .withColumn("chi2",
-        ChiSquare.chi2(col("a"), col("b"), col("c"), col("d"), col("n")))
-    TopK.perGroup(cont, Seq(col("category")),
-        Seq(col("chi2").desc, col("term").asc), k)
-      .select("category", "term", "chi2", "rank")
-      .orderBy(col("category"), col("rank"))
+    ChiSquarePipeline.ranked(ChiSquarePipeline.withChi2(Contingency.fromCounts(
+      termCat, catDocs, catDocs.agg(sum(col("c_total")).as("n")))), k)
   }
 
   /** Micro-batch count for [[replayTopTerms]]' deterministic replay. */
@@ -146,27 +132,20 @@ object StreamingChiSquare {
     *
     * The store is a pure function of the (immutable) sfDir fixture —
     * batch split is doc_id mod N, merges are deterministic — so it is
-    * built ONCE per (app, dir) and reused within the app (write-once
-    * marker; a partial build — missing marker — is wiped and rebuilt).
-    * Through r10 every invocation (explain, PlanDump, bench, oracle
-    * run) created a FRESH temp dir, re-ran the NumReplayBatches merge
-    * jobs, and leaked the directory on disk. Since r17 the store root
-    * is keyed by applicationId ([[ReplayStores]]) so a warm /tmp from
-    * an EARLIER JVM can never serve this run's replay — every fresh run
-    * pays the merge jobs by construction.
+    * built ONCE per (app, dir) by [[graft.Memo.store]] and reused within
+    * the app. Through r10 every invocation (explain, PlanDump, bench,
+    * oracle run) created a FRESH temp dir, re-ran the NumReplayBatches
+    * merge jobs, and leaked the directory on disk. Since r17 the store
+    * is keyed by applicationId, so a warm /tmp from an EARLIER JVM can
+    * never serve this run's replay — every fresh run pays the merge
+    * jobs by construction.
     */
   def replayTopTerms(s: SparkSession, dir: String): DataFrame = {
-    val store = ReplayStores.root(s, "graft_chi2_replay")
-      .resolve(dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    val marker = store.resolve("_REPLAY_DONE")
-    if (!Files.exists(marker)) graft.BuildWall.timed("replay_store") {
-      ReplayStores.deleteRecursively(store)
-      Files.createDirectories(store)
+    val store = graft.Memo.store(s, dir, "replay_store") { out =>
       val d = graft.sources.Tables.parquet(s, dir, "documents")
       for (b <- 0 until NumReplayBatches)
         mergeBatch(d.filter(pmod(col("doc_id"), lit(NumReplayBatches)) === b),
-          b.toLong, store.toString, "text", "lang")
-      Files.write(marker, Array.emptyByteArray)
+          b.toLong, out.toString, "text", "lang")
     }
     topTermsFromStore(s, store.toString)
   }

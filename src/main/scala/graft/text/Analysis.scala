@@ -210,8 +210,6 @@ object Analysis {
   private def shingleOfN(toks: Column, n: Int): Column =
     graft.functions.Ngrams.shingleOfN(toks, n)
 
-  private def shingleOf(toks: Column): Column = shingleOfN(toks, FpShingleSize)
-
   /** Two fingerprints per doc:
     *  - `bow_fp`: md5 of the sorted distinct token bag — an
     *    order-insensitive exact-dedup key;

@@ -56,7 +56,7 @@ object StreamBench {
       stateRows: Long, stateMem: Long)
 
   private def report(arm: String, batches: Seq[BatchRow],
-      extra: Map[String, String] = Map.empty): String = {
+      extra: Map[String, String]): String = {
     batches.zipWithIndex.foreach { case (b, i) =>
       println(f"  [$arm] batch $i%2d: ${b.rows}%6d rows in ${b.ms}%5d ms" +
         f"  state_rows=${b.stateRows}%8d state_mem=${b.stateMem / 1024}%7d KB")

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions.col
 
 /** Whole-registry integrity net: every `SparkEntry.queries` entry must
@@ -151,7 +153,7 @@ class RegistrySpec extends SparkSpec {
       "sim_bucket_stats", "rel_salted_join"))
     assert(memoizedEager === Set("dedup_near_apply", "dedup_cluster_sizes",
       "chi2_streaming_replay", "dedup_ngram_jaccard", "dedup_containment",
-      "dedup_streaming_replay"))
+      "dedup_streaming_replay", "chi2_top_terms_jsonl", "chi2_top_terms_csv"))
     val replay = Set("chi2_streaming_replay", "dedup_streaming_replay")
     val covered = replay ++ Set(
       "rel_dominant_supplier", "rel_sole_late_supplier", "rel_supplier_parts",
@@ -176,6 +178,31 @@ class RegistrySpec extends SparkSpec {
     } finally {
       tables.foreach(t => java.nio.file.Files.deleteIfExists(t._1))
       java.nio.file.Files.delete(big)
+    }
+  }
+
+  test("chi2_top_terms_jsonl ignores a complete-looking mirror left by an earlier JVM") {
+    // Through r17 the mirror lived at tmpdir/graft_jsonl/<sanitized dir>
+    // and any directory there holding _SUCCESS and malformed.json was
+    // read as this run's mirror.
+    val leftover = Paths.get(sys.props("java.io.tmpdir"), "graft_jsonl",
+      dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    // remove afterwards exactly what the seeding created
+    val created = Iterator.iterate(leftover)(_.getParent).takeWhile(!Files.exists(_)).toList
+    Files.createDirectories(leftover)
+    val seeded = Seq(
+      leftover.resolve("_SUCCESS") -> "",
+      leftover.resolve("malformed.json") -> "this is not json\n",
+      leftover.resolve("part-00000-leftover.json") ->
+        "{\"reviewText\":\"leftover bogus review\",\"category\":\"en\"}\n")
+    seeded.foreach { case (p, text) => Files.write(p, text.getBytes("UTF-8")) }
+    try {
+      val want = SparkEntry.queries("chi2_top_terms")(spark, dir).collect().toSeq
+      val got = SparkEntry.queries("chi2_top_terms_jsonl")(spark, dir).collect().toSeq
+      assert(got === want)
+    } finally {
+      seeded.foreach { case (p, _) => Files.deleteIfExists(p) }
+      created.foreach(Files.deleteIfExists)
     }
   }
 }

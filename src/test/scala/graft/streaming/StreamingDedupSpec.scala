@@ -118,7 +118,7 @@ class StreamingDedupSpec extends SparkSpec {
         .toDF("doc_id", "text").write.parquet(s"$fixture/documents.parquet")
       StreamingDedup.buildKeptStore(s, fixture.toString, store)
       assert(s.read.parquet(store.resolve("kept.parquet").toString).count() === 0)
-    } finally Seq(fixture, store).foreach(ReplayStores.deleteRecursively)
+    } finally Seq(fixture, store).foreach(graft.Memo.deleteRecursively)
   }
 
   test("deleteRecursively closes every directory it lists") {
@@ -132,7 +132,7 @@ class StreamingDedupSpec extends SparkSpec {
     Files.createDirectories(leaf)
     Files.write(leaf.resolve("part-0"), Array[Byte](1, 2, 3))
     val before = openFds()
-    ReplayStores.deleteRecursively(root)
+    graft.Memo.deleteRecursively(root)
     val after = openFds()
     assert(!Files.exists(root))
     assert(after <= before, s"$before descriptors open before, $after after")
