@@ -14,7 +14,7 @@ object PlanDump {
     "dedup_near_apply" ->
       "End-to-end near-dedup with DISTRIBUTED connected components, exact to FIXPOINT since r11: the cap-bounded verified pair table feeds min-label propagation rounds (neighbor min + pointer-doubling label-of-label hop, so convergence is O(log diameter)), each round's node-bounded label table materialized via eager localCheckpoint (or reliable checkpoint when a dir is given) with a changed-flag probe over the fresh blocks deciding convergence; no edge or label crosses the driver, the final label table enters one AQE-broadcast corpus left-join, and the label pass is shared with dedup_cluster_sizes through a per-fixture cache.",
     "chi2_top_terms" ->
-      "One explode feeds the shared termCat exchange (ReusedExchange in the AQE final plan); category totals and N broadcast; WindowGroupLimit bounds the top-k shuffle.",
+      "One explode of the fused graft_doc_terms tokenizer (no lambda in the Generate) feeds the shared termCat exchange (ReusedExchange in the AQE final plan); category totals and N broadcast; WindowGroupLimit bounds the top-k shuffle, and its ≤ k·|cats| survivors are sorted in one partition (SinglePartition exchange, no range-partition sampling job).",
     "dedup_minhash_candidates" ->
       "Signature stage is ONE narrow map: the native graft_minhash kernel folds all 16 affine minima per doc straight off the token array (no shingle explode, no doc_id exchange — the column chain kept that shape and is spec-pinned bit-equal in both hash modes); the first shuffle in the whole query is the (band, sig) bucket aggregate, and pair expansion stays in-bucket with the oversized-bucket guard upstream.",
     "dedup_ngram_jaccard" ->

@@ -161,6 +161,10 @@ object GraftFunctions {
   def graftQualityStats(text: Column, stopwords: Column): Column =
     call_function("graft_quality_stats", text, stopwords)
 
+  /** Column-API form of [[DocTerms]]: stopwords must be a literal. */
+  def graftDocTerms(lowered: Column, stopwords: Column): Column =
+    call_function("graft_doc_terms", lowered, stopwords)
+
   /** Column-API form of [[LangId]]. */
   def graftLangId(text: Column, markers: Column): Column =
     call_function("graft_lang_id", text, markers)
@@ -258,6 +262,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       PiiScan(c.head)))
     ext.injectFunction(fn("graft_quality_stats", classOf[QualityStats], 2)(c =>
       QualityStats(c(0), c(1))))
+    ext.injectFunction(fn("graft_doc_terms", classOf[DocTerms], 2)(c =>
+      DocTerms(c(0), c(1))))
     ext.injectFunction(fn("graft_lang_id", classOf[LangId], 2)(c =>
       LangId(c(0), c(1))))
     ext.injectFunction(fn("graft_regex_count", classOf[RegexCount], 2)(c =>

@@ -16,7 +16,8 @@ import graft.stats.{ChiSquare, Contingency, TopK}
   * materialization (reference run_chi chains 4 MapReduce rounds) and no
   * single-reducer funnel (reference chi_square.py:46–47). Physical shape:
   * two wide shuffles (term-cat aggregate; term-total join) + two
-  * broadcasts (category totals, N) + the group-limited window.
+  * broadcasts (category totals, N) + the group-limited window; only its
+  * ≤ k·|categories| survivors meet in one partition for the final order.
   */
 object ChiSquarePipeline {
 
@@ -56,12 +57,16 @@ object ChiSquarePipeline {
 
   /** The ranking tail shared by the batch and streaming forms: top-k
     * per category by (chi2 desc, term asc), ordered (category, rank).
+    *
+    * At most k·|categories| rows survive the window, so they are ordered
+    * in one partition: a global `orderBy` would pay a range-partition
+    * sampling job and a shuffle stage for the same result.
     */
   def ranked(scored: DataFrame, k: Int): DataFrame =
     TopK.perGroup(scored, Seq(col("category")),
         Seq(col("chi2").desc, col("term").asc), k)
       .select("category", "term", "chi2", "rank")
-      .orderBy(col("category"), col("rank"))
+      .repartition(1).sortWithinPartitions(col("category"), col("rank"))
 
   /** Merged dictionary (SURVEY G6/T3): distinct selected terms, sorted. */
   def mergedDictionary(top: DataFrame): DataFrame =
@@ -88,7 +93,8 @@ object ChiSquarePipeline {
     // rollup's grand-total group emits the sorted distinct term
     // dictionary (collect_set ≡ distinct), and `grouping()` — not a
     // null test — marks the total row, so a hypothetical null category
-    // could never collide with it.
+    // could never collide with it. The ≤ k·|cats| + 1 lines are ordered
+    // in one partition, as in `ranked`.
     top
       .withColumn("kv", concat_ws(":", col("term"),
         format_string("%.6f", col("chi2"))))
@@ -102,6 +108,6 @@ object ChiSquarePipeline {
           .otherwise(concat_ws(" ", col("category"), col("terms"))).as("line"),
         when(col("g") === 1, lit("￿")) // dictionary last
           .otherwise(col("category")).as("sort_key"))
-      .orderBy("sort_key").select("line")
+      .repartition(1).sortWithinPartitions("sort_key").select("line")
   }
 }

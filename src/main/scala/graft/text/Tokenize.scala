@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Canonical tokenization semantics (SURVEY §2.9 D1–D4 canon, derived from
   * the 4-stage pipeline variant of the reference):
@@ -14,11 +15,12 @@ import org.apache.spark.sql.functions._
   * order run_chi:66–67, multi_jobs_hdfs.py:74–78 (SURVEY D1); length bounds
   * run_chi:67 (SURVEY D3); empty-field skip run_chi:62–65 (SURVEY D4).
   *
-  * Everything here is built from codegen'd `org.apache.spark.sql.functions`
-  * — no UDFs — so the whole stage stays inside WholeStageCodegen and the
-  * per-document work (split, filter, distinct) happens map-side before the
-  * explode, exactly like the reference's in-mapper combining
-  * (chi_square.py:37) but without a hand-written combiner.
+  * The per-document work (split, length and stopword filter, distinct)
+  * is one native kernel, [[graft.functions.DocTerms]], evaluated inside
+  * whole-stage codegen map-side before the explode, exactly like the
+  * reference's in-mapper combining (chi_square.py:37) but without a
+  * hand-written combiner. Only `lower` stays Spark's own, so case
+  * folding is the engine's.
   */
 object Tokenize {
 
@@ -34,7 +36,7 @@ object Tokenize {
 
   /** Canonical stopword set. The reference takes stopwords as a side file
     * (chi_square.py:25–28); the engine embeds a default set and also
-    * accepts any user-provided set (see [[tokensWithStopwords]]).
+    * accepts any user-provided set (the `stopwords` of [[tokenArray]]).
     */
   val DefaultStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
@@ -45,33 +47,17 @@ object Tokenize {
     stop.map(s => "'" + s.replace("'", "''") + "'").mkString("(", ",", ")")
 
   /** `text` column → deduplicated token array column (canon order:
-    * lower → split → len∈(1,50) → not stopword → distinct).
+    * lower → split → len∈(1,50) → not stopword → distinct), in
+    * first-occurrence order.
     *
-    * `filter` / `array_distinct` are higher-order functions evaluated
-    * map-side on the array — the explode (and thus the shuffle input)
-    * only ever sees per-document-distinct tokens, which at 100 TB is the
-    * difference between shuffling every token occurrence and shuffling
-    * the (much smaller) per-doc vocabulary.
+    * One `graft_doc_terms` call over `lower(text)`: the explode (and
+    * thus the shuffle input) only ever sees per-document-distinct
+    * tokens, which at 100 TB is the difference between shuffling every
+    * token occurrence and shuffling the (much smaller) per-doc
+    * vocabulary.
     */
-  def tokenArray(text: Column, stopwords: Seq[String] = DefaultStopwords): Column = {
-    val toks = split(lower(text), DelimRegex)
-    val kept = filter(toks, t =>
-      length(t) > 1 && length(t) < 50 && !t.isInCollection(stopwords))
-    array_distinct(kept)
-  }
-
-  /** documents(text, category, …) → one row per (doc, distinct token).
-    * Input rows with null/empty text or category are skipped (D4).
-    * Output columns: all of `keep` plus `term`.
-    */
-  def explodeTokens(docs: DataFrame, textCol: String, categoryCol: String,
-      keep: Seq[String] = Seq("category"),
-      stopwords: Seq[String] = DefaultStopwords): DataFrame = {
-    val admitted = admitted_docs(docs, textCol, categoryCol)
-    admitted
-      .withColumn("term", explode(tokenArray(col(textCol), stopwords)))
-      .select((keep.map(col) :+ col("term")): _*)
-  }
+  def tokenArray(text: Column, stopwords: Seq[String] = DefaultStopwords): Column =
+    GraftFunctions.graftDocTerms(lower(text), typedLit(stopwords))
 
   /** D4 admission predicate: both fields present and non-empty
     * (run_chi:62–65). Renames categoryCol → `category`.

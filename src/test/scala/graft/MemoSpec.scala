@@ -12,7 +12,7 @@ class MemoSpec extends SparkSpec {
 
   /** A fresh fixture-dir key per test, so runs never share memo entries. */
   private def withDir(body: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-memo-spec")
+    val dir = TempDir("graft-memo-spec")
     try body(dir.toString) finally Memo.deleteRecursively(dir)
   }
 

@@ -166,7 +166,7 @@ class RegistrySpec extends SparkSpec {
     assert(confed(dir) === replay)
     // sparse tables large enough to clear the floor: every covered
     // query gets its conf, and no other query does
-    val big = java.nio.file.Files.createTempDirectory("graft-bigfixture")
+    val big = TempDir("graft-bigfixture")
     val tables = Seq("lineitem" -> (256L << 20), "documents" -> (64L << 20))
       .map { case (t, bytes) => big.resolve(s"$t.parquet") -> bytes }
     try {

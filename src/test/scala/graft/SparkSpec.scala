@@ -15,5 +15,5 @@ object SparkSpec {
     */
   lazy val session: SparkSession = Session("graft-test", cpus = 4,
     conf = Map("spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
+      TempDir("graft-warehouse").toString))
 }

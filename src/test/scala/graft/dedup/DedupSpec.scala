@@ -50,7 +50,7 @@ class DedupSpec extends SparkSpec {
 
   test("nearDupLabels with a checkpoint dir takes the reliable-checkpoint path") {
     val s = spark; import s.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = graft.TempDir("graft-ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val lab = Dedup.nearDupLabels(pairs, checkpointDir = Some(ckpt))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

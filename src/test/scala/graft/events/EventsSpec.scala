@@ -59,7 +59,7 @@ class EventsSpec extends SparkSpec {
     ).toDF("event_id", "min_off", "uid", "event_type")
       .select(col("event_id"), timestamp_seconds(col("min_off") * 60).as("ts"),
         col("uid").as("user_id"), col("event_type"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fn")
+    val tmp = graft.TempDir("graft-fn")
     df.write.mode("overwrite").parquet(tmp.resolve("events.parquet").toString)
     val got = Events.queries("events_funnel")(spark, tmp.toString)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
@@ -78,7 +78,7 @@ class EventsSpec extends SparkSpec {
     ).toDF("event_id", "sec", "uid")
       .select(col("event_id"), timestamp_seconds(col("sec")).as("ts"),
         col("uid").as("user_id"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rt")
+    val tmp = graft.TempDir("graft-rt")
     df.write.mode("overwrite").parquet(tmp.resolve("events.parquet").toString)
     val got = Events.queries("events_retention")(spark, tmp.toString)
       .collect().map(r => (r.getDate(0).toString, r.getInt(1), r.getLong(2))).toSet
@@ -98,7 +98,7 @@ class EventsSpec extends SparkSpec {
       .select(col("event_id"),
         timestamp_seconds(col("min_off") * 60).as("ts"),
         col("uid").as("user_id"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ev")
+    val tmp = graft.TempDir("graft-ev")
     df.write.mode("overwrite").parquet(tmp.resolve("events.parquet").toString)
     val got = Events.queries("events_sessionize")(spark, tmp.toString)
       .select("user_id", "session_seq", "n_events")
@@ -119,7 +119,7 @@ class EventsSpec extends SparkSpec {
       .select(col("event_id"),
         timestamp_seconds(col("min_off") * 60).as("ts"),
         col("uid").as("user_id"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ev")
+    val tmp = graft.TempDir("graft-ev")
     df.write.mode("overwrite").parquet(tmp.resolve("events.parquet").toString)
     val got = Events.queries("events_top_sessions")(spark, tmp.toString)
       .select("user_id", "session_seq", "n_events", "duration_us")
@@ -147,7 +147,7 @@ class EventsSpec extends SparkSpec {
     val df = rows.toDF("event_id", "sec", "uid", "event_type")
       .select(col("event_id"), timestamp_seconds(col("sec")).as("ts"),
         col("uid").as("user_id"), col("event_type"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-an")
+    val tmp = graft.TempDir("graft-an")
     df.write.mode("overwrite").parquet(tmp.resolve("events.parquet").toString)
     val got = Events.queries("events_anomaly")(spark, tmp.toString).collect()
     assert(got.length === 1, got.mkString("; "))

@@ -50,7 +50,7 @@ class FunnelPropertySpec extends graft.SparkSpec {
       val df = trace.toDF("event_id", "min", "user_id", "event_type")
         .select(col("event_id"), timestamp_seconds(col("min") * 60).as("ts"),
           col("user_id"), col("event_type"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-fp")
+      val tmp = graft.TempDir("graft-fp")
       df.write.mode("overwrite").parquet(tmp.resolve("events.parquet").toString)
       val want = trace.groupBy(_.uid).values.map(stageOf)
         .groupBy(identity).view.mapValues(_.size.toLong).toMap

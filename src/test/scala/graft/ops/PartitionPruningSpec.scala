@@ -12,7 +12,7 @@ class PartitionPruningSpec extends SparkSpec {
 
   test("category filter becomes a partition filter on a partitioned sink") {
     val src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft-part")
+    val out = graft.TempDir("graft-part")
       .resolve("docs_by_lang").toString
     src.write.partitionBy("lang").mode("overwrite").parquet(out)
 

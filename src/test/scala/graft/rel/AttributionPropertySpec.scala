@@ -42,7 +42,7 @@ class AttributionPropertySpec extends graft.SparkSpec {
         .select(col("event_id"), timestamp_seconds(col("sec")).as("ts"),
           lit(1L).as("user_id"), col("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ap")
+      val tmp = graft.TempDir("graft-ap")
       df.write.mode("overwrite").parquet(tmp.resolve("events.parquet").toString)
       val want = (for {
         p <- trace if p.kind == "purchase"

@@ -53,7 +53,7 @@ class RelationalSpec extends SparkSpec {
       .select(col("cust").as("o_custkey"), col("okey").as("o_orderkey"),
         timestamp_seconds(col("day") * 86400).as("o_orderdate"),
         col("price").as("o_totalprice"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rw")
+    val tmp = graft.TempDir("graft-rw")
     orders.write.mode("overwrite").parquet(tmp.resolve("orders.parquet").toString)
     val got = Relational.queries("rel_window_running")(spark, tmp.toString)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),

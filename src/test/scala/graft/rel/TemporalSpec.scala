@@ -12,7 +12,7 @@ class TemporalSpec extends SparkSpec {
       .select(col("event_id"), timestamp_seconds(col("sec")).as("ts"),
         lit(1L).as("user_id"), col("event_type"), lit(0.0).as("value"),
         lit("{}").as("props"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tmp")
+    val tmp = graft.TempDir("graft-tmp")
     df.write.mode("overwrite").parquet(tmp.resolve("events.parquet").toString)
     tmp.toString
   }

@@ -268,7 +268,7 @@ class SimilaritySpec extends SparkSpec {
       (2L, vec(0.0, 1.0), 3),      // orthogonal → keep
       (3L, vec(1.0, 1.0), 7)       // cos ≈ 0.707 → drop
     ).toDF("vec_id", "embedding", "label")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-edec")
+    val tmp = graft.TempDir("graft-edec")
     d.write.mode("overwrite").parquet(tmp.resolve("embeddings.parquet").toString)
     val kept = Similarity.queries("sim_embedding_decontam")(spark, tmp.toString)
       .collect().map(r => (r.getLong(0), r.getInt(1)))

@@ -25,7 +25,7 @@ class EventSourceSchemaSpec extends SparkSpec {
 
   private def writeVariant(kind: String): String = {
     val s = spark
-    val tmp = java.nio.file.Files.createTempDirectory(s"evschema-$kind")
+    val tmp = graft.TempDir(s"evschema-$kind")
     val base = graft.sources.EventSource.load(s, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val df = kind match {

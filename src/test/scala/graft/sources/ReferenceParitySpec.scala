@@ -11,7 +11,7 @@ import java.nio.file.Files
 class ReferenceParitySpec extends SparkSpec {
 
   private def writeTemp(name: String, lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory("graft-parity")
+    val dir = graft.TempDir("graft-parity")
     val f = dir.resolve(name)
     Files.write(f, String.join("\n", lines: _*).getBytes("UTF-8"))
     f.toString
@@ -39,7 +39,7 @@ class ReferenceParitySpec extends SparkSpec {
     // reassemble them instead of splitting one record into malformed
     // fragments that DROPMALFORMED would silently drop (losing REAL
     // rows, not just injected junk).
-    val dir = Files.createTempDirectory("graft-parity-csv").toString
+    val dir = graft.TempDir("graft-parity-csv").toString
     val src = spark.createDataFrame(Seq(
       ("line one\nline two", "X"),
       ("plain text", "Y"),
@@ -53,7 +53,7 @@ class ReferenceParitySpec extends SparkSpec {
   }
 
   test("CSV scan still drops exactly the malformed rows under multiLine") {
-    val dir = Files.createTempDirectory("graft-parity-csv2")
+    val dir = graft.TempDir("graft-parity-csv2")
     Files.write(dir.resolve("good.csv"),
       "\"multi\nline field\",X\nplain,Y\n".getBytes("UTF-8"))
     Files.write(dir.resolve("bad.csv"),
@@ -65,7 +65,7 @@ class ReferenceParitySpec extends SparkSpec {
   }
 
   test("JSONL scan tolerates a UTF-8 BOM and non-UTF8 junk lines") {
-    val dir = Files.createTempDirectory("graft-parity-bom")
+    val dir = graft.TempDir("graft-parity-bom")
     // file 1: BOM prefix before the first record (exported-from-Windows
     // shape) + a real record
     val bom = Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
@@ -100,7 +100,7 @@ class ReferenceParitySpec extends SparkSpec {
       """{"reviewText": "apple", "category": "X"}""",
       """{"reviewText": "banana", "category": "Y"}""",
       """{"reviewText": "cherry", "category": "Y"}"""))
-    val outDir = Files.createTempDirectory("graft-out").resolve("res").toString
+    val outDir = graft.TempDir("graft-out").resolve("res").toString
 
     val reviews = ReviewSource.readReviews(spark, input)
     val top = ChiSquarePipeline.topTerms(

@@ -16,7 +16,7 @@ class StreamingChiSquareSpec extends SparkSpec {
   test("incremental maintenance over two batches equals the batch pipeline") {
     val s = spark; import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft-chi-store").toString
+    val store = graft.TempDir("graft-chi-store").toString
 
     val stream = MemoryStream[Doc]
     stream.addData(corpus.take(3))
@@ -42,7 +42,7 @@ class StreamingChiSquareSpec extends SparkSpec {
   test("store is versioned: each batch adds a vN generation") {
     val s = spark; import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft-chi-store2").toString
+    val store = graft.TempDir("graft-chi-store2").toString
     val stream = MemoryStream[Doc]
     stream.addData(corpus.take(2))
     StreamingChiSquare.attach(stream.toDF(), store,
@@ -59,7 +59,7 @@ class StreamingChiSquareSpec extends SparkSpec {
   test("store is bounded: old versions pruned, results unchanged") {
     val s = spark; import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft-chi-store3").toString
+    val store = graft.TempDir("graft-chi-store3").toString
     val stream = MemoryStream[Doc]
     // 4 micro-batches (one per attach under AvailableNow), 1-2 docs each
     val batches = Seq(corpus.take(2), corpus.slice(2, 3),
@@ -88,7 +88,7 @@ class StreamingChiSquareSpec extends SparkSpec {
   test("empty micro-batch skips the rewrite (no new version dir)") {
     val s = spark; import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft-chi-store4").toString
+    val store = graft.TempDir("graft-chi-store4").toString
     val stream = MemoryStream[Doc]
     stream.addData(corpus.take(2))
     StreamingChiSquare.attach(stream.toDF(), store,

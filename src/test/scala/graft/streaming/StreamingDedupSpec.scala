@@ -98,7 +98,7 @@ class StreamingDedupSpec extends SparkSpec {
     // the r17 driver-bounding path. The feed stays doc_id-ascending, so the
     // first batch containing a hash holds its min doc_id and the kept set
     // must still equal the batch twin's keeper set exactly.
-    val store = java.nio.file.Files.createTempDirectory("graft-replay-chunk")
+    val store = graft.TempDir("graft-replay-chunk")
     StreamingDedup.buildKeptStore(s, dir, store, feedRows = 7)
     val got = s.read.parquet(store.resolve("kept.parquet").toString)
       .collect().map(_.getLong(0)).sorted.toSeq
@@ -111,8 +111,8 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("a fixture with no admitted text yields an empty kept store") {
     val s = spark; import s.implicits._
-    val fixture = java.nio.file.Files.createTempDirectory("graft-replay-empty")
-    val store = java.nio.file.Files.createTempDirectory("graft-replay-store")
+    val fixture = graft.TempDir("graft-replay-empty")
+    val store = graft.TempDir("graft-replay-store")
     try {
       Seq((1L, null: String), (2L, ""), (3L, null: String))
         .toDF("doc_id", "text").write.parquet(s"$fixture/documents.parquet")
@@ -127,7 +127,7 @@ class StreamingDedupSpec extends SparkSpec {
       val ls = Files.list(Paths.get("/proc/self/fd"))
       try ls.count() finally ls.close()
     }
-    val root = Files.createTempDirectory("graft-deep")
+    val root = graft.TempDir("graft-deep")
     val leaf = (1 to 60).foldLeft(root)((p, i) => p.resolve(s"d$i"))
     Files.createDirectories(leaf)
     Files.write(leaf.resolve("part-0"), Array[Byte](1, 2, 3))

@@ -48,10 +48,10 @@ class TokenizeSpec extends SparkSpec {
     assert(Tokenize.admitted_docs(df, "text", "cat").count() === 1)
   }
 
-  test("explodeTokens emits (category, term) per distinct doc-term") {
+  test("tokens emits (category, term) per distinct doc-term") {
     val df = Seq(("apple banana apple", "X"), ("banana", "Y")).toDF("text", "cat")
-    val got = Tokenize.explodeTokens(df, "text", "cat")
-      .as[(String, String)].collect().toSet
+    val (_, tokens) = graft.pipeline.ChiSquarePipeline.tokens(df, "text", "cat")
+    val got = tokens.as[(String, String)].collect().toSet
     assert(got === Set(("X", "apple"), ("X", "banana"), ("Y", "banana")))
   }
 }
