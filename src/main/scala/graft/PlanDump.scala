@@ -99,19 +99,6 @@ object PlanDump {
       case QuerySpec.Memoized(what, bound) => sb ++= s"| `$name` | memoized | $what | $bound |\n"
       case QuerySpec.Lazy => ()
     }
-    sb ++=
-      """
-        |## Rows-only registry entries
-        |
-        |None (as of r10). Every registered query is fully oracle-hashed.
-        |Through r9 `text_vocab_sketch` was the one exception (its raw
-        |HLL++ estimate is engine-specific); its registered projection
-        |now emits `approx_ok = rel_err <= 5·rsd` instead, which DuckDB
-        |predicts as TRUE from the exact counts — an out-of-tolerance
-        |estimate hash-mismatches the row. The full-detail frame (raw
-        |estimate + realized rel_err) remains as `Analysis.vocabSketch`,
-        |bound-checked in AnalysisSpec. RegistrySpec's allowlist is empty.
-        |""".stripMargin
     for ((name, note) <- Headliners) {
       val df = SparkEntry.queries(name)(spark, dir)
       val plan = df.queryExecution.explainString(

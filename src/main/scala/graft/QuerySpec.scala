@@ -1,23 +1,37 @@
 package graft
 
-/** The non-default facts of one registered query. A family module
-  * declares one entry in its `specs` map per query that needs one,
-  * next to its `queries` and `oracleSql`; a query without an entry is
-  * lazy at build and runs under the session's own conf.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** One registered query: its build, its DuckDB twin and its
+  * non-default facts. A family module declares one `specs` entry per
+  * query, the oracle SQL inline next to the build; [[SparkEntry]]
+  * gathers the families' maps into the registry. The family `specs`
+  * are `lazy val`s because their oracle strings read CTE vals declared
+  * further down the module.
   *
-  * @param conf  scoped session conf, `(sfDir, cpus) => overrides`; the
-  *              harnesses set it around the one query's build and run
-  *              ([[Session.withScopedConf]]). Values never change
-  *              results: every covered query is exact-typed.
-  * @param build what constructing the DataFrame runs before any action
+  * @param df     builds the query's DataFrame over a fixture dir
+  * @param oracle equivalent SQL DuckDB runs on the same parquet tables
+  *               (bare table names); Verify and the benchmark compare
+  *               the two results exactly
+  * @param conf   scoped session conf, `(sfDir, cpus) => overrides`; the
+  *               harnesses set it around the one query's build and run
+  *               ([[Session.withScopedConf]]). Values never change
+  *               results: every covered query is exact-typed.
+  * @param build  what constructing the DataFrame runs before any action
   */
 final case class QuerySpec(
+    df: (SparkSession, String) => DataFrame,
+    oracle: String,
     conf: (String, Int) => Map[String, String] = QuerySpec.NoConf,
     build: QuerySpec.Build = QuerySpec.Lazy)
 
 object QuerySpec {
 
   val NoConf: (String, Int) => Map[String, String] = (_, _) => Map.empty
+
+  /** The builds of `specs`, keyed by query name. */
+  def builds(specs: Map[String, QuerySpec]): Map[String, (SparkSession, String) => DataFrame] =
+    specs.map { case (n, q) => n -> q.df }
 
   sealed trait Build
 

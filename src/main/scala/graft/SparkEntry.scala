@@ -1,45 +1,50 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Thin aggregator: each operator family keeps its queries + DuckDB oracle
-  * SQL side-by-side in its own module so the two can't drift apart.
+/** Driver contract (SURVEY.md §7).
+  * Thin aggregator: each operator family declares one `specs` map whose
+  * [[QuerySpec]] entries hold a query's build and its DuckDB oracle SQL
+  * side by side, with its scoped conf and build kind. Adding a query is
+  * one entry in its family's `specs`; everything below is a projection
+  * of [[specs]].
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     pipeline.ChiSquareQueries.queries("chi2_top_terms")(spark, "/root/testdata/sf0.001")
 
+  /** The families' `specs` as one map; a name declared twice is an
+    * error, never a silent overwrite.
+    */
+  def registry(families: Map[String, QuerySpec]*): Map[String, QuerySpec] =
+    families.foldLeft(Map.empty[String, QuerySpec]) { (all, family) =>
+      val twice = all.keySet & family.keySet
+      require(twice.isEmpty, s"query declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+      all ++ family
+    }
+
   /** One entry per implemented operator from SURVEY.md §2 (+ the
     * LLM-data-pipeline extension surface, SURVEY §7.4).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    pipeline.ChiSquareQueries.queries ++
-      events.Events.queries ++
-      rel.Relational.queries ++
-      rel.Temporal.queries ++
-      dedup.Dedup.queries ++
-      sim.Similarity.queries ++
-      text.Analysis.queries ++
-      mm.Multimodal.queries ++
-      ops.Sampling.queries ++
-      ops.Salted.queries ++
-      streaming.StreamingChiSquare.queries ++
-      streaming.StreamingDedup.queries
+  val specs: Map[String, QuerySpec] = registry(
+    pipeline.ChiSquareQueries.specs,
+    events.Events.specs,
+    rel.Relational.specs,
+    rel.Temporal.specs,
+    dedup.Dedup.specs,
+    sim.Similarity.specs,
+    text.Analysis.specs,
+    mm.Multimodal.specs,
+    ops.Sampling.specs,
+    ops.Salted.specs,
+    streaming.StreamingChiSquare.specs,
+    streaming.StreamingDedup.specs)
 
-  /** The non-default facts of each query (scoped conf, eager or
-    * memoized build); a query without an entry is lazy and runs under
-    * the session conf. Adding a query is one edit to its family module:
-    * `queries`, `oracleSql` and, only if it needs one, `specs`.
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
+
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables.
     */
-  val specs: Map[String, QuerySpec] =
-    pipeline.ChiSquareQueries.specs ++
-      rel.Relational.specs ++
-      dedup.Dedup.specs ++
-      sim.Similarity.specs ++
-      text.Analysis.specs ++
-      ops.Salted.specs ++
-      streaming.StreamingChiSquare.specs ++
-      streaming.StreamingDedup.specs
+  def oracleSql: Map[String, String] = specs.map { case (n, q) => n -> q.oracle }
 
   /** Queries whose FIRST build per (app, fixture dir) runs a one-time
     * memoized pass that later builds skip. Bench prices that build into
@@ -48,7 +53,7 @@ object SparkEntry {
     * re-scheduling.
     */
   val memoizedBuildQueries: Set[String] = specs.collect {
-    case (n, QuerySpec(_, _: QuerySpec.Memoized)) => n
+    case (n, q) if q.build.isInstanceOf[QuerySpec.Memoized] => n
   }.toSet
 
   /** Scoped per-query session-conf overrides. The harnesses set these
@@ -59,20 +64,4 @@ object SparkEntry {
     */
   def queryConfs(name: String, sfDir: String, cpus: Int): Map[String, String] =
     specs.get(name).fold(Map.empty[String, String])(_.conf(sfDir, cpus))
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    pipeline.ChiSquareQueries.oracleSql ++
-      events.Events.oracleSql ++
-      rel.Relational.oracleSql ++
-      rel.Temporal.oracleSql ++
-      dedup.Dedup.oracleSql ++
-      sim.Similarity.oracleSql ++
-      text.Analysis.oracleSql ++
-      mm.Multimodal.oracleSql ++
-      ops.Sampling.oracleSql ++
-      ops.Salted.oracleSql ++
-      streaming.StreamingChiSquare.oracleSql ++
-      streaming.StreamingDedup.oracleSql
 }

@@ -2,6 +2,8 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
+import graft.text.Tokenize
 
 /** Deduplication operators for LLM-training-data pipelines over the
   * `documents` fixture: exact (hash-groupBy), MinHash+LSH banded candidate
@@ -81,10 +83,6 @@ object Dedup {
     graft.sources.Tables.parquet(s, dir, "documents")
       .filter(col("text").isNotNull && length(col("text")) > 0)
 
-  /** Whitespace tokens of the lowered text (non-empty only). */
-  private def toksCol: Column =
-    filter(split(lower(col("text")), "\\s+"), t => length(t) > 0)
-
   private def shingleOfN(toks: Column, n: Int): Column =
     graft.functions.Ngrams.shingleOfN(toks, n)
 
@@ -94,7 +92,7 @@ object Dedup {
     * corpus-scanning step every dedup method shares.
     */
   private[dedup] def toksOf(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), toksCol.as("toks"))
+    d.select(col("doc_id"), Tokenize.whitespaceTokens.as("toks"))
 
   /** (doc_id, s): per-document DISTINCT shingles (set semantics). */
   def shingles(d: DataFrame): DataFrame = shinglesFromToks(toksOf(d))
@@ -1271,7 +1269,7 @@ object Dedup {
     val s = d.sparkSession
     import s.implicits._
     val production = graft.functions.PortableHash.enabled(d)
-    val posts = d.select(col("source"), toksCol.as("toks"))
+    val posts = d.select(col("source"), Tokenize.whitespaceTokens.as("toks"))
       .select(col("source"),
         explode(graft.functions.GraftFunctions.graftGramKeys(
           col("toks"), lit(DecontamShingle), lit(production))).as("shk"))
@@ -1295,68 +1293,19 @@ object Dedup {
     rows.toDF("src_a", "src_b", "keys_a", "keys_b", "shared_keys", "jaccard")
   }
 
-  /** Near-dup component-size histogram over the driver-propagated
-    * labels — the audit that distinguishes "near-dedup removes isolated
-    * pair twins" from "a template is flooding the corpus as one giant
-    * dup family" (the latter is also the skew early-warning for every
-    * downstream per-cluster operation). Bounded driver arithmetic over
-    * the already-collected labels, same discipline as
-    * [[propagateDriver]].
+  /** First build per (app, dir, hash mode) of `dedup_ngram_jaccard`
+    * or `dedup_containment`: the shared docsets table ([[docsetsFor]]).
     */
-  private[dedup] def clusterSizeHistogram(
-      labels: Seq[(Long, Long)]): Seq[(Long, Long)] =
-    labels.groupBy(_._2).map { case (_, members) => members.size.toLong }
-      .groupBy(identity).map { case (sz, xs) => (sz, xs.size.toLong) }
-      .toSeq.sortBy(_._1)
+  private val docsetsBuild = QuerySpec.Memoized(
+    "NOTHING to the driver: the df-ordered docsets table (per-doc kept shingle-hash sets) is localCheckpointed once per (app, dir, hash mode) and shared by both pair queries and the label build; whichever consumer runs first pays it",
+    "one row per admitted document")
 
-  /** Queries whose shuffles carry the exploded posting/pair streams of
-    * the shared docsets build (~25 hashed keys per doc, plus the
-    * collect_list array states of the per-doc aggregate): at the
-    * session's cpu-count shuffle partitions the per-task aggregate
-    * state crosses the spill tier around ×1000 the gate — and
-    * containment's shuffle_hash build side outgrows a task's execution
-    * memory entirely ("Can't acquire ... to build hash relation", the
-    * r14 sf100 base arm's hard error). [[pairShuffleConf]] gives them
-    * reduce tasks ∝ the documents fixture instead. Measured at sf100
-    * (r14, same host back-to-back, builds separated): docsets build
-    * 251.7→159.3 s, ngram_jaccard 231.8→29.5 s with 122.8 GB mem +
-    * 53.1 GB disk spill → ZERO, containment error→39.2 s, CC label
-    * build 105.6→42.9 s; at sf10 the family is flat (the spill tier
-    * isn't crossed either way) and at sf0.1 the conf is a no-op (the
-    * cpus floor binds).
+  /** First build per (app, dir) of `dedup_near_apply` or
+    * `dedup_cluster_sizes`: the shared label table ([[labelsFor]]).
     */
-  private val pairShuffleQueries = Seq("dedup_ngram_jaccard",
-    "dedup_containment", "dedup_cluster_sizes", "dedup_near_apply")
-
-  /** Non-default registry facts: [[pairShuffleQueries]]' scoped conf,
-    * the memoized docsets / label builds, and the bounded eager builds.
-    */
-  val specs: Map[String, graft.QuerySpec] = {
-    import graft.QuerySpec.{Eager, Memoized}
-    val docsets = Memoized(
-      "NOTHING to the driver: the df-ordered docsets table (per-doc kept shingle-hash sets) is localCheckpointed once per (app, dir, hash mode) and shared by both pair queries and the label build; whichever consumer runs first pays it",
-      "one row per admitted document")
-    val labels = Memoized(
-      "NOTHING to the driver: the FIXPOINT label-propagation rounds run as Spark jobs on first build per fixture (edges + each round's node-bounded label table materialized via `localCheckpoint`/reliable `checkpoint`, convergence decided by a changed-flag probe over the fresh blocks); the final labels enter one corpus left-join lazily, and `dedup_near_apply` and `dedup_cluster_sizes` share the cached label table per (app, dir)",
-      "O(log diameter)+1 distributed jobs on first build; labels ≤ 2·pairs nodes")
-    val memo = Map("dedup_ngram_jaccard" -> docsets,
-      "dedup_containment" -> docsets, "dedup_near_apply" -> labels,
-      "dedup_cluster_sizes" -> labels)
-    pairShuffleQueries.map(n =>
-      n -> graft.QuerySpec(pairShuffleConf, memo(n))).toMap ++ Map(
-      "dedup_bucket_stats" -> graft.QuerySpec(build = Eager(
-        "the 3-row cap-audit summary (re-entered as a local frame so no state survives the return)",
-        "3 rows")),
-      "dedup_source_overlap" -> graft.QuerySpec(build = Eager(
-        "the (src_a, src_b) presence/co-presence counts off ONE corpus scan (shk-keyed collect_set + in-array pair expansion); the dense grid + Jaccard assemble on the driver",
-        "≤ sources² rows")),
-      "dedup_decontaminate_bloom" -> graft.QuerySpec(build = Eager(
-        "the bloom sketch over the eval side's distinct shingle keys, re-entered as a foldable literal predicate on the corpus scan (false positives removed by the exact semi-join, so the result is hash-identical to `dedup_decontaminate`)",
-        "DecontamBloomKeys·10 bits ≈ 1.3 MB")),
-      "dedup_substring" -> graft.QuerySpec(build = Eager(
-        "NOTHING to the driver: the df-capped candidate-pair table and the semi-join-pruned positional postings are lazy-localCheckpointed, and under AQE wrapping a plan in a checkpoint RDD materializes its stages at build",
-        "pairs ≤ Σ df²/2 per capped anchor bucket; postings = candidate docs only")))
-  }
+  private val labelsBuild = QuerySpec.Memoized(
+    "NOTHING to the driver: the FIXPOINT label-propagation rounds run as Spark jobs on first build per fixture (edges + each round's node-bounded label table materialized via `localCheckpoint`/reliable `checkpoint`, convergence decided by a changed-flag probe over the fresh blocks); the final labels enter one corpus left-join lazily, and `dedup_near_apply` and `dedup_cluster_sizes` share the cached label table per (app, dir)",
+    "O(log diameter)+1 distributed jobs on first build; labels ≤ 2·pairs nodes")
 
   /** Reduce-task sizing for [[pairShuffleConf]]: one task per MB of
     * compressed documents parquet ≈ the measured-winning geometry
@@ -1367,8 +1316,25 @@ object Dedup {
     */
   val PairBytesPerTask: Long = 1L << 20
 
-  /** Scoped shuffle-partition override for [[pairShuffleQueries]] —
-    * the wideAggConf discipline: set around one query's build +
+  /** Scoped shuffle-partition override for the queries whose shuffles
+    * carry the exploded posting/pair streams of the shared docsets
+    * build (`dedup_ngram_jaccard`, `dedup_containment`,
+    * `dedup_cluster_sizes`, `dedup_near_apply`: ~25 hashed keys per
+    * doc, plus the collect_list array states of the per-doc
+    * aggregate). At the session's cpu-count shuffle partitions the
+    * per-task aggregate state crosses the spill tier around ×1000 the
+    * gate — and containment's shuffle_hash build side outgrows a
+    * task's execution memory entirely ("Can't acquire ... to build
+    * hash relation", the r14 sf100 base arm's hard error). This gives
+    * them reduce tasks ∝ the documents fixture instead. Measured at
+    * sf100 (r14, same host back-to-back, builds separated): docsets
+    * build 251.7→159.3 s, ngram_jaccard 231.8→29.5 s with 122.8 GB mem
+    * + 53.1 GB disk spill → ZERO, containment error→39.2 s, CC label
+    * build 105.6→42.9 s; at sf10 the family is flat (the spill tier
+    * isn't crossed either way) and at sf0.1 the conf is a no-op (the
+    * cpus floor binds).
+    *
+    * The wideAggConf discipline: set around one query's build +
     * execution by the harnesses, never session-wide. Values never
     * change results (every covered query is exact-typed and
     * oracle-checked under the conf).
@@ -1386,16 +1352,21 @@ object Dedup {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val specs: Map[String, QuerySpec] = Map(
     // Exact dedup: one row per distinct normalized text, keeper = min id.
-    "dedup_exact" -> ((s, dir) =>
+    "dedup_exact" -> QuerySpec((s, dir) =>
       docs(s, dir)
         .groupBy(sha2(lower(col("text")), 256).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
-        .orderBy("text_hash")),
+        .orderBy("text_hash"),
+      """SELECT sha256(lower(text)) AS text_hash,
+        |  min(doc_id) AS keep_doc_id, count(*) AS n_copies
+        |FROM documents
+        |WHERE text IS NOT NULL AND length(text) > 0
+        |GROUP BY 1 ORDER BY text_hash""".stripMargin),
     // The apply step users actually run: emit the deduplicated corpus
     // (keeper = min doc_id per normalized-text hash), one window pass.
-    "dedup_apply" -> ((s, dir) => {
+    "dedup_apply" -> QuerySpec((s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(sha2(lower(col("text")), 256))
       docs(s, dir)
@@ -1403,35 +1374,227 @@ object Dedup {
         .filter(col("doc_id") === col("keeper"))
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
-    }),
-    "dedup_minhash_candidates" -> ((s, dir) =>
-      minhashCandidates(docs(s, dir)).orderBy("doc_a", "doc_b")),
-    "dedup_minhash_est" -> ((s, dir) =>
-      minhashCalibration(docs(s, dir)).orderBy("doc_a", "doc_b")),
-    "dedup_simhash" -> ((s, dir) =>
-      simhashSignatures(docs(s, dir)).orderBy("doc_id")),
-    "dedup_simhash_pairs" -> ((s, dir) =>
-      simhashPairs(docs(s, dir)).orderBy("doc_a", "doc_b")),
+    },
+      applySql),
+    "dedup_minhash_candidates" -> QuerySpec((s, dir) =>
+      minhashCandidates(docs(s, dir)).orderBy("doc_a", "doc_b"),
+      s"""$shCte, hb AS (
+         |  SELECT doc_id, $baseHashSql AS hbase
+         |  FROM (SELECT doc_id, substr(md5(s), 1, 7) AS hx FROM sh)
+         |), mh AS (
+         |  SELECT doc_id,
+         |         $minhashSelects
+         |  FROM hb GROUP BY doc_id
+         |), bands AS (
+         |  $bandSelects
+         |), small AS (
+         |  SELECT band, sig FROM bands GROUP BY 1, 2 HAVING count(*) <= $MaxBucketSize
+         |), kept AS (
+         |  SELECT bands.* FROM bands JOIN small USING (band, sig)
+         |)
+         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |FROM kept a JOIN kept b
+         |  ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+         |ORDER BY doc_a, doc_b""".stripMargin),
+    "dedup_minhash_est" -> QuerySpec((s, dir) =>
+      minhashCalibration(docs(s, dir)).orderBy("doc_a", "doc_b"),
+      // Independent two-sided-join formulation of the calibration (the
+      // Spark side uses a union-tag single pass); coalesce(ix, 0) covers
+      // LSH false positives with zero actual overlap.
+      s"""$shCte, hb AS (
+         |  SELECT doc_id, $baseHashSql AS hbase
+         |  FROM (SELECT doc_id, substr(md5(s), 1, 7) AS hx FROM sh)
+         |), mh AS (
+         |  SELECT doc_id,
+         |         $minhashSelects
+         |  FROM hb GROUP BY doc_id
+         |), bands AS (
+         |  $bandSelects
+         |), small AS (
+         |  SELECT band, sig FROM bands GROUP BY 1, 2 HAVING count(*) <= $MaxBucketSize
+         |), kept AS (
+         |  SELECT bands.* FROM bands JOIN small USING (band, sig)
+         |), cand AS (
+         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM kept a JOIN kept b
+         |    ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+         |), sizes AS (
+         |  SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
+         |), inter AS (
+         |  SELECT c.doc_a, c.doc_b, count(*) AS ix
+         |  FROM cand c
+         |  JOIN sh x ON x.doc_id = c.doc_a
+         |  JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
+         |  GROUP BY 1, 2
+         |), est AS (
+         |  SELECT c.doc_a, c.doc_b,
+         |         CAST($sigMatchSql AS BIGINT) AS sig_matches
+         |  FROM cand c
+         |  JOIN mh a ON a.doc_id = c.doc_a
+         |  JOIN mh b ON b.doc_id = c.doc_b
+         |), wide AS (
+         |  SELECT e.doc_a, e.doc_b,
+         |         CAST(na.n AS BIGINT) AS n_a, CAST(nb.n AS BIGINT) AS n_b,
+         |         CAST(coalesce(i.ix, 0) AS BIGINT) AS inter_n, e.sig_matches,
+         |         CAST(e.sig_matches AS DOUBLE) / CAST($NumHashes.0 AS DOUBLE) AS est_jaccard,
+         |         CAST(coalesce(i.ix, 0) AS DOUBLE)
+         |           / CAST(na.n + nb.n - coalesce(i.ix, 0) AS DOUBLE) AS exact_jaccard
+         |  FROM est e
+         |  JOIN sizes na ON na.doc_id = e.doc_a
+         |  JOIN sizes nb ON nb.doc_id = e.doc_b
+         |  LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
+         |)
+         |SELECT doc_a, doc_b, n_a, n_b, inter_n, sig_matches, est_jaccard,
+         |       exact_jaccard, abs(est_jaccard - exact_jaccard) AS abs_err
+         |FROM wide ORDER BY doc_a, doc_b""".stripMargin),
+    "dedup_simhash" -> QuerySpec((s, dir) =>
+      simhashSignatures(docs(s, dir)).orderBy("doc_id"),
+      s"""$simhashCte
+         |SELECT doc_id, simhash FROM sig ORDER BY doc_id""".stripMargin),
+    "dedup_simhash_pairs" -> QuerySpec((s, dir) =>
+      simhashPairs(docs(s, dir)).orderBy("doc_a", "doc_b"),
+      s"""$simhashCte, chunks AS (
+         |  SELECT doc_id, simhash, c AS chunk_id,
+         |         substr(simhash, c * 16 + 1, 16) AS chunk
+         |  FROM sig, LATERAL (SELECT unnest(generate_series(0, 3)) AS c)
+         |), small AS (
+         |  SELECT chunk_id, chunk FROM chunks
+         |  GROUP BY 1, 2 HAVING count(*) <= $MaxBucketSize
+         |), kept AS (
+         |  SELECT chunks.* FROM chunks JOIN small USING (chunk_id, chunk)
+         |), cand AS (
+         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |         a.simhash AS sh_a, b.simhash AS sh_b
+         |  FROM kept a JOIN kept b
+         |    ON a.chunk_id = b.chunk_id AND a.chunk = b.chunk
+         |   AND a.doc_id < b.doc_id
+         |)
+         |SELECT doc_a, doc_b, CAST(hamming(sh_a, sh_b) AS BIGINT) AS hamming
+         |FROM cand WHERE hamming(sh_a, sh_b) <= $MaxHamming
+         |ORDER BY doc_a, doc_b""".stripMargin),
     // ngram_jaccard / containment / the CC label build are four
     // consumers of ONE df-ordered docsets table (scan → gram hashing →
     // df-cap join → views kernel): shared via [[docsetsFor]], built
     // once per (app, dir, hash mode) — memoized-eager entries, priced
     // by Bench's builds accounting.
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      ngramJaccardOn(docsetsFor(s, dir)).orderBy("doc_a", "doc_b")),
-    "dedup_containment" -> ((s, dir) =>
-      containmentOn(docsetsFor(s, dir))),
-    "dedup_substring" -> ((s, dir) => substringPairs(docs(s, dir))),
-    "dedup_incremental" -> ((s, dir) => incrementalDedup(docs(s, dir))),
+    "dedup_ngram_jaccard" -> QuerySpec((s, dir) =>
+      ngramJaccardOn(docsetsFor(s, dir)).orderBy("doc_a", "doc_b"),
+      s"""$shCte, shh AS (
+         |  SELECT DISTINCT doc_id, $jaccardHashSql AS s
+         |  FROM (SELECT doc_id, substr(md5(s), 1, 15) AS hx FROM sh)
+         |), rare AS (
+         |  SELECT s FROM shh GROUP BY s HAVING count(*) <= $MaxShingleDf
+         |), shf AS (
+         |  SELECT shh.* FROM shh JOIN rare USING (s)
+         |), sizes AS (
+         |  SELECT doc_id, count(*) AS n FROM shf GROUP BY 1
+         |), inter AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
+         |  FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
+         |  GROUP BY 1, 2
+         |)
+         |SELECT doc_a, doc_b,
+         |       CAST(ix AS DOUBLE) / CAST(na.n + nb.n - ix AS DOUBLE) AS jaccard
+         |FROM inter
+         |JOIN sizes na ON na.doc_id = doc_a
+         |JOIN sizes nb ON nb.doc_id = doc_b
+         |WHERE CAST(ix AS DOUBLE) / CAST(na.n + nb.n - ix AS DOUBLE) >= $JaccardThreshold
+         |ORDER BY doc_a, doc_b""".stripMargin,
+      conf = pairShuffleConf, build = docsetsBuild),
+    "dedup_containment" -> QuerySpec((s, dir) =>
+      containmentOn(docsetsFor(s, dir)),
+      // Naive all-shared-pairs form on purpose — an independent
+      // implementation of the asymmetric prefix-probe candidate scheme.
+      s"""$shCte, shh AS (
+         |  SELECT DISTINCT doc_id, $jaccardHashSql AS s
+         |  FROM (SELECT doc_id, substr(md5(s), 1, 15) AS hx FROM sh)
+         |), rare AS (
+         |  SELECT s FROM shh GROUP BY s HAVING count(*) <= $MaxShingleDf
+         |), shf AS (
+         |  SELECT shh.* FROM shh JOIN rare USING (s)
+         |), sizes AS (
+         |  SELECT doc_id, count(*) AS n FROM shf GROUP BY 1
+         |), inter AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
+         |  FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
+         |  GROUP BY 1, 2
+         |)
+         |SELECT doc_a, doc_b,
+         |       CAST(ix AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE) AS containment,
+         |       CAST(ix AS DOUBLE) / CAST(na.n + nb.n - ix AS DOUBLE) AS jaccard
+         |FROM inter
+         |JOIN sizes na ON na.doc_id = doc_a
+         |JOIN sizes nb ON nb.doc_id = doc_b
+         |WHERE CAST(ix AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE) >= $ContainmentThreshold
+         |ORDER BY doc_a, doc_b""".stripMargin,
+      conf = pairShuffleConf, build = docsetsBuild),
+    "dedup_substring" -> QuerySpec((s, dir) => substringPairs(docs(s, dir)),
+      // Same winnow-anchored algorithm mirrored operation-for-operation
+      // (winnowing is part of the operator's SEMANTICS — the anchor df
+      // cap binds at the anchor level, so a naive capless form would
+      // diverge whenever the cap fires). The rolling-window min over
+      // full windows, the anchor cap, the candidate join, and the
+      // gaps-and-islands run measurement are each re-expressed in
+      // DuckDB's own idiom; SubstringDedupSpec separately pins the Spark
+      // side against a brute-force longest-common-run reference so a
+      // mirrored bug cannot hide behind the hash match.
+      s"""WITH d AS (
+         |$dBody
+         |), gr AS (
+         |  SELECT doc_id, i AS pos,
+         |         substr(md5(array_to_string(list_slice(toks, i, i + ${SubstrGram - 1}), ' ')), 1, 15) AS hx
+         |  FROM d, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - ${SubstrGram - 1}, 0))) AS i)
+         |), g AS (
+         |  SELECT doc_id, pos, $jaccardHashSql AS hk FROM gr
+         |), wm AS (
+         |  SELECT doc_id, pos,
+         |         min(hk) OVER (PARTITION BY doc_id ORDER BY pos
+         |           ROWS BETWEEN CURRENT ROW AND ${SubstrWinnow - 1} FOLLOWING) AS anchor,
+         |         count(*) OVER (PARTITION BY doc_id) AS m
+         |  FROM g
+         |), anch AS (
+         |  SELECT DISTINCT doc_id, anchor FROM wm WHERE pos <= m - $SubstrWinnow + 1
+         |), ok AS (
+         |  SELECT anchor FROM anch GROUP BY anchor
+         |  HAVING count(*) >= 2 AND count(*) <= $SubstrMaxAnchorDf
+         |), cand AS (
+         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM anch a JOIN ok ON ok.anchor = a.anchor
+         |  JOIN anch b ON b.anchor = a.anchor AND a.doc_id < b.doc_id
+         |), mt AS (
+         |  SELECT c.doc_a, c.doc_b, ga.pos AS pa, gb.pos AS pb
+         |  FROM cand c
+         |  JOIN g ga ON ga.doc_id = c.doc_a
+         |  JOIN g gb ON gb.doc_id = c.doc_b AND gb.hk = ga.hk
+         |), runs AS (
+         |  SELECT doc_a, doc_b, pa - pb AS diag, pa,
+         |         pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb ORDER BY pa) AS grp
+         |  FROM mt
+         |), rc AS (
+         |  SELECT doc_a, doc_b, count(*) AS cnt
+         |  FROM runs GROUP BY doc_a, doc_b, diag, grp
+         |)
+         |SELECT doc_a, doc_b,
+         |       CAST(max(cnt) + ${SubstrGram - 1} AS BIGINT) AS span_tokens,
+         |       CAST(sum(cnt) AS BIGINT) AS n_shared
+         |FROM rc GROUP BY doc_a, doc_b
+         |HAVING max(cnt) + ${SubstrGram - 1} >= $SubstrMinSpan
+         |ORDER BY doc_a, doc_b""".stripMargin,
+      build = QuerySpec.Eager(
+        "NOTHING to the driver: the df-capped candidate-pair table and the semi-join-pruned positional postings are lazy-localCheckpointed, and under AQE wrapping a plan in a checkpoint RDD materializes its stages at build",
+        "pairs ≤ Σ df²/2 per capped anchor bucket; postings = candidate docs only")),
+    "dedup_incremental" -> QuerySpec((s, dir) => incrementalDedup(docs(s, dir)),
+      incrementalSql),
     // Same verdicts through the standing-index path: corpus signatures
     // precomputed once (corpusIndex), delta joins against them — the
     // repeated-day shape. Shares dedup_incremental's oracle (the two
     // forms are row-identical by construction, also spec-pinned).
-    "dedup_incremental_reuse" -> ((s, dir) => {
+    "dedup_incremental_reuse" -> QuerySpec((s, dir) => {
       val d = docs(s, dir)
       incrementalDedupAgainst(d.filter(isDelta(col("doc_id"))),
         corpusIndex(d.filter(!isDelta(col("doc_id")))))
-    }),
+    },
+      incrementalSql),
     // The end-to-end NEAR-dedup apply a pipeline actually runs:
     // candidates → Jaccard-verified pairs → connected components →
     // keep min doc_id per cluster, drop the rest. FULLY distributed
@@ -1446,53 +1609,152 @@ object Dedup {
     // hardcoded hint that would OOM the driver at 100 TB. The label
     // pass is shared with `dedup_cluster_sizes` via [[labelsFor]] —
     // one (pairs → labels) computation, two consumers.
-    "dedup_near_apply" -> ((s, dir) => {
+    "dedup_near_apply" -> QuerySpec((s, dir) => {
       val labels = labelsFor(s, dir).withColumnRenamed("node", "doc_id")
       docs(s, dir).join(labels, Seq("doc_id"), "left")
         .filter(col("lbl").isNull || col("lbl") === col("doc_id"))
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
-    }),
-    "dedup_bucket_stats" -> ((s, dir) => bucketStats(docs(s, dir))),
+    },
+      // keep = admitted docs that are either unpaired or their cluster's
+      // min doc_id (lcc = exact component minima via the recursive CTE,
+      // matching the Spark side's fixpoint labels on any graph)
+      s"""${recursiveWith(jaccardPairCtes)}$labelCtes
+         |SELECT d.doc_id, d.lang, d.source, d.n_chars
+         |FROM documents d LEFT JOIN lcc l ON l.node = d.doc_id
+         |WHERE d.text IS NOT NULL AND length(d.text) > 0
+         |  AND (l.node IS NULL OR l.lbl = d.doc_id)
+         |ORDER BY doc_id""".stripMargin,
+      conf = pairShuffleConf, build = labelsBuild),
+    "dedup_bucket_stats" -> QuerySpec((s, dir) => bucketStats(docs(s, dir)),
+      // One WITH composes all three candidate-generation chains (the CTE
+      // bodies above exist exactly for this — duplicate CTE names are
+      // illegal). The empty-filter agg emits one row of (0, NULL→0), so
+      // the always-emit-3-rows contract holds in both engines. sum(sz)
+      // is HUGEINT in DuckDB — cast back to BIGINT to match Spark's long.
+      s"""WITH d AS (
+         |$dBody
+         |), sh AS (
+         |$shBody
+         |), hb AS (
+         |$hbBody
+         |), mh AS (
+         |$mhBody
+         |), bands AS (
+         |  $bandSelects
+         |)$simhashSigCtes, chunks AS (
+         |$chunksBody
+         |), shh AS (
+         |$shhBody
+         |), jac_drop AS (
+         |  SELECT count(*) AS db, CAST(coalesce(sum(sz), 0) AS BIGINT) AS dp
+         |  FROM (SELECT s, count(DISTINCT doc_id) AS sz FROM shh GROUP BY 1)
+         |  WHERE sz > $MaxShingleDf
+         |), mh_drop AS (
+         |  SELECT count(*) AS db, CAST(coalesce(sum(sz), 0) AS BIGINT) AS dp
+         |  FROM (SELECT band, sig, count(*) AS sz FROM bands GROUP BY 1, 2)
+         |  WHERE sz > $MaxBucketSize
+         |), sim_drop AS (
+         |  SELECT count(*) AS db, CAST(coalesce(sum(sz), 0) AS BIGINT) AS dp
+         |  FROM (SELECT chunk_id, chunk, count(*) AS sz FROM chunks GROUP BY 1, 2)
+         |  WHERE sz > $MaxBucketSize
+         |)
+         |SELECT method, dropped_buckets, dropped_postings FROM (
+         |  SELECT 'jaccard_shingle' AS method, db AS dropped_buckets, dp AS dropped_postings FROM jac_drop
+         |  UNION ALL SELECT 'minhash_lsh', db, dp FROM mh_drop
+         |  UNION ALL SELECT 'simhash_chunk', db, dp FROM sim_drop
+         |) ORDER BY method""".stripMargin,
+      build = QuerySpec.Eager(
+        "the 3-row cap-audit summary (re-entered as a local frame so no state survives the return)",
+        "3 rows")),
     // Decontaminate the training corpus (every source but src0) against
     // the pseudo-benchmark (src0): emit the admitted corpus docs with no
     // 5-gram overlap into the eval set.
-    "dedup_decontaminate" -> ((s, dir) => {
+    "dedup_decontaminate" -> QuerySpec((s, dir) => {
       val d = docs(s, dir)
       decontaminate(
         d.filter(col("source") =!= lit(DecontamEvalSource)),
         d.filter(col("source") === lit(DecontamEvalSource)))
         .orderBy("doc_id")
-    }),
-    "dedup_decontaminate_report" -> ((s, dir) => {
+    },
+      // Decontamination mirrors the Spark semi/anti chain on the same
+      // 60-bit hashed 5-grams (collision behavior shared — a chance key
+      // collision with the eval set drops the doc on both engines). Both
+      // decontamination oracles graft onto [[decontamCtes]], the mirror of
+      // the shared contaminatedPostings chain.
+      decontaminateOracle),
+    "dedup_decontaminate_report" -> QuerySpec((s, dir) => {
       val d = docs(s, dir)
       decontaminationReport(
         d.filter(col("source") =!= lit(DecontamEvalSource)),
         d.filter(col("source") === lit(DecontamEvalSource)))
         .orderBy("doc_id")
-    }),
+    },
+      s"""$decontamCtes
+         |SELECT doc_id, count(DISTINCT keyed.shk) AS n_shared_keys
+         |FROM keyed JOIN ev ON keyed.shk = ev.shk
+         |WHERE source <> '$DecontamEvalSource'
+         |GROUP BY doc_id
+         |ORDER BY doc_id""".stripMargin),
     // Same result as dedup_decontaminate (same oracle) behind the bloom
     // pre-filter — eager at build (the collected eval-key sketch).
-    "dedup_decontaminate_bloom" -> ((s, dir) => {
+    "dedup_decontaminate_bloom" -> QuerySpec((s, dir) => {
       val d = docs(s, dir)
       decontaminateBloom(
         d.filter(col("source") =!= lit(DecontamEvalSource)),
         d.filter(col("source") === lit(DecontamEvalSource)))
         .orderBy("doc_id")
-    }),
-    "dedup_source_overlap" -> ((s, dir) =>
-      sourceOverlap(docs(s, dir)).orderBy("src_a", "src_b")),
+    },
+      decontaminateOracle,
+      build = QuerySpec.Eager(
+        "the bloom sketch over the eval side's distinct shingle keys, re-entered as a foldable literal predicate on the corpus scan (false positives removed by the exact semi-join, so the result is hash-identical to `dedup_decontaminate`)",
+        "DecontamBloomKeys·10 bits ≈ 1.3 MB")),
+    "dedup_source_overlap" -> QuerySpec((s, dir) =>
+      sourceOverlap(docs(s, dir)).orderBy("src_a", "src_b"),
+      // Reuses the decontamination CTE chain's keyed(doc_id, source, shk)
+      // (the trailing ev CTE rides along unused — legal SQL). Same 60-bit
+      // md5-prefix keys as the Spark side, so collision behavior is
+      // shared.
+      s"""$decontamCtes, sk AS (
+         |  SELECT DISTINCT source, shk FROM keyed
+         |), cnt AS (
+         |  SELECT source, count(*) AS nkeys FROM sk GROUP BY 1
+         |), shp AS (
+         |  SELECT a.source AS src_a, b.source AS src_b, count(*) AS shared_keys
+         |  FROM sk a JOIN sk b ON a.shk = b.shk AND a.source < b.source
+         |  GROUP BY 1, 2
+         |)
+         |SELECT ca.source AS src_a, cb.source AS src_b,
+         |       ca.nkeys AS keys_a, cb.nkeys AS keys_b,
+         |       coalesce(shp.shared_keys, 0) AS shared_keys,
+         |       CAST(coalesce(shp.shared_keys, 0) AS DOUBLE)
+         |         / CAST(ca.nkeys + cb.nkeys - coalesce(shp.shared_keys, 0) AS DOUBLE)
+         |         AS jaccard
+         |FROM cnt ca JOIN cnt cb ON ca.source < cb.source
+         |LEFT JOIN shp ON shp.src_a = ca.source AND shp.src_b = cb.source
+         |ORDER BY src_a, src_b""".stripMargin,
+      build = QuerySpec.Eager(
+        "the (src_a, src_b) presence/co-presence counts off ONE corpus scan (shk-keyed collect_set + in-array pair expansion); the dense grid + Jaccard assemble on the driver",
+        "≤ sources² rows")),
     // Component-size histogram over near_apply's labels: the SAME
     // label pass (shared via [[labelsFor]] — r10 re-ran the entire
     // ngram chain + CC rounds here), then two bounded aggregates —
     // label cardinality, then size cardinality — entirely on
     // executors.
-    "dedup_cluster_sizes" -> ((s, dir) =>
+    "dedup_cluster_sizes" -> QuerySpec((s, dir) =>
       labelsFor(s, dir)
         .groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-        .orderBy("cluster_size"))
+        .orderBy("cluster_size"),
+      s"""${recursiveWith(jaccardPairCtes)}$labelCtes, sizes AS (
+         |  SELECT lbl, count(*) AS sz FROM lcc GROUP BY 1
+         |)
+         |SELECT sz AS cluster_size, count(*) AS n_clusters
+         |FROM sizes GROUP BY 1 ORDER BY 1""".stripMargin,
+      conf = pairShuffleConf, build = labelsBuild)
   )
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
 
   /** Standing per-fixture label index: `dedup_near_apply` and
     * `dedup_cluster_sizes` are two consumers of ONE (verified pairs →
@@ -1741,346 +2003,58 @@ object Dedup {
        |WHERE dd.source <> '$DecontamEvalSource' AND hits.doc_id IS NULL
        |ORDER BY dd.doc_id""".stripMargin
 
-  def oracleSql: Map[String, String] = oracleSqlBase +
-    // the standing-index path must reproduce the single-shot verdicts
-    // bit-for-bit, so it shares the oracle
-    ("dedup_incremental_reuse" -> oracleSqlBase("dedup_incremental"))
+  /** `dedup_apply`'s keeper set; the streaming replay must reproduce it
+    * exactly, so it shares this oracle.
+    */
+  val applySql: String =
+    """SELECT doc_id, lang, source, n_chars FROM (
+      |  SELECT doc_id, lang, source, n_chars,
+      |         min(doc_id) OVER (PARTITION BY sha256(lower(text))) AS keeper
+      |  FROM documents
+      |  WHERE text IS NOT NULL AND length(text) > 0)
+      |WHERE doc_id = keeper
+      |ORDER BY doc_id""".stripMargin
 
-  private def oracleSqlBase: Map[String, String] = Map(
-    "dedup_exact" ->
-      """SELECT sha256(lower(text)) AS text_hash,
-        |  min(doc_id) AS keep_doc_id, count(*) AS n_copies
-        |FROM documents
-        |WHERE text IS NOT NULL AND length(text) > 0
-        |GROUP BY 1 ORDER BY text_hash""".stripMargin,
-    "dedup_apply" ->
-      """SELECT doc_id, lang, source, n_chars FROM (
-        |  SELECT doc_id, lang, source, n_chars,
-        |         min(doc_id) OVER (PARTITION BY sha256(lower(text))) AS keeper
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND length(text) > 0)
-        |WHERE doc_id = keeper
-        |ORDER BY doc_id""".stripMargin,
-    "dedup_minhash_candidates" ->
-      s"""$shCte, hb AS (
-         |  SELECT doc_id, $baseHashSql AS hbase
-         |  FROM (SELECT doc_id, substr(md5(s), 1, 7) AS hx FROM sh)
-         |), mh AS (
-         |  SELECT doc_id,
-         |         $minhashSelects
-         |  FROM hb GROUP BY doc_id
-         |), bands AS (
-         |  $bandSelects
-         |), small AS (
-         |  SELECT band, sig FROM bands GROUP BY 1, 2 HAVING count(*) <= $MaxBucketSize
-         |), kept AS (
-         |  SELECT bands.* FROM bands JOIN small USING (band, sig)
-         |)
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |FROM kept a JOIN kept b
-         |  ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // Independent two-sided-join formulation of the calibration (the
-    // Spark side uses a union-tag single pass); coalesce(ix, 0) covers
-    // LSH false positives with zero actual overlap.
-    "dedup_minhash_est" ->
-      s"""$shCte, hb AS (
-         |  SELECT doc_id, $baseHashSql AS hbase
-         |  FROM (SELECT doc_id, substr(md5(s), 1, 7) AS hx FROM sh)
-         |), mh AS (
-         |  SELECT doc_id,
-         |         $minhashSelects
-         |  FROM hb GROUP BY doc_id
-         |), bands AS (
-         |  $bandSelects
-         |), small AS (
-         |  SELECT band, sig FROM bands GROUP BY 1, 2 HAVING count(*) <= $MaxBucketSize
-         |), kept AS (
-         |  SELECT bands.* FROM bands JOIN small USING (band, sig)
-         |), cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM kept a JOIN kept b
-         |    ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-         |), sizes AS (
-         |  SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-         |), inter AS (
-         |  SELECT c.doc_a, c.doc_b, count(*) AS ix
-         |  FROM cand c
-         |  JOIN sh x ON x.doc_id = c.doc_a
-         |  JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-         |  GROUP BY 1, 2
-         |), est AS (
-         |  SELECT c.doc_a, c.doc_b,
-         |         CAST($sigMatchSql AS BIGINT) AS sig_matches
-         |  FROM cand c
-         |  JOIN mh a ON a.doc_id = c.doc_a
-         |  JOIN mh b ON b.doc_id = c.doc_b
-         |), wide AS (
-         |  SELECT e.doc_a, e.doc_b,
-         |         CAST(na.n AS BIGINT) AS n_a, CAST(nb.n AS BIGINT) AS n_b,
-         |         CAST(coalesce(i.ix, 0) AS BIGINT) AS inter_n, e.sig_matches,
-         |         CAST(e.sig_matches AS DOUBLE) / CAST($NumHashes.0 AS DOUBLE) AS est_jaccard,
-         |         CAST(coalesce(i.ix, 0) AS DOUBLE)
-         |           / CAST(na.n + nb.n - coalesce(i.ix, 0) AS DOUBLE) AS exact_jaccard
-         |  FROM est e
-         |  JOIN sizes na ON na.doc_id = e.doc_a
-         |  JOIN sizes nb ON nb.doc_id = e.doc_b
-         |  LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
-         |)
-         |SELECT doc_a, doc_b, n_a, n_b, inter_n, sig_matches, est_jaccard,
-         |       exact_jaccard, abs(est_jaccard - exact_jaccard) AS abs_err
-         |FROM wide ORDER BY doc_a, doc_b""".stripMargin,
-    "dedup_simhash" ->
-      s"""$simhashCte
-         |SELECT doc_id, simhash FROM sig ORDER BY doc_id""".stripMargin,
-    "dedup_simhash_pairs" ->
-      s"""$simhashCte, chunks AS (
-         |  SELECT doc_id, simhash, c AS chunk_id,
-         |         substr(simhash, c * 16 + 1, 16) AS chunk
-         |  FROM sig, LATERAL (SELECT unnest(generate_series(0, 3)) AS c)
-         |), small AS (
-         |  SELECT chunk_id, chunk FROM chunks
-         |  GROUP BY 1, 2 HAVING count(*) <= $MaxBucketSize
-         |), kept AS (
-         |  SELECT chunks.* FROM chunks JOIN small USING (chunk_id, chunk)
-         |), cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |         a.simhash AS sh_a, b.simhash AS sh_b
-         |  FROM kept a JOIN kept b
-         |    ON a.chunk_id = b.chunk_id AND a.chunk = b.chunk
-         |   AND a.doc_id < b.doc_id
-         |)
-         |SELECT doc_a, doc_b, CAST(hamming(sh_a, sh_b) AS BIGINT) AS hamming
-         |FROM cand WHERE hamming(sh_a, sh_b) <= $MaxHamming
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "dedup_ngram_jaccard" ->
-      s"""$shCte, shh AS (
-         |  SELECT DISTINCT doc_id, $jaccardHashSql AS s
-         |  FROM (SELECT doc_id, substr(md5(s), 1, 15) AS hx FROM sh)
-         |), rare AS (
-         |  SELECT s FROM shh GROUP BY s HAVING count(*) <= $MaxShingleDf
-         |), shf AS (
-         |  SELECT shh.* FROM shh JOIN rare USING (s)
-         |), sizes AS (
-         |  SELECT doc_id, count(*) AS n FROM shf GROUP BY 1
-         |), inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
-         |  FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT doc_a, doc_b,
-         |       CAST(ix AS DOUBLE) / CAST(na.n + nb.n - ix AS DOUBLE) AS jaccard
-         |FROM inter
-         |JOIN sizes na ON na.doc_id = doc_a
-         |JOIN sizes nb ON nb.doc_id = doc_b
-         |WHERE CAST(ix AS DOUBLE) / CAST(na.n + nb.n - ix AS DOUBLE) >= $JaccardThreshold
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // Naive all-shared-pairs form on purpose — an independent
-    // implementation of the asymmetric prefix-probe candidate scheme.
-    "dedup_containment" ->
-      s"""$shCte, shh AS (
-         |  SELECT DISTINCT doc_id, $jaccardHashSql AS s
-         |  FROM (SELECT doc_id, substr(md5(s), 1, 15) AS hx FROM sh)
-         |), rare AS (
-         |  SELECT s FROM shh GROUP BY s HAVING count(*) <= $MaxShingleDf
-         |), shf AS (
-         |  SELECT shh.* FROM shh JOIN rare USING (s)
-         |), sizes AS (
-         |  SELECT doc_id, count(*) AS n FROM shf GROUP BY 1
-         |), inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ix
-         |  FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT doc_a, doc_b,
-         |       CAST(ix AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE) AS containment,
-         |       CAST(ix AS DOUBLE) / CAST(na.n + nb.n - ix AS DOUBLE) AS jaccard
-         |FROM inter
-         |JOIN sizes na ON na.doc_id = doc_a
-         |JOIN sizes nb ON nb.doc_id = doc_b
-         |WHERE CAST(ix AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE) >= $ContainmentThreshold
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // Same winnow-anchored algorithm mirrored operation-for-operation
-    // (winnowing is part of the operator's SEMANTICS — the anchor df
-    // cap binds at the anchor level, so a naive capless form would
-    // diverge whenever the cap fires). The rolling-window min over
-    // full windows, the anchor cap, the candidate join, and the
-    // gaps-and-islands run measurement are each re-expressed in
-    // DuckDB's own idiom; SubstringDedupSpec separately pins the Spark
-    // side against a brute-force longest-common-run reference so a
-    // mirrored bug cannot hide behind the hash match.
-    "dedup_substring" ->
-      s"""WITH d AS (
-         |$dBody
-         |), gr AS (
-         |  SELECT doc_id, i AS pos,
-         |         substr(md5(array_to_string(list_slice(toks, i, i + ${SubstrGram - 1}), ' ')), 1, 15) AS hx
-         |  FROM d, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - ${SubstrGram - 1}, 0))) AS i)
-         |), g AS (
-         |  SELECT doc_id, pos, $jaccardHashSql AS hk FROM gr
-         |), wm AS (
-         |  SELECT doc_id, pos,
-         |         min(hk) OVER (PARTITION BY doc_id ORDER BY pos
-         |           ROWS BETWEEN CURRENT ROW AND ${SubstrWinnow - 1} FOLLOWING) AS anchor,
-         |         count(*) OVER (PARTITION BY doc_id) AS m
-         |  FROM g
-         |), anch AS (
-         |  SELECT DISTINCT doc_id, anchor FROM wm WHERE pos <= m - $SubstrWinnow + 1
-         |), ok AS (
-         |  SELECT anchor FROM anch GROUP BY anchor
-         |  HAVING count(*) >= 2 AND count(*) <= $SubstrMaxAnchorDf
-         |), cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM anch a JOIN ok ON ok.anchor = a.anchor
-         |  JOIN anch b ON b.anchor = a.anchor AND a.doc_id < b.doc_id
-         |), mt AS (
-         |  SELECT c.doc_a, c.doc_b, ga.pos AS pa, gb.pos AS pb
-         |  FROM cand c
-         |  JOIN g ga ON ga.doc_id = c.doc_a
-         |  JOIN g gb ON gb.doc_id = c.doc_b AND gb.hk = ga.hk
-         |), runs AS (
-         |  SELECT doc_a, doc_b, pa - pb AS diag, pa,
-         |         pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb ORDER BY pa) AS grp
-         |  FROM mt
-         |), rc AS (
-         |  SELECT doc_a, doc_b, count(*) AS cnt
-         |  FROM runs GROUP BY doc_a, doc_b, diag, grp
-         |)
-         |SELECT doc_a, doc_b,
-         |       CAST(max(cnt) + ${SubstrGram - 1} AS BIGINT) AS span_tokens,
-         |       CAST(sum(cnt) AS BIGINT) AS n_shared
-         |FROM rc GROUP BY doc_a, doc_b
-         |HAVING max(cnt) + ${SubstrGram - 1} >= $SubstrMinSpan
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // Two-sided-join formulation of the delta-vs-corpus screen (the
-    // Spark side splits one bucket aggregate by the delta flag).
-    "dedup_incremental" ->
-      s"""$shCte, hb AS (
-         |$hbBody
-         |), mh AS (
-         |$mhBody
-         |), bands AS (
-         |  $bandSelects
-         |), corpus_b AS (
-         |  SELECT band, sig, doc_id FROM bands
-         |  WHERE doc_id % $DeltaMod <> ${DeltaMod - 1}
-         |), small AS (
-         |  SELECT band, sig FROM corpus_b GROUP BY 1, 2
-         |  HAVING count(*) <= $MaxBucketSize
-         |), near AS (
-         |  SELECT db.doc_id, count(DISTINCT cb.doc_id) AS near_partners
-         |  FROM bands db
-         |  JOIN small USING (band, sig)
-         |  JOIN corpus_b cb USING (band, sig)
-         |  WHERE db.doc_id % $DeltaMod = ${DeltaMod - 1}
-         |  GROUP BY 1
-         |), h AS (
-         |  SELECT doc_id, sha256(lower(text)) AS th FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0
-         |), corpus_h AS (
-         |  SELECT DISTINCT th FROM h WHERE doc_id % $DeltaMod <> ${DeltaMod - 1}
-         |), ex AS (
-         |  SELECT h.doc_id, (c.th IS NOT NULL) AS exact_dup
-         |  FROM h LEFT JOIN corpus_h c ON h.th = c.th
-         |  WHERE h.doc_id % $DeltaMod = ${DeltaMod - 1}
-         |)
-         |SELECT ex.doc_id, ex.exact_dup,
-         |       coalesce(near.near_partners, 0) AS near_partners,
-         |       CASE WHEN ex.exact_dup THEN 'exact_dup'
-         |            WHEN coalesce(near.near_partners, 0) > 0 THEN 'near_candidate'
-         |            ELSE 'new' END AS verdict
-         |FROM ex LEFT JOIN near USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    // keep = admitted docs that are either unpaired or their cluster's
-    // min doc_id (lcc = exact component minima via the recursive CTE,
-    // matching the Spark side's fixpoint labels on any graph)
-    "dedup_near_apply" ->
-      s"""${recursiveWith(jaccardPairCtes)}$labelCtes
-         |SELECT d.doc_id, d.lang, d.source, d.n_chars
-         |FROM documents d LEFT JOIN lcc l ON l.node = d.doc_id
-         |WHERE d.text IS NOT NULL AND length(d.text) > 0
-         |  AND (l.node IS NULL OR l.lbl = d.doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    // Decontamination mirrors the Spark semi/anti chain on the same
-    // 60-bit hashed 5-grams (collision behavior shared — a chance key
-    // collision with the eval set drops the doc on both engines). Both
-    // decontamination oracles graft onto [[decontamCtes]], the mirror of
-    // the shared contaminatedPostings chain.
-    "dedup_decontaminate" -> decontaminateOracle,
-    "dedup_decontaminate_bloom" -> decontaminateOracle,
-    "dedup_decontaminate_report" ->
-      s"""$decontamCtes
-         |SELECT doc_id, count(DISTINCT keyed.shk) AS n_shared_keys
-         |FROM keyed JOIN ev ON keyed.shk = ev.shk
-         |WHERE source <> '$DecontamEvalSource'
-         |GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
-    // Reuses the decontamination CTE chain's keyed(doc_id, source, shk)
-    // (the trailing ev CTE rides along unused — legal SQL). Same 60-bit
-    // md5-prefix keys as the Spark side, so collision behavior is
-    // shared.
-    "dedup_source_overlap" ->
-      s"""$decontamCtes, sk AS (
-         |  SELECT DISTINCT source, shk FROM keyed
-         |), cnt AS (
-         |  SELECT source, count(*) AS nkeys FROM sk GROUP BY 1
-         |), shp AS (
-         |  SELECT a.source AS src_a, b.source AS src_b, count(*) AS shared_keys
-         |  FROM sk a JOIN sk b ON a.shk = b.shk AND a.source < b.source
-         |  GROUP BY 1, 2
-         |)
-         |SELECT ca.source AS src_a, cb.source AS src_b,
-         |       ca.nkeys AS keys_a, cb.nkeys AS keys_b,
-         |       coalesce(shp.shared_keys, 0) AS shared_keys,
-         |       CAST(coalesce(shp.shared_keys, 0) AS DOUBLE)
-         |         / CAST(ca.nkeys + cb.nkeys - coalesce(shp.shared_keys, 0) AS DOUBLE)
-         |         AS jaccard
-         |FROM cnt ca JOIN cnt cb ON ca.source < cb.source
-         |LEFT JOIN shp ON shp.src_a = ca.source AND shp.src_b = cb.source
-         |ORDER BY src_a, src_b""".stripMargin,
-    "dedup_cluster_sizes" ->
-      s"""${recursiveWith(jaccardPairCtes)}$labelCtes, sizes AS (
-         |  SELECT lbl, count(*) AS sz FROM lcc GROUP BY 1
-         |)
-         |SELECT sz AS cluster_size, count(*) AS n_clusters
-         |FROM sizes GROUP BY 1 ORDER BY 1""".stripMargin,
-    // One WITH composes all three candidate-generation chains (the CTE
-    // bodies above exist exactly for this — duplicate CTE names are
-    // illegal). The empty-filter agg emits one row of (0, NULL→0), so
-    // the always-emit-3-rows contract holds in both engines. sum(sz)
-    // is HUGEINT in DuckDB — cast back to BIGINT to match Spark's long.
-    "dedup_bucket_stats" ->
-      s"""WITH d AS (
-         |$dBody
-         |), sh AS (
-         |$shBody
-         |), hb AS (
-         |$hbBody
-         |), mh AS (
-         |$mhBody
-         |), bands AS (
-         |  $bandSelects
-         |)$simhashSigCtes, chunks AS (
-         |$chunksBody
-         |), shh AS (
-         |$shhBody
-         |), jac_drop AS (
-         |  SELECT count(*) AS db, CAST(coalesce(sum(sz), 0) AS BIGINT) AS dp
-         |  FROM (SELECT s, count(DISTINCT doc_id) AS sz FROM shh GROUP BY 1)
-         |  WHERE sz > $MaxShingleDf
-         |), mh_drop AS (
-         |  SELECT count(*) AS db, CAST(coalesce(sum(sz), 0) AS BIGINT) AS dp
-         |  FROM (SELECT band, sig, count(*) AS sz FROM bands GROUP BY 1, 2)
-         |  WHERE sz > $MaxBucketSize
-         |), sim_drop AS (
-         |  SELECT count(*) AS db, CAST(coalesce(sum(sz), 0) AS BIGINT) AS dp
-         |  FROM (SELECT chunk_id, chunk, count(*) AS sz FROM chunks GROUP BY 1, 2)
-         |  WHERE sz > $MaxBucketSize
-         |)
-         |SELECT method, dropped_buckets, dropped_postings FROM (
-         |  SELECT 'jaccard_shingle' AS method, db AS dropped_buckets, dp AS dropped_postings FROM jac_drop
-         |  UNION ALL SELECT 'minhash_lsh', db, dp FROM mh_drop
-         |  UNION ALL SELECT 'simhash_chunk', db, dp FROM sim_drop
-         |) ORDER BY method""".stripMargin
-  )
+  /** Two-sided-join formulation of the delta-vs-corpus screen (the
+    * Spark side splits one bucket aggregate by the delta flag). The
+    * standing-index path must reproduce the single-shot verdicts
+    * bit-for-bit, so `dedup_incremental_reuse` shares it.
+    */
+  private val incrementalSql: String =
+    s"""$shCte, hb AS (
+       |$hbBody
+       |), mh AS (
+       |$mhBody
+       |), bands AS (
+       |  $bandSelects
+       |), corpus_b AS (
+       |  SELECT band, sig, doc_id FROM bands
+       |  WHERE doc_id % $DeltaMod <> ${DeltaMod - 1}
+       |), small AS (
+       |  SELECT band, sig FROM corpus_b GROUP BY 1, 2
+       |  HAVING count(*) <= $MaxBucketSize
+       |), near AS (
+       |  SELECT db.doc_id, count(DISTINCT cb.doc_id) AS near_partners
+       |  FROM bands db
+       |  JOIN small USING (band, sig)
+       |  JOIN corpus_b cb USING (band, sig)
+       |  WHERE db.doc_id % $DeltaMod = ${DeltaMod - 1}
+       |  GROUP BY 1
+       |), h AS (
+       |  SELECT doc_id, sha256(lower(text)) AS th FROM documents
+       |  WHERE text IS NOT NULL AND length(text) > 0
+       |), corpus_h AS (
+       |  SELECT DISTINCT th FROM h WHERE doc_id % $DeltaMod <> ${DeltaMod - 1}
+       |), ex AS (
+       |  SELECT h.doc_id, (c.th IS NOT NULL) AS exact_dup
+       |  FROM h LEFT JOIN corpus_h c ON h.th = c.th
+       |  WHERE h.doc_id % $DeltaMod = ${DeltaMod - 1}
+       |)
+       |SELECT ex.doc_id, ex.exact_dup,
+       |       coalesce(near.near_partners, 0) AS near_partners,
+       |       CASE WHEN ex.exact_dup THEN 'exact_dup'
+       |            WHEN coalesce(near.near_partners, 0) > 0 THEN 'near_candidate'
+       |            ELSE 'new' END AS verdict
+       |FROM ex LEFT JOIN near USING (doc_id)
+       |ORDER BY doc_id""".stripMargin
 }

@@ -2,6 +2,7 @@ package graft.mm
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** Multimodal-column plumbing for LLM-data pipelines: media as opaque
   * `binary` payloads + typed metadata, with decode / feature-extract /
@@ -217,47 +218,9 @@ object Multimodal {
       .agg(min(col("media_id")).as("keep_media_id"),
         count(lit(1)).as("n_copies"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_decode_stats" -> ((s, dir) =>
-      decodeStats(media(s, dir)).orderBy("media_id")),
-    "mm_resize" -> ((s, dir) => resize(media(s, dir)).orderBy("media_id")),
-    "mm_frame_sample" -> ((s, dir) =>
-      frameSample(media(s, dir)).orderBy("media_id")),
-    "mm_payload_dedup" -> ((s, dir) =>
-      payloadDedup(media(s, dir)).orderBy("kind", "payload_hash")),
-    "mm_decode_real" -> ((s, dir) =>
-      decodeReal(realMedia(s, dir)).orderBy("media_id")),
-    // The TYPED mapPartitions decode path under the driver oracle (it
-    // was spec-pinned against the column path only through r10-mid):
-    // Dataset[Media] → pluggable decoder → features, zero shuffle.
-    "mm_decode_features" -> ((s, dir) => {
-      import s.implicits._
-      decodeFeatures(media(s, dir).as[Media]).toDF()
-        .select(col("media_id"), col("n_bytes").cast("long").as("n_bytes"),
-          col("mean_byte"), col("checksum"))
-        .orderBy("media_id")
-    })
-  )
-
-  // ---- DuckDB oracle SQL ------------------------------------------------
-
-  /** The fixture text is pure ASCII (verified: max code point 121), so
-    * `unicode(one_char)` in DuckDB == `ascii` in Spark == payload byte.
-    */
-  private val mCte: String =
-    """WITH m AS (
-      |  SELECT doc_id AS media_id,
-      |         (['image', 'audio', 'video'])[(doc_id % 3) + 1] AS kind,
-      |         text,
-      |         CAST(n_chars % 32 + 1 AS INT) AS width,
-      |         CAST(doc_id % 24 + 1 AS INT) AS height,
-      |         CAST(doc_id % 100 + 1 AS INT) AS n_frames
-      |  FROM documents
-      |  WHERE text IS NOT NULL AND length(text) > 0
-      |)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "mm_decode_stats" ->
+  lazy val specs: Map[String, QuerySpec] = Map(
+    "mm_decode_stats" -> QuerySpec((s, dir) =>
+      decodeStats(media(s, dir)).orderBy("media_id"),
       s"""$mCte, px AS (
          |  SELECT media_id, kind,
          |         list_transform(generate_series(1, length(text)),
@@ -269,8 +232,8 @@ object Multimodal {
          |       CAST(list_sum(p) AS DOUBLE) / CAST(len(p) AS DOUBLE) AS mean_byte,
          |       CAST(list_min(p) AS BIGINT) AS min_byte,
          |       CAST(list_max(p) AS BIGINT) AS max_byte
-         |FROM px ORDER BY media_id""".stripMargin,
-    "mm_resize" ->
+         |FROM px ORDER BY media_id""".stripMargin),
+    "mm_resize" -> QuerySpec((s, dir) => resize(media(s, dir)).orderBy("media_id"),
       s"""$mCte, px AS (
          |  SELECT media_id, CAST(length(text) AS BIGINT) AS orig_len,
          |         list_transform(generate_series(1, length(text), $ResizeStride),
@@ -280,8 +243,9 @@ object Multimodal {
          |SELECT media_id, orig_len,
          |       CAST(len(p) AS BIGINT) AS resized_len,
          |       CAST(list_sum(p) AS BIGINT) AS resized_checksum
-         |FROM px ORDER BY media_id""".stripMargin,
-    "mm_frame_sample" ->
+         |FROM px ORDER BY media_id""".stripMargin),
+    "mm_frame_sample" -> QuerySpec((s, dir) =>
+      frameSample(media(s, dir)).orderBy("media_id"),
       s"""$mCte, fr AS (
          |  SELECT media_id, CAST(n_frames AS BIGINT) AS n_frames,
          |         generate_series(0, n_frames - 1, $FrameStride) AS frames
@@ -290,35 +254,23 @@ object Multimodal {
          |SELECT media_id, n_frames,
          |       CAST(len(frames) AS BIGINT) AS n_sampled,
          |       CAST(list_sum(frames) AS BIGINT) AS sampled_sum
-         |FROM fr ORDER BY media_id""".stripMargin,
-    // payload bytes ARE the utf8 text bytes (ASCII fixture), so DuckDB's
-    // sha256(text) digests the same byte stream Spark's sha2(binary)
-    // does — the dedup_exact hash-parity argument verbatim
-    "mm_payload_dedup" ->
+         |FROM fr ORDER BY media_id""".stripMargin),
+    "mm_payload_dedup" -> QuerySpec((s, dir) =>
+      payloadDedup(media(s, dir)).orderBy("kind", "payload_hash"),
+      // payload bytes ARE the utf8 text bytes (ASCII fixture), so DuckDB's
+      // sha256(text) digests the same byte stream Spark's sha2(binary)
+      // does — the dedup_exact hash-parity argument verbatim
       s"""$mCte
          |SELECT kind, sha256(text) AS payload_hash,
          |       min(media_id) AS keep_media_id, count(*) AS n_copies
          |FROM m GROUP BY 1, 2
-         |ORDER BY kind, payload_hash""".stripMargin,
-    // typed-path features: exact integer sum, one double division —
-    // the same arithmetic the mapPartitions fold performs
-    "mm_decode_features" ->
-      s"""$mCte, px AS (
-         |  SELECT media_id,
-         |         list_transform(generate_series(1, length(text)),
-         |                        i -> unicode(text[i])) AS p
-         |  FROM m
-         |)
-         |SELECT media_id,
-         |       CAST(len(p) AS BIGINT) AS n_bytes,
-         |       CAST(list_sum(p) AS DOUBLE) / CAST(len(p) AS DOUBLE) AS mean_byte,
-         |       CAST(list_sum(p) AS BIGINT) AS checksum
-         |FROM px ORDER BY media_id""".stripMargin,
-    // Predicts the decoded stats in CLOSED FORM from the synthesis
-    // formulas — independent of any byte-level serialization. Spark
-    // matches only if encode→decode round-trips content exactly (order
-    // included, via the position-weighted checksum).
-    "mm_decode_real" ->
+         |ORDER BY kind, payload_hash""".stripMargin),
+    "mm_decode_real" -> QuerySpec((s, dir) =>
+      decodeReal(realMedia(s, dir)).orderBy("media_id"),
+      // Predicts the decoded stats in CLOSED FORM from the synthesis
+      // formulas — independent of any byte-level serialization. Spark
+      // matches only if encode→decode round-trips content exactly (order
+      // included, via the position-weighted checksum).
       """WITH d AS (
         |  SELECT doc_id FROM documents
         |  WHERE text IS NOT NULL AND length(text) > 0
@@ -345,6 +297,48 @@ object Multimodal {
         |       CAST(list_sum(list_transform(generate_series(1, len(v)),
         |                                    i -> v[i] * (i - 1))) AS BIGINT)
         |         AS wsum_vals
-        |FROM vals ORDER BY media_id""".stripMargin
+        |FROM vals ORDER BY media_id""".stripMargin),
+    // The TYPED mapPartitions decode path under the driver oracle (it
+    // was spec-pinned against the column path only through r10-mid):
+    // Dataset[Media] → pluggable decoder → features, zero shuffle.
+    "mm_decode_features" -> QuerySpec((s, dir) => {
+      import s.implicits._
+      decodeFeatures(media(s, dir).as[Media]).toDF()
+        .select(col("media_id"), col("n_bytes").cast("long").as("n_bytes"),
+          col("mean_byte"), col("checksum"))
+        .orderBy("media_id")
+    },
+      // typed-path features: exact integer sum, one double division —
+      // the same arithmetic the mapPartitions fold performs
+      s"""$mCte, px AS (
+         |  SELECT media_id,
+         |         list_transform(generate_series(1, length(text)),
+         |                        i -> unicode(text[i])) AS p
+         |  FROM m
+         |)
+         |SELECT media_id,
+         |       CAST(len(p) AS BIGINT) AS n_bytes,
+         |       CAST(list_sum(p) AS DOUBLE) / CAST(len(p) AS DOUBLE) AS mean_byte,
+         |       CAST(list_sum(p) AS BIGINT) AS checksum
+         |FROM px ORDER BY media_id""".stripMargin)
   )
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
+
+  // ---- DuckDB oracle SQL ------------------------------------------------
+
+  /** The fixture text is pure ASCII (verified: max code point 121), so
+    * `unicode(one_char)` in DuckDB == `ascii` in Spark == payload byte.
+    */
+  private val mCte: String =
+    """WITH m AS (
+      |  SELECT doc_id AS media_id,
+      |         (['image', 'audio', 'video'])[(doc_id % 3) + 1] AS kind,
+      |         text,
+      |         CAST(n_chars % 32 + 1 AS INT) AS width,
+      |         CAST(doc_id % 24 + 1 AS INT) AS height,
+      |         CAST(doc_id % 100 + 1 AS INT) AS n_frames
+      |  FROM documents
+      |  WHERE text IS NOT NULL AND length(text) > 0
+      |)""".stripMargin
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** Skew-resistant two-stage aggregation (the "salting" pattern).
   *
@@ -105,8 +106,8 @@ object Salted {
     * a fixture where the measurement flipped would hash-mismatch the
     * oracle and fail the gate loudly.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rel_salted_join" -> ((s, dir) => {
+  lazy val specs: Map[String, QuerySpec] = Map(
+    "rel_salted_join" -> QuerySpec((s, dir) => {
       val d = graft.sources.Tables.parquet(s, dir, "documents")
       val audit = graft.rel.Relational.keySkew(d, Seq("lang", "source"))
       val key = skewedKeys(audit).head._1
@@ -118,19 +119,10 @@ object Salted {
         .select(col("doc_id"), col(key).as("key_val"),
           col("key_docs"), col("key_chars"))
         .orderBy("doc_id")
-    })
-  )
-
-  val specs: Map[String, graft.QuerySpec] = Map(
-    "rel_salted_join" -> graft.QuerySpec(build = graft.QuerySpec.Eager(
-      "the key-skew audit frame (one row per candidate join column) whose hottest flagged column becomes the salted join key",
-      "2 rows")))
-
-  def oracleSql: Map[String, String] = Map(
-    // the salted join must be row-identical to the plain join; `lang`
-    // is the column the audit flags hottest on every fixture (the
-    // dominant language's top1_share dwarfs the ~uniform sources')
-    "rel_salted_join" ->
+    },
+      // the salted join must be row-identical to the plain join; `lang`
+      // is the column the audit flags hottest on every fixture (the
+      // dominant language's top1_share dwarfs the ~uniform sources')
       """WITH d AS (
         |  SELECT doc_id, lang, n_chars FROM documents
         |), dim AS (
@@ -140,6 +132,11 @@ object Salted {
         |)
         |SELECT d.doc_id, d.lang AS key_val, dim.key_docs, dim.key_chars
         |FROM d JOIN dim USING (lang)
-        |ORDER BY d.doc_id""".stripMargin
+        |ORDER BY d.doc_id""".stripMargin,
+      build = QuerySpec.Eager(
+        "the key-skew audit frame (one row per candidate join column) whose hottest flagged column becomes the salted join key",
+        "2 rows"))
   )
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
 }

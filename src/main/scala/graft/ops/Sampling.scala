@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
+import graft.text.Tokenize
 
 /** Deterministic sampling / dataset splitting for reproducible training
   * pipelines.
@@ -163,25 +165,21 @@ object Sampling {
     */
   val PackBudget = 2048L
 
-  /** Default stream count. The shard count is the packing stage's
-    * parallelism knob (each stream's cumulative-sum window is ONE
-    * sequential sorted partition), so at cluster scale it must track
-    * the cluster, not a constant: pass `shards` explicitly (≈ 2–4×
-    * total cores, or input-bytes / a few GB) or set
-    * `SPARK_GRAFT_PACK_SHARDS`. It is an EPOCH CONSTANT, not a tuning
-    * knob you can turn mid-corpus: the shard hash decides which stream
-    * a doc joins, so changing it reassigns essentially every doc
+  /** Stream count of the registered packing queries and their oracle.
+    * The shard count is the packing stage's parallelism knob (each
+    * stream's cumulative-sum window is ONE sequential sorted
+    * partition), so at cluster scale it must track the cluster: pass
+    * `shards` to [[packPlan]] / [[packStats]] explicitly (≈ 2–4× total
+    * cores, or input-bytes / a few GB). It is an EPOCH CONSTANT, not a
+    * tuning knob you can turn mid-corpus: the shard hash decides which
+    * stream a doc joins, so changing it reassigns essentially every doc
     * (spec-pinned) — pick it once per packing epoch and record it with
     * the epoch's outputs.
     */
-  val PackShards: Long =
-    sys.env.get("SPARK_GRAFT_PACK_SHARDS").map(_.toLong).getOrElse(64L)
+  val PackShards: Long = 64L
   val PackSalt = "pack|"
 
   def packPlan(d: DataFrame, shards: Long = PackShards): DataFrame = {
-    val toks = filter(
-      org.apache.spark.sql.functions.split(lower(col("text")), "\\s+"),
-      t => length(t) > 0)
     val shard = pmod(graft.functions.PortableHash.base28(
       concat(lit(PackSalt), col("doc_id").cast("string")),
       graft.functions.PortableHash.enabled(d)), lit(shards))
@@ -191,7 +189,7 @@ object Sampling {
         org.apache.spark.sql.expressions.Window.currentRow)
     d.filter(col("text").isNotNull && length(col("text")) > 0)
       .select(col("doc_id"), shard.as("shard"),
-        size(toks).cast("long").as("n_tokens"))
+        size(Tokenize.whitespaceTokens).cast("long").as("n_tokens"))
       .withColumn("cum_before",
         sum(col("n_tokens")).over(w) - col("n_tokens"))
       .select(col("doc_id"), col("shard"), col("n_tokens"),
@@ -243,14 +241,9 @@ object Sampling {
   val MaxEpochs = 4L
 
   def budgetPlan(d: DataFrame): DataFrame = {
-    // NB: qualified — this object's split(DataFrame, String) shadows
-    // functions.split
-    val toks = filter(
-      org.apache.spark.sql.functions.split(lower(col("text")), "\\s+"),
-      t => length(t) > 0)
     val perLang = d
       .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("lang"), size(toks).cast("long").as("n"))
+      .select(col("lang"), size(Tokenize.whitespaceTokens).cast("long").as("n"))
       .groupBy("lang").agg(sum(col("n")).as("avail_tokens"))
     val all = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
     perLang
@@ -318,63 +311,179 @@ object Sampling {
         (bucket.cast("double") < col("rate") * lit(1000000.0)).as("kept"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val specs: Map[String, QuerySpec] = Map(
     // per-doc assignment: the full reproducible-split contract
-    "sample_split_assign" -> ((s, dir) =>
+    "sample_split_assign" -> QuerySpec((s, dir) =>
       split(graft.sources.Tables.parquet(s, dir, "documents"), "doc_id")
         .select("doc_id", "bucket", "split")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""$splitCte
+         |SELECT doc_id, bucket, split FROM s ORDER BY doc_id""".stripMargin),
     // split sizes per language: the sanity report a pipeline runs daily
-    "sample_split_stats" -> ((s, dir) =>
+    "sample_split_stats" -> QuerySpec((s, dir) =>
       split(graft.sources.Tables.parquet(s, dir, "documents"), "doc_id")
         .groupBy("lang", "split").agg(count(lit(1)).as("n"))
-        .orderBy("lang", "split")),
+        .orderBy("lang", "split"),
+      s"""$splitCte
+         |SELECT lang, split, count(*) AS n FROM s
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // the corpus after language reweighting (the apply step)
-    "sample_mix_apply" -> ((s, dir) =>
+    "sample_mix_apply" -> QuerySpec((s, dir) =>
       mixAssign(graft.sources.Tables.parquet(s, dir, "documents"), "doc_id")
         .filter(col("kept"))
         .select("doc_id", "lang", "bucket")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""$mixCte
+         |SELECT doc_id, lang, bucket FROM m WHERE bucket < rate
+         |ORDER BY doc_id""".stripMargin),
     // the mixing audit: per language, incoming vs kept vs configured
     // rate — downsampling must never be silent
-    "sample_mix_stats" -> ((s, dir) =>
+    "sample_mix_stats" -> QuerySpec((s, dir) =>
       mixAssign(graft.sources.Tables.parquet(s, dir, "documents"), "doc_id")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_in"),
           sum(col("kept").cast("long")).as("n_kept"),
           max(col("rate")).as("rate_pct"))
-        .orderBy("lang")),
+        .orderBy("lang"),
+      s"""$mixCte
+         |SELECT lang, count(*) AS n_in,
+         |  CAST(sum(CASE WHEN bucket < rate THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+         |  max(rate) AS rate_pct
+         |FROM m GROUP BY lang ORDER BY lang""".stripMargin),
     // fixed-k eval-set carve per language (engine-portable, seed-free)
-    "sample_stratified" -> ((s, dir) =>
+    "sample_stratified" -> QuerySpec((s, dir) =>
       stratified(graft.sources.Tables.parquet(s, dir, "documents"), "doc_id", "lang")
         .select("doc_id", "lang", "hkey", "rank")
-        .orderBy("lang", "rank")),
+        .orderBy("lang", "rank"),
+      // 15-hex-digit positional build of the 60-bit rank key — the same
+      // construction the dedup oracle validates for PortableHash.key64
+      s"""WITH hx AS (
+         |  SELECT doc_id, lang,
+         |         substr(md5('$StratifiedSalt' || CAST(doc_id AS VARCHAR)), 1, 15) AS hx
+         |  FROM documents
+         |), h AS (
+         |  SELECT doc_id, lang, CAST($key64Sql AS BIGINT) AS hkey FROM hx
+         |), r AS (
+         |  SELECT doc_id, lang, hkey,
+         |         CAST(row_number() OVER (PARTITION BY lang
+         |           ORDER BY hkey ASC, doc_id ASC) AS INT) AS rank
+         |  FROM h
+         |)
+         |SELECT doc_id, lang, hkey, rank FROM r WHERE rank <= $StratifiedK
+         |ORDER BY lang, rank""".stripMargin),
     // per-language token-budget plan (epoch-capped uniform reweighting)
-    "sample_budget_plan" -> ((s, dir) =>
+    "sample_budget_plan" -> QuerySpec((s, dir) =>
       budgetPlan(graft.sources.Tables.parquet(s, dir, "documents"))
-        .orderBy("lang")),
+        .orderBy("lang"),
+      // integer plan arithmetic (// is DuckDB's integer division, Spark's
+      // div); the single double division comes last
+      s"""WITH d AS (
+         |  SELECT lang,
+         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |                     t -> length(t) > 0) AS toks
+         |  FROM documents
+         |  WHERE text IS NOT NULL AND length(text) > 0
+         |), pl AS (
+         |  SELECT lang, CAST(sum(len(toks)) AS BIGINT) AS avail_tokens
+         |  FROM d GROUP BY 1
+         |), t AS (
+         |  SELECT *, CAST(sum(avail_tokens) OVER () AS BIGINT) AS total_tokens,
+         |         CAST(count(*) OVER () AS BIGINT) AS n_langs
+         |  FROM pl
+         |), p AS (
+         |  SELECT lang, avail_tokens,
+         |         CAST((total_tokens // $BudgetDen) // n_langs AS BIGINT) AS target_tokens
+         |  FROM t
+         |)
+         |SELECT lang, avail_tokens, target_tokens,
+         |       least(target_tokens, avail_tokens * $MaxEpochs) AS planned_tokens,
+         |       target_tokens - least(target_tokens, avail_tokens * $MaxEpochs)
+         |         AS deficit_tokens,
+         |       CASE WHEN avail_tokens > 0
+         |            THEN CAST(least(target_tokens, avail_tokens * $MaxEpochs) AS DOUBLE)
+         |                 / CAST(avail_tokens AS DOUBLE)
+         |            ELSE CAST(0 AS DOUBLE) END AS repeat_factor
+         |FROM p ORDER BY lang""".stripMargin),
     // deterministic k-fold assignment (salted hash mod k)
-    "sample_kfold" -> ((s, dir) =>
+    "sample_kfold" -> QuerySpec((s, dir) =>
       kfold(graft.sources.Tables.parquet(s, dir, "documents"), "doc_id")
         .select("doc_id", "lang", "fold")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""WITH hx AS (
+         |  SELECT doc_id, lang,
+         |         substr(md5('$FoldSalt' || CAST(doc_id AS VARCHAR)), 1, 7) AS hx
+         |  FROM documents
+         |)
+         |SELECT doc_id, lang, CAST(($digitsSql) % $KFolds AS BIGINT) AS fold
+         |FROM hx ORDER BY doc_id""".stripMargin),
     // sqrt-temperature source flattening: the per-source plan…
-    "sample_temperature_plan" -> ((s, dir) =>
+    "sample_temperature_plan" -> QuerySpec((s, dir) =>
       temperaturePlan(graft.sources.Tables.parquet(s, dir, "documents"))
-        .orderBy("source")),
+        .orderBy("source"),
+      // n_min is an exact BIGINT min; sqrt and the division are single
+      // correctly-rounded double ops — no order-dependent float sum
+      """WITH c AS (
+        |  SELECT source, count(*) AS n_docs FROM documents GROUP BY 1
+        |), m AS (
+        |  SELECT min(n_docs) AS n_min FROM c
+        |)
+        |SELECT source, n_docs, n_min,
+        |       sqrt(CAST(n_docs AS DOUBLE) * CAST(n_min AS DOUBLE)) AS target_docs,
+        |       least(CAST(1.0 AS DOUBLE),
+        |             sqrt(CAST(n_docs AS DOUBLE) * CAST(n_min AS DOUBLE))
+        |               / CAST(n_docs AS DOUBLE)) AS rate
+        |FROM c, m ORDER BY source""".stripMargin),
     // …and its per-doc admission (the apply step)
-    "sample_temperature_apply" -> ((s, dir) =>
+    "sample_temperature_apply" -> QuerySpec((s, dir) =>
       temperatureApply(graft.sources.Tables.parquet(s, dir, "documents"), "doc_id")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""WITH c AS (
+         |  SELECT source, count(*) AS n_docs FROM documents GROUP BY 1
+         |), m AS (
+         |  SELECT min(n_docs) AS n_min FROM c
+         |), p AS (
+         |  SELECT source,
+         |         least(CAST(1.0 AS DOUBLE),
+         |               sqrt(CAST(n_docs AS DOUBLE) * CAST(n_min AS DOUBLE))
+         |                 / CAST(n_docs AS DOUBLE)) AS rate
+         |  FROM c, m
+         |), hx AS (
+         |  SELECT doc_id, source,
+         |         substr(md5('temp|' || CAST(doc_id AS VARCHAR)), 1, 7) AS hx
+         |  FROM documents
+         |)
+         |SELECT doc_id, hx.source,
+         |       CAST(($digitsSql) % 1000000 AS BIGINT) AS bucket,
+         |       rate,
+         |       CAST(CAST(($digitsSql) % 1000000 AS BIGINT) AS DOUBLE)
+         |         < rate * 1000000.0 AS kept
+         |FROM hx JOIN p ON hx.source = p.source
+         |ORDER BY doc_id""".stripMargin),
     // concatenate-and-chunk sequence packing: per-doc pack assignment
-    "sample_pack_plan" -> ((s, dir) =>
+    "sample_pack_plan" -> QuerySpec((s, dir) =>
       packPlan(graft.sources.Tables.parquet(s, dir, "documents"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // exact-long packing arithmetic; explicit ROWS frame (doc_id is
+      // unique — RANGE would tie-sum duplicates on an engine keeping any)
+      s"""$packCte
+         |SELECT doc_id, shard, n_tokens, pack_id, pack_offset, n_spans
+         |FROM q ORDER BY doc_id""".stripMargin),
     // …and the per-shard pack/straddler/fill audit
-    "sample_pack_stats" -> ((s, dir) =>
+    "sample_pack_stats" -> QuerySpec((s, dir) =>
       packStats(graft.sources.Tables.parquet(s, dir, "documents"))
-        .orderBy("shard"))
+        .orderBy("shard"),
+      s"""$packCte
+         |SELECT shard, count(*) AS n_docs,
+         |       CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
+         |       CAST(max(pack_id + n_spans) AS BIGINT) AS n_packs,
+         |       CAST(sum(CASE WHEN n_spans > 1 THEN 1 ELSE 0 END) AS BIGINT)
+         |         AS n_straddlers,
+         |       CAST(sum(n_tokens) - (max(pack_id + n_spans) - 1) * $PackBudget
+         |         AS BIGINT) AS last_pack_tokens
+         |FROM q GROUP BY shard ORDER BY shard""".stripMargin)
   )
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
 
   private val key64Sql: String =
     (1 to 15).map(k =>
@@ -442,132 +551,4 @@ object Sampling {
        |           // $PackBudget + 1 AS n_spans
        |  FROM c
        |)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "sample_split_assign" ->
-      s"""$splitCte
-         |SELECT doc_id, bucket, split FROM s ORDER BY doc_id""".stripMargin,
-    "sample_split_stats" ->
-      s"""$splitCte
-         |SELECT lang, split, count(*) AS n FROM s
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "sample_mix_apply" ->
-      s"""$mixCte
-         |SELECT doc_id, lang, bucket FROM m WHERE bucket < rate
-         |ORDER BY doc_id""".stripMargin,
-    "sample_mix_stats" ->
-      s"""$mixCte
-         |SELECT lang, count(*) AS n_in,
-         |  CAST(sum(CASE WHEN bucket < rate THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         |  max(rate) AS rate_pct
-         |FROM m GROUP BY lang ORDER BY lang""".stripMargin,
-    // 15-hex-digit positional build of the 60-bit rank key — the same
-    // construction the dedup oracle validates for PortableHash.key64
-    "sample_stratified" ->
-      s"""WITH hx AS (
-         |  SELECT doc_id, lang,
-         |         substr(md5('$StratifiedSalt' || CAST(doc_id AS VARCHAR)), 1, 15) AS hx
-         |  FROM documents
-         |), h AS (
-         |  SELECT doc_id, lang, CAST($key64Sql AS BIGINT) AS hkey FROM hx
-         |), r AS (
-         |  SELECT doc_id, lang, hkey,
-         |         CAST(row_number() OVER (PARTITION BY lang
-         |           ORDER BY hkey ASC, doc_id ASC) AS INT) AS rank
-         |  FROM h
-         |)
-         |SELECT doc_id, lang, hkey, rank FROM r WHERE rank <= $StratifiedK
-         |ORDER BY lang, rank""".stripMargin,
-    // integer plan arithmetic (// is DuckDB's integer division, Spark's
-    // div); the single double division comes last
-    "sample_budget_plan" ->
-      s"""WITH d AS (
-         |  SELECT lang,
-         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                     t -> length(t) > 0) AS toks
-         |  FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0
-         |), pl AS (
-         |  SELECT lang, CAST(sum(len(toks)) AS BIGINT) AS avail_tokens
-         |  FROM d GROUP BY 1
-         |), t AS (
-         |  SELECT *, CAST(sum(avail_tokens) OVER () AS BIGINT) AS total_tokens,
-         |         CAST(count(*) OVER () AS BIGINT) AS n_langs
-         |  FROM pl
-         |), p AS (
-         |  SELECT lang, avail_tokens,
-         |         CAST((total_tokens // $BudgetDen) // n_langs AS BIGINT) AS target_tokens
-         |  FROM t
-         |)
-         |SELECT lang, avail_tokens, target_tokens,
-         |       least(target_tokens, avail_tokens * $MaxEpochs) AS planned_tokens,
-         |       target_tokens - least(target_tokens, avail_tokens * $MaxEpochs)
-         |         AS deficit_tokens,
-         |       CASE WHEN avail_tokens > 0
-         |            THEN CAST(least(target_tokens, avail_tokens * $MaxEpochs) AS DOUBLE)
-         |                 / CAST(avail_tokens AS DOUBLE)
-         |            ELSE CAST(0 AS DOUBLE) END AS repeat_factor
-         |FROM p ORDER BY lang""".stripMargin,
-    "sample_kfold" ->
-      s"""WITH hx AS (
-         |  SELECT doc_id, lang,
-         |         substr(md5('$FoldSalt' || CAST(doc_id AS VARCHAR)), 1, 7) AS hx
-         |  FROM documents
-         |)
-         |SELECT doc_id, lang, CAST(($digitsSql) % $KFolds AS BIGINT) AS fold
-         |FROM hx ORDER BY doc_id""".stripMargin,
-    // n_min is an exact BIGINT min; sqrt and the division are single
-    // correctly-rounded double ops — no order-dependent float sum
-    "sample_temperature_plan" ->
-      """WITH c AS (
-        |  SELECT source, count(*) AS n_docs FROM documents GROUP BY 1
-        |), m AS (
-        |  SELECT min(n_docs) AS n_min FROM c
-        |)
-        |SELECT source, n_docs, n_min,
-        |       sqrt(CAST(n_docs AS DOUBLE) * CAST(n_min AS DOUBLE)) AS target_docs,
-        |       least(CAST(1.0 AS DOUBLE),
-        |             sqrt(CAST(n_docs AS DOUBLE) * CAST(n_min AS DOUBLE))
-        |               / CAST(n_docs AS DOUBLE)) AS rate
-        |FROM c, m ORDER BY source""".stripMargin,
-    "sample_temperature_apply" ->
-      s"""WITH c AS (
-         |  SELECT source, count(*) AS n_docs FROM documents GROUP BY 1
-         |), m AS (
-         |  SELECT min(n_docs) AS n_min FROM c
-         |), p AS (
-         |  SELECT source,
-         |         least(CAST(1.0 AS DOUBLE),
-         |               sqrt(CAST(n_docs AS DOUBLE) * CAST(n_min AS DOUBLE))
-         |                 / CAST(n_docs AS DOUBLE)) AS rate
-         |  FROM c, m
-         |), hx AS (
-         |  SELECT doc_id, source,
-         |         substr(md5('temp|' || CAST(doc_id AS VARCHAR)), 1, 7) AS hx
-         |  FROM documents
-         |)
-         |SELECT doc_id, hx.source,
-         |       CAST(($digitsSql) % 1000000 AS BIGINT) AS bucket,
-         |       rate,
-         |       CAST(CAST(($digitsSql) % 1000000 AS BIGINT) AS DOUBLE)
-         |         < rate * 1000000.0 AS kept
-         |FROM hx JOIN p ON hx.source = p.source
-         |ORDER BY doc_id""".stripMargin,
-    // exact-long packing arithmetic; explicit ROWS frame (doc_id is
-    // unique — RANGE would tie-sum duplicates on an engine keeping any)
-    "sample_pack_plan" ->
-      s"""$packCte
-         |SELECT doc_id, shard, n_tokens, pack_id, pack_offset, n_spans
-         |FROM q ORDER BY doc_id""".stripMargin,
-    "sample_pack_stats" ->
-      s"""$packCte
-         |SELECT shard, count(*) AS n_docs,
-         |       CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-         |       CAST(max(pack_id + n_spans) AS BIGINT) AS n_packs,
-         |       CAST(sum(CASE WHEN n_spans > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_straddlers,
-         |       CAST(sum(n_tokens) - (max(pack_id + n_spans) - 1) * $PackBudget
-         |         AS BIGINT) AS last_pack_tokens
-         |FROM q GROUP BY shard ORDER BY shard""".stripMargin
-  )
 }

@@ -3,6 +3,7 @@ package graft.rel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** Relational workout (SURVEY §7.4): joins / aggregates / windows over the
   * TPC-H-ish fixture tables, so the oracle suite exercises operator classes
@@ -31,9 +32,9 @@ object Relational {
   private def dsum(c: org.apache.spark.sql.Column) =
     sum(c.cast("decimal(28,10)")).cast("double")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val specs: Map[String, QuerySpec] = Map(
     // TPC-H Q1-shaped scan+aggregate: the canonical pricing summary.
-    "rel_pricing_summary" -> ((s, dir) => {
+    "rel_pricing_summary" -> QuerySpec((s, dir) => {
       val li = t(s, dir, "lineitem")
       li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -43,12 +44,21 @@ object Relational {
           dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
-    }),
+    },
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(CAST(sum(CAST(l_quantity AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_qty,
+        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
+        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
+        |  count(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
     // TPC-H Q3-shaped 3-way join + grouped top-N by revenue.
     // Join order matters at scale: semi-reduce orders against the
     // broadcast BUILDING-customer filter FIRST (cuts orders ~5x before
     // the wide lineitem join) — with CBO off Catalyst keeps user order.
-    "rel_top_orders" -> ((s, dir) => {
+    "rel_top_orders" -> QuerySpec((s, dir) => {
       val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
       val o = t(s, dir, "orders")
       val li = t(s, dir, "lineitem")
@@ -58,9 +68,18 @@ object Relational {
         .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey").asc)
         .limit(10)
-    }),
+    },
+      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY revenue DESC, l_orderkey ASC
+        |LIMIT 10""".stripMargin),
     // TPC-H Q5-shaped snowflake join: revenue per nation via region filter.
-    "rel_nation_revenue" -> ((s, dir) => {
+    "rel_nation_revenue" -> QuerySpec((s, dir) => {
       val li = t(s, dir, "lineitem")
       val sup = t(s, dir, "supplier")
       val nat = t(s, dir, "nation")
@@ -72,9 +91,19 @@ object Relational {
         .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("n_name")
-    }),
+    },
+      """SELECT n_name,
+        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |GROUP BY n_name
+        |ORDER BY n_name""".stripMargin),
     // Window ranking: top-3 orders by totalprice within each priority.
-    "rel_priority_top_orders" -> ((s, dir) => {
+    "rel_priority_top_orders" -> QuerySpec((s, dir) => {
       val o = t(s, dir, "orders")
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
@@ -82,9 +111,16 @@ object Relational {
         .filter(col("rank") <= 3)
         .select("o_orderpriority", "o_orderkey", "o_totalprice", "rank")
         .orderBy("o_orderpriority", "rank")
-    }),
+    },
+      """SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
+        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
+        |    CAST(row_number() OVER (PARTITION BY o_orderpriority
+        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS INT) AS rank
+        |  FROM orders)
+        |WHERE rank <= 3
+        |ORDER BY o_orderpriority, rank""".stripMargin),
     // Aggregate breadth: distinct counts + min/max (order-independent exact).
-    "rel_part_stats" -> ((s, dir) => {
+    "rel_part_stats" -> QuerySpec((s, dir) => {
       val p = t(s, dir, "part")
       p.groupBy("p_brand")
         .agg(
@@ -95,7 +131,17 @@ object Relational {
           min(col("p_size")).as("min_size"),
           max(col("p_size")).as("max_size"))
         .orderBy("p_brand")
-    }),
+    },
+      """SELECT p_brand,
+        |  count(DISTINCT p_type) AS n_types,
+        |  count(*) AS n_parts,
+        |  min(p_retailprice) AS min_price,
+        |  max(p_retailprice) AS max_price,
+        |  min(p_size) AS min_size,
+        |  max(p_size) AS max_size
+        |FROM part
+        |GROUP BY p_brand
+        |ORDER BY p_brand""".stripMargin),
     // Hierarchical aggregation: ROLLUP over (returnflag, linestatus)
     // emits per-group, per-flag subtotal, and grand-total rows.
     // Two-phase: Catalyst lowers rollup/cube to Expand, which feeds
@@ -106,7 +152,7 @@ object Relational {
     // the tiny aggregate removes the multiplier exactly: counts re-sum
     // as longs, money re-sums in decimal(28,10) BEFORE the double
     // cast, so the exact total — and the output hash — is unchanged.
-    "rel_rollup" -> ((s, dir) => {
+    "rel_rollup" -> QuerySpec((s, dir) => {
       val li = t(s, dir, "lineitem")
       val fine = li.groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n0"),
@@ -116,11 +162,17 @@ object Relational {
           sum(col("s0")).cast("double").as("sum_qty"))
         .orderBy(col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first)
-    }),
+    },
+      """SELECT l_returnflag, l_linestatus,
+        |  count(*) AS n,
+        |  CAST(CAST(sum(CAST(l_quantity AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_qty
+        |FROM lineitem
+        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
     // CUBE completes the grouping-sets family: all 4 grouping
     // combinations (full, per-flag, per-status, grand total), same
     // two-phase shape as rel_rollup (4x Expand multiplier removed).
-    "rel_cube" -> ((s, dir) => {
+    "rel_cube" -> QuerySpec((s, dir) => {
       val li = t(s, dir, "lineitem")
       val fine = li.groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n0"),
@@ -130,7 +182,13 @@ object Relational {
           sum(col("s0")).cast("double").as("sum_disc"))
         .orderBy(col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first)
-    }),
+    },
+      """SELECT l_returnflag, l_linestatus,
+        |  count(*) AS n,
+        |  CAST(CAST(sum(CAST(l_discount AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_disc
+        |FROM lineitem
+        |GROUP BY CUBE (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
     // Set-operation surface: INTERSECT/EXCEPT with set semantics,
     // computed in ONE pass. The naive intersect ∪ except form builds
     // both inputs twice (each set op is its own join subtree — 2×
@@ -138,7 +196,7 @@ object Relational {
     // primary key (already distinct), one left join of the filtered
     // customers against the distinct order keys tags every key as
     // exactly one of with/without — identical rows, half the work.
-    "rel_setops" -> ((s, dir) => {
+    "rel_setops" -> QuerySpec((s, dir) => {
       val building = t(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
       val withOrders = t(s, dir, "orders")
@@ -147,24 +205,38 @@ object Relational {
         .select(when(col("o_custkey").isNotNull, "building_with_orders")
           .otherwise("building_no_orders").as("subset"), col("c_custkey"))
         .orderBy("subset", "c_custkey")
-    }),
+    },
+      """SELECT 'building_with_orders' AS subset, c_custkey FROM (
+        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
+        |  INTERSECT
+        |  SELECT o_custkey FROM orders)
+        |UNION ALL
+        |SELECT 'building_no_orders' AS subset, c_custkey FROM (
+        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
+        |  EXCEPT
+        |  SELECT o_custkey FROM orders)
+        |ORDER BY subset, c_custkey""".stripMargin),
     // Anti/semi join surface in ONE pass over orders: left join against
     // the distinct custkey projection, existence = join hit. The naive
     // left_semi ∪ left_anti form scans orders twice — 2x the work at scale.
-    "rel_customer_orders" -> ((s, dir) => {
+    "rel_customer_orders" -> QuerySpec((s, dir) => {
       val c = t(s, dir, "customer")
       val oKeys = t(s, dir, "orders").select(col("o_custkey")).distinct()
       c.join(oKeys, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_custkey"), col("o_custkey").isNotNull.as("has_orders"))
         .orderBy("c_custkey")
-    }),
+    },
+      """SELECT c_custkey,
+        |  EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) AS has_orders
+        |FROM customer
+        |ORDER BY c_custkey""".stripMargin),
     // Running/frame windows over the order history: cumulative spend and
     // a trailing-3-order spend per customer. ONE shuffle on o_custkey,
     // then both frames are linear in-partition passes sharing that
     // exchange (same partitioning+ordering → one Window operator chain).
     // Sums stay DECIMAL inside the frame (running double addition would
     // accumulate in engine-dependent order), cast back per row.
-    "rel_window_running" -> ((s, dir) => {
+    "rel_window_running" -> QuerySpec((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       val spend = col("o_totalprice").cast("decimal(28,10)")
@@ -179,7 +251,18 @@ object Relational {
         .select("o_custkey", "o_orderkey", "order_seq",
           "running_spend", "trailing3_spend")
         .orderBy("o_custkey", "order_seq")
-    }),
+    },
+      // Frame sums accumulate as DECIMAL (exact in both engines regardless
+      // of the engine's frame evaluation order), then VARCHAR-hop to double.
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(row_number() OVER w AS INT) AS order_seq,
+        |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(28,10))) OVER
+        |    (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS running_spend,
+        |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(28,10))) OVER
+        |    (w ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS trailing3_spend
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        |ORDER BY o_custkey, order_seq""".stripMargin),
     // TPC-H Q17-shaped CORRELATED subquery — "lineitems ordering less
     // than 20% of that part's average quantity" — decorrelated into a
     // partition window instead of the naive per-part-average self-join:
@@ -202,7 +285,7 @@ object Relational {
     // 28.5. A lineitem-sized partition override was also measured and
     // loses slightly on both forms (81.4/154.4) — the window's sort
     // spill is bounded and the extra reduce tasks only add scheduling.
-    "rel_small_qty_revenue" -> ((s, dir) => {
+    "rel_small_qty_revenue" -> QuerySpec((s, dir) => {
       val w = Window.partitionBy(col("l_partkey"))
       val qd = col("l_quantity").cast("decimal(12,4)")
       val li = t(s, dir, "lineitem")
@@ -215,27 +298,57 @@ object Relational {
           (dsum(col("l_extendedprice")) / lit(7.0)).as("avg_yearly"),
           count(lit(1)).as("n_small"))
         .orderBy("p_brand")
-    }),
+    },
+      // Same decorrelated-window shape; the 5·qty·cnt < sum predicate is
+      // exact DECIMAL on both engines (quantities are integer-valued), so
+      // no float enters until the final revenue sum's VARCHAR-hop cast.
+      """WITH q AS (
+        |  SELECT l_partkey, l_extendedprice,
+        |         CAST(l_quantity AS DECIMAL(12,4)) AS qd,
+        |         sum(CAST(l_quantity AS DECIMAL(12,4)))
+        |           OVER (PARTITION BY l_partkey) AS qty_sum,
+        |         count(*) OVER (PARTITION BY l_partkey) AS qty_cnt
+        |  FROM lineitem
+        |)
+        |SELECT p_brand,
+        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) / 7.0 AS avg_yearly,
+        |  count(*) AS n_small
+        |FROM q JOIN part ON l_partkey = p_partkey
+        |WHERE qd * 5 * qty_cnt < qty_sum
+        |GROUP BY p_brand
+        |ORDER BY p_brand""".stripMargin),
     // TPC-H Q6-shaped forecast-revenue: the pure scan-aggregate — every
     // predicate (date year, discount band, quantity cap) reaches the
     // parquet scan as a pushed filter, zero joins, one 1-row aggregate.
     // The band compares the same IEEE doubles both engines parse from
     // the literals, so BETWEEN binds identically cross-engine.
-    "rel_filtered_revenue" -> ((s, dir) =>
+    "rel_filtered_revenue" -> QuerySpec((s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
           col("l_discount").between(0.05, 0.07) &&
           col("l_quantity") < 24)
         .agg(dsum(col("l_extendedprice") * col("l_discount")).as("revenue"),
-          count(lit(1)).as("n_items"))),
+          count(lit(1)).as("n_items")),
+      // quantile_cont ≡ Spark percentile (interpolating, proven by
+      // text_length_quantiles); counts cast to BIGINT (DuckDB sums into
+      // HUGEINT); the two shares are single double divisions over exact
+      // integer aggregates in both engines.
+      """SELECT
+        |  CAST(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_discount BETWEEN 0.05 AND 0.07
+        |  AND l_quantity < 24""".stripMargin),
     // TPC-H Q10-shaped returned-item customer ranking: revenue lost to
     // returns per customer in a date window, top 20. Both fact filters
     // run BEFORE the joins (returnflag on lineitem, the date window on
     // orders — each scan is cut first); the customer attach joins the
     // aggregated ~|customers| rows, and the final cut is
     // TakeOrderedAndProject (per-partition heaps), not a global sort.
-    "rel_returned_customers" -> ((s, dir) => {
+    "rel_returned_customers" -> QuerySpec((s, dir) => {
       val returned = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
       val winOrders = t(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -252,7 +365,18 @@ object Relational {
         .select(col("c_custkey"), col("c_name"), col("revenue"), col("n_items"))
         .orderBy(col("revenue").desc, col("c_custkey").asc)
         .limit(20)
-    }),
+    },
+      """SELECT c_custkey, c_name,
+        |       CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
+        |       count(*) AS n_items
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1996-07-01'
+        |GROUP BY 1, 2
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
     // TPC-H Q7-shaped bidirectional trade volume: revenue between two
     // named nations by (supp_nation, cust_nation, ship year). Both
     // nation filters semi-reduce their dimension chain BEFORE touching
@@ -261,7 +385,7 @@ object Relational {
     // semi-reduces orders; the only wide shuffle is the l_orderkey
     // fact-fact join. The OR-of-pairs predicate runs post-join on the
     // two tiny nation name columns.
-    "rel_nation_trade" -> ((s, dir) => {
+    "rel_nation_trade" -> QuerySpec((s, dir) => {
       val nations = Seq("NATION_18", "NATION_19")
       val supN = t(s, dir, "supplier")
         .join(t(s, dir, "nation").filter(col("n_name").isin(nations: _*)),
@@ -284,7 +408,20 @@ object Relational {
         .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("supp_nation", "cust_nation", "ship_year")
-    }),
+    },
+      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
+        |       year(l_shipdate) AS ship_year,
+        |       CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
+        |       count(*) AS n_items
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation sn ON s_nationkey = sn.n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation cn ON c_nationkey = cn.n_nationkey
+        |WHERE (sn.n_name = 'NATION_18' AND cn.n_name = 'NATION_19')
+        |   OR (sn.n_name = 'NATION_19' AND cn.n_name = 'NATION_18')
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
     // TPC-H Q8-shaped market share: of all PROMO-part revenue sold to
     // ASIA customers, the fraction supplied by one nation, per order
     // year. The share is a ratio of two exact-DECIMAL sums in ONE
@@ -292,7 +429,7 @@ object Relational {
     // denominator — no second scan, no self-join), divided once in
     // double. Dimension chains (part, supplier→nation, nation→region)
     // broadcast; the one wide shuffle is again l_orderkey.
-    "rel_market_share" -> ((s, dir) => {
+    "rel_market_share" -> QuerySpec((s, dir) => {
       val promoPart = t(s, dir, "part").filter(col("p_type") === "PROMO")
         .select("p_partkey")
       val supN = t(s, dir, "supplier")
@@ -320,14 +457,32 @@ object Relational {
           dsum(rev).as("total_revenue"))
         .withColumn("mkt_share", col("nation_revenue") / col("total_revenue"))
         .orderBy("order_year")
-    }),
+    },
+      """SELECT year(o_orderdate) AS order_year,
+        |       CAST(CAST(sum(CASE WHEN sn.n_name = 'NATION_3'
+        |                          THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
+        |                          ELSE CAST(0.0 AS DECIMAL(28,10)) END) AS VARCHAR) AS DOUBLE) AS nation_revenue,
+        |       CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS total_revenue,
+        |       CAST(CAST(sum(CASE WHEN sn.n_name = 'NATION_3'
+        |                          THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
+        |                          ELSE CAST(0.0 AS DECIMAL(28,10)) END) AS VARCHAR) AS DOUBLE)
+        |         / CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS mkt_share
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation sn ON s_nationkey = sn.n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation cn ON c_nationkey = cn.n_nationkey
+        |JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'ASIA'
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // TPC-H Q9-shaped product-line profit (the fixture has no partsupp,
     // so profit reduces to revenue): parts matching a name pattern,
     // grouped by supplier nation × order year. The LIKE predicate is
     // pushed into the part scan (a StringContains scan filter) and the
     // matching-part key set broadcasts — lineitem is cut before its
     // one orderkey shuffle.
-    "rel_product_profit" -> ((s, dir) => {
+    "rel_product_profit" -> QuerySpec((s, dir) => {
       val redPart = t(s, dir, "part").filter(col("p_name").contains("red"))
         .select("p_partkey")
       val supN = t(s, dir, "supplier")
@@ -343,13 +498,22 @@ object Relational {
         .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("nation", "order_year")
-    }),
+    },
+      """SELECT sn.n_name AS nation, year(o_orderdate) AS order_year,
+        |       CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
+        |       count(*) AS n_items
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation sn ON s_nationkey = sn.n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // TPC-H Q14-shaped promo share: one date-windowed scan, conditional
     // numerator beside the total in a single global aggregate, one
     // double division. The part join is deliberately UNHINTED: part is
     // dimension-small at fixture scale (AQE broadcasts it) but grows
     // with SF — a hardcoded broadcast would be the 100 TB mistake.
-    "rel_promo_share" -> ((s, dir) => {
+    "rel_promo_share" -> QuerySpec((s, dir) => {
       val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -361,7 +525,19 @@ object Relational {
           dsum(rev).as("total_revenue"))
         .withColumn("promo_share",
           col("promo_revenue") / col("total_revenue"))
-    }),
+    },
+      """SELECT
+        |  CAST(CAST(sum(CASE WHEN p_type = 'PROMO'
+        |                     THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
+        |                     ELSE CAST(0.0 AS DECIMAL(28,10)) END) AS VARCHAR) AS DOUBLE) AS promo_revenue,
+        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS total_revenue,
+        |  CAST(CAST(sum(CASE WHEN p_type = 'PROMO'
+        |                     THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
+        |                     ELSE CAST(0.0 AS DECIMAL(28,10)) END) AS VARCHAR) AS DOUBLE)
+        |    / CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS promo_share
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin),
     // TPC-H Q16-shaped supplier diversity count (lineitem stands in for
     // the absent partsupp as the part↔supplier association): distinct
     // suppliers per (brand, type, size) over an admitted part subset,
@@ -372,7 +548,7 @@ object Relational {
     // flagged-supplier exclusion is a broadcast anti-join (the flag
     // predicate selects a handful of rows); the part attach is
     // unhinted.
-    "rel_supplier_parts" -> ((s, dir) => {
+    "rel_supplier_parts" -> QuerySpec((s, dir) => {
       val sizes = Seq(1, 5, 10, 15, 20, 25, 30, 35)
       // distinct's map-side partial collapses ~nothing here (pairs are
       // near-unique per line) while its per-scan-task hash map spills at
@@ -400,7 +576,17 @@ object Relational {
         .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
         .orderBy(col("supplier_cnt").desc, col("p_brand").asc,
           col("p_type").asc, col("p_size").asc)
-    }),
+    },
+      """SELECT p_brand, p_type, p_size,
+        |       count(DISTINCT l_suppkey) AS supplier_cnt
+        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pairs
+        |JOIN part ON l_partkey = p_partkey
+        |WHERE p_brand <> 'Brand#21'
+        |  AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
+        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY 1, 2, 3
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
+      conf = wideAggConf),
     // TPC-H Q19-shaped disjunctive-predicate revenue: an OR of three
     // (brand, size, quantity) conjunctions spanning BOTH join sides.
     // Catalyst cannot factor a cross-table OR, so each side is
@@ -409,7 +595,7 @@ object Relational {
     // both reach the scans as pushed filters (RelationalSpec pins it) —
     // and the exact three-branch predicate runs as the post-join
     // residual. One aggregate row out.
-    "rel_disjunctive_revenue" -> ((s, dir) => {
+    "rel_disjunctive_revenue" -> QuerySpec((s, dir) => {
       val partHull =
         (col("p_brand") === "Brand#12" && col("p_size").between(1, 5)) ||
           (col("p_brand") === "Brand#23" && col("p_size").between(1, 10)) ||
@@ -429,18 +615,46 @@ object Relational {
         .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"),
           count(lit(1)).as("n_items"))
-    }),
+    },
+      """SELECT
+        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
+        |       AND l_quantity BETWEEN 1 AND 11)
+        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
+        |       AND l_quantity BETWEEN 10 AND 20)
+        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
+        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin),
     // Join-key skew profile of the fact table — the pre-flight audit
     // that decides whether a planned 100 TB join needs salting
     // (graft.ops.Salted) or AQE skew-join before you commit to it.
-    "rel_key_skew" -> ((s, dir) =>
+    "rel_key_skew" -> QuerySpec((s, dir) =>
       keySkew(t(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_partkey", "l_suppkey"))),
+        Seq("l_orderkey", "l_partkey", "l_suppkey")),
+      {
+      def branch(kc: String) =
+        s"""SELECT '$kc' AS key_col,
+           |       CAST(sum(n) AS BIGINT) AS n_rows,
+           |       count(*) AS n_keys,
+           |       max(n) AS max_freq,
+           |       quantile_cont(n, CAST(0.99 AS DOUBLE)) AS p99_freq,
+           |       CAST(sum(n) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_freq,
+           |       CAST(max(n) AS DOUBLE) / CAST(sum(n) AS DOUBLE) AS top1_share
+           |FROM (SELECT $kc AS k, count(*) AS n FROM lineitem GROUP BY 1)""".stripMargin
+      s"""SELECT * FROM (
+         |${branch("l_orderkey")}
+         |UNION ALL
+         |${branch("l_partkey")}
+         |UNION ALL
+         |${branch("l_suppkey")}
+         |) ORDER BY key_col""".stripMargin
+    }),
     // Referential-integrity audit over the warehouse FK graph — the
     // relational sibling of sim_embedding_coverage: an inner join at
     // scale silently DROPS orphan children, so count them first. One
     // row per FK edge, zeros explicit.
-    "rel_fk_audit" -> ((s, dir) => {
+    "rel_fk_audit" -> QuerySpec((s, dir) => {
       // one read per TABLE (r16): each `t()` call fires a footer/schema
       // job at build, and this query referenced lineitem 3×, orders and
       // customer 2× — sharing the Dataset drops 9 reads to 6 and keeps
@@ -463,52 +677,227 @@ object Relational {
         .unionByName(edge("orders.o_custkey->customer",
           ord, "o_custkey", cust, "c_custkey"))
         .orderBy("fk")
+    },
+      // Same pre-aggregated full-outer shape per edge; counts cast to
+      // BIGINT (DuckDB sums into HUGEINT). NULL child keys never match a
+      // parent in either engine, so they land in orphan_rows identically.
+      {
+      def edge(fk: String, child: String, ck: String,
+          parent: String, pk: String) =
+        s"""SELECT '$fk' AS fk,
+           |  CAST(coalesce(sum(cnt), 0) AS BIGINT) AS child_rows,
+           |  CAST(coalesce(sum(CASE WHEN p IS NULL THEN cnt ELSE 0 END), 0) AS BIGINT) AS orphan_rows,
+           |  count(p) AS parent_keys,
+           |  CAST(coalesce(sum(CASE WHEN p IS NOT NULL AND cnt IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS unreferenced_parents
+           |FROM (SELECT $ck AS k, count(*) AS cnt FROM $child GROUP BY 1) c
+           |FULL OUTER JOIN (SELECT $pk AS p FROM $parent) pt ON c.k = pt.p""".stripMargin
+      s"""SELECT * FROM (
+         |${edge("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey")}
+         |UNION ALL
+         |${edge("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey")}
+         |UNION ALL
+         |${edge("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey")}
+         |UNION ALL
+         |${edge("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey")}
+         |UNION ALL
+         |${edge("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey")}
+         |) ORDER BY fk""".stripMargin
     }),
     // TPC-H Q12-shaped conditional aggregation: order→ship lag bands ×
     // priority-class CASE counts (the fixture has no l_shipmode /
     // l_receiptdate, so the band key is the lag itself).
-    "rel_ship_lag" -> ((s, dir) =>
-      shipLag(t(s, dir, "lineitem"), t(s, dir, "orders"))),
+    "rel_ship_lag" -> QuerySpec((s, dir) =>
+      shipLag(t(s, dir, "lineitem"), t(s, dir, "orders")),
+      // Same band edges; day lag via date-truncated difference in both
+      // engines; counts cast to BIGINT (DuckDB sums into HUGEINT).
+      """SELECT
+        |  CASE WHEN lag <= 30 THEN '0-30' WHEN lag <= 60 THEN '31-60'
+        |       WHEN lag <= 90 THEN '61-90' ELSE '90+' END AS lag_band,
+        |  CAST(sum(CASE WHEN is_high THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(sum(CASE WHEN is_high THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM (
+        |  SELECT date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) AS lag,
+        |         o_orderpriority IN ('1-URGENT', '2-HIGH') AS is_high
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // TPC-H Q4-shaped correlated EXISTS: orders per priority with at
     // least one line shipped >90 days after the order date (the fixture
     // has no l_commitdate/l_receiptdate, so ship lag stands in for
     // "committed late").
-    "rel_late_orders" -> ((s, dir) =>
-      lateOrders(t(s, dir, "orders"), t(s, dir, "lineitem"))),
+    "rel_late_orders" -> QuerySpec((s, dir) =>
+      lateOrders(t(s, dir, "orders"), t(s, dir, "lineitem")),
+      // Naive correlated EXISTS on purpose — an independent implementation
+      // of the max-shipdate decorrelation (see lateOrders scaladoc).
+      """SELECT o_orderpriority, count(*) AS n_late_orders
+        |FROM orders o
+        |WHERE EXISTS (
+        |  SELECT 1 FROM lineitem
+        |  WHERE l_orderkey = o.o_orderkey
+        |    AND date_diff('day', CAST(o.o_orderdate AS DATE),
+        |                  CAST(l_shipdate AS DATE)) > 90)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // TPC-H Q13-shaped distribution: customers per order count,
     // INCLUDING the zero-order customers an inner join would drop.
-    "rel_order_count_dist" -> ((s, dir) =>
-      orderCountDist(t(s, dir, "customer"), t(s, dir, "orders"))),
+    "rel_order_count_dist" -> QuerySpec((s, dir) =>
+      orderCountDist(t(s, dir, "customer"), t(s, dir, "orders")),
+      """SELECT n_orders, count(*) AS n_customers FROM (
+        |  SELECT CAST(coalesce(n, 0) AS BIGINT) AS n_orders
+        |  FROM customer
+        |  LEFT JOIN (SELECT o_custkey, count(*) AS n FROM orders GROUP BY 1) o
+        |    ON c_custkey = o_custkey)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // TPC-H Q22-shaped anti-join + scalar subquery: per nation, the
     // customers with above-average positive balance and no recent orders.
-    "rel_idle_rich_customers" -> ((s, dir) =>
-      idleRichCustomers(t(s, dir, "customer"), t(s, dir, "orders"))),
+    "rel_idle_rich_customers" -> QuerySpec((s, dir) =>
+      idleRichCustomers(t(s, dir, "customer"), t(s, dir, "orders")),
+      // Same exact-decimal average (VARCHAR-hop, one double division) and
+      // balance sum; NOT EXISTS mirrors the left_anti.
+      """WITH a AS (
+        |  SELECT CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE)
+        |         / CAST(count(*) AS DOUBLE) AS avg_bal
+        |  FROM customer WHERE c_acctbal > 0.0
+        |)
+        |SELECT c_nationkey, count(*) AS n_custs,
+        |  CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS total_bal
+        |FROM customer, a
+        |WHERE c_acctbal > avg_bal
+        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
+        |                  AND o_orderdate >= TIMESTAMP '2000-01-01')
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // TPC-H Q21-shaped double-correlated quantifier: suppliers who were
     // the sole late shipper in a multi-supplier order.
-    "rel_sole_late_supplier" -> ((s, dir) =>
+    "rel_sole_late_supplier" -> QuerySpec((s, dir) =>
       soleLateSupplier(t(s, dir, "lineitem"), t(s, dir, "orders"),
-        t(s, dir, "supplier"))),
+        t(s, dir, "supplier")),
+      // Naive double-correlated EXISTS/NOT-EXISTS on purpose — an
+      // independent implementation of the two-level-aggregate
+      // decorrelation (see soleLateSupplier scaladoc).
+      """WITH li AS (
+        |  SELECT l_orderkey, l_suppkey,
+        |         date_diff('day', CAST(o_orderdate AS DATE),
+        |                   CAST(l_shipdate AS DATE)) > 90 AS late
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
+        |SELECT s_suppkey, s_name, count(*) AS numwait
+        |FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM li WHERE late) l1
+        |JOIN supplier ON s_suppkey = l1.l_suppkey
+        |WHERE EXISTS (
+        |    SELECT 1 FROM li l2
+        |    WHERE l2.l_orderkey = l1.l_orderkey
+        |      AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (
+        |    SELECT 1 FROM li l3
+        |    WHERE l3.l_orderkey = l1.l_orderkey
+        |      AND l3.l_suppkey <> l1.l_suppkey AND l3.late)
+        |GROUP BY 1, 2 ORDER BY numwait DESC, s_suppkey""".stripMargin,
+      conf = wideAggConf),
     // TPC-H Q2-shaped per-group arg-min: cheapest supplier per small part.
-    "rel_min_price_supplier" -> ((s, dir) =>
+    "rel_min_price_supplier" -> QuerySpec((s, dir) =>
       minPriceSupplier(t(s, dir, "lineitem"), t(s, dir, "part"),
-        t(s, dir, "supplier"))),
+        t(s, dir, "supplier")),
+      // Naive doubly-correlated arg-min on purpose (min price, then min
+      // suppkey at that price) — an independent implementation of the
+      // min(struct) decorrelation (see minPriceSupplier scaladoc).
+      // DISTINCT because several lines may repeat the winning
+      // (price, supplier) pair; prices compare raw, so double equality
+      // is exact.
+      s"""SELECT DISTINCT p.p_partkey, p.p_name,
+         |  l.l_extendedprice AS min_price, s.s_suppkey, s.s_name
+         |FROM part p
+         |JOIN lineitem l ON l.l_partkey = p.p_partkey
+         |JOIN supplier s ON s.s_suppkey = l.l_suppkey
+         |WHERE p.p_size <= $MinPricePartSize
+         |  AND l.l_extendedprice = (
+         |    SELECT min(l2.l_extendedprice) FROM lineitem l2
+         |    WHERE l2.l_partkey = p.p_partkey)
+         |  AND l.l_suppkey = (
+         |    SELECT min(l3.l_suppkey) FROM lineitem l3
+         |    WHERE l3.l_partkey = p.p_partkey
+         |      AND l3.l_extendedprice = l.l_extendedprice)
+         |ORDER BY p_partkey""".stripMargin),
     // TPC-H Q15-shaped max-over-aggregate with ties preserved.
-    "rel_top_supplier" -> ((s, dir) =>
-      topSupplier(t(s, dir, "lineitem"), t(s, dir, "supplier"))),
+    "rel_top_supplier" -> QuerySpec((s, dir) =>
+      topSupplier(t(s, dir, "lineitem"), t(s, dir, "supplier")),
+      // Max + ties via a scalar subquery over the same CTE; revenue stays
+      // DECIMAL through the equality and VARCHAR-hops only on output.
+      s"""WITH r AS (
+         |  SELECT l_suppkey,
+         |         sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS revd
+         |  FROM lineitem
+         |  WHERE l_shipdate >= TIMESTAMP '$TopSupplierFrom'
+         |    AND l_shipdate < TIMESTAMP '$TopSupplierUntil'
+         |  GROUP BY l_suppkey)
+         |SELECT s_suppkey, s_name,
+         |  CAST(CAST(revd AS VARCHAR) AS DOUBLE) AS total_rev
+         |FROM r JOIN supplier ON l_suppkey = s_suppkey
+         |WHERE revd = (SELECT max(revd) FROM r)
+         |ORDER BY s_suppkey""".stripMargin),
     // TPC-H Q18-shaped HAVING-sum membership join back to detail rows.
-    "rel_big_orders" -> ((s, dir) =>
+    "rel_big_orders" -> QuerySpec((s, dir) =>
       bigOrders(t(s, dir, "lineitem"), t(s, dir, "orders"),
-        t(s, dir, "customer"))),
+        t(s, dir, "customer")),
+      // Naive Q18 form on purpose: IN-membership over the HAVING
+      // aggregate plus a re-correlated scalar sum for the output column —
+      // an independent implementation of the aggregate-once join-back
+      // plan (see bigOrders scaladoc).
+      s"""SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
+         |  CAST(CAST((SELECT sum(CAST(l_quantity AS DECIMAL(28,10)))
+         |             FROM lineitem WHERE l_orderkey = o_orderkey)
+         |       AS VARCHAR) AS DOUBLE) AS sum_qty
+         |FROM orders JOIN customer ON o_custkey = c_custkey
+         |WHERE o_orderkey IN (
+         |  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
+         |  HAVING sum(CAST(l_quantity AS DECIMAL(28,10))) > $BigOrderQty)
+         |ORDER BY o_totalprice DESC, o_orderkey
+         |LIMIT 100""".stripMargin),
     // TPC-H Q11-shaped fraction-of-total HAVING over a grouped aggregate.
-    "rel_important_parts" -> ((s, dir) =>
-      importantParts(t(s, dir, "lineitem"))),
+    "rel_important_parts" -> QuerySpec((s, dir) =>
+      importantParts(t(s, dir, "lineitem")),
+      // The threshold compare mirrors the Spark side operation-for-
+      // operation in DOUBLE (one multiply, one divide, correctly-rounded
+      // decimal→double via the VARCHAR hop), so the predicate is
+      // bit-deterministic cross-engine.
+      """WITH pr AS (
+        |  SELECT l_partkey AS p_partkey,
+        |         sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS revd
+        |  FROM lineitem GROUP BY 1),
+        |tot AS (
+        |  SELECT CAST(CAST(sum(revd) AS VARCHAR) AS DOUBLE) AS totd,
+        |         count(*) AS n_parts
+        |  FROM pr)
+        |SELECT p_partkey,
+        |  CAST(CAST(revd AS VARCHAR) AS DOUBLE) AS revenue,
+        |  CAST(CAST(revd AS VARCHAR) AS DOUBLE) / totd AS rev_share
+        |FROM pr, tot
+        |WHERE CAST(CAST(revd AS VARCHAR) AS DOUBLE) > 1.5 * (totd / CAST(n_parts AS DOUBLE))
+        |ORDER BY revenue DESC, p_partkey""".stripMargin),
     // TPC-H Q20-shaped nested half-sum quantifier: per-cell dominant
     // suppliers.
-    "rel_dominant_supplier" -> ((s, dir) =>
-      dominantSupplier(t(s, dir, "lineitem"), t(s, dir, "supplier")))
+    "rel_dominant_supplier" -> QuerySpec((s, dir) =>
+      dominantSupplier(t(s, dir, "lineitem"), t(s, dir, "supplier")),
+      // Naive doubly-correlated half-sum quantifier on purpose (per-cell
+      // count and sum probes over the ps CTE) — an independent
+      // implementation of the window decorrelation (see dominantSupplier
+      // scaladoc). 2·sq > total is exact DECIMAL in both engines.
+      """WITH ps AS (
+        |  SELECT l_partkey, year(l_shipdate) AS yr, l_suppkey,
+        |         sum(CAST(l_quantity AS DECIMAL(28,10))) AS sq
+        |  FROM lineitem GROUP BY 1, 2, 3),
+        |dom AS (
+        |  SELECT l_suppkey FROM ps
+        |  WHERE (SELECT count(*) FROM ps p2
+        |         WHERE p2.l_partkey = ps.l_partkey AND p2.yr = ps.yr) > 1
+        |    AND ps.sq * 2 > (SELECT sum(p3.sq) FROM ps p3
+        |                     WHERE p3.l_partkey = ps.l_partkey AND p3.yr = ps.yr))
+        |SELECT s_suppkey, s_name, count(*) AS n_dominated
+        |FROM dom JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY 1, 2
+        |ORDER BY n_dominated DESC, s_suppkey""".stripMargin,
+      conf = wideAggConf)
   )
 
-  /** TPC-H Q4 shape for [[queries]]' `rel_late_orders`, decorrelated:
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
+
+  /** TPC-H Q4 shape for [[specs]]' `rel_late_orders`, decorrelated:
     * the spec's correlated `EXISTS (line with lag > 90)` collapses to
     * `max(l_shipdate) lag > 90` because o_orderdate is constant within
     * an order — so instead of a semi-join probing full lineitem volume,
@@ -531,7 +920,7 @@ object Relational {
       .orderBy("o_orderpriority")
   }
 
-  /** TPC-H Q13 shape for [[queries]]' `rel_order_count_dist`: the
+  /** TPC-H Q13 shape for [[specs]]' `rel_order_count_dist`: the
     * "how many customers placed k orders" histogram, zero bucket
     * included. Orders collapse map-side to (custkey, n) before the one
     * wide exchange (distinct custkeys, never order volume); the LEFT
@@ -556,7 +945,7 @@ object Relational {
     */
   val IdleCutoff = "2000-01-01"
 
-  /** TPC-H Q22 shape for [[queries]]' `rel_idle_rich_customers`: per
+  /** TPC-H Q22 shape for [[specs]]' `rel_idle_rich_customers`: per
     * nation, customers whose balance exceeds the global positive-balance
     * average and who have placed no orders since [[IdleCutoff]]. The
     * scalar subquery is a 1-row broadcast (the
@@ -584,7 +973,7 @@ object Relational {
       .orderBy("c_nationkey")
   }
 
-  /** TPC-H Q21 shape for [[queries]]' `rel_sole_late_supplier`:
+  /** TPC-H Q21 shape for [[specs]]' `rel_sole_late_supplier`:
     * suppliers who were the ONLY late shipper (ship lag > 90 days — the
     * fixture's stand-in for Q21's receipt-after-commit, as in
     * [[lateOrders]]) in an order involving MORE THAN ONE supplier. The
@@ -656,7 +1045,7 @@ object Relational {
     */
   val MinPricePartSize = 15
 
-  /** TPC-H Q2 shape for [[queries]]' `rel_min_price_supplier`: for each
+  /** TPC-H Q2 shape for [[specs]]' `rel_min_price_supplier`: for each
     * small part (`p_size` ≤ [[MinPricePartSize]]), the supplier whose
     * line offered it cheapest (ties on price broken by the smaller
     * suppkey — Q2's `ORDER BY s_suppkey LIMIT 1` stance, made total).
@@ -695,7 +1084,7 @@ object Relational {
   val TopSupplierFrom = "1996-01-01"
   val TopSupplierUntil = "1996-04-01"
 
-  /** TPC-H Q15 shape for [[queries]]' `rel_top_supplier`: the
+  /** TPC-H Q15 shape for [[specs]]' `rel_top_supplier`: the
     * supplier(s) with the maximum revenue in one quarter, ALL ties
     * preserved — the shape where `ORDER BY … LIMIT 1` is wrong (it
     * drops tied winners nondeterministically) and a rank window over
@@ -738,7 +1127,7 @@ object Relational {
     */
   val BigOrderQty = 250
 
-  /** TPC-H Q18 shape for [[queries]]' `rel_big_orders`: detail rows for
+  /** TPC-H Q18 shape for [[specs]]' `rel_big_orders`: detail rows for
     * orders whose total line quantity exceeds [[BigOrderQty]]. The
     * spec's `IN (… GROUP BY … HAVING sum > N)` membership probe IS the
     * aggregate result — lineitem collapses map-side to one (orderkey,
@@ -775,7 +1164,7 @@ object Relational {
       .orderBy(desc("o_totalprice"), col("o_orderkey"))
   }
 
-  /** TPC-H Q11 shape for [[queries]]' `rel_important_parts`: parts whose
+  /** TPC-H Q11 shape for [[specs]]' `rel_important_parts`: parts whose
     * revenue exceeds 1.5× the mean per-part revenue. Q11's fixed
     * `HAVING sum > fraction · total` only stays non-trivial at one
     * scale factor; anchoring the threshold to the mean (1.5 ×
@@ -818,7 +1207,7 @@ object Relational {
       .orderBy(desc("revenue"), col("p_partkey"))
   }
 
-  /** TPC-H Q20 shape for [[queries]]' `rel_dominant_supplier`: per
+  /** TPC-H Q20 shape for [[specs]]' `rel_dominant_supplier`: per
     * supplier, the number of (part, ship-year) cells where that
     * supplier shipped MORE THAN HALF the cell's quantity while at least
     * one other supplier shipped it too — the sourcing-concentration
@@ -883,20 +1272,6 @@ object Relational {
       .orderBy(desc("n_dominated"), col("s_suppkey"))
   }
 
-  /** The queries whose FIRST aggregate carries ≈one group per fact row
-    * — `rel_supplier_parts` (distinct (part, supp) pairs),
-    * `rel_sole_late_supplier` ((order, supp) cells),
-    * `rel_dominant_supplier` ((part, yr, supp) cells). Group state per
-    * reduce task is SF-linear at a fixed partition count: at sf10 and
-    * 32 partitions each task's hash map holds ~2 M groups, which
-    * spilled 35–51 GB per bench run (r12 metrics). The plans are the
-    * right shape (map-side partial collapse below every exchange);
-    * only the REDUCE-side partition count needs to track the data.
-    */
-  val specs: Map[String, graft.QuerySpec] = Seq(
-    "rel_dominant_supplier", "rel_sole_late_supplier", "rel_supplier_parts")
-    .map(_ -> graft.QuerySpec(conf = wideAggConf)).toMap
-
   /** Reduce-task input target for [[wideAggConf]]: one shuffle
     * partition per this many bytes of the driving fact's on-disk
     * parquet. 8 MiB compressed ≈ a few hundred thousand groups ≈ tens
@@ -906,8 +1281,16 @@ object Relational {
     */
   val WideAggBytesPerTask: Long = 24L << 20
 
-  /** Scoped shuffle-partition override for the [[specs]] above: one
-    * reduce task per [[WideAggBytesPerTask]] of lineitem bytes,
+  /** Scoped shuffle-partition override for the queries whose FIRST
+    * aggregate carries ≈one group per fact row — `rel_supplier_parts`
+    * (distinct (part, supp) pairs), `rel_sole_late_supplier` ((order,
+    * supp) cells), `rel_dominant_supplier` ((part, yr, supp) cells).
+    * Group state per reduce task is SF-linear at a fixed partition
+    * count: at sf10 and 32 partitions each task's hash map holds ~2 M
+    * groups, which spilled 35–51 GB per bench run (r12 metrics). The
+    * plans are the right shape (map-side partial collapse below every
+    * exchange); only the REDUCE-side partition count needs to track
+    * the data. One reduce task per [[WideAggBytesPerTask]] of lineitem bytes,
     * floored at the session's parallelism, capped at 2048. Applied by
     * the harnesses around JUST these queries (set, run, restore) —
     * the r12 GLOBAL variant (AQE initialPartitionNum = 8×cores) was
@@ -943,7 +1326,7 @@ object Relational {
     else 0L
   }
 
-  /** TPC-H Q12 shape for [[queries]]' `rel_ship_lag`: one fact-fact
+  /** TPC-H Q12 shape for [[specs]]' `rel_ship_lag`: one fact-fact
     * equi-join (inherent to the question — the lag needs a column from
     * each side; both inputs are pruned to the 2–3 surviving columns
     * before the exchange), then CASE counts per lag band. The band key
@@ -970,7 +1353,7 @@ object Relational {
       .orderBy("lag_band")
   }
 
-  /** One FK edge of [[queries]]' `rel_fk_audit`: child rows referencing
+  /** One FK edge of [[specs]]' `rel_fk_audit`: child rows referencing
     * each key collapse map-side to (key, cnt) BEFORE the one full-outer
     * join against the parent key set, so the join carries |distinct
     * child keys| + |parents| rows, never child-table volume. Emitted
@@ -1037,419 +1420,4 @@ object Relational {
           (col("max_freq").cast("double") / col("n_rows").cast("double"))
             .as("top1_share"))
     }.reduce(_ unionByName _).orderBy("key_col")
-
-  def oracleSql: Map[String, String] = Map(
-    "rel_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(CAST(sum(CAST(l_quantity AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_qty,
-        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
-        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "rel_top_orders" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-    "rel_nation_revenue" ->
-      """SELECT n_name,
-        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-    "rel_priority_top_orders" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |    CAST(row_number() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS INT) AS rank
-        |  FROM orders)
-        |WHERE rank <= 3
-        |ORDER BY o_orderpriority, rank""".stripMargin,
-    "rel_part_stats" ->
-      """SELECT p_brand,
-        |  count(DISTINCT p_type) AS n_types,
-        |  count(*) AS n_parts,
-        |  min(p_retailprice) AS min_price,
-        |  max(p_retailprice) AS max_price,
-        |  min(p_size) AS min_size,
-        |  max(p_size) AS max_size
-        |FROM part
-        |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
-    "rel_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  count(*) AS n,
-        |  CAST(CAST(sum(CAST(l_quantity AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "rel_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  count(*) AS n,
-        |  CAST(CAST(sum(CAST(l_discount AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_disc
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "rel_setops" ->
-      """SELECT 'building_with_orders' AS subset, c_custkey FROM (
-        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |  INTERSECT
-        |  SELECT o_custkey FROM orders)
-        |UNION ALL
-        |SELECT 'building_no_orders' AS subset, c_custkey FROM (
-        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |  EXCEPT
-        |  SELECT o_custkey FROM orders)
-        |ORDER BY subset, c_custkey""".stripMargin,
-    "rel_customer_orders" ->
-      """SELECT c_custkey,
-        |  EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) AS has_orders
-        |FROM customer
-        |ORDER BY c_custkey""".stripMargin,
-    // Frame sums accumulate as DECIMAL (exact in both engines regardless
-    // of the engine's frame evaluation order), then VARCHAR-hop to double.
-    "rel_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(row_number() OVER w AS INT) AS order_seq,
-        |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(28,10))) OVER
-        |    (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS running_spend,
-        |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(28,10))) OVER
-        |    (w ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS trailing3_spend
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, order_seq""".stripMargin,
-    // Same decorrelated-window shape; the 5·qty·cnt < sum predicate is
-    // exact DECIMAL on both engines (quantities are integer-valued), so
-    // no float enters until the final revenue sum's VARCHAR-hop cast.
-    "rel_small_qty_revenue" ->
-      """WITH q AS (
-        |  SELECT l_partkey, l_extendedprice,
-        |         CAST(l_quantity AS DECIMAL(12,4)) AS qd,
-        |         sum(CAST(l_quantity AS DECIMAL(12,4)))
-        |           OVER (PARTITION BY l_partkey) AS qty_sum,
-        |         count(*) OVER (PARTITION BY l_partkey) AS qty_cnt
-        |  FROM lineitem
-        |)
-        |SELECT p_brand,
-        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) / 7.0 AS avg_yearly,
-        |  count(*) AS n_small
-        |FROM q JOIN part ON l_partkey = p_partkey
-        |WHERE qd * 5 * qty_cnt < qty_sum
-        |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
-    // quantile_cont ≡ Spark percentile (interpolating, proven by
-    // text_length_quantiles); counts cast to BIGINT (DuckDB sums into
-    // HUGEINT); the two shares are single double divisions over exact
-    // integer aggregates in both engines.
-    "rel_filtered_revenue" ->
-      """SELECT
-        |  CAST(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "rel_returned_customers" ->
-      """SELECT c_custkey, c_name,
-        |       CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-07-01'
-        |GROUP BY 1, 2
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "rel_nation_trade" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |       year(l_shipdate) AS ship_year,
-        |       CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE (sn.n_name = 'NATION_18' AND cn.n_name = 'NATION_19')
-        |   OR (sn.n_name = 'NATION_19' AND cn.n_name = 'NATION_18')
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "rel_market_share" ->
-      """SELECT year(o_orderdate) AS order_year,
-        |       CAST(CAST(sum(CASE WHEN sn.n_name = 'NATION_3'
-        |                          THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
-        |                          ELSE CAST(0.0 AS DECIMAL(28,10)) END) AS VARCHAR) AS DOUBLE) AS nation_revenue,
-        |       CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS total_revenue,
-        |       CAST(CAST(sum(CASE WHEN sn.n_name = 'NATION_3'
-        |                          THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
-        |                          ELSE CAST(0.0 AS DECIMAL(28,10)) END) AS VARCHAR) AS DOUBLE)
-        |         / CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS mkt_share
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "rel_product_profit" ->
-      """SELECT sn.n_name AS nation, year(o_orderdate) AS order_year,
-        |       CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "rel_promo_share" ->
-      """SELECT
-        |  CAST(CAST(sum(CASE WHEN p_type = 'PROMO'
-        |                     THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
-        |                     ELSE CAST(0.0 AS DECIMAL(28,10)) END) AS VARCHAR) AS DOUBLE) AS promo_revenue,
-        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS total_revenue,
-        |  CAST(CAST(sum(CASE WHEN p_type = 'PROMO'
-        |                     THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
-        |                     ELSE CAST(0.0 AS DECIMAL(28,10)) END) AS VARCHAR) AS DOUBLE)
-        |    / CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS promo_share
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin,
-    "rel_supplier_parts" ->
-      """SELECT p_brand, p_type, p_size,
-        |       count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pairs
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#21'
-        |  AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "rel_disjunctive_revenue" ->
-      """SELECT
-        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-        |       AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-        |       AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "rel_key_skew" -> {
-      def branch(kc: String) =
-        s"""SELECT '$kc' AS key_col,
-           |       CAST(sum(n) AS BIGINT) AS n_rows,
-           |       count(*) AS n_keys,
-           |       max(n) AS max_freq,
-           |       quantile_cont(n, CAST(0.99 AS DOUBLE)) AS p99_freq,
-           |       CAST(sum(n) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_freq,
-           |       CAST(max(n) AS DOUBLE) / CAST(sum(n) AS DOUBLE) AS top1_share
-           |FROM (SELECT $kc AS k, count(*) AS n FROM lineitem GROUP BY 1)""".stripMargin
-      s"""SELECT * FROM (
-         |${branch("l_orderkey")}
-         |UNION ALL
-         |${branch("l_partkey")}
-         |UNION ALL
-         |${branch("l_suppkey")}
-         |) ORDER BY key_col""".stripMargin
-    },
-    // Same pre-aggregated full-outer shape per edge; counts cast to
-    // BIGINT (DuckDB sums into HUGEINT). NULL child keys never match a
-    // parent in either engine, so they land in orphan_rows identically.
-    "rel_fk_audit" -> {
-      def edge(fk: String, child: String, ck: String,
-          parent: String, pk: String) =
-        s"""SELECT '$fk' AS fk,
-           |  CAST(coalesce(sum(cnt), 0) AS BIGINT) AS child_rows,
-           |  CAST(coalesce(sum(CASE WHEN p IS NULL THEN cnt ELSE 0 END), 0) AS BIGINT) AS orphan_rows,
-           |  count(p) AS parent_keys,
-           |  CAST(coalesce(sum(CASE WHEN p IS NOT NULL AND cnt IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS unreferenced_parents
-           |FROM (SELECT $ck AS k, count(*) AS cnt FROM $child GROUP BY 1) c
-           |FULL OUTER JOIN (SELECT $pk AS p FROM $parent) pt ON c.k = pt.p""".stripMargin
-      s"""SELECT * FROM (
-         |${edge("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey")}
-         |UNION ALL
-         |${edge("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey")}
-         |UNION ALL
-         |${edge("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey")}
-         |UNION ALL
-         |${edge("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey")}
-         |UNION ALL
-         |${edge("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey")}
-         |) ORDER BY fk""".stripMargin
-    },
-    // Same band edges; day lag via date-truncated difference in both
-    // engines; counts cast to BIGINT (DuckDB sums into HUGEINT).
-    "rel_ship_lag" ->
-      """SELECT
-        |  CASE WHEN lag <= 30 THEN '0-30' WHEN lag <= 60 THEN '31-60'
-        |       WHEN lag <= 90 THEN '61-90' ELSE '90+' END AS lag_band,
-        |  CAST(sum(CASE WHEN is_high THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN is_high THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM (
-        |  SELECT date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) AS lag,
-        |         o_orderpriority IN ('1-URGENT', '2-HIGH') AS is_high
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Naive correlated EXISTS on purpose — an independent implementation
-    // of the max-shipdate decorrelation (see lateOrders scaladoc).
-    "rel_late_orders" ->
-      """SELECT o_orderpriority, count(*) AS n_late_orders
-        |FROM orders o
-        |WHERE EXISTS (
-        |  SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o.o_orderkey
-        |    AND date_diff('day', CAST(o.o_orderdate AS DATE),
-        |                  CAST(l_shipdate AS DATE)) > 90)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "rel_order_count_dist" ->
-      """SELECT n_orders, count(*) AS n_customers FROM (
-        |  SELECT CAST(coalesce(n, 0) AS BIGINT) AS n_orders
-        |  FROM customer
-        |  LEFT JOIN (SELECT o_custkey, count(*) AS n FROM orders GROUP BY 1) o
-        |    ON c_custkey = o_custkey)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Same exact-decimal average (VARCHAR-hop, one double division) and
-    // balance sum; NOT EXISTS mirrors the left_anti.
-    "rel_idle_rich_customers" ->
-      """WITH a AS (
-        |  SELECT CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE)
-        |         / CAST(count(*) AS DOUBLE) AS avg_bal
-        |  FROM customer WHERE c_acctbal > 0.0
-        |)
-        |SELECT c_nationkey, count(*) AS n_custs,
-        |  CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS total_bal
-        |FROM customer, a
-        |WHERE c_acctbal > avg_bal
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Naive double-correlated EXISTS/NOT-EXISTS on purpose — an
-    // independent implementation of the two-level-aggregate
-    // decorrelation (see soleLateSupplier scaladoc).
-    "rel_sole_late_supplier" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |         date_diff('day', CAST(o_orderdate AS DATE),
-        |                   CAST(l_shipdate AS DATE)) > 90 AS late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-        |SELECT s_suppkey, s_name, count(*) AS numwait
-        |FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM li WHERE late) l1
-        |JOIN supplier ON s_suppkey = l1.l_suppkey
-        |WHERE EXISTS (
-        |    SELECT 1 FROM li l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey
-        |      AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (
-        |    SELECT 1 FROM li l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey
-        |      AND l3.l_suppkey <> l1.l_suppkey AND l3.late)
-        |GROUP BY 1, 2 ORDER BY numwait DESC, s_suppkey""".stripMargin,
-    // Naive doubly-correlated arg-min on purpose (min price, then min
-    // suppkey at that price) — an independent implementation of the
-    // min(struct) decorrelation (see minPriceSupplier scaladoc).
-    // DISTINCT because several lines may repeat the winning
-    // (price, supplier) pair; prices compare raw, so double equality
-    // is exact.
-    "rel_min_price_supplier" ->
-      s"""SELECT DISTINCT p.p_partkey, p.p_name,
-         |  l.l_extendedprice AS min_price, s.s_suppkey, s.s_name
-         |FROM part p
-         |JOIN lineitem l ON l.l_partkey = p.p_partkey
-         |JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         |WHERE p.p_size <= $MinPricePartSize
-         |  AND l.l_extendedprice = (
-         |    SELECT min(l2.l_extendedprice) FROM lineitem l2
-         |    WHERE l2.l_partkey = p.p_partkey)
-         |  AND l.l_suppkey = (
-         |    SELECT min(l3.l_suppkey) FROM lineitem l3
-         |    WHERE l3.l_partkey = p.p_partkey
-         |      AND l3.l_extendedprice = l.l_extendedprice)
-         |ORDER BY p_partkey""".stripMargin,
-    // Max + ties via a scalar subquery over the same CTE; revenue stays
-    // DECIMAL through the equality and VARCHAR-hops only on output.
-    "rel_top_supplier" ->
-      s"""WITH r AS (
-         |  SELECT l_suppkey,
-         |         sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS revd
-         |  FROM lineitem
-         |  WHERE l_shipdate >= TIMESTAMP '$TopSupplierFrom'
-         |    AND l_shipdate < TIMESTAMP '$TopSupplierUntil'
-         |  GROUP BY l_suppkey)
-         |SELECT s_suppkey, s_name,
-         |  CAST(CAST(revd AS VARCHAR) AS DOUBLE) AS total_rev
-         |FROM r JOIN supplier ON l_suppkey = s_suppkey
-         |WHERE revd = (SELECT max(revd) FROM r)
-         |ORDER BY s_suppkey""".stripMargin,
-    // Naive Q18 form on purpose: IN-membership over the HAVING
-    // aggregate plus a re-correlated scalar sum for the output column —
-    // an independent implementation of the aggregate-once join-back
-    // plan (see bigOrders scaladoc).
-    "rel_big_orders" ->
-      s"""SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
-         |  CAST(CAST((SELECT sum(CAST(l_quantity AS DECIMAL(28,10)))
-         |             FROM lineitem WHERE l_orderkey = o_orderkey)
-         |       AS VARCHAR) AS DOUBLE) AS sum_qty
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         |WHERE o_orderkey IN (
-         |  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-         |  HAVING sum(CAST(l_quantity AS DECIMAL(28,10))) > $BigOrderQty)
-         |ORDER BY o_totalprice DESC, o_orderkey
-         |LIMIT 100""".stripMargin,
-    // The threshold compare mirrors the Spark side operation-for-
-    // operation in DOUBLE (one multiply, one divide, correctly-rounded
-    // decimal→double via the VARCHAR hop), so the predicate is
-    // bit-deterministic cross-engine.
-    "rel_important_parts" ->
-      """WITH pr AS (
-        |  SELECT l_partkey AS p_partkey,
-        |         sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))) AS revd
-        |  FROM lineitem GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(CAST(sum(revd) AS VARCHAR) AS DOUBLE) AS totd,
-        |         count(*) AS n_parts
-        |  FROM pr)
-        |SELECT p_partkey,
-        |  CAST(CAST(revd AS VARCHAR) AS DOUBLE) AS revenue,
-        |  CAST(CAST(revd AS VARCHAR) AS DOUBLE) / totd AS rev_share
-        |FROM pr, tot
-        |WHERE CAST(CAST(revd AS VARCHAR) AS DOUBLE) > 1.5 * (totd / CAST(n_parts AS DOUBLE))
-        |ORDER BY revenue DESC, p_partkey""".stripMargin,
-    // Naive doubly-correlated half-sum quantifier on purpose (per-cell
-    // count and sum probes over the ps CTE) — an independent
-    // implementation of the window decorrelation (see dominantSupplier
-    // scaladoc). 2·sq > total is exact DECIMAL in both engines.
-    "rel_dominant_supplier" ->
-      """WITH ps AS (
-        |  SELECT l_partkey, year(l_shipdate) AS yr, l_suppkey,
-        |         sum(CAST(l_quantity AS DECIMAL(28,10))) AS sq
-        |  FROM lineitem GROUP BY 1, 2, 3),
-        |dom AS (
-        |  SELECT l_suppkey FROM ps
-        |  WHERE (SELECT count(*) FROM ps p2
-        |         WHERE p2.l_partkey = ps.l_partkey AND p2.yr = ps.yr) > 1
-        |    AND ps.sq * 2 > (SELECT sum(p3.sq) FROM ps p3
-        |                     WHERE p3.l_partkey = ps.l_partkey AND p3.yr = ps.yr))
-        |SELECT s_suppkey, s_name, count(*) AS n_dominated
-        |FROM dom JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1, 2
-        |ORDER BY n_dominated DESC, s_suppkey""".stripMargin
-  )
 }

@@ -3,6 +3,7 @@ package graft.rel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** Temporal join operators Spark lacks as primitives, composed
   * Spark-first from windows and banded equi-joins — checked against
@@ -33,12 +34,12 @@ object Temporal {
   private def ev(s: SparkSession, dir: String): DataFrame =
     graft.sources.EventSource.load(s, dir)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val specs: Map[String, QuerySpec] = Map(
     // As-of join: for every 'error' event, the most recent 'signup' of
     // the same user at-or-before it. Union-tag + last_value(ignoreNulls)
     // over one user_id window — signups sort before errors on ties, so
     // "at or before" is inclusive, matching ASOF's e.ts >= s.ts.
-    "rel_asof_join" -> ((s, dir) => {
+    "rel_asof_join" -> QuerySpec((s, dir) => {
       val e = ev(s, dir)
       val tagged = e.filter(col("event_type").isin("error", "signup"))
         .select(col("user_id"), col("ts"), col("event_id"),
@@ -54,7 +55,14 @@ object Temporal {
         .select(col("user_id"), col("event_id"), col("ts"),
           col("last_signup_ts"))
         .orderBy("user_id", "event_id")
-    }),
+    },
+      // DuckDB's native ASOF JOIN — an independent implementation of the
+      // same semantics (largest s.ts with s.ts <= e.ts per error row).
+      """SELECT e.user_id, e.event_id, e.ts, s.ts AS last_signup_ts
+        |FROM (SELECT * FROM events WHERE event_type = 'error') e
+        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') s
+        |  ON e.user_id = s.user_id AND e.ts >= s.ts
+        |ORDER BY e.user_id, e.event_id""".stripMargin),
     // Range self-join: ordered pairs of same-user events ≤ 5 min apart.
     // Banded: left rows emit (bucket, bucket+1) keys; the right row's
     // single bucket makes each candidate pair match exactly once.
@@ -62,7 +70,7 @@ object Temporal {
     // exact by construction for any epoch-microsecond magnitude — the
     // double path is exact only while us/width stays inside the
     // half-ulp-below-1µs window (fine for centuries, but why rely on it).
-    "rel_range_join" -> ((s, dir) => {
+    "rel_range_join" -> QuerySpec((s, dir) => {
       val base = ev(s, dir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
       val winUs = RangeWindowSec * 1000000L
@@ -82,7 +90,15 @@ object Temporal {
           (col("us_b") - col("us_a")).as("dt_us"))
         .distinct()
         .orderBy("user_id", "event_a", "event_b")
-    }),
+    },
+      s"""SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b,
+         |       epoch_us(b.ts) - epoch_us(a.ts) AS dt_us
+         |FROM events a JOIN events b
+         |  ON a.user_id = b.user_id
+         | AND (epoch_us(a.ts) < epoch_us(b.ts)
+         |      OR (epoch_us(a.ts) = epoch_us(b.ts) AND a.event_id < b.event_id))
+         | AND epoch_us(b.ts) - epoch_us(a.ts) <= ${RangeWindowSec * 1000000L}
+         |ORDER BY a.user_id, event_a, event_b""".stripMargin),
     // Multi-touch attribution: every (purchase, view) pair per user with
     // the view at-or-before the purchase inside the 1 h horizon. Banded
     // like rel_range_join, with the roles split across two event types:
@@ -92,7 +108,7 @@ object Temporal {
     // ([[graft.streaming.StreamingAttribution]]) expresses the SAME
     // predicate as a watermarked stream-stream interval join; its spec
     // pins replay equivalence against this query.
-    "events_attribution" -> ((s, dir) => {
+    "events_attribution" -> QuerySpec((s, dir) => {
       val hUs = AttributionHorizonSec * 1000000L
       val base = ev(s, dir).select(col("user_id"), col("event_id"),
         col("event_type"), unix_micros(col("ts")).as("us"))
@@ -109,28 +125,7 @@ object Temporal {
         .select(col("user_id"), col("purchase_id"), col("view_id"),
           (col("p_us") - col("v_us")).as("dt_us"))
         .orderBy("user_id", "purchase_id", "view_id")
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    // DuckDB's native ASOF JOIN — an independent implementation of the
-    // same semantics (largest s.ts with s.ts <= e.ts per error row).
-    "rel_asof_join" ->
-      """SELECT e.user_id, e.event_id, e.ts, s.ts AS last_signup_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'error') e
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        |  ON e.user_id = s.user_id AND e.ts >= s.ts
-        |ORDER BY e.user_id, e.event_id""".stripMargin,
-    "rel_range_join" ->
-      s"""SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b,
-         |       epoch_us(b.ts) - epoch_us(a.ts) AS dt_us
-         |FROM events a JOIN events b
-         |  ON a.user_id = b.user_id
-         | AND (epoch_us(a.ts) < epoch_us(b.ts)
-         |      OR (epoch_us(a.ts) = epoch_us(b.ts) AND a.event_id < b.event_id))
-         | AND epoch_us(b.ts) - epoch_us(a.ts) <= ${RangeWindowSec * 1000000L}
-         |ORDER BY a.user_id, event_a, event_b""".stripMargin,
-    "events_attribution" ->
+    },
       s"""SELECT p.user_id, p.event_id AS purchase_id, v.event_id AS view_id,
          |       epoch_us(p.ts) - epoch_us(v.ts) AS dt_us
          |FROM events p JOIN events v
@@ -138,6 +133,8 @@ object Temporal {
          | AND p.event_type = 'purchase' AND v.event_type = 'view'
          | AND epoch_us(v.ts) <= epoch_us(p.ts)
          | AND epoch_us(v.ts) >= epoch_us(p.ts) - ${AttributionHorizonSec * 1000000L}
-         |ORDER BY p.user_id, purchase_id, view_id""".stripMargin
+         |ORDER BY p.user_id, purchase_id, view_id""".stripMargin)
   )
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
 }

@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** Similarity search over the `embeddings` fixture (vec_id,
   * embedding: array<float> dim 64, label).
@@ -1158,27 +1159,12 @@ object Similarity {
       .orderBy("issue")
   }
 
-  /** The eager builds: the exact top-k side input and the IVF training
-    * sample every trained-quantizer query collects for driver Lloyd.
+  /** An eager build that collects the IVF training sample every
+    * trained-quantizer query needs for driver Lloyd.
     */
-  val specs: Map[String, graft.QuerySpec] = {
-    val sample = graft.QuerySpec.Eager(_: String, "≤256 rows × 64 doubles")
-    Map(
-      "sim_ann_recall" -> graft.QuerySpec.Eager(
-        "the exact top-k side input both ANN variants are scored against (it composes `ivfTopK`, so it also performs the IVF sample collect)",
-        "NumQueries·TopK = 50 rows"),
-      "sim_cosine_ann_ivf" -> sample(
-        "the `vec_id < TrainN` training sample for driver-side Lloyd (centroids re-enter the plan as literals)"),
-      "sim_cosine_ann_pq" -> sample(
-        "the same IVF training sample, feeding BOTH the coarse quantizer and the 8 per-subspace PQ codebooks (all re-enter as literals)"),
-      "sim_semdedup" -> sample(
-        "the same IVF training sample (cell assignment embeds the trained centroids as literals)"),
-      "sim_bucket_stats" -> sample(
-        "the same IVF training sample, for the `ivf_cell` cap-audit row's cell assignment")
-    ).map { case (n, b) => n -> graft.QuerySpec(build = b) }
-  }
+  private def sampled(collects: String) = QuerySpec.Eager(collects, "≤256 rows × 64 doubles")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val specs: Map[String, QuerySpec] = Map(
     // Cap observability for [[MaxNearDupBucket]] and [[MaxSemCell]]
     // (caps must never truncate silently — same audit contract as
     // `dedup_bucket_stats`): always exactly one row per capped method,
@@ -1186,7 +1172,7 @@ object Similarity {
     // corpus pass computing bucket/cell sizes only (never vectors).
     // The ivf_cell branch embeds the trained quantizer, so this query
     // is eager-at-build like `sim_cosine_ann_ivf` (docs/PLANS.md).
-    "sim_bucket_stats" -> ((s, dir) => {
+    "sim_bucket_stats" -> QuerySpec((s, dir) => {
       val c = prepared(s, dir, withBucket = true)
       def audit(sizes: DataFrame, cap: Int, method: String): DataFrame =
         sizes.filter(col("sz") > cap)
@@ -1203,13 +1189,98 @@ object Similarity {
           .groupBy("cell_id").agg(count(lit(1)).as("sz")),
         MaxSemCell, "ivf_cell")
       lsh.unionByName(ivf).orderBy("method")
-    }),
-    "sim_semdedup" -> (semDedup _),
-    "sim_embedding_decontam" -> (embDecontaminate _),
-    "sim_cosine_topk" -> (exactTopK _),
-    "sim_cosine_ann_lsh" -> (lshTopK _),
-    "sim_cosine_ann_ivf" -> (ivfTopK _),
-    "sim_cosine_ann_pq" -> (pqTopK _),
+    },
+      s"""$bCte$ivfCtes
+         |SELECT method, dropped_buckets, dropped_postings FROM (
+         |  SELECT 'embedding_lsh' AS method,
+         |         count(*) AS dropped_buckets,
+         |         CAST(coalesce(sum(sz), 0) AS BIGINT) AS dropped_postings
+         |  FROM (SELECT bucket, count(*) AS sz FROM b GROUP BY 1)
+         |  WHERE sz > $MaxNearDupBucket
+         |  UNION ALL
+         |  SELECT 'ivf_cell' AS method,
+         |         count(*) AS dropped_buckets,
+         |         CAST(coalesce(sum(sz), 0) AS BIGINT) AS dropped_postings
+         |  FROM (SELECT cell_id, count(*) AS sz FROM iassign GROUP BY 1)
+         |  WHERE sz > $MaxSemCell
+         |) ORDER BY method""".stripMargin,
+      build = sampled(
+        "the same IVF training sample, for the `ivf_cell` cap-audit row's cell assignment")),
+    "sim_semdedup" -> QuerySpec(semDedup,
+      s"""$eCte$ivfCtes, csz AS (
+         |  SELECT cell_id FROM iassign GROUP BY cell_id
+         |  HAVING count(*) <= $MaxSemCell
+         |), adm AS (
+         |  SELECT a.* FROM iassign a JOIN csz USING (cell_id)
+         |), sdrop AS (
+         |  SELECT DISTINCT b2.vec_id AS vec_id
+         |  FROM adm a JOIN adm b2
+         |    ON a.cell_id = b2.cell_id AND a.vec_id < b2.vec_id
+         |  WHERE ${dotSql("a.v", "b2.v")} / (sqrt(a.nrm) * sqrt(b2.nrm))
+         |          >= $SemDedupThreshold
+         |)
+         |SELECT i.vec_id, i.cell_id, d.vec_id IS NULL AS kept
+         |FROM iassign i LEFT JOIN sdrop d ON i.vec_id = d.vec_id
+         |ORDER BY i.vec_id""".stripMargin,
+      build = sampled(
+        "the same IVF training sample (cell assignment embeds the trained centroids as literals)")),
+    "sim_embedding_decontam" -> QuerySpec(embDecontaminate,
+      // label-carrying CTE variant (eCte prunes label away); same in-order
+      // dot fold, so the cosine-vs-threshold verdicts are bit-shared
+      s"""WITH el AS (
+         |  SELECT vec_id, label,
+         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+         |  FROM embeddings
+         |), nl AS (
+         |  SELECT vec_id, label, v, ${dotSql("v", "v")} AS nrm FROM el
+         |), ev AS (
+         |  SELECT v AS evv, nrm AS en FROM nl WHERE label = $EmbEvalLabel
+         |), hits AS (
+         |  SELECT DISTINCT c.vec_id
+         |  FROM nl c JOIN ev
+         |    ON ${dotSql("c.v", "ev.evv")} / (sqrt(c.nrm) * sqrt(ev.en))
+         |       >= CAST($EmbDecontamThreshold AS DOUBLE)
+         |  WHERE c.label <> $EmbEvalLabel
+         |)
+         |SELECT nl.vec_id, nl.label FROM nl
+         |LEFT JOIN hits ON hits.vec_id = nl.vec_id
+         |WHERE nl.label <> $EmbEvalLabel AND hits.vec_id IS NULL
+         |ORDER BY nl.vec_id""".stripMargin),
+    "sim_cosine_topk" -> QuerySpec(exactTopK,
+      s"""$eCte, p AS (
+         |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
+         |         ${dotSql("q.v", "c.v")} / (sqrt(q.nrm) * sqrt(c.nrm)) AS cos
+         |  FROM n q JOIN n c ON q.vec_id <> c.vec_id
+         |  WHERE q.vec_id < $NumQueries
+         |), r AS (
+         |  SELECT query_id, vec_id, cos,
+         |         CAST(row_number() OVER (PARTITION BY query_id
+         |           ORDER BY cos DESC, vec_id ASC) AS INT) AS rank
+         |  FROM p
+         |)
+         |SELECT query_id, vec_id, cos, rank FROM r WHERE rank <= $TopK
+         |ORDER BY query_id, rank""".stripMargin),
+    "sim_cosine_ann_lsh" -> QuerySpec(lshTopK,
+      s"""$eCte$annTbCte$lshPairsCtes, r AS (
+         |  SELECT query_id, vec_id, cos,
+         |         CAST(row_number() OVER (PARTITION BY query_id
+         |           ORDER BY cos DESC, vec_id ASC) AS INT) AS rank
+         |  FROM lp
+         |)
+         |SELECT query_id, vec_id, cos, rank FROM r WHERE rank <= $TopK
+         |ORDER BY query_id, rank""".stripMargin),
+    "sim_cosine_ann_ivf" -> QuerySpec(ivfTopK,
+      s"""$eCte$ivfCtes
+         |SELECT query_id, vec_id, cos, rank FROM ir WHERE rank <= $TopK
+         |ORDER BY query_id, rank""".stripMargin,
+      build = sampled(
+        "the `vec_id < TrainN` training sample for driver-side Lloyd (centroids re-enter the plan as literals)")),
+    "sim_cosine_ann_pq" -> QuerySpec(pqTopK,
+      s"""$eCte$ivfCtes$pqCtes
+         |SELECT query_id, vec_id, adc_cos, rank FROM ppr WHERE rank <= $TopK
+         |ORDER BY query_id, rank""".stripMargin,
+      build = sampled(
+        "the same IVF training sample, feeding BOTH the coarse quantizer and the 8 per-subspace PQ codebooks (all re-enter as literals)")),
     // Recall@k of each ANN variant against the exact scan — the number
     // a user tunes NProbe/NumPlanes with. One row per (variant, query):
     // hits = |ANN top-k ∩ exact top-k|, recall = hits/k. The exact
@@ -1218,7 +1289,7 @@ object Similarity {
     // is computed ONCE here and re-entered as a local frame: nothing is
     // persisted, so nothing can leak into the session cache
     // (RegistrySpec asserts the cache is empty after every query).
-    "sim_ann_recall" -> ((s, dir) => {
+    "sim_ann_recall" -> QuerySpec((s, dir) => {
       // ONE training-sample collect shared by the IVF and PQ arms
       // (identical input rows → identical driver-trained quantizers,
       // so the shared sample cannot change any value — r16), and ONE
@@ -1242,7 +1313,53 @@ object Similarity {
         .unionByName(rec(lshTopKFrom(c, qb), "lsh"))
         .unionByName(rec(pqTopKFrom(c, sample, qb), "pq"))
         .orderBy("variant", "query_id")
-    }),
+    },
+      s"""$eCte$annTbCte$ivfCtes$pqCtes, xp AS (
+         |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
+         |         ${dotSql("q.v", "c.v")} / (sqrt(q.nrm) * sqrt(c.nrm)) AS cos
+         |  FROM n q JOIN n c ON q.vec_id <> c.vec_id
+         |  WHERE q.vec_id < $NumQueries
+         |), xt AS (
+         |  SELECT query_id, vec_id FROM (
+         |    SELECT query_id, vec_id,
+         |           row_number() OVER (PARTITION BY query_id
+         |             ORDER BY cos DESC, vec_id ASC) AS rank
+         |    FROM xp) WHERE rank <= $TopK
+         |)$lshPairsCtes, lt AS (
+         |  SELECT query_id, vec_id FROM (
+         |    SELECT query_id, vec_id,
+         |           row_number() OVER (PARTITION BY query_id
+         |             ORDER BY cos DESC, vec_id ASC) AS rank
+         |    FROM lp) WHERE rank <= $TopK
+         |), ivf_t AS (
+         |  SELECT query_id, vec_id FROM ir WHERE rank <= $TopK
+         |), pq_t AS (
+         |  SELECT query_id, vec_id FROM ppr WHERE rank <= $TopK
+         |)
+         |SELECT variant, query_id, hits,
+         |       CAST(hits AS DOUBLE) / $TopK AS recall
+         |FROM (
+         |  SELECT 'ivf' AS variant, x.query_id AS query_id,
+         |         count(t.vec_id) AS hits
+         |  FROM xt x LEFT JOIN ivf_t t
+         |    ON x.query_id = t.query_id AND x.vec_id = t.vec_id
+         |  GROUP BY 1, 2
+         |  UNION ALL
+         |  SELECT 'lsh' AS variant, x.query_id AS query_id,
+         |         count(t.vec_id) AS hits
+         |  FROM xt x LEFT JOIN lt t
+         |    ON x.query_id = t.query_id AND x.vec_id = t.vec_id
+         |  GROUP BY 1, 2
+         |  UNION ALL
+         |  SELECT 'pq' AS variant, x.query_id AS query_id,
+         |         count(t.vec_id) AS hits
+         |  FROM xt x LEFT JOIN pq_t t
+         |    ON x.query_id = t.query_id AND x.vec_id = t.vec_id
+         |  GROUP BY 1, 2
+         |) ORDER BY variant, query_id""".stripMargin,
+      build = QuerySpec.Eager(
+        "the exact top-k side input both ANN variants are scored against (it composes `ivfTopK`, so it also performs the IVF sample collect)",
+        "NumQueries·TopK = 50 rows")),
     // Corpus-level near-dup pairs: per-bucket self-join + exact rescore.
     // Oversized buckets (degenerate embedding clusters — zero vectors,
     // templated content) are dropped BEFORE the quadratic self-join,
@@ -1253,7 +1370,7 @@ object Similarity {
     // |corpus|/2^planes bounded); the cap is the hard stop under skew.
     // MaxNearDupBucket does not bind on the fixtures, so results are
     // unchanged — the oracle applies the identical HAVING cap.
-    "sim_embedding_neardup" -> ((s, dir) => {
+    "sim_embedding_neardup" -> QuerySpec((s, dir) => {
       val c = prepared(s, dir, withBucket = true)
       val small = c.groupBy("bucket").agg(count(lit(1)).as("bsz"))
         .filter(col("bsz") <= MaxNearDupBucket).select("bucket")
@@ -1268,17 +1385,121 @@ object Similarity {
           cosine(col("va"), col("vb"), col("na"), col("nb")).as("cos"))
         .filter(col("cos") >= NearDupThreshold)
         .orderBy("vec_a", "vec_b")
-    }),
-    "sim_label_centroids" -> ((s, dir) =>
-      labelCentroids(emb(s, dir)).orderBy("label", "dim")),
-    "sim_centroid_outliers" -> ((s, dir) =>
-      centroidOutliers(emb(s, dir)).orderBy("label", "rank")),
-    "sim_quantize_audit" -> ((s, dir) =>
-      quantizeAudit(emb(s, dir)).orderBy("vec_id")),
-    "sim_embedding_coverage" -> ((s, dir) =>
+    },
+      s"""$bCte, small AS (
+         |  SELECT bucket FROM b GROUP BY bucket HAVING count(*) <= $MaxNearDupBucket
+         |), bk AS (
+         |  SELECT b.* FROM b JOIN small USING (bucket)
+         |)
+         |SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b,
+         |       ${dotSql("a.v", "b2.v")} / (sqrt(a.nrm) * sqrt(b2.nrm)) AS cos
+         |FROM bk a JOIN bk b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
+         |WHERE ${dotSql("a.v", "b2.v")} / (sqrt(a.nrm) * sqrt(b2.nrm)) >= $NearDupThreshold
+         |ORDER BY vec_a, vec_b""".stripMargin),
+    "sim_label_centroids" -> QuerySpec((s, dir) =>
+      labelCentroids(emb(s, dir)).orderBy("label", "dim"),
+      // Exact portable mean: float → shortest string → DECIMAL(38,15)
+      // (exact parse, exact order-independent sum; Spark mirrors with
+      // cast(cast(x as string) as decimal(38,15))), then sum → double via
+      // the VARCHAR hop (correctly rounded, = BigDecimal.doubleValue).
+      s"""$centroidCtes
+         |SELECT label, dim, n, mean FROM cent ORDER BY label, dim""".stripMargin),
+    "sim_centroid_outliers" -> QuerySpec((s, dir) =>
+      centroidOutliers(emb(s, dir)).orderBy("label", "rank"),
+      s"""$centroidCtes, carr AS (
+         |  SELECT label, list(mean ORDER BY dim) AS c FROM cent GROUP BY label
+         |), ev AS (
+         |  SELECT vec_id, label,
+         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+         |  FROM embeddings
+         |), dist AS (
+         |  SELECT ev.label, ev.vec_id,
+         |         sqrt(list_reduce(list_transform(range(1, ${Dim + 1}),
+         |           i -> (v[i] - c[i]) * (v[i] - c[i])), (acc, x) -> acc + x)) AS dist
+         |  FROM ev JOIN carr USING (label)
+         |), r AS (
+         |  SELECT label, vec_id, dist,
+         |         CAST(row_number() OVER (PARTITION BY label
+         |           ORDER BY dist DESC, vec_id ASC) AS INT) AS rank
+         |  FROM dist
+         |)
+         |SELECT label, vec_id, dist, rank FROM r WHERE rank <= $OutlierK
+         |ORDER BY label, rank""".stripMargin),
+    "sim_quantize_audit" -> QuerySpec((s, dir) =>
+      quantizeAudit(emb(s, dir)).orderBy("vec_id"),
+      // Same floor-level quantization, same IEEE op order per element;
+      // min/max are exact, and the error/cosine folds reuse the in-order
+      // list_reduce that mirrors Spark's aggregate fold bit-for-bit.
+      s"""WITH ev AS (
+         |  SELECT vec_id, label,
+         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+         |  FROM embeddings
+         |), dims AS (
+         |  SELECT i AS dim, min(v[i]) AS lo, max(v[i]) AS hi
+         |  FROM ev, LATERAL (SELECT unnest(range(1, ${Dim + 1})) AS i)
+         |  GROUP BY 1
+         |), ranges AS (
+         |  SELECT list(lo ORDER BY dim) AS lo, list(hi ORDER BY dim) AS hi
+         |  FROM dims
+         |), d AS (
+         |  SELECT vec_id, label, v,
+         |         list_transform(range(1, ${Dim + 1}), i ->
+         |           CASE WHEN r.hi[i] - r.lo[i] > 0
+         |                THEN r.lo[i] + least(CAST($QLevels.0 AS DOUBLE),
+         |                    floor((v[i] - r.lo[i]) * CAST($QLevels.0 AS DOUBLE)
+         |                      / (r.hi[i] - r.lo[i])))
+         |                  * (r.hi[i] - r.lo[i]) / CAST($QLevels.0 AS DOUBLE)
+         |                ELSE r.lo[i] END) AS deq
+         |  FROM ev, ranges r
+         |)
+         |SELECT vec_id, label,
+         |       list_reduce(list_transform(range(1, ${Dim + 1}),
+         |           i -> (v[i] - deq[i]) * (v[i] - deq[i])), (acc, x) -> acc + x)
+         |         / CAST($Dim.0 AS DOUBLE) AS mse,
+         |       ${dotSql("v", "deq")}
+         |         / (sqrt(${dotSql("v", "v")}) * sqrt(${dotSql("deq", "deq")})) AS cos_recon
+         |FROM d ORDER BY vec_id""".stripMargin),
+    "sim_embedding_coverage" -> QuerySpec((s, dir) =>
       embeddingCoverage(
-        graft.sources.Tables.parquet(s, dir, "documents"), emb(s, dir)))
+        graft.sources.Tables.parquet(s, dir, "documents"), emb(s, dir)),
+      // Same audit conditions per category; the self-dot uses the ACTUAL
+      // array length on both engines (list_sum here, graft_dot there), so
+      // wrong-dim-but-finite vectors land in wrong_dim only. All counts
+      // cast to BIGINT (DuckDB sums ints into HUGEINT).
+      s"""WITH ij AS (
+         |  SELECT d.doc_id, e.vec_id
+         |  FROM documents d FULL OUTER JOIN embeddings e ON d.doc_id = e.vec_id
+         |), ida AS (
+         |  SELECT count(doc_id) AS docs_total,
+         |         count(vec_id) AS embeddings_total,
+         |         CAST(coalesce(sum(CASE WHEN vec_id IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS missing_embedding,
+         |         CAST(coalesce(sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS orphan_embedding
+         |  FROM ij
+         |), en AS (
+         |  SELECT embedding,
+         |         list_sum(list_transform(embedding,
+         |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nrm
+         |  FROM embeddings
+         |), h AS (
+         |  SELECT CAST(coalesce(sum(CASE WHEN embedding IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS null_embedding,
+         |         CAST(coalesce(sum(CASE WHEN embedding IS NOT NULL AND len(embedding) <> $Dim THEN 1 ELSE 0 END), 0) AS BIGINT) AS wrong_dim,
+         |         CAST(coalesce(sum(CASE WHEN isnan(nrm) OR nrm = CAST('inf' AS DOUBLE) THEN 1 ELSE 0 END), 0) AS BIGINT) AS nonfinite_values,
+         |         CAST(coalesce(sum(CASE WHEN nrm = 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS zero_norm
+         |  FROM en
+         |)
+         |SELECT issue, n FROM (
+         |  SELECT 'docs_total' AS issue, docs_total AS n FROM ida
+         |  UNION ALL SELECT 'embeddings_total', embeddings_total FROM ida
+         |  UNION ALL SELECT 'missing_embedding', missing_embedding FROM ida
+         |  UNION ALL SELECT 'orphan_embedding', orphan_embedding FROM ida
+         |  UNION ALL SELECT 'null_embedding', null_embedding FROM h
+         |  UNION ALL SELECT 'wrong_dim', wrong_dim FROM h
+         |  UNION ALL SELECT 'nonfinite_values', nonfinite_values FROM h
+         |  UNION ALL SELECT 'zero_norm', zero_norm FROM h
+         |) ORDER BY issue""".stripMargin)
   )
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
 
   // ---- DuckDB oracle SQL ------------------------------------------------
 
@@ -1531,242 +1752,4 @@ object Similarity {
        |           / CAST(count(*) AS DOUBLE) AS mean
        |  FROM el GROUP BY 1, 2
        |)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_bucket_stats" ->
-      s"""$bCte$ivfCtes
-         |SELECT method, dropped_buckets, dropped_postings FROM (
-         |  SELECT 'embedding_lsh' AS method,
-         |         count(*) AS dropped_buckets,
-         |         CAST(coalesce(sum(sz), 0) AS BIGINT) AS dropped_postings
-         |  FROM (SELECT bucket, count(*) AS sz FROM b GROUP BY 1)
-         |  WHERE sz > $MaxNearDupBucket
-         |  UNION ALL
-         |  SELECT 'ivf_cell' AS method,
-         |         count(*) AS dropped_buckets,
-         |         CAST(coalesce(sum(sz), 0) AS BIGINT) AS dropped_postings
-         |  FROM (SELECT cell_id, count(*) AS sz FROM iassign GROUP BY 1)
-         |  WHERE sz > $MaxSemCell
-         |) ORDER BY method""".stripMargin,
-    "sim_semdedup" ->
-      s"""$eCte$ivfCtes, csz AS (
-         |  SELECT cell_id FROM iassign GROUP BY cell_id
-         |  HAVING count(*) <= $MaxSemCell
-         |), adm AS (
-         |  SELECT a.* FROM iassign a JOIN csz USING (cell_id)
-         |), sdrop AS (
-         |  SELECT DISTINCT b2.vec_id AS vec_id
-         |  FROM adm a JOIN adm b2
-         |    ON a.cell_id = b2.cell_id AND a.vec_id < b2.vec_id
-         |  WHERE ${dotSql("a.v", "b2.v")} / (sqrt(a.nrm) * sqrt(b2.nrm))
-         |          >= $SemDedupThreshold
-         |)
-         |SELECT i.vec_id, i.cell_id, d.vec_id IS NULL AS kept
-         |FROM iassign i LEFT JOIN sdrop d ON i.vec_id = d.vec_id
-         |ORDER BY i.vec_id""".stripMargin,
-    // label-carrying CTE variant (eCte prunes label away); same in-order
-    // dot fold, so the cosine-vs-threshold verdicts are bit-shared
-    "sim_embedding_decontam" ->
-      s"""WITH el AS (
-         |  SELECT vec_id, label,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |), nl AS (
-         |  SELECT vec_id, label, v, ${dotSql("v", "v")} AS nrm FROM el
-         |), ev AS (
-         |  SELECT v AS evv, nrm AS en FROM nl WHERE label = $EmbEvalLabel
-         |), hits AS (
-         |  SELECT DISTINCT c.vec_id
-         |  FROM nl c JOIN ev
-         |    ON ${dotSql("c.v", "ev.evv")} / (sqrt(c.nrm) * sqrt(ev.en))
-         |       >= CAST($EmbDecontamThreshold AS DOUBLE)
-         |  WHERE c.label <> $EmbEvalLabel
-         |)
-         |SELECT nl.vec_id, nl.label FROM nl
-         |LEFT JOIN hits ON hits.vec_id = nl.vec_id
-         |WHERE nl.label <> $EmbEvalLabel AND hits.vec_id IS NULL
-         |ORDER BY nl.vec_id""".stripMargin,
-    "sim_cosine_topk" ->
-      s"""$eCte, p AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         |         ${dotSql("q.v", "c.v")} / (sqrt(q.nrm) * sqrt(c.nrm)) AS cos
-         |  FROM n q JOIN n c ON q.vec_id <> c.vec_id
-         |  WHERE q.vec_id < $NumQueries
-         |), r AS (
-         |  SELECT query_id, vec_id, cos,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos DESC, vec_id ASC) AS INT) AS rank
-         |  FROM p
-         |)
-         |SELECT query_id, vec_id, cos, rank FROM r WHERE rank <= $TopK
-         |ORDER BY query_id, rank""".stripMargin,
-    "sim_cosine_ann_lsh" ->
-      s"""$eCte$annTbCte$lshPairsCtes, r AS (
-         |  SELECT query_id, vec_id, cos,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos DESC, vec_id ASC) AS INT) AS rank
-         |  FROM lp
-         |)
-         |SELECT query_id, vec_id, cos, rank FROM r WHERE rank <= $TopK
-         |ORDER BY query_id, rank""".stripMargin,
-    "sim_cosine_ann_ivf" ->
-      s"""$eCte$ivfCtes
-         |SELECT query_id, vec_id, cos, rank FROM ir WHERE rank <= $TopK
-         |ORDER BY query_id, rank""".stripMargin,
-    "sim_cosine_ann_pq" ->
-      s"""$eCte$ivfCtes$pqCtes
-         |SELECT query_id, vec_id, adc_cos, rank FROM ppr WHERE rank <= $TopK
-         |ORDER BY query_id, rank""".stripMargin,
-    "sim_ann_recall" ->
-      s"""$eCte$annTbCte$ivfCtes$pqCtes, xp AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         |         ${dotSql("q.v", "c.v")} / (sqrt(q.nrm) * sqrt(c.nrm)) AS cos
-         |  FROM n q JOIN n c ON q.vec_id <> c.vec_id
-         |  WHERE q.vec_id < $NumQueries
-         |), xt AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos DESC, vec_id ASC) AS rank
-         |    FROM xp) WHERE rank <= $TopK
-         |)$lshPairsCtes, lt AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos DESC, vec_id ASC) AS rank
-         |    FROM lp) WHERE rank <= $TopK
-         |), ivf_t AS (
-         |  SELECT query_id, vec_id FROM ir WHERE rank <= $TopK
-         |), pq_t AS (
-         |  SELECT query_id, vec_id FROM ppr WHERE rank <= $TopK
-         |)
-         |SELECT variant, query_id, hits,
-         |       CAST(hits AS DOUBLE) / $TopK AS recall
-         |FROM (
-         |  SELECT 'ivf' AS variant, x.query_id AS query_id,
-         |         count(t.vec_id) AS hits
-         |  FROM xt x LEFT JOIN ivf_t t
-         |    ON x.query_id = t.query_id AND x.vec_id = t.vec_id
-         |  GROUP BY 1, 2
-         |  UNION ALL
-         |  SELECT 'lsh' AS variant, x.query_id AS query_id,
-         |         count(t.vec_id) AS hits
-         |  FROM xt x LEFT JOIN lt t
-         |    ON x.query_id = t.query_id AND x.vec_id = t.vec_id
-         |  GROUP BY 1, 2
-         |  UNION ALL
-         |  SELECT 'pq' AS variant, x.query_id AS query_id,
-         |         count(t.vec_id) AS hits
-         |  FROM xt x LEFT JOIN pq_t t
-         |    ON x.query_id = t.query_id AND x.vec_id = t.vec_id
-         |  GROUP BY 1, 2
-         |) ORDER BY variant, query_id""".stripMargin,
-    "sim_embedding_neardup" ->
-      s"""$bCte, small AS (
-         |  SELECT bucket FROM b GROUP BY bucket HAVING count(*) <= $MaxNearDupBucket
-         |), bk AS (
-         |  SELECT b.* FROM b JOIN small USING (bucket)
-         |)
-         |SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b,
-         |       ${dotSql("a.v", "b2.v")} / (sqrt(a.nrm) * sqrt(b2.nrm)) AS cos
-         |FROM bk a JOIN bk b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-         |WHERE ${dotSql("a.v", "b2.v")} / (sqrt(a.nrm) * sqrt(b2.nrm)) >= $NearDupThreshold
-         |ORDER BY vec_a, vec_b""".stripMargin,
-    // Exact portable mean: float → shortest string → DECIMAL(38,15)
-    // (exact parse, exact order-independent sum; Spark mirrors with
-    // cast(cast(x as string) as decimal(38,15))), then sum → double via
-    // the VARCHAR hop (correctly rounded, = BigDecimal.doubleValue).
-    "sim_label_centroids" ->
-      s"""$centroidCtes
-         |SELECT label, dim, n, mean FROM cent ORDER BY label, dim""".stripMargin,
-    "sim_centroid_outliers" ->
-      s"""$centroidCtes, carr AS (
-         |  SELECT label, list(mean ORDER BY dim) AS c FROM cent GROUP BY label
-         |), ev AS (
-         |  SELECT vec_id, label,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |), dist AS (
-         |  SELECT ev.label, ev.vec_id,
-         |         sqrt(list_reduce(list_transform(range(1, ${Dim + 1}),
-         |           i -> (v[i] - c[i]) * (v[i] - c[i])), (acc, x) -> acc + x)) AS dist
-         |  FROM ev JOIN carr USING (label)
-         |), r AS (
-         |  SELECT label, vec_id, dist,
-         |         CAST(row_number() OVER (PARTITION BY label
-         |           ORDER BY dist DESC, vec_id ASC) AS INT) AS rank
-         |  FROM dist
-         |)
-         |SELECT label, vec_id, dist, rank FROM r WHERE rank <= $OutlierK
-         |ORDER BY label, rank""".stripMargin,
-    // Same floor-level quantization, same IEEE op order per element;
-    // min/max are exact, and the error/cosine folds reuse the in-order
-    // list_reduce that mirrors Spark's aggregate fold bit-for-bit.
-    "sim_quantize_audit" ->
-      s"""WITH ev AS (
-         |  SELECT vec_id, label,
-         |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |), dims AS (
-         |  SELECT i AS dim, min(v[i]) AS lo, max(v[i]) AS hi
-         |  FROM ev, LATERAL (SELECT unnest(range(1, ${Dim + 1})) AS i)
-         |  GROUP BY 1
-         |), ranges AS (
-         |  SELECT list(lo ORDER BY dim) AS lo, list(hi ORDER BY dim) AS hi
-         |  FROM dims
-         |), d AS (
-         |  SELECT vec_id, label, v,
-         |         list_transform(range(1, ${Dim + 1}), i ->
-         |           CASE WHEN r.hi[i] - r.lo[i] > 0
-         |                THEN r.lo[i] + least(CAST($QLevels.0 AS DOUBLE),
-         |                    floor((v[i] - r.lo[i]) * CAST($QLevels.0 AS DOUBLE)
-         |                      / (r.hi[i] - r.lo[i])))
-         |                  * (r.hi[i] - r.lo[i]) / CAST($QLevels.0 AS DOUBLE)
-         |                ELSE r.lo[i] END) AS deq
-         |  FROM ev, ranges r
-         |)
-         |SELECT vec_id, label,
-         |       list_reduce(list_transform(range(1, ${Dim + 1}),
-         |           i -> (v[i] - deq[i]) * (v[i] - deq[i])), (acc, x) -> acc + x)
-         |         / CAST($Dim.0 AS DOUBLE) AS mse,
-         |       ${dotSql("v", "deq")}
-         |         / (sqrt(${dotSql("v", "v")}) * sqrt(${dotSql("deq", "deq")})) AS cos_recon
-         |FROM d ORDER BY vec_id""".stripMargin,
-    // Same audit conditions per category; the self-dot uses the ACTUAL
-    // array length on both engines (list_sum here, graft_dot there), so
-    // wrong-dim-but-finite vectors land in wrong_dim only. All counts
-    // cast to BIGINT (DuckDB sums ints into HUGEINT).
-    "sim_embedding_coverage" ->
-      s"""WITH ij AS (
-         |  SELECT d.doc_id, e.vec_id
-         |  FROM documents d FULL OUTER JOIN embeddings e ON d.doc_id = e.vec_id
-         |), ida AS (
-         |  SELECT count(doc_id) AS docs_total,
-         |         count(vec_id) AS embeddings_total,
-         |         CAST(coalesce(sum(CASE WHEN vec_id IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS missing_embedding,
-         |         CAST(coalesce(sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS orphan_embedding
-         |  FROM ij
-         |), en AS (
-         |  SELECT embedding,
-         |         list_sum(list_transform(embedding,
-         |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nrm
-         |  FROM embeddings
-         |), h AS (
-         |  SELECT CAST(coalesce(sum(CASE WHEN embedding IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS null_embedding,
-         |         CAST(coalesce(sum(CASE WHEN embedding IS NOT NULL AND len(embedding) <> $Dim THEN 1 ELSE 0 END), 0) AS BIGINT) AS wrong_dim,
-         |         CAST(coalesce(sum(CASE WHEN isnan(nrm) OR nrm = CAST('inf' AS DOUBLE) THEN 1 ELSE 0 END), 0) AS BIGINT) AS nonfinite_values,
-         |         CAST(coalesce(sum(CASE WHEN nrm = 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS zero_norm
-         |  FROM en
-         |)
-         |SELECT issue, n FROM (
-         |  SELECT 'docs_total' AS issue, docs_total AS n FROM ida
-         |  UNION ALL SELECT 'embeddings_total', embeddings_total FROM ida
-         |  UNION ALL SELECT 'missing_embedding', missing_embedding FROM ida
-         |  UNION ALL SELECT 'orphan_embedding', orphan_embedding FROM ida
-         |  UNION ALL SELECT 'null_embedding', null_embedding FROM h
-         |  UNION ALL SELECT 'wrong_dim', wrong_dim FROM h
-         |  UNION ALL SELECT 'nonfinite_values', nonfinite_values FROM h
-         |  UNION ALL SELECT 'zero_norm', zero_norm FROM h
-         |) ORDER BY issue""".stripMargin
-  )
 }

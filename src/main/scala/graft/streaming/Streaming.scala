@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.QuerySpec
 
 /** Structured Streaming surface (SURVEY §7.4 streaming variant).
   *
@@ -263,15 +264,18 @@ object StreamingDedup {
     } finally q.stop()
   }
 
-  /** Driver-contract registry surface for the streaming dedup arm. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("dedup_streaming_replay" -> ((s, dir) => replayDedup(s, dir)))
-
-  val specs: Map[String, graft.QuerySpec] = Map(
-    "dedup_streaming_replay" -> graft.QuerySpec(replayConf,
-      graft.QuerySpec.Memoized(
+  /** Driver-contract registry surface for the streaming dedup arm. The
+    * replay must reproduce the batch keeper set exactly, so it shares
+    * `dedup_apply`'s oracle.
+    */
+  lazy val specs: Map[String, QuerySpec] = Map(
+    "dedup_streaming_replay" -> QuerySpec(replayDedup, graft.dedup.Dedup.applySql,
+      conf = replayConf,
+      build = QuerySpec.Memoized(
         "NOTHING to the driver: the replay feeds ≤ ReplayFeedRows-row chunks through a MemoryStream into the kept-set parquet store ONCE per (app, dir) behind a completion marker; later builds read the store",
         "one doc_id row per kept document")))
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
 
   /** Scoped conf for the two replay builds (this one and the χ²
     * maintainer's, r16): a stateful streaming micro-batch commits ONE
@@ -302,13 +306,6 @@ object StreamingDedup {
         / graft.dedup.Dedup.PairBytesPerTask)).toInt
     Map("spark.sql.shuffle.partitions" -> parts.toString)
   }
-
-  /** The replay must reproduce the batch keeper set exactly, so it
-    * shares `dedup_apply`'s oracle.
-    */
-  def oracleSql: Map[String, String] =
-    Map("dedup_streaming_replay" ->
-      graft.dedup.Dedup.oracleSql("dedup_apply"))
 
   /** Timestamped arrival for [[dedupTtl]] — `ts` is the doc's ingest
     * event time, the clock the TTL eviction runs on.
@@ -633,7 +630,7 @@ object StreamingNearDup {
   /** [[candidates]] with an EVENT-TIME state TTL — the bounded-state
     * production shape. Without a TTL, one `BucketState` per ever-seen
     * band bucket accumulates forever: state grows ∝ corpus (measured
-    * 54 MB at 47.5k docs, r13 StreamBench) and an endless ingest
+    * 54 MB at 47.5k docs, r13, docs/BENCH_NOTES.md) and an endless ingest
     * eventually exhausts the store. Here a bucket untouched for
     * `ttlMs` of EVENT time is evicted via `EventTimeTimeout` — the
     * watermark clock, not the wall clock, so a checkpoint replay or a

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.QuerySpec
 import graft.pipeline.ChiSquarePipeline
 import graft.stats.Contingency
 import graft.text.Tokenize
@@ -150,22 +151,19 @@ object StreamingChiSquare {
     topTermsFromStore(s, store.toString)
   }
 
-  val specs: Map[String, graft.QuerySpec] = Map(
-    "chi2_streaming_replay" -> graft.QuerySpec(StreamingDedup.replayConf,
-      graft.QuerySpec.Memoized(
+  /** Driver-contract registry surface for the maintainer. The replay
+    * must reproduce the one-shot pipeline exactly, so it shares its
+    * oracle.
+    */
+  lazy val specs: Map[String, QuerySpec] = Map(
+    "chi2_streaming_replay" -> QuerySpec(replayTopTerms,
+      graft.pipeline.ChiSquareQueries.topTermsSql,
+      conf = StreamingDedup.replayConf,
+      build = QuerySpec.Memoized(
         "nothing collected: the maintainer replay (NumReplayBatches mergeBatch rounds) WRITES the versioned count store ONCE per (app, dir) behind a completion marker; later builds read the existing store",
         "≤ 2 vocabulary-sized snapshots")))
 
-  /** Driver-contract registry surface for the maintainer. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "chi2_streaming_replay" -> ((s, dir) => replayTopTerms(s, dir)))
-
-  /** The replay must reproduce the one-shot pipeline exactly, so it
-    * shares its oracle.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "chi2_streaming_replay" ->
-      graft.pipeline.ChiSquareQueries.oracleSql("chi2_top_terms"))
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
 
   /** Attach the maintainer to a streaming document source. The
     * checkpoint lives beside the store, so a restarted maintainer

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** Text-analysis operators for LLM-training-data pipelines over the
   * `documents` fixture: language identification, quality scoring, token
@@ -58,9 +59,6 @@ object Analysis {
   private def docs(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.parquet(s, dir, "documents")
       .filter(col("text").isNotNull && length(col("text")) > 0)
-
-  private def toksCol: Column =
-    filter(split(lower(col("text")), "\\s+"), t => length(t) > 0)
 
   /** The fused five-count quality kernel over `text` (stopword list as
     * a foldable literal). Deterministic, so repeated `getField`s on it
@@ -224,7 +222,7 @@ object Analysis {
     *    keeps it for AnalysisSpec's equality pin.
     */
   def fingerprints(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), toksCol.as("toks"))
+    d.select(col("doc_id"), Tokenize.whitespaceTokens.as("toks"))
       .select(
         col("doc_id"),
         md5(concat_ws(" ", array_sort(array_distinct(col("toks"))))).as("bow_fp"),
@@ -270,7 +268,7 @@ object Analysis {
 
   def topBigrams(d: DataFrame, k: Int = TopBigramsK): DataFrame = {
     val production = graft.functions.PortableHash.enabled(d)
-    val base = d.select(col("lang"), toksCol.as("toks"))
+    val base = d.select(col("lang"), Tokenize.whitespaceTokens.as("toks"))
     val keySeq = graft.functions.GraftFunctions.graftGramKeySeq(
       col("toks"), lit(2), lit(production))
     val keyCnt = base.select(col("lang"), explode(keySeq).as("bk"))
@@ -316,7 +314,7 @@ object Analysis {
     val extra = greatest(lit(0), size(toks) - ChunkTokens)
     // integer ceil-division; the double division is exact (values ≪ 2⁵³)
     val nExtra = floor((extra + lit(ChunkStride - 1)) / lit(ChunkStride)).cast("int")
-    d.select(col("doc_id"), toksCol.as("toks"))
+    d.select(col("doc_id"), Tokenize.whitespaceTokens.as("toks"))
       .select(col("doc_id"), toks,
         posexplode(transform(sequence(lit(0), nExtra),
           k => k * ChunkStride + 1)))
@@ -391,7 +389,7 @@ object Analysis {
   val TfIdfK = 5
 
   def tfidf(d: DataFrame, k: Int = TfIdfK): DataFrame = {
-    val tok = d.select(col("doc_id"), explode(toksCol).as("t"))
+    val tok = d.select(col("doc_id"), explode(Tokenize.whitespaceTokens).as("t"))
     val tf = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
     val byTerm = org.apache.spark.sql.expressions.Window.partitionBy("t")
     val nDf = d.agg(count(lit(1)).as("n_docs"))
@@ -431,7 +429,7 @@ object Analysis {
     * bit-identical across engines.
     */
   def repetition(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), toksCol.as("toks"))
+    d.select(col("doc_id"), Tokenize.whitespaceTokens.as("toks"))
       .select(col("doc_id"),
         graft.functions.GraftFunctions
           .graftGramStats(col("toks"), lit(2)).as("bs"),
@@ -459,7 +457,7 @@ object Analysis {
     */
   private[text] def repetitionByGroup(d: DataFrame): DataFrame = {
     val toks = col("toks")
-    val grams = d.select(col("doc_id"), toksCol.as("toks"))
+    val grams = d.select(col("doc_id"), Tokenize.whitespaceTokens.as("toks"))
       .select(col("doc_id"), explode(concat(
         transform(shingleOfN(toks, 2),
           g => struct(lit(2).as("n"), g.as("gram"))),
@@ -516,7 +514,7 @@ object Analysis {
   def pack(d: DataFrame): DataFrame = {
     val bySource = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("doc_id"))
-    d.select(col("source"), col("doc_id"), size(toksCol).cast("long").as("n_toks"))
+    d.select(col("source"), col("doc_id"), size(Tokenize.whitespaceTokens).cast("long").as("n_toks"))
       .withColumn("cum", sum(col("n_toks")).over(
         bySource.rowsBetween(
           org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -660,13 +658,13 @@ object Analysis {
     * silent drops.
     */
   def unigramLogProb(d: DataFrame): DataFrame = {
-    val tok = d.select(col("doc_id"), explode(toksCol).as("t"))
+    val tok = d.select(col("doc_id"), explode(Tokenize.whitespaceTokens).as("t"))
     val tf = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
     val cnt = tok.groupBy("t").agg(count(lit(1)).as("cnt"))
     val q = cnt.select(col("t"),
       floor(portableLog2(col("cnt").cast("double")) * lit(UnigramFpScale)
         + lit(0.5)).as("q"))
-    val tot = d.agg(sum(size(toksCol)).cast("long").as("tot"))
+    val tot = d.agg(sum(size(Tokenize.whitespaceTokens)).cast("long").as("tot"))
       .select(portableLog2(col("tot").cast("double")).as("lg_tot"))
     val perDoc = tf.join(q.hint("shuffle_hash"), Seq("t"))
       .groupBy("doc_id")
@@ -761,10 +759,10 @@ object Analysis {
     * the exact branch is the expensive one (a (lang, token) distinct
     * shuffle); the sketch is the production path — mergeable, one pass,
     * fixed memory — and this query IS the calibration audit that says
-    * what the estimate costs in accuracy. No DuckDB oracle: HLL++
-    * register layouts are engine-specific, so the gate records the
-    * weaker rows-only check (documented here and in docs/PLANS.md);
-    * the exact column inside the query is the real cross-check.
+    * what the estimate costs in accuracy. The raw estimate has no
+    * DuckDB twin (HLL++ register layouts are engine-specific); the
+    * registered `text_vocab_sketch` folds it into the oracle-checked
+    * `approx_ok` verdict of [[VocabApproxErrBound]].
     */
   val VocabSketchRsd = 0.02
 
@@ -795,7 +793,7 @@ object Analysis {
     // estimate against the one-pass twin). Same win at 100 TB: the
     // (lang, t) partial aggregate collapses token occurrences map-side,
     // and the sketch touches vocabulary-sized data only.
-    val tok = d.select(col("lang"), explode(toksCol).as("t"))
+    val tok = d.select(col("lang"), explode(Tokenize.whitespaceTokens).as("t"))
     tok.groupBy("lang", "t").agg(count(lit(1)).as("c"))
       .groupBy("lang")
       .agg(sum(col("c")).as("n_tokens"),
@@ -1035,7 +1033,7 @@ object Analysis {
   def datasetCard(d: DataFrame): DataFrame =
     d.select(col("lang"), col("source"),
         length(col("text")).cast("long").as("n_chars"),
-        size(toksCol).cast("long").as("n_tokens"),
+        size(Tokenize.whitespaceTokens).cast("long").as("n_tokens"),
         sha2(lower(col("text")), 256).as("th"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -1051,72 +1049,454 @@ object Analysis {
         (col("n_exact_dup_docs").cast("double") / col("n_docs").cast("double"))
           .as("dup_rate"))
 
-  /** Queries whose reduce side sorts the full token-level explosion
-    * (tf ≈ hundreds of term rows per document, then a per-term window
-    * and a per-doc ordered fold). At 32 reduce partitions × sf100 the
-    * 32 concurrent sorters exhaust the execution pool outright
-    * (UNABLE_TO_ACQUIRE_MEMORY in growPointerArrayIfNecessary under
-    * the 32 MB page pin; the same stage passes with Spark's native
-    * page sizing only because 256 MB pages hit the pool's task-share
-    * wall later) — the same shape [[graft.dedup.Dedup.pairShuffleConf]]
-    * fixed for posting explosions, so the fix is the same scoped conf:
-    * reduce tasks ∝ documents bytes, AQE coalescing pinned off. Values
-    * are partition-count-invariant: each output row is a per-doc
-    * canonical ordered fold (unigram) or an order-free min/max/count
-    * bucket merge (ppl) — checked by a conf-on vs conf-off sym-diff at
-    * sf10 before graduation (docs/BENCH_NOTES.md r15).
-    */
-  val specs: Map[String, graft.QuerySpec] =
-    Seq("text_unigram_logprob", "text_ppl_buckets").map(_ ->
-      graft.QuerySpec(conf = graft.dedup.Dedup.pairShuffleConf)).toMap
-
   // ---- registry ---------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map[String, (SparkSession, String) => DataFrame](
-    "text_langid" -> ((s, dir) => langId(docs(s, dir)).orderBy("doc_id")),
-    "text_quality" -> ((s, dir) => quality(docs(s, dir)).orderBy("doc_id")),
-    "text_quality_filter" -> ((s, dir) =>
-      qualityFilter(docs(s, dir)).orderBy("doc_id")),
-    "text_token_stats" -> ((s, dir) => tokenStats(docs(s, dir)).orderBy("doc_id")),
-    "text_fingerprint" -> ((s, dir) => fingerprints(docs(s, dir)).orderBy("doc_id")),
-    "text_top_bigrams" -> ((s, dir) =>
-      topBigrams(docs(s, dir)).orderBy("lang", "rank")),
-    "text_chunk" -> ((s, dir) =>
-      chunk(docs(s, dir)).orderBy("doc_id", "chunk_id")),
-    "text_chunk_dedup" -> ((s, dir) =>
-      chunkDedup(docs(s, dir)).orderBy("chunk_hash")),
-    "text_tfidf" -> ((s, dir) =>
-      tfidf(docs(s, dir)).orderBy("doc_id", "rank")),
-    "text_length_hist" -> ((s, dir) =>
-      lengthHist(docs(s, dir)).orderBy("source", "bucket")),
-    "text_length_quantiles" -> ((s, dir) =>
-      lengthQuantiles(docs(s, dir)).orderBy("source")),
-    "text_vocab_sketch" -> ((s, dir) =>
+  lazy val specs: Map[String, QuerySpec] = Map(
+    "text_langid" -> QuerySpec((s, dir) => langId(docs(s, dir)).orderBy("doc_id"),
+      s"""$langidCtes
+         |SELECT doc_id, predicted_lang, matches FROM lid
+         |ORDER BY doc_id""".stripMargin),
+    "text_quality" -> QuerySpec((s, dir) => quality(docs(s, dir)).orderBy("doc_id"),
+      s"""$dCte, base AS (
+         |  SELECT doc_id,
+         |         CAST(length(text) AS BIGINT) AS n_chars,
+         |         CAST(len(toks) AS BIGINT) AS n_tokens,
+         |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
+         |         CAST(len(list_filter(toks, t -> t IN $stopList)) AS BIGINT) AS n_stopwords,
+         |         CAST(list_reduce(list_prepend(0, list_transform(toks, t -> length(t))), (a, b) -> a + b) AS BIGINT) AS token_chars
+         |  FROM d
+         |), feat AS (
+         |  SELECT doc_id, n_chars, n_tokens, n_distinct,
+         |         CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stopword_ratio,
+         |         CAST(token_chars AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS mean_token_len,
+         |         CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS type_token_ratio
+         |  FROM base
+         |)
+         |SELECT doc_id, n_chars, n_tokens, n_distinct, stopword_ratio,
+         |       mean_token_len, type_token_ratio,
+         |       CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE),
+         |           CAST(n_tokens AS DOUBLE) / CAST(100.0 AS DOUBLE))
+         |         + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - stopword_ratio)
+         |         + CAST(0.3 AS DOUBLE) * type_token_ratio AS quality_score
+         |FROM feat ORDER BY doc_id""".stripMargin),
+    "text_quality_filter" -> QuerySpec((s, dir) =>
+      qualityFilter(docs(s, dir)).orderBy("doc_id"),
+      s"""$dCte, base AS (
+         |  SELECT doc_id,
+         |         CAST(len(toks) AS BIGINT) AS n_tokens,
+         |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
+         |         CAST(len(list_filter(toks, t -> t IN $stopList)) AS BIGINT) AS n_stopwords
+         |  FROM d
+         |), feat AS (
+         |  SELECT doc_id, n_tokens,
+         |         CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE),
+         |             CAST(n_tokens AS DOUBLE) / CAST(100.0 AS DOUBLE))
+         |           + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE)
+         |               - CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE))
+         |           + CAST(0.3 AS DOUBLE)
+         |               * (CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS quality_score
+         |  FROM base
+         |)
+         |SELECT doc_id, n_tokens, quality_score FROM feat
+         |WHERE quality_score >= CAST($QualityThreshold AS DOUBLE) AND n_tokens >= $MinTokens
+         |ORDER BY doc_id""".stripMargin),
+    "text_token_stats" -> QuerySpec((s, dir) => tokenStats(docs(s, dir)).orderBy("doc_id"),
+      s"""$dCte
+         |SELECT doc_id,
+         |       CAST(len(toks) AS BIGINT) AS ws_tokens,
+         |       CAST(len(regexp_extract_all(lower(text), '$BpeishPattern')) AS BIGINT) AS regex_tokens,
+         |       CAST(ceil(CAST(length(text) AS DOUBLE) / CAST(4.0 AS DOUBLE)) AS BIGINT) AS est_bpe_tokens
+         |FROM d ORDER BY doc_id""".stripMargin),
+    "text_fingerprint" -> QuerySpec((s, dir) => fingerprints(docs(s, dir)).orderBy("doc_id"),
+      s"""$dCte, sh AS (
+         |  SELECT doc_id,
+         |         CASE WHEN len(toks) < $FpShingleSize THEN []
+         |              ELSE list_transform(generate_series(1, len(toks) - ${FpShingleSize - 1}),
+         |                     i -> array_to_string(list_slice(toks, i, i + ${FpShingleSize - 1}), ' '))
+         |         END AS shingles,
+         |         toks
+         |  FROM d
+         |)
+         |SELECT doc_id,
+         |       md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS bow_fp,
+         |       array_to_string(list_slice(list_sort(list_transform(shingles, s -> md5(s))), 1, $WinnowK), '') AS winnow_fp
+         |FROM sh ORDER BY doc_id""".stripMargin),
+    "text_top_bigrams" -> QuerySpec((s, dir) =>
+      topBigrams(docs(s, dir)).orderBy("lang", "rank"),
+      s"""WITH dl AS (
+         |  SELECT lang,
+         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |                     t -> length(t) > 0) AS toks
+         |  FROM documents
+         |  WHERE text IS NOT NULL AND length(text) > 0
+         |), bi AS (
+         |  SELECT lang, array_to_string(list_slice(toks, i, i + 1), ' ') AS bigram
+         |  FROM dl, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - 1, 0))) AS i)
+         |), counts AS (
+         |  SELECT lang, bigram, count(*) AS n FROM bi GROUP BY 1, 2
+         |)
+         |SELECT lang, bigram, n, rank FROM (
+         |  SELECT lang, bigram, n,
+         |         CAST(row_number() OVER (PARTITION BY lang
+         |           ORDER BY n DESC, bigram ASC) AS INT) AS rank
+         |  FROM counts)
+         |WHERE rank <= $TopBigramsK
+         |ORDER BY lang, rank""".stripMargin),
+    "text_chunk" -> QuerySpec((s, dir) =>
+      chunk(docs(s, dir)).orderBy("doc_id", "chunk_id"),
+      // Same integer start arithmetic: starts k·S+1 for k in 0..⌈max(0,
+      // len−C)/S⌉ (// is DuckDB integer division — no float rounding).
+      s"""$chunkCtes
+         |SELECT doc_id, chunk_id, start_tok, n_tokens, chunk_text
+         |FROM ch ORDER BY doc_id, chunk_id""".stripMargin),
+    "text_chunk_dedup" -> QuerySpec((s, dir) =>
+      chunkDedup(docs(s, dir)).orderBy("chunk_hash"),
+      // same window-arg-min keeper as the Spark side; sha256 of the
+      // chunk text digests the same utf8 bytes in both engines
+      s"""$chunkCtes, hd AS (
+         |  SELECT sha256(chunk_text) AS chunk_hash, doc_id, chunk_id,
+         |         min(doc_id) OVER (PARTITION BY sha256(chunk_text)) AS kd
+         |  FROM ch
+         |)
+         |SELECT chunk_hash,
+         |       count(*) AS n_copies,
+         |       count(DISTINCT doc_id) AS n_docs,
+         |       min(doc_id) AS keep_doc_id,
+         |       CAST(min(CASE WHEN doc_id = kd THEN chunk_id END) AS BIGINT)
+         |         AS keep_chunk_id
+         |FROM hd GROUP BY 1 ORDER BY chunk_hash""".stripMargin),
+    "text_tfidf" -> QuerySpec((s, dir) =>
+      tfidf(docs(s, dir)).orderBy("doc_id", "rank"),
+      // Linear idf (tf·N/df): exact integer product, ONE double division —
+      // bit-identical across engines, unlike libm ln (see tfidf scaladoc).
+      s"""$dCte, tok AS (SELECT doc_id, unnest(toks) AS t FROM d),
+         |tf AS (SELECT doc_id, t, count(*) AS tf FROM tok GROUP BY 1, 2),
+         |dfx AS (SELECT t, count(*) AS df FROM tf GROUP BY 1),
+         |n AS (SELECT count(*) AS n_docs FROM d)
+         |SELECT doc_id, term, tf, df, score, rank FROM (
+         |  SELECT tf.doc_id AS doc_id, tf.t AS term, tf.tf AS tf, dfx.df AS df,
+         |         CAST(tf.tf * n.n_docs AS DOUBLE) / CAST(dfx.df AS DOUBLE) AS score,
+         |         CAST(row_number() OVER (PARTITION BY tf.doc_id
+         |           ORDER BY CAST(tf.tf * n.n_docs AS DOUBLE) / CAST(dfx.df AS DOUBLE) DESC,
+         |                    tf.t ASC) AS INT) AS rank
+         |  FROM tf JOIN dfx USING (t), n)
+         |WHERE rank <= $TfIdfK
+         |ORDER BY doc_id, rank""".stripMargin),
+    "text_length_hist" -> QuerySpec((s, dir) =>
+      lengthHist(docs(s, dir)).orderBy("source", "bucket"),
+      s"""SELECT source, n_chars // $LengthBucketWidth AS bucket,
+         |       count(*) AS n_docs,
+         |       min(n_chars) AS min_chars, max(n_chars) AS max_chars
+         |FROM documents
+         |WHERE text IS NOT NULL AND length(text) > 0
+         |GROUP BY 1, 2 ORDER BY source, bucket""".stripMargin),
+    "text_length_quantiles" -> QuerySpec((s, dir) =>
+      lengthQuantiles(docs(s, dir)).orderBy("source"),
+      // quantile_cont shares Spark percentile's exact rank-interpolation
+      // arithmetic (verified bit-identical over every fixture group)
+      s"""SELECT source, count(*) AS n_docs,
+         |       CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_chars,
+         |       quantile_cont(n_chars, CAST(0.5 AS DOUBLE)) AS p50,
+         |       quantile_cont(n_chars, CAST(0.9 AS DOUBLE)) AS p90,
+         |       quantile_cont(n_chars, CAST(0.99 AS DOUBLE)) AS p99
+         |FROM documents
+         |WHERE text IS NOT NULL AND length(text) > 0
+         |GROUP BY source ORDER BY source""".stripMargin),
+    "text_vocab_sketch" -> QuerySpec((s, dir) =>
       vocabSketch(docs(s, dir))
         .select(col("lang"), col("n_tokens"), col("vocab_exact"),
           (col("rel_err") <= lit(VocabApproxErrBound)).as("approx_ok"))
-        .orderBy("lang")),
-    "text_repetition" -> ((s, dir) =>
-      repetition(docs(s, dir)).orderBy("doc_id")),
-    "text_pack" -> ((s, dir) =>
-      pack(docs(s, dir)).orderBy("source", "bin")),
-    "text_unigram_logprob" -> ((s, dir) =>
-      unigramLogProb(docs(s, dir)).orderBy("doc_id")),
-    "text_source_profile" -> ((s, dir) =>
-      sourceProfile(docs(s, dir)).orderBy("source")),
-    "text_pii_audit" -> ((s, dir) =>
-      piiAudit(docs(s, dir)).orderBy("source")),
-    "text_pii_redact" -> ((s, dir) =>
-      piiRedact(docs(s, dir)).orderBy("doc_id")),
-    "text_filter_funnel" -> ((s, dir) =>
-      filterFunnel(docs(s, dir)).orderBy("stage")),
-    "text_ppl_buckets" -> ((s, dir) =>
-      pplBuckets(docs(s, dir)).orderBy("bucket")),
-    "text_dataset_card" -> ((s, dir) => datasetCard(docs(s, dir))),
-    "text_langid_eval" -> ((s, dir) =>
-      langIdEval(docs(s, dir)).orderBy("actual_lang", "predicted_lang"))
+        .orderBy("lang"),
+      // The exact columns are plain SQL; the HLL++ estimate enters as the
+      // `approx_ok` verdict, which DuckDB predicts TRUE from first
+      // principles (bound = 5×rsd, see VocabApproxErrBound) — so a Spark
+      // estimate drifting out of tolerance hash-mismatches this row.
+      """WITH t AS (
+        |  SELECT lang,
+        |         unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |                            t -> length(t) > 0)) AS tok
+        |  FROM documents
+        |  WHERE text IS NOT NULL AND length(text) > 0
+        |)
+        |SELECT lang, count(*) AS n_tokens,
+        |       count(DISTINCT tok) AS vocab_exact,
+        |       TRUE AS approx_ok
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
+    "text_repetition" -> QuerySpec((s, dir) =>
+      repetition(docs(s, dir)).orderBy("doc_id"),
+      // Same tagged (n, gram) decomposition as the Spark side; fractions
+      // are one double division over exact BIGINT counts in both engines.
+      s"""$dCte, grams AS (
+         |  SELECT doc_id, 2 AS n,
+         |         array_to_string(list_slice(toks, i, i + 1), ' ') AS gram
+         |  FROM d, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - 1, 0))) AS i)
+         |  UNION ALL
+         |  SELECT doc_id, 3 AS n,
+         |         array_to_string(list_slice(toks, i, i + 2), ' ') AS gram
+         |  FROM d, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i)
+         |), counts AS (
+         |  SELECT doc_id, n, gram, count(*) AS c FROM grams GROUP BY 1, 2, 3
+         |), per AS (
+         |  SELECT doc_id, n,
+         |         CAST(sum(c) AS BIGINT) AS positions,
+         |         CAST(max(c) AS BIGINT) AS top,
+         |         CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS dup
+         |  FROM counts GROUP BY 1, 2
+         |), wide AS (
+         |  SELECT doc_id,
+         |         max(CASE WHEN n = 2 THEN positions END) AS b_pos,
+         |         max(CASE WHEN n = 2 THEN top END) AS b_top,
+         |         max(CASE WHEN n = 3 THEN positions END) AS t_pos,
+         |         max(CASE WHEN n = 3 THEN dup END) AS t_dup
+         |  FROM per GROUP BY doc_id
+         |), joined AS (
+         |  SELECT d.doc_id,
+         |         coalesce(b_pos, 0) AS n_bigrams,
+         |         coalesce(b_top, 0) AS top_bigram_n,
+         |         coalesce(t_pos, 0) AS n_trigrams,
+         |         coalesce(t_dup, 0) AS dup_trigram_n
+         |  FROM d LEFT JOIN wide ON d.doc_id = wide.doc_id
+         |)
+         |SELECT doc_id, n_bigrams, top_bigram_n, n_trigrams, dup_trigram_n,
+         |       CASE WHEN n_bigrams > 0
+         |            THEN CAST(top_bigram_n AS DOUBLE) / CAST(n_bigrams AS DOUBLE)
+         |            ELSE CAST(0.0 AS DOUBLE) END AS top_bigram_frac,
+         |       CASE WHEN n_trigrams > 0
+         |            THEN CAST(dup_trigram_n AS DOUBLE) / CAST(n_trigrams AS DOUBLE)
+         |            ELSE CAST(0.0 AS DOUBLE) END AS dup_trigram_frac
+         |FROM joined ORDER BY doc_id""".stripMargin),
+    "text_pack" -> QuerySpec((s, dir) =>
+      pack(docs(s, dir)).orderBy("source", "bin"),
+      // Same shard-local running sum; // is DuckDB integer division, the
+      // twin of Spark's `div` — bin arithmetic never touches a float.
+      s"""WITH dl AS (
+         |  SELECT source, doc_id,
+         |         CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |                              t -> length(t) > 0)) AS BIGINT) AS n_toks
+         |  FROM documents
+         |  WHERE text IS NOT NULL AND length(text) > 0
+         |), c AS (
+         |  SELECT source, doc_id, n_toks,
+         |         CAST(sum(n_toks) OVER (PARTITION BY source ORDER BY doc_id
+         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+         |  FROM dl
+         |), b AS (
+         |  SELECT source, n_toks,
+         |         (cum - n_toks) // $PackBudget AS bin,
+         |         (cum - 1) // $PackBudget AS end_bin
+         |  FROM c
+         |)
+         |SELECT source, bin, count(*) AS n_docs,
+         |       CAST(sum(n_toks) AS BIGINT) AS n_tokens,
+         |       CAST(sum(CASE WHEN end_bin > bin THEN 1 ELSE 0 END) AS BIGINT) AS n_spill
+         |FROM b GROUP BY 1, 2 ORDER BY source, bin""".stripMargin),
+    "text_unigram_logprob" -> QuerySpec((s, dir) =>
+      unigramLogProb(docs(s, dir)).orderBy("doc_id"),
+      // Same tf/cnt/tot integer chain; the log is the portable fold
+      // (plog2Sql ≡ portableLog2 op-for-op), the per-doc sum is the
+      // list_prepend(0)+list_reduce in-TERM-order fold mirroring Spark's
+      // zero-init aggregate over the array_sort'ed struct list.
+      s"""$unigramCtes
+         |SELECT doc_id, n_tokens, sum_log2p, bits_per_token
+         |FROM ul ORDER BY doc_id""".stripMargin,
+      // The reduce side sorts the full token-level explosion (tf ≈
+      // hundreds of term rows per document, then a per-term window and a
+      // per-doc ordered fold). At 32 reduce partitions × sf100 the 32
+      // concurrent sorters exhaust the execution pool outright
+      // (UNABLE_TO_ACQUIRE_MEMORY in growPointerArrayIfNecessary under the
+      // 32 MB page pin; the same stage passes with Spark's native page
+      // sizing only because 256 MB pages hit the pool's task-share wall
+      // later) — the same shape pairShuffleConf fixed for posting
+      // explosions, so the fix is the same scoped conf: reduce tasks ∝
+      // documents bytes, AQE coalescing pinned off. Values are
+      // partition-count-invariant: each output row is a per-doc canonical
+      // ordered fold (unigram) or an order-free min/max/count bucket merge
+      // (ppl) — checked by a conf-on vs conf-off sym-diff at sf10 before
+      // graduation (docs/BENCH_NOTES.md r15).
+      conf = graft.dedup.Dedup.pairShuffleConf),
+    "text_source_profile" -> QuerySpec((s, dir) =>
+      sourceProfile(docs(s, dir)).orderBy("source"),
+      // Same map-side feature arithmetic; the lang winner mirrors the
+      // sorted (−matches, lang) struct-array trick (DuckDB sorts structs
+      // field-lexicographically, same as Spark's array_sort).
+      s"""WITH dd AS (
+         |  SELECT source, text,
+         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |                     t -> length(t) > 0) AS toks
+         |  FROM documents
+         |  WHERE text IS NOT NULL AND length(text) > 0
+         |), lw AS (
+         |  SELECT source,
+         |         CAST(length(text) AS BIGINT) AS n_chars,
+         |         CAST(len(toks) AS BIGINT) AS n_tokens,
+         |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
+         |         CAST(len(list_filter(toks, t -> t IN $stopList)) AS BIGINT) AS n_stopwords,
+         |         list_sort([${Markers.map { case (l, ws) =>
+               s"struct_pack(neg := -len(list_filter(toks, t -> t IN (${
+                 ws.map(w => s"'$w'").mkString(",")}))), lang := '$l')"
+             }.mkString(", ")}])[1] AS w
+         |  FROM dd
+         |), pd AS (
+         |  SELECT source, n_chars, n_tokens,
+         |         CASE WHEN w.neg = 0 THEN 'und' ELSE w.lang END AS lang,
+         |         CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE),
+         |             CAST(n_tokens AS DOUBLE) / CAST(100.0 AS DOUBLE))
+         |           + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE)
+         |               - CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE))
+         |           + CAST(0.3 AS DOUBLE)
+         |               * (CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS q
+         |  FROM lw
+         |), sl AS (
+         |  SELECT source, lang, count(*) AS docs,
+         |         CAST(sum(n_tokens) AS BIGINT) AS toks,
+         |         CAST(sum(n_chars) AS BIGINT) AS chars,
+         |         CAST(sum(CASE WHEN q >= CAST($QualityThreshold AS DOUBLE)
+         |                        AND n_tokens >= $MinTokens
+         |                       THEN 1 ELSE 0 END) AS BIGINT) AS pass
+         |  FROM pd GROUP BY 1, 2
+         |), rk AS (
+         |  SELECT *, row_number() OVER (PARTITION BY source
+         |    ORDER BY docs DESC, lang ASC) AS rk
+         |  FROM sl
+         |)
+         |SELECT source,
+         |       CAST(sum(docs) AS BIGINT) AS n_docs,
+         |       CAST(sum(toks) AS BIGINT) AS n_tokens,
+         |       CAST(sum(chars) AS BIGINT) AS n_chars,
+         |       CAST(sum(toks) AS DOUBLE) / CAST(sum(docs) AS DOUBLE) AS mean_tokens,
+         |       CAST(sum(pass) AS BIGINT) AS n_quality_pass,
+         |       CAST(sum(pass) AS DOUBLE) / CAST(sum(docs) AS DOUBLE) AS pass_rate,
+         |       max(CASE WHEN rk = 1 THEN lang END) AS top_lang,
+         |       CAST(max(CASE WHEN rk = 1 THEN docs END) AS BIGINT) AS top_lang_docs
+         |FROM rk GROUP BY source
+         |ORDER BY source""".stripMargin),
+    "text_pii_audit" -> QuerySpec((s, dir) =>
+      piiAudit(docs(s, dir)).orderBy("source"),
+      // PII patterns are written in the Java-regex ∩ RE2 subset, so the
+      // pattern STRINGS are shared verbatim with the Spark plan.
+      s"""WITH pd AS (
+         |  SELECT source,
+         |         CAST(len(regexp_extract_all(text, '$EmailPattern')) AS BIGINT) AS e,
+         |         CAST(len(regexp_extract_all(text, '$PhonePattern')) AS BIGINT) AS p,
+         |         CAST(len(regexp_extract_all(text, '$Ipv4Pattern')) AS BIGINT) AS i
+         |  FROM documents
+         |  WHERE text IS NOT NULL AND length(text) > 0
+         |)
+         |SELECT source, count(*) AS n_docs,
+         |       CAST(sum(CASE WHEN e + p + i > 0 THEN 1 ELSE 0 END) AS BIGINT)
+         |         AS docs_with_pii,
+         |       CAST(sum(e) AS BIGINT) AS n_emails,
+         |       CAST(sum(p) AS BIGINT) AS n_phones,
+         |       CAST(sum(i) AS BIGINT) AS n_ipv4
+         |FROM pd GROUP BY source ORDER BY source""".stripMargin),
+    "text_pii_redact" -> QuerySpec((s, dir) =>
+      piiRedact(docs(s, dir)).orderBy("doc_id"),
+      // injection construction mirrored verbatim; DuckDB regexp_replace
+      // needs the explicit 'g' flag to match Spark's replace-all
+      s"""WITH inj AS (
+         |  SELECT doc_id,
+         |         text || ' contact user' || CAST(doc_id AS VARCHAR)
+         |           || '@example.com via '
+         |           || '10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.'
+         |           || CAST(doc_id % 100 AS VARCHAR)
+         |           || ' tel +41 555 010 '
+         |           || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') AS t
+         |  FROM documents
+         |  WHERE text IS NOT NULL AND length(text) > 0
+         |)
+         |SELECT doc_id,
+         |       CAST(len(regexp_extract_all(t, '$EmailPattern')) AS BIGINT) AS n_emails,
+         |       CAST(len(regexp_extract_all(t, '$PhonePattern')) AS BIGINT) AS n_phones,
+         |       CAST(len(regexp_extract_all(t, '$Ipv4Pattern')) AS BIGINT) AS n_ipv4,
+         |       regexp_replace(
+         |         regexp_replace(
+         |           regexp_replace(t, '$EmailPattern', '[EMAIL]', 'g'),
+         |           '$Ipv4Pattern', '[IP]', 'g'),
+         |         '$PhonePattern', '[PHONE]', 'g') AS redacted
+         |FROM inj ORDER BY doc_id""".stripMargin),
+    "text_filter_funnel" -> QuerySpec((s, dir) =>
+      filterFunnel(docs(s, dir)).orderBy("stage"),
+      s"""$dCte, feat AS (
+         |  SELECT CAST(length(text) AS BIGINT) AS n_chars,
+         |         CAST(len(toks) AS BIGINT) AS n_tokens,
+         |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
+         |         CAST(len(list_filter(toks, t -> t IN $stopList)) AS BIGINT) AS n_stopwords
+         |  FROM d
+         |), staged AS (
+         |  SELECT n_chars,
+         |    CASE WHEN n_tokens < $FunnelMinTokens THEN '${FunnelStages(0)}'
+         |         WHEN CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)
+         |              < CAST($FunnelMinTtr AS DOUBLE) THEN '${FunnelStages(1)}'
+         |         WHEN CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE),
+         |                CAST(n_tokens AS DOUBLE) / CAST(100.0 AS DOUBLE))
+         |              + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE)
+         |                  - CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE))
+         |              + CAST(0.3 AS DOUBLE)
+         |                  * (CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE))
+         |              < CAST($QualityThreshold AS DOUBLE) THEN '${FunnelStages(2)}'
+         |         ELSE '${FunnelStages(3)}' END AS stage
+         |  FROM feat
+         |), cnt AS (
+         |  SELECT stage, count(*) AS n_docs,
+         |         CAST(sum(n_chars) AS BIGINT) AS n_chars
+         |  FROM staged GROUP BY 1
+         |), stages(stage) AS (VALUES ${FunnelStages.map(st => s"('$st')").mkString(", ")})
+         |SELECT s.stage,
+         |       coalesce(cnt.n_docs, 0) AS n_docs,
+         |       coalesce(cnt.n_chars, 0) AS n_chars,
+         |       CAST(coalesce(cnt.n_docs, 0) AS DOUBLE)
+         |         / CAST(sum(coalesce(cnt.n_docs, 0)) OVER () AS DOUBLE) AS share
+         |FROM stages s LEFT JOIN cnt USING (stage)
+         |ORDER BY stage""".stripMargin),
+    "text_ppl_buckets" -> QuerySpec((s, dir) =>
+      pplBuckets(docs(s, dir)).orderBy("bucket"),
+      // floor over the already-bit-identical score — bucket membership is
+      // exact; extremes are order-independent (no double SUM)
+      s"""$unigramCtes
+         |SELECT CAST(floor(bits_per_token
+         |           * CAST($PplBucketsPerBit AS DOUBLE)) AS BIGINT) AS bucket,
+         |       count(*) AS n_docs,
+         |       min(bits_per_token) AS min_bpt,
+         |       max(bits_per_token) AS max_bpt
+         |FROM ul GROUP BY 1 ORDER BY 1""".stripMargin,
+      // the same token-level reduce-side sort as text_unigram_logprob
+      conf = graft.dedup.Dedup.pairShuffleConf),
+    "text_dataset_card" -> QuerySpec((s, dir) => datasetCard(docs(s, dir)),
+      // own CTE: needs lang/source, which dCte prunes away
+      s"""WITH f AS (
+         |  SELECT lang, source,
+         |         CAST(length(text) AS BIGINT) AS n_chars,
+         |         CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |                              t -> length(t) > 0)) AS BIGINT) AS n_tokens,
+         |         sha256(lower(text)) AS th
+         |  FROM documents
+         |  WHERE text IS NOT NULL AND length(text) > 0
+         |), a AS (
+         |  SELECT count(*) AS n_docs,
+         |         CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+         |         CAST(sum(n_chars) AS BIGINT) AS n_chars,
+         |         count(DISTINCT lang) AS n_langs,
+         |         count(DISTINCT source) AS n_sources,
+         |         count(*) - count(DISTINCT th) AS n_exact_dup_docs
+         |  FROM f
+         |)
+         |SELECT n_docs, n_tokens, n_chars,
+         |       CAST(n_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)
+         |         AS mean_doc_tokens,
+         |       n_langs, n_sources, n_exact_dup_docs,
+         |       CAST(n_exact_dup_docs AS DOUBLE) / CAST(n_docs AS DOUBLE)
+         |         AS dup_rate
+         |FROM a""".stripMargin),
+    "text_langid_eval" -> QuerySpec((s, dir) =>
+      langIdEval(docs(s, dir)).orderBy("actual_lang", "predicted_lang"),
+      s"""$langidCtes
+         |SELECT dd.lang AS actual_lang, lid.predicted_lang, count(*) AS n
+         |FROM lid JOIN documents dd ON dd.doc_id = lid.doc_id
+         |GROUP BY 1, 2
+         |ORDER BY 1, 2""".stripMargin)
   )
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QuerySpec.builds(specs)
 
   // ---- DuckDB oracle SQL ------------------------------------------------
 
@@ -1251,412 +1631,4 @@ object Analysis {
        |              ELSE CAST(0 AS DOUBLE) END AS bits_per_token
        |  FROM d LEFT JOIN pj USING (doc_id)
        |)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "text_langid" ->
-      s"""$langidCtes
-         |SELECT doc_id, predicted_lang, matches FROM lid
-         |ORDER BY doc_id""".stripMargin,
-    "text_langid_eval" ->
-      s"""$langidCtes
-         |SELECT dd.lang AS actual_lang, lid.predicted_lang, count(*) AS n
-         |FROM lid JOIN documents dd ON dd.doc_id = lid.doc_id
-         |GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-    "text_quality" ->
-      s"""$dCte, base AS (
-         |  SELECT doc_id,
-         |         CAST(length(text) AS BIGINT) AS n_chars,
-         |         CAST(len(toks) AS BIGINT) AS n_tokens,
-         |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-         |         CAST(len(list_filter(toks, t -> t IN $stopList)) AS BIGINT) AS n_stopwords,
-         |         CAST(list_reduce(list_prepend(0, list_transform(toks, t -> length(t))), (a, b) -> a + b) AS BIGINT) AS token_chars
-         |  FROM d
-         |), feat AS (
-         |  SELECT doc_id, n_chars, n_tokens, n_distinct,
-         |         CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stopword_ratio,
-         |         CAST(token_chars AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS mean_token_len,
-         |         CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS type_token_ratio
-         |  FROM base
-         |)
-         |SELECT doc_id, n_chars, n_tokens, n_distinct, stopword_ratio,
-         |       mean_token_len, type_token_ratio,
-         |       CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE),
-         |           CAST(n_tokens AS DOUBLE) / CAST(100.0 AS DOUBLE))
-         |         + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - stopword_ratio)
-         |         + CAST(0.3 AS DOUBLE) * type_token_ratio AS quality_score
-         |FROM feat ORDER BY doc_id""".stripMargin,
-    "text_quality_filter" ->
-      s"""$dCte, base AS (
-         |  SELECT doc_id,
-         |         CAST(len(toks) AS BIGINT) AS n_tokens,
-         |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-         |         CAST(len(list_filter(toks, t -> t IN $stopList)) AS BIGINT) AS n_stopwords
-         |  FROM d
-         |), feat AS (
-         |  SELECT doc_id, n_tokens,
-         |         CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE),
-         |             CAST(n_tokens AS DOUBLE) / CAST(100.0 AS DOUBLE))
-         |           + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE)
-         |               - CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-         |           + CAST(0.3 AS DOUBLE)
-         |               * (CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS quality_score
-         |  FROM base
-         |)
-         |SELECT doc_id, n_tokens, quality_score FROM feat
-         |WHERE quality_score >= CAST($QualityThreshold AS DOUBLE) AND n_tokens >= $MinTokens
-         |ORDER BY doc_id""".stripMargin,
-    "text_token_stats" ->
-      s"""$dCte
-         |SELECT doc_id,
-         |       CAST(len(toks) AS BIGINT) AS ws_tokens,
-         |       CAST(len(regexp_extract_all(lower(text), '$BpeishPattern')) AS BIGINT) AS regex_tokens,
-         |       CAST(ceil(CAST(length(text) AS DOUBLE) / CAST(4.0 AS DOUBLE)) AS BIGINT) AS est_bpe_tokens
-         |FROM d ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
-      s"""$dCte, sh AS (
-         |  SELECT doc_id,
-         |         CASE WHEN len(toks) < $FpShingleSize THEN []
-         |              ELSE list_transform(generate_series(1, len(toks) - ${FpShingleSize - 1}),
-         |                     i -> array_to_string(list_slice(toks, i, i + ${FpShingleSize - 1}), ' '))
-         |         END AS shingles,
-         |         toks
-         |  FROM d
-         |)
-         |SELECT doc_id,
-         |       md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS bow_fp,
-         |       array_to_string(list_slice(list_sort(list_transform(shingles, s -> md5(s))), 1, $WinnowK), '') AS winnow_fp
-         |FROM sh ORDER BY doc_id""".stripMargin,
-    "text_top_bigrams" ->
-      s"""WITH dl AS (
-         |  SELECT lang,
-         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                     t -> length(t) > 0) AS toks
-         |  FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0
-         |), bi AS (
-         |  SELECT lang, array_to_string(list_slice(toks, i, i + 1), ' ') AS bigram
-         |  FROM dl, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - 1, 0))) AS i)
-         |), counts AS (
-         |  SELECT lang, bigram, count(*) AS n FROM bi GROUP BY 1, 2
-         |)
-         |SELECT lang, bigram, n, rank FROM (
-         |  SELECT lang, bigram, n,
-         |         CAST(row_number() OVER (PARTITION BY lang
-         |           ORDER BY n DESC, bigram ASC) AS INT) AS rank
-         |  FROM counts)
-         |WHERE rank <= $TopBigramsK
-         |ORDER BY lang, rank""".stripMargin,
-    // Same integer start arithmetic: starts k·S+1 for k in 0..⌈max(0,
-    // len−C)/S⌉ (// is DuckDB integer division — no float rounding).
-    "text_chunk" ->
-      s"""$chunkCtes
-         |SELECT doc_id, chunk_id, start_tok, n_tokens, chunk_text
-         |FROM ch ORDER BY doc_id, chunk_id""".stripMargin,
-    // same window-arg-min keeper as the Spark side; sha256 of the
-    // chunk text digests the same utf8 bytes in both engines
-    "text_chunk_dedup" ->
-      s"""$chunkCtes, hd AS (
-         |  SELECT sha256(chunk_text) AS chunk_hash, doc_id, chunk_id,
-         |         min(doc_id) OVER (PARTITION BY sha256(chunk_text)) AS kd
-         |  FROM ch
-         |)
-         |SELECT chunk_hash,
-         |       count(*) AS n_copies,
-         |       count(DISTINCT doc_id) AS n_docs,
-         |       min(doc_id) AS keep_doc_id,
-         |       CAST(min(CASE WHEN doc_id = kd THEN chunk_id END) AS BIGINT)
-         |         AS keep_chunk_id
-         |FROM hd GROUP BY 1 ORDER BY chunk_hash""".stripMargin,
-    // own CTE: needs lang/source, which dCte prunes away
-    "text_dataset_card" ->
-      s"""WITH f AS (
-         |  SELECT lang, source,
-         |         CAST(length(text) AS BIGINT) AS n_chars,
-         |         CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                              t -> length(t) > 0)) AS BIGINT) AS n_tokens,
-         |         sha256(lower(text)) AS th
-         |  FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0
-         |), a AS (
-         |  SELECT count(*) AS n_docs,
-         |         CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-         |         CAST(sum(n_chars) AS BIGINT) AS n_chars,
-         |         count(DISTINCT lang) AS n_langs,
-         |         count(DISTINCT source) AS n_sources,
-         |         count(*) - count(DISTINCT th) AS n_exact_dup_docs
-         |  FROM f
-         |)
-         |SELECT n_docs, n_tokens, n_chars,
-         |       CAST(n_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)
-         |         AS mean_doc_tokens,
-         |       n_langs, n_sources, n_exact_dup_docs,
-         |       CAST(n_exact_dup_docs AS DOUBLE) / CAST(n_docs AS DOUBLE)
-         |         AS dup_rate
-         |FROM a""".stripMargin,
-    // Linear idf (tf·N/df): exact integer product, ONE double division —
-    // bit-identical across engines, unlike libm ln (see tfidf scaladoc).
-    "text_tfidf" ->
-      s"""$dCte, tok AS (SELECT doc_id, unnest(toks) AS t FROM d),
-         |tf AS (SELECT doc_id, t, count(*) AS tf FROM tok GROUP BY 1, 2),
-         |dfx AS (SELECT t, count(*) AS df FROM tf GROUP BY 1),
-         |n AS (SELECT count(*) AS n_docs FROM d)
-         |SELECT doc_id, term, tf, df, score, rank FROM (
-         |  SELECT tf.doc_id AS doc_id, tf.t AS term, tf.tf AS tf, dfx.df AS df,
-         |         CAST(tf.tf * n.n_docs AS DOUBLE) / CAST(dfx.df AS DOUBLE) AS score,
-         |         CAST(row_number() OVER (PARTITION BY tf.doc_id
-         |           ORDER BY CAST(tf.tf * n.n_docs AS DOUBLE) / CAST(dfx.df AS DOUBLE) DESC,
-         |                    tf.t ASC) AS INT) AS rank
-         |  FROM tf JOIN dfx USING (t), n)
-         |WHERE rank <= $TfIdfK
-         |ORDER BY doc_id, rank""".stripMargin,
-    "text_length_hist" ->
-      s"""SELECT source, n_chars // $LengthBucketWidth AS bucket,
-         |       count(*) AS n_docs,
-         |       min(n_chars) AS min_chars, max(n_chars) AS max_chars
-         |FROM documents
-         |WHERE text IS NOT NULL AND length(text) > 0
-         |GROUP BY 1, 2 ORDER BY source, bucket""".stripMargin,
-    // quantile_cont shares Spark percentile's exact rank-interpolation
-    // arithmetic (verified bit-identical over every fixture group)
-    "text_length_quantiles" ->
-      s"""SELECT source, count(*) AS n_docs,
-         |       CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_chars,
-         |       quantile_cont(n_chars, CAST(0.5 AS DOUBLE)) AS p50,
-         |       quantile_cont(n_chars, CAST(0.9 AS DOUBLE)) AS p90,
-         |       quantile_cont(n_chars, CAST(0.99 AS DOUBLE)) AS p99
-         |FROM documents
-         |WHERE text IS NOT NULL AND length(text) > 0
-         |GROUP BY source ORDER BY source""".stripMargin,
-    // Same tagged (n, gram) decomposition as the Spark side; fractions
-    // are one double division over exact BIGINT counts in both engines.
-    "text_repetition" ->
-      s"""$dCte, grams AS (
-         |  SELECT doc_id, 2 AS n,
-         |         array_to_string(list_slice(toks, i, i + 1), ' ') AS gram
-         |  FROM d, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - 1, 0))) AS i)
-         |  UNION ALL
-         |  SELECT doc_id, 3 AS n,
-         |         array_to_string(list_slice(toks, i, i + 2), ' ') AS gram
-         |  FROM d, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i)
-         |), counts AS (
-         |  SELECT doc_id, n, gram, count(*) AS c FROM grams GROUP BY 1, 2, 3
-         |), per AS (
-         |  SELECT doc_id, n,
-         |         CAST(sum(c) AS BIGINT) AS positions,
-         |         CAST(max(c) AS BIGINT) AS top,
-         |         CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS dup
-         |  FROM counts GROUP BY 1, 2
-         |), wide AS (
-         |  SELECT doc_id,
-         |         max(CASE WHEN n = 2 THEN positions END) AS b_pos,
-         |         max(CASE WHEN n = 2 THEN top END) AS b_top,
-         |         max(CASE WHEN n = 3 THEN positions END) AS t_pos,
-         |         max(CASE WHEN n = 3 THEN dup END) AS t_dup
-         |  FROM per GROUP BY doc_id
-         |), joined AS (
-         |  SELECT d.doc_id,
-         |         coalesce(b_pos, 0) AS n_bigrams,
-         |         coalesce(b_top, 0) AS top_bigram_n,
-         |         coalesce(t_pos, 0) AS n_trigrams,
-         |         coalesce(t_dup, 0) AS dup_trigram_n
-         |  FROM d LEFT JOIN wide ON d.doc_id = wide.doc_id
-         |)
-         |SELECT doc_id, n_bigrams, top_bigram_n, n_trigrams, dup_trigram_n,
-         |       CASE WHEN n_bigrams > 0
-         |            THEN CAST(top_bigram_n AS DOUBLE) / CAST(n_bigrams AS DOUBLE)
-         |            ELSE CAST(0.0 AS DOUBLE) END AS top_bigram_frac,
-         |       CASE WHEN n_trigrams > 0
-         |            THEN CAST(dup_trigram_n AS DOUBLE) / CAST(n_trigrams AS DOUBLE)
-         |            ELSE CAST(0.0 AS DOUBLE) END AS dup_trigram_frac
-         |FROM joined ORDER BY doc_id""".stripMargin,
-    // Same shard-local running sum; // is DuckDB integer division, the
-    // twin of Spark's `div` — bin arithmetic never touches a float.
-    "text_pack" ->
-      s"""WITH dl AS (
-         |  SELECT source, doc_id,
-         |         CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                              t -> length(t) > 0)) AS BIGINT) AS n_toks
-         |  FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0
-         |), c AS (
-         |  SELECT source, doc_id, n_toks,
-         |         CAST(sum(n_toks) OVER (PARTITION BY source ORDER BY doc_id
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-         |  FROM dl
-         |), b AS (
-         |  SELECT source, n_toks,
-         |         (cum - n_toks) // $PackBudget AS bin,
-         |         (cum - 1) // $PackBudget AS end_bin
-         |  FROM c
-         |)
-         |SELECT source, bin, count(*) AS n_docs,
-         |       CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-         |       CAST(sum(CASE WHEN end_bin > bin THEN 1 ELSE 0 END) AS BIGINT) AS n_spill
-         |FROM b GROUP BY 1, 2 ORDER BY source, bin""".stripMargin,
-    // Same tf/cnt/tot integer chain; the log is the portable fold
-    // (plog2Sql ≡ portableLog2 op-for-op), the per-doc sum is the
-    // list_prepend(0)+list_reduce in-TERM-order fold mirroring Spark's
-    // zero-init aggregate over the array_sort'ed struct list.
-    "text_unigram_logprob" ->
-      s"""$unigramCtes
-         |SELECT doc_id, n_tokens, sum_log2p, bits_per_token
-         |FROM ul ORDER BY doc_id""".stripMargin,
-    // floor over the already-bit-identical score — bucket membership is
-    // exact; extremes are order-independent (no double SUM)
-    "text_ppl_buckets" ->
-      s"""$unigramCtes
-         |SELECT CAST(floor(bits_per_token
-         |           * CAST($PplBucketsPerBit AS DOUBLE)) AS BIGINT) AS bucket,
-         |       count(*) AS n_docs,
-         |       min(bits_per_token) AS min_bpt,
-         |       max(bits_per_token) AS max_bpt
-         |FROM ul GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Same map-side feature arithmetic; the lang winner mirrors the
-    // sorted (−matches, lang) struct-array trick (DuckDB sorts structs
-    // field-lexicographically, same as Spark's array_sort).
-    "text_source_profile" ->
-      s"""WITH dd AS (
-         |  SELECT source, text,
-         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                     t -> length(t) > 0) AS toks
-         |  FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0
-         |), lw AS (
-         |  SELECT source,
-         |         CAST(length(text) AS BIGINT) AS n_chars,
-         |         CAST(len(toks) AS BIGINT) AS n_tokens,
-         |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-         |         CAST(len(list_filter(toks, t -> t IN $stopList)) AS BIGINT) AS n_stopwords,
-         |         list_sort([${Markers.map { case (l, ws) =>
-               s"struct_pack(neg := -len(list_filter(toks, t -> t IN (${
-                 ws.map(w => s"'$w'").mkString(",")}))), lang := '$l')"
-             }.mkString(", ")}])[1] AS w
-         |  FROM dd
-         |), pd AS (
-         |  SELECT source, n_chars, n_tokens,
-         |         CASE WHEN w.neg = 0 THEN 'und' ELSE w.lang END AS lang,
-         |         CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE),
-         |             CAST(n_tokens AS DOUBLE) / CAST(100.0 AS DOUBLE))
-         |           + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE)
-         |               - CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-         |           + CAST(0.3 AS DOUBLE)
-         |               * (CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS q
-         |  FROM lw
-         |), sl AS (
-         |  SELECT source, lang, count(*) AS docs,
-         |         CAST(sum(n_tokens) AS BIGINT) AS toks,
-         |         CAST(sum(n_chars) AS BIGINT) AS chars,
-         |         CAST(sum(CASE WHEN q >= CAST($QualityThreshold AS DOUBLE)
-         |                        AND n_tokens >= $MinTokens
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS pass
-         |  FROM pd GROUP BY 1, 2
-         |), rk AS (
-         |  SELECT *, row_number() OVER (PARTITION BY source
-         |    ORDER BY docs DESC, lang ASC) AS rk
-         |  FROM sl
-         |)
-         |SELECT source,
-         |       CAST(sum(docs) AS BIGINT) AS n_docs,
-         |       CAST(sum(toks) AS BIGINT) AS n_tokens,
-         |       CAST(sum(chars) AS BIGINT) AS n_chars,
-         |       CAST(sum(toks) AS DOUBLE) / CAST(sum(docs) AS DOUBLE) AS mean_tokens,
-         |       CAST(sum(pass) AS BIGINT) AS n_quality_pass,
-         |       CAST(sum(pass) AS DOUBLE) / CAST(sum(docs) AS DOUBLE) AS pass_rate,
-         |       max(CASE WHEN rk = 1 THEN lang END) AS top_lang,
-         |       CAST(max(CASE WHEN rk = 1 THEN docs END) AS BIGINT) AS top_lang_docs
-         |FROM rk GROUP BY source
-         |ORDER BY source""".stripMargin,
-    // PII patterns are written in the Java-regex ∩ RE2 subset, so the
-    // pattern STRINGS are shared verbatim with the Spark plan.
-    "text_pii_audit" ->
-      s"""WITH pd AS (
-         |  SELECT source,
-         |         CAST(len(regexp_extract_all(text, '$EmailPattern')) AS BIGINT) AS e,
-         |         CAST(len(regexp_extract_all(text, '$PhonePattern')) AS BIGINT) AS p,
-         |         CAST(len(regexp_extract_all(text, '$Ipv4Pattern')) AS BIGINT) AS i
-         |  FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0
-         |)
-         |SELECT source, count(*) AS n_docs,
-         |       CAST(sum(CASE WHEN e + p + i > 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS docs_with_pii,
-         |       CAST(sum(e) AS BIGINT) AS n_emails,
-         |       CAST(sum(p) AS BIGINT) AS n_phones,
-         |       CAST(sum(i) AS BIGINT) AS n_ipv4
-         |FROM pd GROUP BY source ORDER BY source""".stripMargin,
-    // injection construction mirrored verbatim; DuckDB regexp_replace
-    // needs the explicit 'g' flag to match Spark's replace-all
-    "text_pii_redact" ->
-      s"""WITH inj AS (
-         |  SELECT doc_id,
-         |         text || ' contact user' || CAST(doc_id AS VARCHAR)
-         |           || '@example.com via '
-         |           || '10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.'
-         |           || CAST(doc_id % 100 AS VARCHAR)
-         |           || ' tel +41 555 010 '
-         |           || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') AS t
-         |  FROM documents
-         |  WHERE text IS NOT NULL AND length(text) > 0
-         |)
-         |SELECT doc_id,
-         |       CAST(len(regexp_extract_all(t, '$EmailPattern')) AS BIGINT) AS n_emails,
-         |       CAST(len(regexp_extract_all(t, '$PhonePattern')) AS BIGINT) AS n_phones,
-         |       CAST(len(regexp_extract_all(t, '$Ipv4Pattern')) AS BIGINT) AS n_ipv4,
-         |       regexp_replace(
-         |         regexp_replace(
-         |           regexp_replace(t, '$EmailPattern', '[EMAIL]', 'g'),
-         |           '$Ipv4Pattern', '[IP]', 'g'),
-         |         '$PhonePattern', '[PHONE]', 'g') AS redacted
-         |FROM inj ORDER BY doc_id""".stripMargin,
-    "text_filter_funnel" ->
-      s"""$dCte, feat AS (
-         |  SELECT CAST(length(text) AS BIGINT) AS n_chars,
-         |         CAST(len(toks) AS BIGINT) AS n_tokens,
-         |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-         |         CAST(len(list_filter(toks, t -> t IN $stopList)) AS BIGINT) AS n_stopwords
-         |  FROM d
-         |), staged AS (
-         |  SELECT n_chars,
-         |    CASE WHEN n_tokens < $FunnelMinTokens THEN '${FunnelStages(0)}'
-         |         WHEN CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-         |              < CAST($FunnelMinTtr AS DOUBLE) THEN '${FunnelStages(1)}'
-         |         WHEN CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE),
-         |                CAST(n_tokens AS DOUBLE) / CAST(100.0 AS DOUBLE))
-         |              + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE)
-         |                  - CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-         |              + CAST(0.3 AS DOUBLE)
-         |                  * (CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-         |              < CAST($QualityThreshold AS DOUBLE) THEN '${FunnelStages(2)}'
-         |         ELSE '${FunnelStages(3)}' END AS stage
-         |  FROM feat
-         |), cnt AS (
-         |  SELECT stage, count(*) AS n_docs,
-         |         CAST(sum(n_chars) AS BIGINT) AS n_chars
-         |  FROM staged GROUP BY 1
-         |), stages(stage) AS (VALUES ${FunnelStages.map(st => s"('$st')").mkString(", ")})
-         |SELECT s.stage,
-         |       coalesce(cnt.n_docs, 0) AS n_docs,
-         |       coalesce(cnt.n_chars, 0) AS n_chars,
-         |       CAST(coalesce(cnt.n_docs, 0) AS DOUBLE)
-         |         / CAST(sum(coalesce(cnt.n_docs, 0)) OVER () AS DOUBLE) AS share
-         |FROM stages s LEFT JOIN cnt USING (stage)
-         |ORDER BY stage""".stripMargin,
-    // The exact columns are plain SQL; the HLL++ estimate enters as the
-    // `approx_ok` verdict, which DuckDB predicts TRUE from first
-    // principles (bound = 5×rsd, see VocabApproxErrBound) — so a Spark
-    // estimate drifting out of tolerance hash-mismatches this row.
-    "text_vocab_sketch" ->
-      """WITH t AS (
-        |  SELECT lang,
-        |         unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                            t -> length(t) > 0)) AS tok
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND length(text) > 0
-        |)
-        |SELECT lang, count(*) AS n_tokens,
-        |       count(DISTINCT tok) AS vocab_exact,
-        |       TRUE AS approx_ok
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin
-  )
 }

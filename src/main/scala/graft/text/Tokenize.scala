@@ -59,6 +59,13 @@ object Tokenize {
   def tokenArray(text: Column, stopwords: Seq[String] = DefaultStopwords): Column =
     GraftFunctions.graftDocTerms(lower(text), typedLit(stopwords))
 
+  /** Whitespace tokens of the lowered `text` column, empty ones dropped:
+    * the token stream of the text-analysis, dedup and sampling
+    * families (the χ² canon above is [[tokenArray]]).
+    */
+  def whitespaceTokens: Column =
+    filter(split(lower(col("text")), "\\s+"), t => length(t) > 0)
+
   /** D4 admission predicate: both fields present and non-empty
     * (run_chi:62–65). Renames categoryCol → `category`.
     */

@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.col
 
 /** Whole-registry integrity net: every `SparkEntry.queries` entry must
-  * execute at sf0.001, return rows, have an oracle twin, and never plan
-  * an unbounded cartesian product. Catches a broken registration or a
-  * plan regression in ANY query before the driver does.
+  * execute at sf0.001, return rows, and never plan an unbounded
+  * cartesian product (its oracle twin is a mandatory `QuerySpec`
+  * field). Catches a broken registration or a plan regression in ANY
+  * query before the driver does.
   */
 class RegistrySpec extends SparkSpec {
 
@@ -19,7 +20,7 @@ class RegistrySpec extends SparkSpec {
     * other entry must stay lazy at build.
     */
   private val eagerAtBuild = SparkEntry.specs.collect {
-    case (n, QuerySpec(_, _: QuerySpec.Eager)) => n
+    case (n, q) if q.build.isInstanceOf[QuerySpec.Eager] => n
   }.toSet
 
   /** Entries whose build-time work is MEMOIZED per fixture dir
@@ -31,24 +32,12 @@ class RegistrySpec extends SparkSpec {
     */
   private val memoizedEager = SparkEntry.memoizedBuildQueries
 
-  /** Entries with DELIBERATELY no oracle SQL (docs/PLANS.md §"Rows-only
-    * registry entries"): results an independent engine cannot
-    * reproduce bit-for-bit. Each must carry its own in-query
-    * cross-check instead.
-    */
-  private val rowsOnly = Set.empty[String]
-  // (Through r9 `text_vocab_sketch` lived here; its registered
-  // projection now folds the HLL estimate into a DuckDB-predictable
-  // `approx_ok` verdict, so every registered query is oracle-hashed.)
-
-  test("every registered query has an oracle twin (column-named match)") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(o.subsetOf(q), s"oracle without query: ${o -- q}")
-    assert(rowsOnly.subsetOf(q), s"rows-only allowlist names unknown query: ${rowsOnly -- q}")
-    assert(q -- o === rowsOnly,
-      s"queries without oracle (must be in the rows-only allowlist): ${q -- o -- rowsOnly}; " +
-        s"allowlisted but now oracle-backed (remove from allowlist): ${rowsOnly & o}")
+  test("the registry rejects a query name declared in two families") {
+    val spec = QuerySpec((s, _) => s.range(1).toDF(), "SELECT 1")
+    val err = intercept[IllegalArgumentException](SparkEntry.registry(
+      Map("a" -> spec, "dup_q" -> spec), Map("b" -> spec), Map("dup_q" -> spec)))
+    assert(err.getMessage.endsWith(": dup_q"))
+    assert(SparkEntry.registry(Map("a" -> spec), Map("b" -> spec)).keySet === Set("a", "b"))
   }
 
   test("every registered query executes at sf0.001 with rows and sane plans") {
@@ -139,14 +128,10 @@ class RegistrySpec extends SparkSpec {
       assert(ranAtBuild == eagerAtBuild,
         s"declared-eager entries no longer run a job at build " +
           s"(update their QuerySpec): ${eagerAtBuild -- ranAtBuild}")
-      assert(memoizedEager.subsetOf(SparkEntry.queries.keySet),
-        s"memoizedEager names unknown queries: ${memoizedEager -- SparkEntry.queries.keySet}")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("query specs pin the eager, memoized and scoped-conf sets") {
-    assert(SparkEntry.specs.keySet.subsetOf(SparkEntry.queries.keySet),
-      s"specs for unknown queries: ${SparkEntry.specs.keySet -- SparkEntry.queries.keySet}")
     assert(eagerAtBuild === Set("dedup_bucket_stats", "dedup_source_overlap",
       "dedup_decontaminate_bloom", "dedup_substring", "sim_ann_recall",
       "sim_cosine_ann_ivf", "sim_cosine_ann_pq", "sim_semdedup",

@@ -345,10 +345,4 @@ class DedupSpec extends SparkSpec {
     assert(rows.head.getLong(4) === 0L)
     assert(rows.head.getDouble(5) === 0.0)
   }
-
-  test("clusterSizeHistogram over propagated labels") {
-    // components {1,2,3} (path) and {10,11} → one 3-cluster, one 2-cluster
-    val labels = Dedup.propagateDriver(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
-    assert(Dedup.clusterSizeHistogram(labels) === Seq((2L, 1L), (3L, 1L)))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{QuerySpec, SparkEntry, SparkSpec}
 
 /** Explain-based plan hygiene for the relational workout — these are the
   * assertions the scale notes in [[Relational]]'s scaladoc point at.
@@ -364,7 +364,11 @@ class RelationalSpec extends SparkSpec {
     // so the reduce-partition count must not change a single value.
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
-    def run() = Relational.specs.keys.toSeq.sorted.map { q =>
+    val wideAgg = Relational.specs.collect {
+      case (q, spec) if spec.conf ne QuerySpec.NoConf => q
+    }
+    assert(wideAgg.size === 3)
+    def run() = wideAgg.toSeq.sorted.map { q =>
       q -> SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq
     }
     val atDefault = run()
