@@ -1804,9 +1804,8 @@ object Dedup {
     * (duplicate CTE names are illegal in a single WITH).
     */
   private val dBody: String =
-    """  SELECT doc_id,
-      |         list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |                     t -> length(t) > 0) AS toks
+    s"""  SELECT doc_id,
+      |         ${graft.text.Tokenize.whitespaceTokensSql} AS toks
       |  FROM documents
       |  WHERE text IS NOT NULL AND length(text) > 0""".stripMargin
 
@@ -1974,8 +1973,7 @@ object Dedup {
   private val decontamCtes: String =
     s"""WITH dd AS (
        |  SELECT doc_id, lang, source, n_chars,
-       |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |                     t -> length(t) > 0) AS toks
+       |         ${graft.text.Tokenize.whitespaceTokensSql} AS toks
        |  FROM documents
        |  WHERE text IS NOT NULL AND length(text) > 0
        |), shd AS (

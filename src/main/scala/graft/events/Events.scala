@@ -61,6 +61,23 @@ object Events {
         max(col("ts")).as("session_end"))
   }
 
+  /** The oracle twin of [[sessions]]' lag → gap flag → running-sum
+    * session id, shared by both session oracles.
+    */
+  private val sessionsCte: String =
+    s"""WITH flagged AS (
+       |  SELECT user_id, ts, event_id,
+       |    CASE WHEN lag(ts) OVER w IS NULL
+       |           OR CAST(epoch(ts) AS BIGINT) - CAST(epoch(lag(ts) OVER w) AS BIGINT) > ${SessionGapMinutes * 60} THEN 1 ELSE 0 END AS new_session
+       |  FROM events
+       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+       |), sessions AS (
+       |  SELECT user_id, ts,
+       |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
+       |  FROM flagged
+       |)""".stripMargin
+
   lazy val specs: Map[String, QuerySpec] = Map(
     // Tumbling 1-hour windows: count + exact sum per (hour, type).
     // Delegates to the shared batch/streaming transform so the oracle
@@ -98,18 +115,7 @@ object Events {
     // classic lag → gap flag → running-sum session id, all window ops.
     "events_sessionize" -> QuerySpec((s, dir) =>
       sessions(s, dir).orderBy("user_id", "session_seq"),
-      s"""WITH flagged AS (
-         |  SELECT user_id, ts, event_id,
-         |    CASE WHEN lag(ts) OVER w IS NULL
-         |           OR CAST(epoch(ts) AS BIGINT) - CAST(epoch(lag(ts) OVER w) AS BIGINT) > ${SessionGapMinutes * 60} THEN 1 ELSE 0 END AS new_session
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         |), sessions AS (
-         |  SELECT user_id, ts,
-         |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-         |  FROM flagged
-         |)
+      s"""$sessionsCte
          |SELECT user_id, session_seq, count(*) AS n_events,
          |  min(ts) AS session_start, max(ts) AS session_end
          |FROM sessions
@@ -126,18 +132,7 @@ object Events {
         .orderBy(col("n_events").desc, col("duration_us").desc,
           col("user_id").asc, col("session_seq").asc)
         .limit(TopSessionsK),
-      s"""WITH flagged AS (
-         |  SELECT user_id, ts, event_id,
-         |    CASE WHEN lag(ts) OVER w IS NULL
-         |           OR CAST(epoch(ts) AS BIGINT) - CAST(epoch(lag(ts) OVER w) AS BIGINT) > ${SessionGapMinutes * 60} THEN 1 ELSE 0 END AS new_session
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         |), sessions AS (
-         |  SELECT user_id, ts,
-         |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-         |  FROM flagged
-         |), agg AS (
+      s"""$sessionsCte, agg AS (
          |  SELECT user_id, session_seq, count(*) AS n_events,
          |    min(ts) AS session_start, max(ts) AS session_end,
          |    epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us

@@ -125,10 +125,6 @@ object GraftFunctions {
   def graftGramStats(toks: Column, n: Column): Column =
     call_function("graft_gram_stats", toks, n)
 
-  /** Column-API form of [[Winnow]]. */
-  def graftWinnow(shingles: Column, k: Column): Column =
-    call_function("graft_winnow", shingles, k)
-
   /** Column-API form of [[WinnowGrams]]. */
   def graftWinnowGrams(toks: Column, n: Column, k: Column): Column =
     call_function("graft_winnow_grams", toks, n, k)
@@ -244,8 +240,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       RunStats(c.head)))
     ext.injectFunction(fn("graft_gram_stats", classOf[GramStats], 2)(c =>
       GramStats(c(0), c(1))))
-    ext.injectFunction(fn("graft_winnow", classOf[Winnow], 2)(c =>
-      Winnow(c(0), c(1))))
     ext.injectFunction(fn("graft_winnow_grams", classOf[WinnowGrams], 3)(c =>
       WinnowGrams(c(0), c(1), c(2))))
     ext.injectFunction(fn("graft_gram_keys", classOf[GramKeys], 3)(c =>

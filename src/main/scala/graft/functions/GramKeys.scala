@@ -6,17 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.unsafe.Platform
 
 /** Per-document DISTINCT hashed word-n-gram keys, fused:
   * `graft_gram_keys(toks, n, production)` ≡ the sorted distinct set of
   * `PortableHash.key64(concat_ws(" ", slice(toks, i, n)), production)`
   * over every window i — but no gram STRING, no shingle array, and no
-  * HOF `transform` ever materialize. Each window's bytes stream
-  * straight into the digest (token bytes + single-space separators,
-  * nulls skipped — exactly `concat_ws(" ", …)`'s output bytes), the
-  * same fusion [[WinnowGrams]] applies to the fingerprint sketch.
+  * HOF `transform` ever materialize: each window's bytes are assembled
+  * and hashed per the [[PortableHash]] gram-hash contract.
   *
   * This is the map-side head of every shingle-posting chain
   * (n-gram Jaccard, containment, decontamination, source overlap).
@@ -28,13 +24,6 @@ import org.apache.spark.unsafe.Platform
   * `collect_set` aggregates are duplicate-insensitive, so dropping
   * repeats early is semantics-preserving — DedupSpec pins chain ≡
   * kernel), and the whole pass stays inside whole-stage codegen.
-  *
-  * Hash modes mirror [[graft.functions.PortableHash]] exactly:
-  *  - production=false (oracle): top 60 bits of the md5 prefix —
-  *    bit-identical to `graft_md5_bits(gram) >>> 4` and therefore to
-  *    the DuckDB oracle's `conv(substring(md5(g),1,15),16,10)`;
-  *  - production=true: `xxhash64(gram)` — Spark's seed-42 XXH64 over
-  *    the same UTF-8 bytes.
   *
   * Fewer than n tokens (or n ≤ 0) → empty array, matching the chain's
   * `when(size(toks) < n, array())` guard.
@@ -271,93 +260,18 @@ object GramKeys {
     c
   }
 
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Spark's `xxhash64(string)` seed. */
-  private val XxSeed = 42L
-
-  private val Space = Array(' '.toByte)
-
   /** Every window key IN WINDOW ORDER (the raw long[] both entry
-    * points share). One window = the bytes `concat_ws(" ",
-    * slice(toks, w+1, n))` produces (non-null token bytes joined by
-    * single spaces, nulls skipped). Empty for n ≤ 0 or short arrays.
+    * points share): [[PortableHash.key64]] of each window.
     */
   private[functions] def windowKeys(arr: ArrayData, n: Int,
       production: Boolean): Array[Long] = {
-    val len = arr.numElements()
-    val m = len - n + 1
-    if (n <= 0 || m <= 0) return Array.emptyLongArray
-    val toks = new Array[Array[Byte]](len)
-    var i = 0
-    while (i < len) {
-      val s = arr.getUTF8String(i)
-      toks(i) = if (s == null) null else s.getBytes
-      i += 1
-    }
-    val out = new Array[Long](m)
-    if (production) {
-      // xxhash64 needs contiguous bytes: one scratch buffer, reused
-      // across windows, grown to the largest window seen.
-      var buf = new Array[Byte](64)
-      var w = 0
-      while (w < m) {
-        // a FLAG tracks "no token emitted yet", not p > 0: an EMPTY
-        // first token must still force a separator before the next
-        // one (concat_ws(" ", "", "a") = " a")
-        var need = 0
-        var firstTok = true
-        var j = w
-        while (j < w + n) {
-          if (toks(j) != null) {
-            if (!firstTok) need += 1
-            need += toks(j).length
-            firstTok = false
-          }
-          j += 1
-        }
-        if (buf.length < need) buf = new Array[Byte](need.max(buf.length * 2))
-        var p = 0
-        firstTok = true
-        j = w
-        while (j < w + n) {
-          if (toks(j) != null) {
-            if (!firstTok) { buf(p) = ' '.toByte; p += 1 }
-            System.arraycopy(toks(j), 0, buf, p, toks(j).length)
-            p += toks(j).length
-            firstTok = false
-          }
-          j += 1
-        }
-        out(w) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, p, XxSeed)
-        w += 1
-      }
-    } else {
-      val md = digest.get()
-      var w = 0
-      while (w < m) {
-        md.reset()
-        var firstTok = true
-        var j = w
-        while (j < w + n) {
-          if (toks(j) != null) {
-            if (!firstTok) md.update(Space)
-            md.update(toks(j))
-            firstTok = false
-          }
-          j += 1
-        }
-        val d = md.digest()
-        val bits = ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-          ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-          ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-          ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-        out(w) = bits >>> 4
-        w += 1
-      }
+    val ws = new PortableHash.Windows(arr, n)
+    val out = new Array[Long](ws.count)
+    var w = 0
+    while (w < ws.count) {
+      ws.assemble(w)
+      out(w) = ws.key64(production)
+      w += 1
     }
     out
   }

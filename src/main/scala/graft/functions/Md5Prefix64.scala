@@ -6,27 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** First 8 bytes of md5(utf8(s)) as a big-endian long, with codegen.
+/** First 8 bytes of md5(utf8(s)) as a big-endian long, with codegen:
+  * `graft_md5_bits(s)` = [[PortableHash.hash64]]'s oracle mode, the
+  * hash every [[PortableHash]] oracle-mode slice is cut from.
   *
-  * This is the engine's oracle-mode hash primitive. The md5 HEX DIGIT
-  * arithmetic the DuckDB oracle uses (digit p of the lowercase hex
-  * string = nibble p of the digest) means every derived value is just a
-  * bit-slice of this long:
-  *
-  *  - `base28` (7 hex digits) ≡ `graft_md5_bits(s) >>> 36`
-  *  - `key64` (15 hex digits) ≡ `graft_md5_bits(s) >>> 4`
-  *  - SimHash bit b          ≡ `(graft_md5_bits(t) >>> (63−b)) & 1`
-  *
-  * so the SQL-level formulation — `conv(substring(md5(c), 1, k), 16,
-  * 10)` and the 16 `instr('0123…', substring(h, p, 1))` digit columns —
-  * is replaced by ONE digest call plus integer shifts, all inside
+  * The DuckDB oracle's md5 HEX DIGIT arithmetic (digit p of the
+  * lowercase hex string = nibble p of the digest) makes each of its
+  * `conv(substring(md5(c), 1, k), 16, 10)` values and `instr('0123…',
+  * substring(h, p, 1))` digit columns a bit-slice of this long, so the
+  * Spark side runs ONE digest call plus integer shifts inside
   * whole-stage codegen, with BIT-IDENTICAL results (Md5Prefix64Spec
-  * pins the equivalences; the DuckDB oracle SQL is untouched). It also
-  * unifies the oracle and production (xxhash64) simhash paths into the
-  * same shift/mask extraction — only the hash long differs.
-  *
-  * Per-call digest instances are cached in a ThreadLocal (Spark's own
-  * `Md5` expression allocates one per row via DigestUtils).
+  * pins the equivalences; the DuckDB oracle SQL is untouched).
   */
 case class Md5Prefix64(child: Expression) extends UnaryExpression {
 
@@ -50,19 +40,6 @@ case class Md5Prefix64(child: Expression) extends UnaryExpression {
 
 object Md5Prefix64 {
 
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** Called from generated code — must stay public and static-shaped. */
-  def hash64(s: UTF8String): Long = {
-    val md = digest.get()
-    md.reset()
-    val d = md.digest(s.getBytes)
-    ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-  }
+  def hash64(s: UTF8String): Long = PortableHash.hash64(s, production = false)
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.Platform
 
 /** MinHash signature straight off the token array:
   * `graft_minhash(toks, n, k, production)` = array of the k affine
@@ -17,18 +16,13 @@ import org.apache.spark.unsafe.Platform
   * The column chain explodes one row per shingle and funnels 16 min
   * aggregates through a doc_id exchange; like [[Simhash]], this kernel
   * folds the minima per document in ONE narrow map — no explode, no
-  * aggregate, no corpus shuffle in the signature stage. Gram bytes
-  * assemble in a reused buffer exactly as `concat_ws(" ", window)`
-  * would (nulls skipped, single-space joins, all-null windows hash the
-  * empty string), so signatures are bit-identical to the chain in both
-  * hash modes (DedupSpec pins it; StreamingNearDup.sigOf is the
-  * per-string scalar twin of the same arithmetic).
-  *
-  * Hash modes ([[PortableHash]] scope): production=false → base28 =
-  * top 28 bits of md5 ([[Md5Prefix64]]); true → xxhash64 (seed 42)
-  * mod 2^28. Coefficients are the canonical md5-seeded family
-  * ([[MinHashSig.coeffs]] — [[graft.dedup.Dedup.minHashCoeffs]]
-  * delegates here).
+  * aggregate, no corpus shuffle in the signature stage. Each window's
+  * base28 follows the [[PortableHash]] gram-hash contract, so
+  * signatures are bit-identical to the chain in both hash modes
+  * (DedupSpec and GramKeysSpec pin it; StreamingNearDup.sigOf calls
+  * [[MinHashSig.sig]] directly). Coefficients are the canonical
+  * md5-seeded family ([[MinHashSig.coeffs]] —
+  * [[graft.dedup.Dedup.minHashCoeffs]] delegates here).
   */
 case class MinHashSig(first: Expression, second: Expression,
     third: Expression, fourth: Expression) extends QuaternaryExpression {
@@ -71,7 +65,6 @@ case class MinHashSig(first: Expression, second: Expression,
 object MinHashSig {
 
   val P = 2147483647L
-  private val XxSeed = 42L
 
   /** The canonical md5-seeded affine coefficient family: a_i ∈ [1, P−1],
     * b_i ∈ [0, P−1] from the first 4 digest bytes of "a$i"/"b$i". One
@@ -84,16 +77,6 @@ object MinHashSig {
       md.digest(s.getBytes("UTF-8")).take(4)
         .foldLeft(0L)((a, b) => (a << 8) | (b & 0xffL))
     (0 until k).map(i => (h(s"a$i") % (P - 1) + 1, h(s"b$i") % P))
-  }
-
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  // per-thread reusable gram buffer (grams are short; grown on demand)
-  private val buffer = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](256)
   }
 
   private val coeffCache =
@@ -113,55 +96,15 @@ object MinHashSig {
 
   /** Called from generated code. */
   def sig(arr: ArrayData, n: Int, k: Int, production: Boolean): ArrayData = {
-    val len = arr.numElements()
-    val m = len - n + 1
-    if (n <= 0 || k <= 0 || m <= 0) return null
-    val toks = new Array[Array[Byte]](len)
-    var i = 0
-    while (i < len) {
-      val s = arr.getUTF8String(i)
-      toks(i) = if (s == null) null else s.getBytes
-      i += 1
-    }
+    val ws = new PortableHash.Windows(arr, n)
+    if (k <= 0 || ws.count == 0) return null
     val cs = flatCoeffs(k)
-    val md = digest.get()
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
-    var buf = buffer.get()
     var w = 0
-    while (w < m) {
-      // assemble the gram bytes concat_ws-style into the reused buffer
-      var blen = 0
-      var first = true
-      var j = w
-      while (j < w + n) {
-        val t = toks(j)
-        if (t != null) {
-          val need = blen + t.length + 1
-          if (need > buf.length) {
-            buf = java.util.Arrays.copyOf(buf, math.max(need, buf.length * 2))
-            buffer.set(buf)
-          }
-          if (!first) { buf(blen) = ' '.toByte; blen += 1 }
-          System.arraycopy(t, 0, buf, blen, t.length); blen += t.length
-          first = false
-        }
-        j += 1
-      }
-      val base =
-        if (production) {
-          val h = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET,
-            blen, XxSeed)
-          ((h % (1L << 28)) + (1L << 28)) % (1L << 28)
-        } else {
-          md.reset()
-          md.update(buf, 0, blen)
-          val d = md.digest()
-          (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-            ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-            ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-            ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 36
-        }
+    while (w < ws.count) {
+      ws.assemble(w)
+      val base = ws.base28(production)
       var c = 0
       while (c < k) {
         val h = (cs(2 * c) * base + cs(2 * c + 1)) % P

@@ -1,7 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, functions}
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's two hash modes for candidate-generation keys:
   *
@@ -23,6 +27,24 @@ import org.apache.spark.sql.functions._
   * 64-bit identity at 10^10 documents makes birthday collisions an
   * expected event, and exact dedup would silently drop distinct
   * documents — cryptographic width is correctness there, not cost.
+  *
+  * THE GRAM-HASH CONTRACT — one definition for every hashed word
+  * n-gram (the Column chains here, the [[GramKeys]], [[MinHashSig]] and
+  * [[WinnowGrams]] kernels, and the streaming twins):
+  *
+  *  1. window w's bytes are what `concat_ws(" ", slice(toks, w+1, n))`
+  *     produces: the UTF-8 bytes of the non-null tokens joined by
+  *     single spaces, nulls skipped (an all-null window is the empty
+  *     string; an empty first token still forces a separator) —
+  *     [[Windows]] assembles them;
+  *  2. those bytes hash with md5 in oracle mode ([[md5Top64]]: the
+  *     digest's first 8 bytes as a big-endian long) or with Spark's
+  *     seed-42 XXH64 in production mode ([[xxhash64]] ≡ `xxhash64(col)`);
+  *  3. the hash is sliced to [[key64]] (60 bits / full 64) or
+  *     [[base28]] (28 bits). Each slice sits next to its Column form
+  *     so the scalar and Column sides cannot drift.
+  *
+  * Fewer than n tokens (or n ≤ 0) means no windows.
   */
 object PortableHash {
 
@@ -47,8 +69,13 @@ object PortableHash {
     * (Md5Prefix64Spec pins the equivalence).
     */
   def base28(c: Column, production: Boolean): Column =
-    if (production) pmod(xxhash64(c), lit(1L << 28))
+    if (production) pmod(functions.xxhash64(c), lit(1L << 28))
     else shiftrightunsigned(GraftFunctions.graftMd5Bits(c), 36)
+
+  /** Scalar [[base28]] of `bytes[0, len)`. */
+  def base28(bytes: Array[Byte], len: Int, production: Boolean): Long =
+    if (production) java.lang.Math.floorMod(xxhash64(bytes, len), 1L << 28)
+    else md5Top64(bytes, len) >>> 36
 
   /** Wide join/bucket key of a string column: 60 bits in oracle mode
     * (15 hex digits — the widest md5 prefix that converts exactly —
@@ -56,6 +83,111 @@ object PortableHash {
     * production mode.
     */
   def key64(c: Column, production: Boolean): Column =
-    if (production) xxhash64(c)
+    if (production) functions.xxhash64(c)
     else shiftrightunsigned(GraftFunctions.graftMd5Bits(c), 4)
+
+  /** Scalar [[key64]] of `bytes[0, len)`. */
+  def key64(bytes: Array[Byte], len: Int, production: Boolean): Long =
+    if (production) xxhash64(bytes, len) else md5Top64(bytes, len) >>> 4
+
+  /** Spark's `xxhash64` seed. */
+  private val XxSeed = 42L
+
+  private val digest = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** The full 16-byte md5 digest of `bytes[0, len)` (a fresh array). */
+  private def md5(bytes: Array[Byte], len: Int): Array[Byte] = {
+    val md = digest.get()
+    md.reset()
+    md.update(bytes, 0, len)
+    md.digest()
+  }
+
+  /** First 8 bytes of md5(`bytes[0, len)`) as a big-endian long. */
+  private def md5Top64(bytes: Array[Byte], len: Int): Long = {
+    val d = md5(bytes, len)
+    ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
+      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
+      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
+      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
+  }
+
+  /** Spark's `xxhash64` of `bytes[0, len)`. */
+  private def xxhash64(bytes: Array[Byte], len: Int): Long =
+    XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, len, XxSeed)
+
+  /** The un-sliced hash of one string: md5 top 64 bits in oracle mode
+    * (`graft_md5_bits`), `xxhash64(s)` in production mode — the per-token
+    * hash SimHash votes on.
+    */
+  def hash64(s: UTF8String, production: Boolean): Long =
+    if (production)
+      XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, XxSeed)
+    else {
+      val b = s.getBytes
+      md5Top64(b, b.length)
+    }
+
+  /** UTF-8 bytes of each element of a string array; nulls stay null. */
+  private def utf8Bytes(arr: ArrayData): Array[Array[Byte]] = {
+    val len = arr.numElements()
+    val out = new Array[Array[Byte]](len)
+    var i = 0
+    while (i < len) {
+      val s = arr.getUTF8String(i)
+      out(i) = if (s == null) null else s.getBytes
+      i += 1
+    }
+    out
+  }
+
+  // per-thread window buffer (grams are short; grown on demand)
+  private val buffer = new ThreadLocal[Array[Byte]] {
+    override def initialValue(): Array[Byte] = new Array[Byte](256)
+  }
+
+  /** The [[count]] word n-gram windows of one token array:
+    * [[assemble]] writes window w's contract bytes into a per-thread
+    * buffer reused across windows and rows, and the hashes read them.
+    * One live instance per thread.
+    */
+  final class Windows(arr: ArrayData, n: Int) {
+    private val toks = utf8Bytes(arr)
+    val count: Int = if (n <= 0) 0 else math.max(0, toks.length - n + 1)
+    private var bytes: Array[Byte] = buffer.get()
+    private var length = 0
+
+    def assemble(w: Int): Unit = {
+      var p = 0
+      // a FLAG tracks "no token emitted yet", not p > 0: an EMPTY first
+      // token must still force a separator (concat_ws(" ", "", "a") = " a")
+      var first = true
+      var j = w
+      while (j < w + n) {
+        val t = toks(j)
+        if (t != null) {
+          val need = p + t.length + 1
+          if (need > bytes.length) {
+            bytes = java.util.Arrays.copyOf(bytes, math.max(need, bytes.length * 2))
+            buffer.set(bytes)
+          }
+          if (!first) { bytes(p) = ' '.toByte; p += 1 }
+          System.arraycopy(t, 0, bytes, p, t.length)
+          p += t.length
+          first = false
+        }
+        j += 1
+      }
+      length = p
+    }
+
+    def key64(production: Boolean): Long =
+      PortableHash.key64(bytes, length, production)
+    def base28(production: Boolean): Long =
+      PortableHash.base28(bytes, length, production)
+    def md5: Array[Byte] = PortableHash.md5(bytes, length)
+  }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -26,9 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * DedupSpec pins kernel ≡ column chain in both hash modes; the DuckDB
   * oracle keeps its positional digit arithmetic.
   *
-  * `production` selects the hash (the [[PortableHash]] scope): false →
-  * oracle-mode [[Md5Prefix64]] bits, true → xxhash64 (seed 42,
-  * bit-identical to Spark's `xxhash64(col)`).
+  * `production` selects the per-token hash ([[PortableHash.hash64]]).
   */
 case class Simhash(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -63,8 +61,6 @@ case class Simhash(left: Expression, right: Expression)
 
 object Simhash {
 
-  private val XxSeed = 42L // Spark's xxhash64 default seed
-
   /** Called from generated code. */
   def sig(arr: ArrayData, production: Boolean): InternalRow = {
     val n = arr.numElements()
@@ -73,11 +69,7 @@ object Simhash {
     while (i < n) {
       val s = arr.getUTF8String(i)
       if (s != null) {
-        val h =
-          if (production)
-            XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
-              s.numBytes, XxSeed)
-          else Md5Prefix64.hash64(s)
+        val h = PortableHash.hash64(s, production)
         var b = 0
         while (b < 64) {
           votes(b) += (if (((h >>> (63 - b)) & 1L) == 1L) 1 else -1)

@@ -1,64 +1,28 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Winnowing fingerprint straight off the shingle array:
-  * `graft_winnow(shingles, k)` = the concatenation of the k SMALLEST
-  * shingle md5 digests (lowercase hex, ascending) — bit-identical to
-  * `concat_ws("", slice(array_sort(transform(shingles, md5)), 1, k))`
-  * because lexicographic order on lowercase hex IS unsigned byte order
-  * on the digest.
+/** Winnowing fingerprint fused with the gram construction:
+  * `graft_winnow_grams(toks, n, k)` = the concatenation of the k
+  * SMALLEST window md5 digests (lowercase hex, ascending) — ≡
+  * `concat_ws("", slice(array_sort(transform(shingleOfN(toks, n), md5)),
+  * 1, k))` (`Analysis.winnowFpHof`), because lexicographic order on
+  * lowercase hex IS unsigned byte order on the digest.
   *
-  * The Column form md5-hashes every shingle through a non-codegen HOF
-  * `transform`, materializes every 32-char hex string, fully sorts
-  * them, then keeps k=4: O(n log n) string sort plus n hex
-  * allocations for a 4-digest answer. This kernel keeps a bounded
-  * k-array of raw digests in ONE pass (most elements exit on a single
-  * compare against the current k-th), hex-encodes only the winners,
-  * and stays inside whole-stage codegen. Null elements are skipped —
-  * the Column chain's md5(null)=null sorts last and concat_ws drops
-  * it, so the forms agree on any input (AnalysisSpec pins equality).
-  */
-case class Winnow(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_winnow expects (array<string>, int), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_winnow"
-
-  override protected def nullSafeEval(arr: Any, k: Any): Any =
-    Winnow.fp(arr.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, k) => s"graft.functions.Winnow.fp($a, $k)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Winnow =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[Winnow]] fused with the gram construction itself:
-  * `graft_winnow_grams(toks, n, k)` ≡ `graft_winnow(shingleOfN(toks,
-  * n), k)` — but no gram string, no shingle array, and no HOF
-  * `transform` ever materialize. Each window's bytes stream straight
-  * into the digest (token bytes + single-space separators, nulls
-  * skipped — exactly `concat_ws(" ", slice(toks, i, n))`'s output
-  * bytes), so the per-document cost is one token-bytes pass plus k
-  * bounded compares per window. The same composition step GramStats
-  * took for the repetition audit, applied to the fingerprint sketch.
+  * The Column form materializes every gram string, md5-hashes it
+  * through a non-codegen HOF `transform` into a 32-char hex string,
+  * fully sorts them, then keeps k=4: O(n log n) string sort plus n hex
+  * allocations for a 4-digest answer. This kernel hashes each window
+  * per the [[PortableHash]] gram-hash contract (oracle md5 only — the
+  * fingerprint IS the digest), keeps a bounded k-array of raw digests
+  * in ONE pass (most windows exit on a single compare against the
+  * current k-th), hex-encodes only the winners, and stays inside
+  * whole-stage codegen (AnalysisSpec pins kernel ≡ HOF form).
   */
 case class WinnowGrams(first: Expression, second: Expression,
     third: Expression) extends TernaryExpression {
@@ -90,13 +54,7 @@ case class WinnowGrams(first: Expression, second: Expression,
 
 object Winnow {
 
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   private val HexChars = "0123456789abcdef".getBytes
-  private val Space = Array(' '.toByte)
 
   /** Unsigned byte-wise digest compare (≡ lowercase-hex string order). */
   private def cmp(a: Array[Byte], b: Array[Byte]): Int = {
@@ -151,56 +109,15 @@ object Winnow {
   }
 
   /** Called from generated code. */
-  def fp(arr: ArrayData, k: Int): UTF8String = {
-    val n = arr.numElements()
-    if (k <= 0 || n == 0) return UTF8String.EMPTY_UTF8
-    val md = digest.get()
-    val best = new Array[Array[Byte]](k)
-    var cnt = 0
-    var i = 0
-    while (i < n) {
-      val s = arr.getUTF8String(i)
-      if (s != null) {
-        md.reset()
-        cnt = insert(best, cnt, k, md.digest(s.getBytes))
-      }
-      i += 1
-    }
-    encode(best, cnt)
-  }
-
-  /** Called from generated code. Digest of window w streams the bytes
-    * `concat_ws(" ", slice(toks, w+1, n))` would produce: non-null
-    * token bytes joined by single spaces, nulls skipped.
-    */
   def fpGrams(arr: ArrayData, n: Int, k: Int): UTF8String = {
-    val len = arr.numElements()
-    val m = len - n + 1
-    if (k <= 0 || n <= 0 || m <= 0) return UTF8String.EMPTY_UTF8
-    val toks = new Array[Array[Byte]](len)
-    var i = 0
-    while (i < len) {
-      val s = arr.getUTF8String(i)
-      toks(i) = if (s == null) null else s.getBytes
-      i += 1
-    }
-    val md = digest.get()
+    val ws = new PortableHash.Windows(arr, n)
+    if (k <= 0 || ws.count == 0) return UTF8String.EMPTY_UTF8
     val best = new Array[Array[Byte]](k)
     var cnt = 0
     var w = 0
-    while (w < m) {
-      md.reset()
-      var first = true
-      var j = w
-      while (j < w + n) {
-        if (toks(j) != null) {
-          if (!first) md.update(Space)
-          md.update(toks(j))
-          first = false
-        }
-        j += 1
-      }
-      cnt = insert(best, cnt, k, md.digest())
+    while (w < ws.count) {
+      ws.assemble(w)
+      cnt = insert(best, cnt, k, ws.md5)
       w += 1
     }
     encode(best, cnt)

@@ -379,8 +379,7 @@ object Sampling {
       // div); the single double division comes last
       s"""WITH d AS (
          |  SELECT lang,
-         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                     t -> length(t) > 0) AS toks
+         |         ${graft.text.Tokenize.whitespaceTokensSql} AS toks
          |  FROM documents
          |  WHERE text IS NOT NULL AND length(text) > 0
          |), pl AS (
@@ -529,8 +528,7 @@ object Sampling {
     s"""WITH hx AS (
        |  SELECT doc_id,
        |         substr(md5('$PackSalt' || CAST(doc_id AS VARCHAR)), 1, 7) AS hx,
-       |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |                     t -> length(t) > 0) AS toks
+       |         ${graft.text.Tokenize.whitespaceTokensSql} AS toks
        |  FROM documents
        |  WHERE text IS NOT NULL AND length(text) > 0
        |), b AS (

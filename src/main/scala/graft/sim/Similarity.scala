@@ -114,35 +114,29 @@ object Similarity {
     */
   val MaxSemCell = 1000
 
-  /** Deterministic ±1 hyperplane weights: plane p, dim j gets the parity
-    * of the first hex digit of md5("p,j"). Seeded data, not code — both
-    * engines receive these as plain literals.
+  /** Deterministic ±1 hyperplane weights for planes `from until until`:
+    * plane p, dim j gets the parity of the first hex digit of
+    * md5("${tag}p,j"). Seeded data, not code — both engines receive
+    * these as plain literals.
     */
-  lazy val planes: IndexedSeq[IndexedSeq[Int]] = {
+  private def signPlanes(tag: String, from: Int, until: Int): IndexedSeq[IndexedSeq[Int]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until NumPlanes).map { p =>
+    (from until until).map { p =>
       (0 until Dim).map { j =>
-        val h = md.digest(s"$p,$j".getBytes("UTF-8"))
+        val h = md.digest(s"$tag$p,$j".getBytes("UTF-8"))
         if (((h(0) >> 4) & 1) == 1) 1 else -1
       }
     }
   }
 
+  /** The near-dup hyperplanes (`"p,j"`). */
+  lazy val planes = signPlanes("", 0, NumPlanes)
+
   /** Per-table ±1 hyperplanes for the multi-table ANN arm — a separate
     * md5-seeded family (`"t:p,j"`) so the tables are independent of
     * each other and of the near-dup [[planes]].
     */
-  lazy val annPlanes: IndexedSeq[IndexedSeq[IndexedSeq[Int]]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until AnnTables).map { t =>
-      (0 until AnnPlanesPerTable).map { p =>
-        (0 until Dim).map { j =>
-          val h = md.digest(s"$t:$p,$j".getBytes("UTF-8"))
-          if (((h(0) >> 4) & 1) == 1) 1 else -1
-        }
-      }
-    }
-  }
+  lazy val annPlanes = (0 until AnnTables).map(t => signPlanes(s"$t:", 0, AnnPlanesPerTable))
 
   /** Sign bits for [[embDecontaminate]]'s eval-side direction buckets
     * (a third md5-seeded ±1 family, `"e:p,j"` — independent of
@@ -156,15 +150,7 @@ object Similarity {
     * bound work is one dot per non-empty bucket.
     */
   val ScreenPlanes = 16
-  lazy val screenPlanes: IndexedSeq[IndexedSeq[Int]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until ScreenPlanes).map { p =>
-      (0 until Dim).map { j =>
-        val h = md.digest(s"e:$p,$j".getBytes("UTF-8"))
-        if (((h(0) >> 4) & 1) == 1) 1 else -1
-      }
-    }
-  }
+  lazy val screenPlanes = signPlanes("e:", 0, ScreenPlanes)
 
   /** Sign bits for the SECOND bound level inside each screen bucket
     * (plane indices continue the same md5-seeded `"e:p,j"` family, so
@@ -187,15 +173,7 @@ object Similarity {
     * and the oracle hash — does not depend on it.
     */
   val ScreenSubPlanes: Int = 20
-  lazy val screenSubPlanes: IndexedSeq[IndexedSeq[Int]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (ScreenPlanes until ScreenPlanes + ScreenSubPlanes).map { p =>
-      (0 until Dim).map { j =>
-        val h = md.digest(s"e:$p,$j".getBytes("UTF-8"))
-        if (((h(0) >> 4) & 1) == 1) 1 else -1
-      }
-    }
-  }
+  lazy val screenSubPlanes = signPlanes("e:", ScreenPlanes, ScreenPlanes + ScreenSubPlanes)
 
   /** Plane count for the THIRD bound level (sub-sub-cells inside each
     * sub-cell; plane indices continue the md5 `"e:p,j"` family after
@@ -216,16 +194,8 @@ object Similarity {
     * docs/BENCH_NOTES.md r15.
     */
   val ScreenSubSubPlanes: Int = 12
-  lazy val screenSubSubPlanes: IndexedSeq[IndexedSeq[Int]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val base = ScreenPlanes + ScreenSubPlanes
-    (base until base + ScreenSubSubPlanes).map { p =>
-      (0 until Dim).map { j =>
-        val h = md.digest(s"e:$p,$j".getBytes("UTF-8"))
-        if (((h(0) >> 4) & 1) == 1) 1 else -1
-      }
-    }
-  }
+  private val subSubBase = ScreenPlanes + ScreenSubPlanes
+  lazy val screenSubSubPlanes = signPlanes("e:", subSubBase, subSubBase + ScreenSubSubPlanes)
 
   private def emb(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.parquet(s, dir, "embeddings")

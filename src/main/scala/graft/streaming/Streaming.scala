@@ -510,9 +510,8 @@ object StreamingAttribution {
 
 /** Streaming NEAR-dup candidate surfacing on arrival — the stateful
   * twin of [[graft.dedup.Dedup.minhashCandidates]]: each arriving doc
-  * computes its MinHash signature map-side ([[sigOf]] — the scalar
-  * mirror of the batch column chain: same md5-derived base28 shingle
-  * hash, same affine coefficients, bit parity spec-pinned), explodes
+  * computes its MinHash signature map-side ([[sigOf]] — the batch
+  * `graft_minhash` kernel's own scalar code, bit parity spec-pinned), explodes
   * into its band buckets, and per-bucket `GroupState` holds the
   * admitted member list. An arrival emits candidate pairs against the
   * current members plus the in-batch pairs.
@@ -541,34 +540,17 @@ object StreamingNearDup {
   case class Cand(doc_a: Long, doc_b: Long)
   case class BucketState(members: List[Long], poisoned: Boolean)
 
-  import graft.dedup.Dedup.{Bands, MinHashP, NumHashes, RowsPerBand, ShingleSize}
+  import graft.dedup.Dedup.{Bands, NumHashes, RowsPerBand, ShingleSize}
 
-  /** MinHash signature of one document — the scalar twin of the batch
-    * chain: lower → \s+ split → non-empty → word ShingleSize-grams →
-    * base28 = first 7 md5 hex digits (Md5Prefix64 bits >>> 36) →
-    * per-coefficient affine minima. Returns None for docs too short to
-    * shingle (the batch chain emits no signature row for them either).
+  /** MinHash signature of one document: [[graft.functions.MinHashSig]]
+    * over its whitespace tokens (oracle mode), the batch chain's exact
+    * arithmetic. None for docs too short to shingle (the batch chain
+    * emits no signature row for them either).
     */
-  def sigOf(text: String): Option[Array[Long]] = {
-    val toks = text.toLowerCase(java.util.Locale.ROOT)
-      .split("\\s+").filter(_.nonEmpty)
-    if (toks.length < ShingleSize) return None
-    val coeffs = graft.dedup.Dedup.minHashCoeffs
-    val sig = Array.fill(NumHashes)(Long.MaxValue)
-    toks.sliding(ShingleSize).foreach { w =>
-      val base = graft.functions.Md5Prefix64.hash64(
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          w.mkString(" "))) >>> 36
-      var i = 0
-      while (i < NumHashes) {
-        val (a, b) = coeffs(i)
-        val h = (a * base + b) % MinHashP
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-    }
-    Some(sig)
-  }
+  def sigOf(text: String): Option[Array[Long]] =
+    Option(graft.functions.MinHashSig.sig(
+      graft.text.Tokenize.whitespaceTokensOf(text), ShingleSize, NumHashes,
+      production = false)).map(_.toLongArray())
 
   /** Band-bucket keys of one signature: "band|h..|h.." — the string
     * form of the batch (band, sig) key pair.
@@ -748,22 +730,17 @@ object StreamingDecontam {
 
   import graft.dedup.Dedup.DecontamShingle
 
-  /** Distinct 60-bit decontamination keys of one document — scalar
-    * mirror of the batch `decontamKeys` chain. Docs too short to
-    * shingle (or with null text) have no keys, matching the batch
-    * chain's empty explode.
+  /** Distinct 60-bit decontamination keys of one document:
+    * [[graft.functions.GramKeys.keys]] over its whitespace tokens
+    * (oracle mode), the batch `decontamKeys` chain's keys. Docs too
+    * short to shingle (or with null text) have no keys, matching the
+    * batch chain's empty explode.
     */
-  def keysOf(text: String): Set[Long] = {
-    if (text == null) return Set.empty
-    val toks = text.toLowerCase(java.util.Locale.ROOT)
-      .split("\\s+").filter(_.nonEmpty)
-    if (toks.length < DecontamShingle) return Set.empty
-    toks.sliding(DecontamShingle).map { w =>
-      graft.functions.Md5Prefix64.hash64(
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          w.mkString(" "))) >>> 4
-    }.toSet
-  }
+  def keysOf(text: String): Set[Long] =
+    if (text == null) Set.empty
+    else graft.functions.GramKeys.keys(
+      graft.text.Tokenize.whitespaceTokensOf(text), DecontamShingle,
+      production = false).toLongArray().toSet
 
   /** The static eval-set key side input: batch-chain distinct keys,
     * collected. Benchmark-sized by construction (document the bound

@@ -1125,8 +1125,7 @@ object Analysis {
       topBigrams(docs(s, dir)).orderBy("lang", "rank"),
       s"""WITH dl AS (
          |  SELECT lang,
-         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                     t -> length(t) > 0) AS toks
+         |         ${Tokenize.whitespaceTokensSql} AS toks
          |  FROM documents
          |  WHERE text IS NOT NULL AND length(text) > 0
          |), bi AS (
@@ -1211,10 +1210,9 @@ object Analysis {
       // `approx_ok` verdict, which DuckDB predicts TRUE from first
       // principles (bound = 5×rsd, see VocabApproxErrBound) — so a Spark
       // estimate drifting out of tolerance hash-mismatches this row.
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT lang,
-        |         unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                            t -> length(t) > 0)) AS tok
+        |         unnest(${Tokenize.whitespaceTokensSql}) AS tok
         |  FROM documents
         |  WHERE text IS NOT NULL AND length(text) > 0
         |)
@@ -1271,8 +1269,7 @@ object Analysis {
       // twin of Spark's `div` — bin arithmetic never touches a float.
       s"""WITH dl AS (
          |  SELECT source, doc_id,
-         |         CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                              t -> length(t) > 0)) AS BIGINT) AS n_toks
+         |         CAST(len(${Tokenize.whitespaceTokensSql}) AS BIGINT) AS n_toks
          |  FROM documents
          |  WHERE text IS NOT NULL AND length(text) > 0
          |), c AS (
@@ -1321,8 +1318,7 @@ object Analysis {
       // field-lexicographically, same as Spark's array_sort).
       s"""WITH dd AS (
          |  SELECT source, text,
-         |         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                     t -> length(t) > 0) AS toks
+         |         ${Tokenize.whitespaceTokensSql} AS toks
          |  FROM documents
          |  WHERE text IS NOT NULL AND length(text) > 0
          |), lw AS (
@@ -1466,8 +1462,7 @@ object Analysis {
       s"""WITH f AS (
          |  SELECT lang, source,
          |         CAST(length(text) AS BIGINT) AS n_chars,
-         |         CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                              t -> length(t) > 0)) AS BIGINT) AS n_tokens,
+         |         CAST(len(${Tokenize.whitespaceTokensSql}) AS BIGINT) AS n_tokens,
          |         sha256(lower(text)) AS th
          |  FROM documents
          |  WHERE text IS NOT NULL AND length(text) > 0
@@ -1505,10 +1500,9 @@ object Analysis {
       .mkString(", ")
 
   private val dCte: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, text,
-      |         list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |                     t -> length(t) > 0) AS toks
+      |         ${Tokenize.whitespaceTokensSql} AS toks
       |  FROM documents
       |  WHERE text IS NOT NULL AND length(text) > 0
       |)""".stripMargin

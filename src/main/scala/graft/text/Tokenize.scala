@@ -1,7 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.GraftFunctions
 
 /** Canonical tokenization semantics (SURVEY §2.9 D1–D4 canon, derived from
@@ -65,6 +67,17 @@ object Tokenize {
     */
   def whitespaceTokens: Column =
     filter(split(lower(col("text")), "\\s+"), t => length(t) > 0)
+
+  /** [[whitespaceTokens]] as the DuckDB oracle writes it. */
+  val whitespaceTokensSql: String =
+    """list_filter(regexp_split_to_array(lower(text), '\s+'), t -> length(t) > 0)"""
+
+  /** [[whitespaceTokens]] of one string, as the array the n-gram kernels
+    * take — the streaming twins' scalar form.
+    */
+  def whitespaceTokensOf(text: String): ArrayData =
+    new GenericArrayData(text.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+      .filter(_.nonEmpty).map(t => UTF8String.fromString(t): Any))
 
   /** D4 admission predicate: both fields present and non-empty
     * (run_chi:62–65). Renames categoryCol → `category`.

@@ -11,7 +11,9 @@ import org.scalacheck.rng.Seed
   * shorter than n — `graft_gram_keys(toks, n, production)` must equal
   * the Column chain it replaced,
   * `array_sort(array_distinct(transform(shingleOfN(toks, n), key64)))`,
-  * in BOTH hash modes (oracle md5-prefix and production xxhash64).
+  * in BOTH hash modes (oracle md5-prefix and production xxhash64);
+  * `graft_minhash` is pinned on the same arrays against the minima of
+  * the chain's per-gram base28.
   */
 class GramKeysSpec extends SparkSpec {
 
@@ -75,6 +77,40 @@ class GramKeysSpec extends SparkSpec {
 
   test("gram-keys kernel ≡ hashed-shingle chain, production mode, n=5") {
     assertParity(5, production = true)
+  }
+
+  /** graft_minhash ≡ the affine minima the test folds itself over the
+    * chain's per-gram base28 (NULL for arrays shorter than n).
+    */
+  private def assertMinHashParity(production: Boolean): Unit = {
+    val k = 16
+    val cs = MinHashSig.coeffs(k)
+    for (n <- Seq(3, 5)) {
+      val rows = frame.select(col("doc_id"),
+          transform(Ngrams.shingleOfN(col("toks"), n),
+            g => PortableHash.base28(g, production)).as("bases"),
+          GraftFunctions.graftMinhash(col("toks"), lit(n), lit(k),
+            lit(production)).as("kernel"))
+        .collect()
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        val bases = r.getSeq[Long](1)
+        val expected =
+          if (bases.isEmpty) null
+          else cs.map { case (a, b) => bases.map(x => (a * x + b) % MinHashSig.P).min }
+        val kernel = if (r.isNullAt(2)) null else r.getSeq[Long](2)
+        assert(kernel === expected,
+          s"doc ${r.getLong(0)} n=$n production=$production")
+      }
+    }
+  }
+
+  test("minhash kernel ≡ minima over hashed-shingle chain, oracle mode") {
+    assertMinHashParity(production = false)
+  }
+
+  test("minhash kernel ≡ minima over hashed-shingle chain, production mode") {
+    assertMinHashParity(production = true)
   }
 
   test("short arrays and n<=0 yield empty key sets") {

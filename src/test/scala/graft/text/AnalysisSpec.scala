@@ -349,24 +349,9 @@ class AnalysisSpec extends SparkSpec {
   }
 
   test("winnow kernel equals the HOF sort-slice form on fixture and edges") {
-    val s = spark; import s.implicits._
     import org.apache.spark.sql.functions._
-    // fixture-wide bit equality on the registered query's own shingles
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("doc_id"),
-        graft.functions.Ngrams.shingleOfN(
-          filter(split(lower(col("text")), "\\s+"), t => length(t) > 0),
-          Analysis.FpShingleSize).as("sh"))
-    val both = d.select(col("doc_id"),
-        graft.functions.GraftFunctions.graftWinnow(col("sh"),
-          lit(Analysis.WinnowK)).as("kernel"),
-        Analysis.winnowFpHof(col("sh")).as("hof"))
-      .collect()
-    assert(both.nonEmpty)
-    both.foreach(r => assert(r.getString(1) === r.getString(2),
-      s"winnow diverged for doc ${r.getLong(0)}"))
-    // the gram-fused kernel (what the registered query runs) agrees too
+    // fixture-wide bit equality: the gram-fused kernel (what the
+    // registered query runs) against the HOF form over the shingles
     val fused = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .filter(col("text").isNotNull && length(col("text")) > 0)
       .select(col("doc_id"),
@@ -377,32 +362,32 @@ class AnalysisSpec extends SparkSpec {
         Analysis.winnowFpHof(graft.functions.Ngrams.shingleOfN(col("toks"),
           Analysis.FpShingleSize)).as("hof"))
       .collect()
+    assert(fused.nonEmpty)
     fused.foreach(r => assert(r.getString(1) === r.getString(2),
       s"winnow_grams diverged for doc ${r.getLong(0)}"))
     // null tokens inside a window: digest must skip them exactly like
     // concat_ws (join of the non-null tokens)
     val nullWin = spark.sql(
       "SELECT graft_winnow_grams(array('a', CAST(NULL AS STRING), 'b'), 3, 4) AS g, " +
-        "graft_winnow(array(concat_ws(' ', 'a', CAST(NULL AS STRING), 'b')), 4) AS w")
-      .collect().head
+        "array(concat_ws(' ', 'a', CAST(NULL AS STRING), 'b')) AS sh")
+      .select(col("g"), Analysis.winnowFpHof(col("sh"))).collect().head
     assert(nullWin.getString(0) === nullWin.getString(1))
-    // edges: short array (< k digests), empty array, duplicate
-    // shingles (kept), null elements (skipped), k = 0
+    // edges over one-token windows (a window's bytes are the token):
+    // short array (< k digests), empty array, duplicate windows (kept),
+    // k = 0
     val edges = spark.sql(
-      "SELECT graft_winnow(array('a b c', 'd e f'), 4) AS short, " +
-        "graft_winnow(CAST(array() AS ARRAY<STRING>), 4) AS empty, " +
-        "graft_winnow(array('a b c', 'a b c', 'd e f'), 2) AS dup, " +
-        "graft_winnow(array('a b c', CAST(NULL AS STRING)), 4) AS nul, " +
-        "graft_winnow(array('a b c'), 0) AS k0").collect().head
+      "SELECT graft_winnow_grams(array('a b c', 'd e f'), 1, 4) AS short, " +
+        "graft_winnow_grams(CAST(array() AS ARRAY<STRING>), 1, 4) AS empty, " +
+        "graft_winnow_grams(array('a b c', 'a b c', 'd e f'), 1, 2) AS dup, " +
+        "graft_winnow_grams(array('a b c'), 1, 0) AS k0").collect().head
     def md5hex(x: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val h1 = md5hex("a b c"); val h2 = md5hex("d e f")
     assert(edges.getString(0) === Seq(h1, h2).sorted.mkString)
     assert(edges.getString(1) === "")
     assert(edges.getString(2) === Seq(h1, h1, h2).sorted.take(2).mkString,
-      "duplicate shingles keep both digest copies in the sorted order")
-    assert(edges.getString(3) === h1, "null elements are skipped")
-    assert(edges.getString(4) === "")
+      "duplicate windows keep both digest copies in the sorted order")
+    assert(edges.getString(3) === "")
   }
 
   test("repetition: kernel path equals the groupBy reference; zero exchanges") {
