@@ -14,7 +14,7 @@ object PlanDump {
     "dedup_near_apply" ->
       "End-to-end near-dedup with DISTRIBUTED connected components, exact to FIXPOINT since r11: the cap-bounded verified pair table feeds min-label propagation rounds (neighbor min + pointer-doubling label-of-label hop, so convergence is O(log diameter)), each round's node-bounded label table materialized via eager localCheckpoint (or reliable checkpoint when a dir is given) with a changed-flag probe over the fresh blocks deciding convergence; no edge or label crosses the driver, the final label table enters one AQE-broadcast corpus left-join, and the label pass is shared with dedup_cluster_sizes through a per-fixture cache.",
     "chi2_top_terms" ->
-      "One explode of the fused graft_doc_terms tokenizer (no lambda in the Generate) feeds the shared termCat exchange (ReusedExchange in the AQE final plan); category totals and N broadcast; WindowGroupLimit bounds the top-k shuffle, and its ≤ k·|cats| survivors are sorted in one partition (SinglePartition exchange, no range-partition sampling job).",
+      "One explode of the fused graft_doc_terms tokenizer (no lambda in the Generate) feeds the (term, category) count, whose ONE shuffle NarrowAggExchange keys by term alone, so the t_total window (sum(a) over term) reads it without a second exchange. Two scans: the tokens and the category totals; N is sum(c_total) over those totals, and AQE reuses their exchange (ReusedExchange in the final plan). Category totals and N broadcast; WindowGroupLimit bounds the top-k shuffle, and `coalesce(1)` runs the window-final and the sort in one task over its ≤ k·|cats|·P survivors (no SinglePartition exchange, no range-partition sampling job). 7 Spark jobs per run.",
     "dedup_minhash_candidates" ->
       "Signature stage is ONE narrow map: the native graft_minhash kernel folds all 16 affine minima per doc straight off the token array (no shingle explode, no doc_id exchange — the column chain kept that shape and is spec-pinned bit-equal in both hash modes); the first shuffle in the whole query is the (band, sig) bucket aggregate, and pair expansion stays in-bucket with the oversized-bucket guard upstream.",
     "dedup_ngram_jaccard" ->
@@ -46,7 +46,7 @@ object PlanDump {
     "events_retention" ->
       "Cohort day attaches via a window over the single user_id exchange — no self-join back to a first-seen aggregate; the (cohort, offset) matrix aggregate is bounded by days², independent of event volume.",
     "text_tfidf" ->
-      "Linear chain, ONE corpus scan: tf is one (doc, term) shuffle; df attaches via a count window over term (a tf-join-df formulation planned the scan+tokenize+tf subtree twice - HOF lambdas defeat exchange reuse); N broadcasts (1-row cross); WindowGroupLimit bounds the per-doc top-k.",
+      "Linear chain, ONE corpus scan for tf: the (doc, term) count shuffles once, keyed by term alone (NarrowAggExchange drops the hash(doc_id, t) exchange the aggregate would otherwise get), and df attaches via a count window over term on that same partitioning (a tf-join-df formulation planned the scan+tokenize+tf subtree twice - HOF lambdas defeat exchange reuse); N broadcasts (1-row cross); WindowGroupLimit bounds the per-doc top-k.",
     "sim_centroid_outliers" ->
       "Exact decimal-sum centroids (labels x Dim rows) broadcast into ONE narrow corpus pass; the per-label top-k is WindowGroupLimit-bounded. The decimal partial sums are mergeable map-side, so the centroid aggregate survives any cluster size.",
     "events_top_sessions" ->
@@ -67,6 +67,20 @@ object PlanDump {
       "One corpus scan computes the shared quality features map-side; the first-failing-stage CASE collapses into a 4-group aggregate; the dense stage grid left-joins it (broadcast, 4 rows) and the share window runs over the grid, never the corpus.",
     "rel_small_qty_revenue" ->
       "Correlated subquery (qty < 0.2x the part's avg) decorrelated into sum/count windows over ONE l_partkey exchange - lineitem is scanned once where the textbook aggregate+join-back scans and shuffles it twice (RelationalSpec pins the one-scan shape); the predicate stays in exact integer-valued DECIMAL (5*qty*cnt < sum), and the part join is unhinted so AQE broadcasts at fixture scale / shuffles on the already-partitioned key at full scale.")
+
+  /** Expression ids (`#12`), exchange ids (`plan_id=34`) and lambda
+    * variables (`x_5`) come from JVM-wide counters, so they shift with
+    * every query planned before this one. Renumbering each family from 1
+    * in first-appearance order makes a regeneration diff show only real
+    * plan changes.
+    */
+  def renumbered(plan: String): String =
+    Seq("""#(\d+)""" -> "#", """plan_id=(\d+)""" -> "plan_id=", """\bx_(\d+)\b""" -> "x_")
+      .foldLeft(plan) { case (text, (pattern, prefix)) =>
+        val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+        pattern.r.replaceAllIn(text, m =>
+          prefix + ids.getOrElseUpdate(m.group(1), ids.size + 1))
+      }
 
   def main(args: Array[String]): Unit = {
     val spark = Session("graft-plandump")
@@ -101,8 +115,8 @@ object PlanDump {
     }
     for ((name, note) <- Headliners) {
       val df = SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val plan = renumbered(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       sb ++= s"\n## $name\n\n$note\n\n```\n$plan```\n"
     }
     Files.createDirectories(Paths.get("docs"))

@@ -201,6 +201,7 @@ object GraftFunctions {
 
 /** Function injection: add `.withExtensions(new GraftExtensions)` to the
   * session builder, or `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
+  * It also injects one physical rule, [[NarrowAggExchange]] (AQE only).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -278,5 +279,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain], 2)(c =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         c(0), c(1))))
+    ext.injectQueryStagePrepRule(_ => NarrowAggExchange)
   }
 }

@@ -15,9 +15,12 @@ import graft.stats.{ChiSquare, Contingency, TopK}
   * One action executes everything; there is no inter-stage HDFS
   * materialization (reference run_chi chains 4 MapReduce rounds) and no
   * single-reducer funnel (reference chi_square.py:46–47). Physical shape:
-  * two wide shuffles (term-cat aggregate; term-total join) + two
-  * broadcasts (category totals, N) + the group-limited window; only its
-  * ≤ k·|categories| survivors meet in one partition for the final order.
+  * one wide shuffle for the contingency counts (the term-cat aggregate,
+  * keyed by term so the term-total window reuses it; see
+  * [[graft.functions.NarrowAggExchange]]), one scan and shuffle for the
+  * category totals that N reuses, two broadcasts (category totals, N),
+  * then the group-limited window; only its survivors meet in one
+  * partition for the final order and the formatted lines.
   */
 object ChiSquarePipeline {
 
@@ -58,15 +61,18 @@ object ChiSquarePipeline {
   /** The ranking tail shared by the batch and streaming forms: top-k
     * per category by (chi2 desc, term asc), ordered (category, rank).
     *
-    * At most k·|categories| rows survive the window, so they are ordered
-    * in one partition: a global `orderBy` would pay a range-partition
-    * sampling job and a shuffle stage for the same result.
+    * The window's partial `WindowGroupLimit` keeps at most k rows per
+    * category in each of the P partitions of the stage that computes χ²,
+    * so at most k·|categories|·P rows cross the window's shuffle.
+    * `coalesce(1)` runs the window-final, the window and the sort in the
+    * one task that reads them: no second shuffle, and no range-partition
+    * sampling job as a global `orderBy` would pay.
     */
   def ranked(scored: DataFrame, k: Int): DataFrame =
     TopK.perGroup(scored, Seq(col("category")),
         Seq(col("chi2").desc, col("term").asc), k)
       .select("category", "term", "chi2", "rank")
-      .repartition(1).sortWithinPartitions(col("category"), col("rank"))
+      .coalesce(1).sortWithinPartitions(col("category"), col("rank"))
 
   /** Merged dictionary (SURVEY G6/T3): distinct selected terms, sorted. */
   def mergedDictionary(top: DataFrame): DataFrame =
@@ -82,32 +88,25 @@ object ChiSquarePipeline {
     * diffable everywhere — and lets the driver oracle-check this
     * output (`chi2_formatted_lines`).
     */
-  def formattedLines(top: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    // ONE pass over `top` (r16): the per-category lines and the
-    // dictionary line are two groupings of the same rows, so a ROLLUP
-    // computes both in a single aggregate (Expand ×2 over the ≤ k·|cats|
-    // top rows) — the union form planned the ENTIRE chi² subtree twice
-    // (tokenize → contingency → window), and Spark reuses exchanges,
-    // not the window/format work above them. Lines are byte-identical:
-    // the category groups emit the same rank-ordered kv string, the
-    // rollup's grand-total group emits the sorted distinct term
-    // dictionary (collect_set ≡ distinct), and `grouping()` — not a
-    // null test — marks the total row, so a hypothetical null category
-    // could never collide with it. The ≤ k·|cats| + 1 lines are ordered
-    // in one partition, as in `ranked`.
+  def formattedLines(top: DataFrame)(implicit spark: SparkSession): DataFrame =
+    // `top` is one partition (see `ranked`), so neither aggregate below
+    // shuffles: the first builds each category's line from its
+    // rank-ordered kv pairs, the second gathers the lines in category
+    // order and the sorted distinct term dictionary into one row, which
+    // the explode emits in array order, dictionary last. An empty `top`
+    // still makes that one global row (with no lines); `size(cats) > 0`
+    // drops it, so no lone empty dictionary line is written.
     top
       .withColumn("kv", concat_ws(":", col("term"),
         format_string("%.6f", col("chi2"))))
-      .rollup(col("category"))
-      .agg(concat_ws(" ", array_sort(collect_list(struct(col("rank"), col("kv"))))
-        .getField("kv")).as("terms"),
-        concat_ws(" ", array_sort(collect_set(col("term")))).as("dict"),
-        grouping(col("category")).as("g"))
-      .select(
-        when(col("g") === 1, col("dict"))
-          .otherwise(concat_ws(" ", col("category"), col("terms"))).as("line"),
-        when(col("g") === 1, lit("￿")) // dictionary last
-          .otherwise(col("category")).as("sort_key"))
-      .repartition(1).sortWithinPartitions("sort_key").select("line")
-  }
+      .groupBy(col("category"))
+      .agg(concat_ws(" ", col("category"),
+          array_sort(collect_list(struct(col("rank"), col("kv")))).getField("kv")).as("line"),
+        collect_list(col("term")).as("terms"))
+      .agg(array_sort(collect_list(struct(col("category"), col("line"))))
+          .getField("line").as("cats"),
+        concat_ws(" ", array_sort(array_distinct(flatten(collect_list(col("terms"))))))
+          .as("dict"))
+      .where(size(col("cats")) > 0)
+      .select(explode(concat(col("cats"), array(col("dict")))).as("line"))
 }

@@ -13,8 +13,8 @@ import graft.text.Tokenize
 
 /** Streaming χ² (SURVEY §7.4's deferred design, made concrete).
   *
-  * The χ² DAG chains aggregations (term-cat counts → term totals →
-  * joins → window top-k), and Structured Streaming forbids chained
+  * The χ² DAG chains aggregations (term-cat counts → term-total window
+  * → joins → window top-k), and Structured Streaming forbids chained
   * streaming aggregates — so the streaming form is INCREMENTAL VIEW
   * MAINTENANCE via `foreachBatch`: each micro-batch tokenizes only its
   * new documents, aggregates delta counts (the sufficient statistic —
@@ -113,7 +113,7 @@ object StreamingChiSquare {
     val (termCat, catDocs) = latestCounts(spark, storeDir)
       .getOrElse(sys.error(s"empty chi-square store: $storeDir"))
     ChiSquarePipeline.ranked(ChiSquarePipeline.withChi2(Contingency.fromCounts(
-      termCat, catDocs, catDocs.agg(sum(col("c_total")).as("n")))), k)
+      termCat, catDocs, Contingency.totalDocs(catDocs))), k)
   }
 
   /** Micro-batch count for [[replayTopTerms]]' deterministic replay. */

@@ -80,11 +80,13 @@ object Tokenize {
       .filter(_.nonEmpty).map(t => UTF8String.fromString(t): Any))
 
   /** D4 admission predicate: both fields present and non-empty
-    * (run_chi:62–65). Renames categoryCol → `category`.
+    * (run_chi:62–65). Renames categoryCol → `category`. For a non-null
+    * string `x <> ''` is `length(x) > 0`, but it reads the byte length
+    * (O(1)) where `length` counts the code points of the whole review.
     */
   def admitted_docs(docs: DataFrame, textCol: String, categoryCol: String): DataFrame =
     docs
-      .filter(col(textCol).isNotNull && length(col(textCol)) > 0 &&
-        col(categoryCol).isNotNull && length(col(categoryCol)) > 0)
+      .filter(col(textCol).isNotNull && col(textCol) =!= "" &&
+        col(categoryCol).isNotNull && col(categoryCol) =!= "")
       .withColumn("category", col(categoryCol))
 }

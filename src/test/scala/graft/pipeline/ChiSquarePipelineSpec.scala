@@ -37,6 +37,14 @@ class ChiSquarePipelineSpec extends SparkSpec {
     assert(lines(2) === "apple banana cherry")
   }
 
+  test("formatted lines of an empty top-k: zero lines, no dictionary") {
+    implicit val s = spark
+    val top = ChiSquarePipeline.topTerms(corpus.filter("cat = 'none'"), "text", "cat",
+      k = 2, stopwords = Seq.empty)
+    assert(top.isEmpty)
+    assert(ChiSquarePipeline.formattedLines(top).collect().isEmpty)
+  }
+
   test("flagship smoke: sf0.001 returns ≤ k rows per lang, all 5 langs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val top = ChiSquarePipeline.topTerms(docs, "text", "lang").cache()

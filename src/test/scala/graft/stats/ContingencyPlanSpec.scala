@@ -2,11 +2,12 @@ package graft.stats
 
 import graft.SparkSpec
 
-/** The termCat subtree (tokenize → explode → first aggregate) feeds both
-  * the join left side and the termTotal aggregate. At 100 TB that subtree
-  * IS the dominant cost — if the exchange reuse does not deduplicate it,
-  * the whole tokenize→explode→aggregate pipeline runs twice. This spec
-  * pins the reuse so a refactor can't silently lose it.
+/** The paper's job runs one shuffle for its contingency counts: the
+  * (term, category) aggregate is keyed by term, so the term-total
+  * window reads it as is, and N is summed from the category totals,
+  * whose exchange AQE reuses. At 100 TB the tokenize→explode→aggregate
+  * subtree IS the dominant cost, so this spec pins that it is planned
+  * once, shuffled once, and that the documents are scanned only twice.
   */
 class ContingencyPlanSpec extends SparkSpec {
 
@@ -15,43 +16,93 @@ class ContingencyPlanSpec extends SparkSpec {
   private def query(name: String) =
     graft.pipeline.ChiSquareQueries.queries(name)(spark, dir)
 
-  /** Runs a query and returns its AQE final plan: AdaptiveSparkPlan
-    * prints the final plan first, then the initial plan — only the
-    * final section reflects what actually executed.
+  /** Runs a query and returns its AQE final plan and the number of
+    * Spark jobs the run scheduled: AdaptiveSparkPlan prints the final
+    * plan first, then the initial plan — only the final section
+    * reflects what actually executed.
     */
-  private def finalPlanOf(name: String): String = {
+  private def finalPlanAndJobs(name: String): (String, Int) = {
     val df = query(name)
-    df.collect() // materialize so AQE finalizes the adaptive plan
+    val group = s"plan-$name"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try df.collect() // materialize so AQE finalizes the adaptive plan
+      finally spark.sparkContext.clearJobGroup()
+      // The listener bus is async but FIFO: once the sentinel job's
+      // event is visible, every event of the query's jobs is too.
+      spark.sparkContext.setJobGroup(s"$group-sentinel", "sentinel")
+      try spark.range(1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(s"$group-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains(s"$group-sentinel"), "listener never observed the sentinel job")
+    } finally spark.sparkContext.removeSparkListener(listener)
     val full = df.queryExecution.executedPlan.toString
     val finalPlan = full.split("== Initial Plan ==").head
     assert(finalPlan.contains("isFinalPlan=true"), full.take(500))
-    finalPlan
+    (finalPlan, groups.toArray.count(_ == group))
   }
 
-  test("the shared termCat exchange is planned once and reused (AQE final plan)") {
-    val finalPlan = finalPlanOf("chi2_top_terms")
-    assert(finalPlan.contains("ReusedExchange"),
-      s"termCat subtree must be shuffled once and reused:\n${finalPlan.take(3000)}")
-    // exactly one tokenize→explode in the executed plan: the reused
-    // exchange replaces the second copy
-    val generates = "Generate explode".r.findAllIn(finalPlan).size
-    assert(generates === 1,
-      s"expected exactly 1 explode in the final plan, got $generates")
+  private def finalPlanOf(name: String): String = finalPlanAndJobs(name)._1
+
+  test("contingency counts shuffle once by term; two scans; seven jobs") {
+    val (finalPlan, jobs) = finalPlanAndJobs("chi2_top_terms")
+    val show = finalPlan.take(4000)
+    val termExchanges = """Exchange hashpartitioning\(term#\d+, \d+\)""".r
+      .findAllIn(finalPlan).size
+    assert(termExchanges === 1, show)
+    assert("""hashpartitioning\(term#\d+, category#""".r.findFirstIn(finalPlan).isEmpty, show)
+    assert("FileScan".r.findAllIn(finalPlan).size === 2, show)
+    // N reads the category totals' exchange instead of a third scan
+    assert(finalPlan.contains("ReusedExchange"), show)
+    assert(!finalPlan.contains("Expand"), show)
+    assert(!finalPlan.contains("SortMergeJoin"), show)
+    assert(jobs === 7, show)
+  }
+
+  test("the tokenizer subtree is planned and shuffled once (AQE final plan)") {
+    // The term-total window reads the one term-keyed shuffle; no join
+    // back to a second aggregate, hence no second consumer that an
+    // exchange reuse would have to deduplicate.
+    for (name <- Seq("chi2_top_terms", "chi2_formatted_lines", "chi2_scores")) {
+      val finalPlan = finalPlanOf(name)
+      val explodes = "Generate explode\\(graft_doc_terms".r.findAllIn(finalPlan).size
+      assert(explodes === 1,
+        s"$name: expected exactly 1 tokenizer explode, got $explodes:\n${finalPlan.take(3000)}")
+      assert(finalPlan.contains("Window [sum(a#"), s"$name:\n${finalPlan.take(3000)}")
+    }
   }
 
   test("χ² tail: no range-partition sort, a fused tokenizer, a group limit") {
     for (name <- Seq("chi2_top_terms", "chi2_formatted_lines")) {
       val finalPlan = finalPlanOf(name)
-      // the ≤ k·|cats| ranked rows are ordered in one partition; a
+      // the ≤ k·|cats|·P window survivors are ordered in one task; a
       // global orderBy would add a sampling job and a range shuffle
       assert(!finalPlan.toLowerCase.contains("rangepartitioning"),
         s"$name:\n${finalPlan.take(3000)}")
+      assert(finalPlan.contains("Coalesce 1"), s"$name:\n${finalPlan.take(3000)}")
       val generates = finalPlan.linesIterator.filter(_.contains("Generate")).toSeq
-      assert(generates.nonEmpty && generates.forall(g =>
-          g.contains("graft_doc_terms") && !g.contains("lambdafunction")),
+      val tokenizer = generates.filter(_.contains("graft_doc_terms"))
+      assert(tokenizer.size === 1 && generates.forall(!_.contains("lambdafunction")),
         s"$name: ${generates.mkString("\n")}")
       assert(finalPlan.contains("WindowGroupLimit"), s"$name:\n${finalPlan.take(3000)}")
     }
+  }
+
+  test("formatted lines add no exchange to the top-k plan") {
+    def exchanges(plan: String) = "Exchange ".r.findAllIn(plan).size
+    val top = finalPlanOf("chi2_top_terms")
+    val lines = finalPlanOf("chi2_formatted_lines")
+    assert(exchanges(lines) === exchanges(top), lines.take(4000))
+    assert(!lines.contains("Expand"), lines.take(4000))
   }
 
   test("topTerms collects in (category, rank) order") {
