@@ -81,7 +81,7 @@ object Dedup {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.parquet(s, dir, "documents")
-      .filter(col("text").isNotNull && length(col("text")) > 0)
+      .filter(graft.text.Tokenize.hasText(col("text")))
 
   private def shingleOfN(toks: Column, n: Int): Column =
     graft.functions.Ngrams.shingleOfN(toks, n)

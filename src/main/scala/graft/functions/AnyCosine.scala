@@ -1,31 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types._
 
-/** Existential cosine screen: `graft_any_cosine_ge(v, evals, t)` =
-  * does ANY eval vector have cosine(v, ev) ≥ t — the membership test
-  * `sim_embedding_decontam` runs for every corpus vector.
+/** The member scan of the existential cosine screen
+  * `graft_any_cosine_ge_cells` ([[AnyCosineGeCells]]): does any eval
+  * vector of one packed block have cosine(v, ev) ≥ t.
   *
-  * Why a kernel: the relational form is a broadcast nested-loop join
-  * with `cosine(...) ≥ t` as the join condition, which pays the join
-  * machinery per PAIR — ~3.6 G pairs at sf10 measured ~320 ns each
-  * (36 s of wall), ~3× over the arithmetic (12.1 s measured). Here
-  * the per-corpus-row cost is one call: the eval matrix is unpacked
-  * from the broadcast row ONCE PER TASK (the ThreadLocal below — the
-  * join's build-side wrapper objects are recreated per access, so the
-  * cache keys on the underlying buffer identity, not the wrapper),
-  * and the scan loops evals in-place with early exit on the first
-  * hit. Clean rows — the overwhelming majority — still pay the full
-  * |evals|·dim multiply, which is the exact screen's floor; the
-  * documented scale path for an eval set too big to broadcast remains
-  * IVF-cell probing (see `embDecontaminate`'s scaladoc).
-  *
-  * Semantics are pinned to the Column chain, decision for decision:
+  * Semantics are pinned to the Column chain (a broadcast join on
+  * `cosine(v, ev) ≥ t`), decision for decision:
   *  - dot is the same in-order left fold [[DotProduct]] computes, and
   *    ‖v‖² is computed by the same fold (the chain's `dot(v, v)`);
   *  - cos = dot / (sqrt(‖v‖²) · sqrt(en)) in that operation order,
@@ -36,73 +18,12 @@ import org.apache.spark.sql.types._
   *    the kernel is a TOTAL extension that treats the undefined
   *    cosine as no-match (Java 0/0 = NaN, NaN ≥ t false), the only
   *    verdict a screen can justify for a vector that cannot be
-  *    similar to anything; AnyCosineSpec pins both behaviors;
+  *    similar to anything; AnyCosineCellsSpec pins both behaviors;
   *  - a null/absent eval entry, a null element, or a length mismatch
-  *    makes the chain's cosine NULL (never a match): the kernel skips
-  *    those entries, and a corpus vector with a null element returns
-  *    false (the chain's NULL condition matches nothing).
+  *    makes the chain's cosine NULL (never a match): packing drops
+  *    those entries, the scan skips length mismatches, and a corpus
+  *    vector with a null element returns false.
   */
-case class AnyCosineGe(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  private def v = first
-  private def evals = second
-  private def threshold = third
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val evalsOk = evals.dataType match {
-      case ArrayType(StructType(fs), _) if fs.length == 2 =>
-        (fs(0).dataType, fs(1).dataType) match {
-          case (ArrayType(DoubleType, _), DoubleType) => true
-          case _ => false
-        }
-      case _ => false
-    }
-    if (v.dataType != ArrayType(DoubleType, containsNull = true) &&
-      v.dataType != ArrayType(DoubleType, containsNull = false))
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_any_cosine_ge expects array<double> v, got ${v.dataType.simpleString}")
-    else if (!evalsOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_any_cosine_ge expects array<struct<ev: array<double>, en: double>> evals, " +
-          s"got ${evals.dataType.simpleString}")
-    else if (threshold.dataType != DoubleType || !threshold.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_any_cosine_ge threshold must be a double literal")
-    else if (threshold.eval(null) == null)
-      // a null threshold would make every chain comparison NULL — the
-      // screen has no meaningful verdict, and letting it through
-      // surfaces later as an NPE unwrapping the fold
-      TypeCheckResult.TypeCheckFailure(
-        "graft_any_cosine_ge threshold must not be null")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_any_cosine_ge"
-
-  @transient private lazy val t: Double =
-    threshold.eval(null).asInstanceOf[Double]
-
-  /** The shared kernel (also called from generated code). */
-  def anyGe(vd: ArrayData, ev: ArrayData): Boolean =
-    AnyCosine.anyGe(vd, ev, t)
-
-  override protected def nullSafeEval(vd: Any, ev: Any, th: Any): Any =
-    anyGe(vd.asInstanceOf[ArrayData], ev.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("anyCosine", this,
-      classOf[AnyCosineGe].getName)
-    nullSafeCodeGen(ctx, ev, (vd, evs, _) =>
-      s"${ev.value} = $self.anyGe($vd, $evs);")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): AnyCosineGe =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object AnyCosine {
 
   /** Unpacked eval matrix, PACKED FLAT: only valid entries (non-null
@@ -126,53 +47,8 @@ object AnyCosine {
     val flatD: Array[Double], val offs: Array[Int], val lens: Array[Int],
     val sqEn: Array[Double], val cnt: Int)
 
-  /** Per-task cache of the unpacked broadcast matrix, keyed on the
-    * UNDERLYING buffer (base object identity + offset): the join's
-    * build row hands out a fresh ArrayData wrapper on every access,
-    * so wrapper identity never repeats, but the bytes it points into
-    * are the one broadcast copy.
-    *
-    * Identity+offset alone is UNSAFE for a per-row (non-broadcast)
-    * evals column: generated UnsafeProjections reuse one backing
-    * buffer across rows, so the same (object, offset) can present
-    * different bytes. The key therefore also carries numElements,
-    * sizeInBytes, and the first/last 8 bytes of the region — a cheap
-    * content check that any two distinct eval matrices fail (float
-    * payload bytes land in the tail word). The function's intended
-    * contract remains a broadcast-originated evals side (the
-    * embDecontaminate aggregate-to-one-row shape); the fingerprint
-    * turns a violation from silent wrong answers into at worst a
-    * per-row re-unpack.
-    */
-  private final class Entry(val bo: AnyRef, val off: Long, val numEl: Int,
-    val size: Long, val head: Long, val tail: Long, val mx: Mx)
-
-  private val cache = new ThreadLocal[Entry]()
-
-  private def mxFor(evals: ArrayData): Mx = {
-    val (bo: AnyRef, off: Long, size: Long) = evals match {
-      case u: UnsafeArrayData => (u.getBaseObject, u.getBaseOffset,
-        u.getSizeInBytes.toLong)
-      case g => (g, 0L, -1L)
-    }
-    val numEl = evals.numElements()
-    val head =
-      if (size >= 8) org.apache.spark.unsafe.Platform.getLong(bo, off) else 0L
-    val tail =
-      if (size >= 16)
-        org.apache.spark.unsafe.Platform.getLong(bo, off + size - 8)
-      else 0L
-    val c = cache.get()
-    if (c != null && (c.bo eq bo) && c.off == off && c.numEl == numEl &&
-      c.size == size && c.head == head && c.tail == tail) return c.mx
-    val mx = packMx(evals)
-    cache.set(new Entry(bo, off, numEl, size, head, tail, mx))
-    mx
-  }
-
-  /** Pack one (ev, en)-struct array into a [[Mx]] — the uncached body
-    * of [[mxFor]], shared with [[AnyCosineCells]], which packs one Mx
-    * PER BUCKET of its cell index under its own cache.
+  /** Pack one (ev, en)-struct array into a [[Mx]]: [[AnyCosineCells]]
+    * packs one Mx PER BUCKET of its cell index under its own cache.
     */
   private[functions] def packMx(evals: ArrayData): Mx = {
     val m = evals.numElements()
@@ -234,7 +110,8 @@ object AnyCosine {
     new Mx(flatF, flatD, offs, lens, sqEn, cnt)
   }
 
-  /** Called from generated code.
+  /** One member block — the single scan entry of the cells kernel's
+    * member tests.
     *
     * The eval loop is REGISTER-BLOCKED four wide: one pass of the
     * corpus vector feeds four independent accumulator chains, hiding
@@ -245,27 +122,6 @@ object AnyCosine {
     * bit-identical to the chain's, and `any ≥ t` over a quad is the
     * same decision as four sequential tests (boolean OR is
     * order-free; the early exit just moves to quad granularity).
-    */
-  def anyGe(vd: ArrayData, evals: ArrayData, t: Double): Boolean = {
-    val n = vd.numElements()
-    val vv = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      // a null element makes every chain cosine NULL — no match
-      if (vd.isNullAt(i)) return false
-      vv(i) = vd.getDouble(i)
-      i += 1
-    }
-    var nrm = 0.0
-    i = 0
-    while (i < n) { nrm += vv(i) * vv(i); i += 1 }
-    val sq = math.sqrt(nrm)
-    val mx = mxFor(evals)
-    scanMx(vv, n, sq, mx, t)
-  }
-
-  /** One member block — the single scan entry shared by the flat
-    * kernel and the cells kernel's member tests.
     */
   private[functions] def scanMx(vv: Array[Double], n: Int, sq: Double,
       mx: Mx, t: Double): Boolean =

@@ -1,25 +1,26 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
 
 /** Bucketed EXACT existential cosine screen:
   * `graft_any_cosine_ge_cells(v, cells, t)` = does ANY eval vector in
-  * ANY cell have cosine(v, ev) ≥ t — [[AnyCosineGe]]'s decision over
-  * an eval set pre-grouped into direction buckets, with whole buckets
-  * skipped by a triangle-inequality bound instead of scanned.
+  * ANY cell have cosine(v, ev) ≥ t — the membership test
+  * `sim_embedding_decontam` runs for every corpus vector, over an eval
+  * set pre-grouped into direction buckets, with whole buckets skipped
+  * by a triangle-inequality bound instead of scanned. The cosine and
+  * its edge cases (null elements, length mismatch, zero norms) are
+  * [[AnyCosine]]'s.
   *
   * `cells` is one broadcast row of
   * `array<struct<bkt: long, cv: array<double>, cr: double,
   *              ms: array<struct<ev: array<double>, en: double>>>>`:
   * per bucket a representative direction `cv` (the member mean — ANY
   * vector works for correctness), the bucket's angular radius
-  * `cr = max over members of θ(ev, cv)`, and the members themselves in
-  * [[AnyCosineGe]]'s (ev, en) layout.
+  * `cr = max over members of θ(ev, cv)`, and the members themselves as
+  * (ev, en) structs, `en` = dot(ev, ev).
   *
   * An optional FIFTH field adds a second bound level:
   * `subs: array<struct<cv: array<double>, cr: double,
@@ -69,8 +70,8 @@ import org.apache.spark.sql.types._
   * so a borderline cell is SCANNED, never skipped: pruning can drop
   * only cells that pass the test with ≥ Slack/2 to spare, and the
   * members that decide the verdict go through [[AnyCosine.scanMx]] —
-  * the same in-order fold as the flat kernel and the Column chain —
-  * verdict-identical at every level.
+  * the same in-order fold as the Column chain — verdict-identical at
+  * every level.
   *
   * Conservative fallbacks (scan, never skip) whenever the bound is
   * not trustworthy: null/missing cv or cr, a null cv element, cv
@@ -79,7 +80,7 @@ import org.apache.spark.sql.types._
   * null cells entry or empty/null ms contributes nothing (no member
   * could match — same verdict as the chain's NULL cosine).
   *
-  * Why cells instead of [[AnyCosineGe]]'s flat matrix: the flat
+  * Why cells instead of one flat eval matrix: a flat
   * screen's per-row floor is the FULL |evals|·dim multiply, which is
   * quadratic when the eval set grows with the corpus — measured 933 s
   * at sf100 (it was 9.2 s at sf10: 101× for 10× data, |corpus|·|evals|
@@ -89,12 +90,18 @@ import org.apache.spark.sql.types._
   * the bucketed one stays linear when the eval side scales too.
   */
 case class AnyCosineGeCells(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+    third: Expression) extends Kernel3("graft_any_cosine_ge_cells", BooleanType,
+      // the cells shape is read by its own type check below
+      Instance("anyGe"), Arg.doubles, Arg(NullType, "cells"),
+      Arg.double.literal("threshold must be a double literal")) {
 
   private def v = first
   private def cells = second
   private def threshold = third
 
+  /** Its own check: a cells element has optional sub-cell levels, and
+    * each argument has its own message.
+    */
   override def checkInputDataTypes(): TypeCheckResult = {
     def msOk(dt: DataType): Boolean = dt match {
       case ArrayType(StructType(fs), _) if fs.length == 2 =>
@@ -152,9 +159,6 @@ case class AnyCosineGeCells(first: Expression, second: Expression,
     else TypeCheckResult.TypeCheckSuccess
   }
 
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_any_cosine_ge_cells"
-
   @transient private lazy val t: Double =
     threshold.eval(null).asInstanceOf[Double]
 
@@ -185,17 +189,6 @@ case class AnyCosineGeCells(first: Expression, second: Expression,
 
   override protected def nullSafeEval(vd: Any, cs: Any, th: Any): Any =
     anyGe(vd.asInstanceOf[ArrayData], cs.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("anyCosineCells", this,
-      classOf[AnyCosineGeCells].getName)
-    nullSafeCodeGen(ctx, ev, (vd, cs, _) =>
-      s"${ev.value} = $self.anyGe($vd, $cs);")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): AnyCosineGeCells =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 object AnyCosineCells {
@@ -244,11 +237,23 @@ object AnyCosineCells {
     val flatSqCn: Array[Double], val flatBound: Array[Double],
     val flatIx: Array[Int], val flatLen: Int, val flatCnt: Int)
 
-  /** Same hardened fingerprint key as [[AnyCosine]]'s cache, plus the
-    * threshold (the skip bounds bake in θ_t, and two expressions with
-    * different thresholds over one buffer must not share entries) and
-    * the struct arity (a 4- and a 5-field view of one buffer must not
-    * share an unpack).
+  /** Per-task cache key of the unpacked broadcast index, on the
+    * UNDERLYING buffer (base object identity + offset): the join's
+    * build row hands out a fresh ArrayData wrapper on every access,
+    * so wrapper identity never repeats, but the bytes it points into
+    * are the one broadcast copy.
+    *
+    * Identity+offset alone is UNSAFE for a per-row (non-broadcast)
+    * cells column: generated UnsafeProjections reuse one backing
+    * buffer across rows, so the same (object, offset) can present
+    * different bytes. The key therefore also carries numElements,
+    * sizeInBytes, and the first/last 8 bytes of the region — a cheap
+    * content check that turns a violation of the broadcast contract
+    * into at worst a per-row re-unpack, never a wrong answer — plus
+    * the threshold (the skip bounds bake in θ_t, and two expressions
+    * with different thresholds over one buffer must not share
+    * entries) and the struct arity (a 4- and a 5-field view of one
+    * buffer must not share an unpack).
     */
   private final class Entry(val bo: AnyRef, val off: Long, val numEl: Int,
     val size: Long, val head: Long, val tail: Long, val t: Double,
@@ -368,8 +373,8 @@ object AnyCosineCells {
     cx
   }
 
-  /** Called from generated code. Corpus-vector handling is
-    * [[AnyCosine.anyGe]]'s, verbatim: a null element returns false.
+  /** Called from generated code. A corpus vector with a null element
+    * returns false (the chain's NULL cosine matches nothing).
     */
   def anyGe(vd: ArrayData, cells: ArrayData, t: Double,
       arity: Int, subArity: Int): Boolean = {
@@ -390,7 +395,7 @@ object AnyCosineCells {
     // centroid block, member scan only for survivors. If q's length
     // differs from the block's, no flat bound is valid — scan them all
     // (their members then fail the length guard individually, exactly
-    // as the flat kernel would decide).
+    // as the chain would decide).
     if (cx.flatCnt > 0) {
       if (cx.flatLen == n) {
         val fc = cx.flatCv

@@ -1,12 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType}
 
 /** `graft_byte_stride(payload, stride)` — unsigned byte values of a
   * binary payload at positions 0, stride, 2·stride, … as `array<int>`.
@@ -23,18 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
   * clamped). Null payload/stride null-propagate via BinaryExpression.
   */
 case class ByteStride(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends Kernel2("graft_byte_stride", ArrayType(IntegerType, containsNull = false),
+      Own, Arg(BinaryType), Arg.int) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_byte_stride expects (binary, int), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_byte_stride"
   // stride < 1 produces null even from non-nullable children
   override def nullable: Boolean = true
 
@@ -72,14 +59,4 @@ case class ByteStride(left: Expression, right: Expression)
          |}
        """.stripMargin
     })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ByteStride =
-    copy(left = newLeft, right = newRight)
-}
-
-object ByteStrideFunctions {
-  /** Column-API form of [[ByteStride]] (registered by [[GraftExtensions]]). */
-  def graftByteStride(payload: Column, stride: Column): Column =
-    call_function("graft_byte_stride", payload, stride)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,28 +36,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * The input must be valid UTF-8, which Spark's `lower` always emits.
   */
 case class DocTerms(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends Kernel2("graft_doc_terms", ArrayType(StringType, containsNull = false),
+      // its generated code also owns a scratch table
+      Own, Arg.string, Arg.strings.literal("stopwords must be a literal")) {
 
-  private def text = left
   private def stopwords = right
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val stopOk = stopwords.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (text.dataType != StringType || !stopOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_doc_terms expects (string, array<string>), got " +
-          s"(${text.dataType.simpleString}, ${stopwords.dataType.simpleString})")
-    else if (!stopwords.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_doc_terms stopwords must be a literal")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_doc_terms"
 
   /** Stopword set built ONCE from the foldable child (shared by eval
     * and, via a reference object, codegen).
@@ -89,10 +71,6 @@ case class DocTerms(left: Expression, right: Expression)
     nullSafeCodeGen(ctx, ev, (t, _) =>
       s"${ev.value} = $self.terms($t, $scratch);")
   }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DocTerms =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Reusable buffers of [[DocTerms]], one set per generated-code

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 /** Per-document DISTINCT hashed word-n-gram keys, fused:
   * `graft_gram_keys(toks, n, production)` ≡ the sorted distinct set of
@@ -28,32 +25,13 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType
   * Fewer than n tokens (or n ≤ 0) → empty array, matching the chain's
   * `when(size(toks) < n, array())` guard.
   */
-case class GramKeys(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(StringType, _), IntegerType, BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_gram_keys expects (array<string>, int, boolean), got " +
-          s"(${a.simpleString}, ${b.simpleString}, ${c.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gram_keys"
+case class GramKeys(first: Expression, second: Expression, third: Expression)
+    extends Kernel3("graft_gram_keys", GramKeys.Keys,
+      Static("graft.functions.GramKeys.keys"), Arg.strings, Arg.int, Arg.boolean) {
 
   override protected def nullSafeEval(toks: Any, n: Any, prod: Any): Any =
     GramKeys.keys(toks.asInstanceOf[ArrayData], n.asInstanceOf[Int],
       prod.asInstanceOf[Boolean])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, n, p) => s"graft.functions.GramKeys.keys($t, $n, $p)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): GramKeys =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /** Positional sibling of [[GramKeys]]:
@@ -62,32 +40,13 @@ case class GramKeys(first: Expression, second: Expression,
   * (pos, key) postings the substring-dedup verify stage aligns into
   * diagonal runs — positions matter there, so no dedupe/sort.
   */
-case class GramKeySeq(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(StringType, _), IntegerType, BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_gram_key_seq expects (array<string>, int, boolean), got " +
-          s"(${a.simpleString}, ${b.simpleString}, ${c.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gram_key_seq"
+case class GramKeySeq(first: Expression, second: Expression, third: Expression)
+    extends Kernel3("graft_gram_key_seq", GramKeys.Keys,
+      Static("graft.functions.GramKeys.keySeq"), Arg.strings, Arg.int, Arg.boolean) {
 
   override protected def nullSafeEval(toks: Any, n: Any, prod: Any): Any =
     GramKeys.keySeq(toks.asInstanceOf[ArrayData], n.asInstanceOf[Int],
       prod.asInstanceOf[Boolean])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, n, p) => s"graft.functions.GramKeys.keySeq($t, $n, $p)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): GramKeySeq =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /** Winnowing anchor selection over an ordered key sequence:
@@ -100,30 +59,11 @@ case class GramKeySeq(first: Expression, second: Expression,
   * bound.
   */
 case class WinnowSelect(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_winnow_select expects (array<long>, int), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_winnow_select"
+    extends Kernel2("graft_winnow_select", GramKeys.Keys,
+      Static("graft.functions.GramKeys.winnowSelect"), Arg.longs, Arg.int) {
 
   override protected def nullSafeEval(ks: Any, w: Any): Any =
     GramKeys.winnowSelect(ks.asInstanceOf[ArrayData], w.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (k, w) => s"graft.functions.GramKeys.winnowSelect($k, $w)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): WinnowSelect =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Both per-doc key views in one pass:
@@ -135,35 +75,16 @@ case class WinnowSelect(left: Expression, right: Expression)
   * Replaces `array_sort(collect_set(struct))` + two HOF `transform`s
   * + a second `array_sort`, all of which run interpreted per doc.
   */
-case class DfkViews(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StructType(fs), _) if fs.length == 2 &&
-        fs(0).dataType == IntegerType && fs(1).dataType == LongType =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"graft_dfk_views expects array<struct<df int, shk long>>, " +
-          s"got ${t.simpleString}")
-    }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("ks", ArrayType(LongType, containsNull = false),
-      nullable = false),
-    StructField("oks", ArrayType(LongType, containsNull = false),
-      nullable = false),
-    StructField("n", IntegerType, nullable = false)))
-  override def prettyName: String = "graft_dfk_views"
+case class DfkViews(child: Expression) extends Kernel1("graft_dfk_views",
+    StructType(Seq(StructField("ks", GramKeys.Keys, nullable = false),
+      StructField("oks", GramKeys.Keys, nullable = false),
+      StructField("n", IntegerType, nullable = false))),
+    Static("graft.functions.GramKeys.dfkViews"),
+    Arg(ArrayType(StructType(Seq(StructField("df", IntegerType),
+      StructField("shk", LongType)))), "array<struct<df int, shk long>>")) {
 
   override protected def nullSafeEval(arr: Any): Any =
     GramKeys.dfkViews(arr.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.GramKeys.dfkViews($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): DfkViews =
-    copy(child = newChild)
 }
 
 /** Intersection SIZE of two SORTED DISTINCT long arrays:
@@ -175,33 +96,19 @@ case class DfkViews(child: Expression)
   * its 131 s sf10 wall in array_intersect before this kernel).
   */
 case class SortedIntersect(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_sorted_ix expects (array<long>, array<long>), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_sorted_ix"
+    extends Kernel2("graft_sorted_ix", IntegerType,
+      Static("graft.functions.GramKeys.sortedIx"), Arg.longs, Arg.longs) {
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     GramKeys.sortedIx(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.GramKeys.sortedIx($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersect =
-    copy(left = newLeft, right = newRight)
 }
 
 object GramKeys {
+
+  /** The key arrays these kernels return: ascending or positional
+    * longs, never null elements.
+    */
+  val Keys: ArrayType = ArrayType(LongType, containsNull = false)
 
   /** Called from generated code: both key views + the set size from
     * an unordered distinct (df, shk) pair array.

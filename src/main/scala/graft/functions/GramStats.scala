@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,33 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * RunStats∘shingleOfN and to the explode+groupBy reference.
   */
 case class GramStats(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_gram_stats expects (array<string>, int), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_grams", LongType, nullable = false),
-    StructField("top", LongType, nullable = false),
-    StructField("dup", LongType, nullable = false)))
-  override def prettyName: String = "graft_gram_stats"
+    extends Kernel2("graft_gram_stats", StructType(Seq(
+      StructField("n_grams", LongType, nullable = false),
+      StructField("top", LongType, nullable = false),
+      StructField("dup", LongType, nullable = false))),
+      Static("graft.functions.GramStats.stats"), Arg.strings, Arg.int) {
 
   override protected def nullSafeEval(toks: Any, n: Any): Any =
     GramStats.stats(toks.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, n) => s"graft.functions.GramStats.stats($t, $n)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GramStats =
-    copy(left = newLeft, right = newRight)
 }
 
 object GramStats {

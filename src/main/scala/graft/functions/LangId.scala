@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,38 +34,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * data — materialized once into a token→language-indices hash map.
   */
 case class LangId(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends Kernel2("graft_lang_id", StructType(Seq(
+      StructField("predicted_lang", StringType, nullable = false),
+      StructField("matches", LongType, nullable = false))),
+      Instance("classify"), Arg.string,
+      // the ws element type must be STRING, not just any array: a
+      // non-string ws array would pass analysis and then misread at
+      // eval via getUTF8String
+      Arg(ArrayType(StructType(Seq(StructField("lang", StringType),
+        StructField("ws", ArrayType(StringType))))),
+        "array<struct<lang, array<string>>>")
+        .literal("markers must be a literal")) {
 
-  private def text = left
   private def markers = right
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val mOk = markers.dataType match {
-      case ArrayType(StructType(fs), _) if fs.length == 2 &&
-        fs(0).dataType == StringType &&
-        // element type must be STRING, not just any array: a
-        // non-string ws array would pass analysis and then misread
-        // at eval via getUTF8String
-        (fs(1).dataType match {
-          case ArrayType(StringType, _) => true
-          case _ => false
-        }) => true
-      case _ => false
-    }
-    if (text.dataType != StringType || !mOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_lang_id expects (string, array<struct<lang, array<string>>>), " +
-          s"got (${text.dataType.simpleString}, ${markers.dataType.simpleString})")
-    else if (!markers.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_lang_id markers must be a literal")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("predicted_lang", StringType, nullable = false),
-    StructField("matches", LongType, nullable = false)))
-  override def prettyName: String = "graft_lang_id"
 
   @transient private lazy val langs: Array[UTF8String] = {
     val ad = markers.eval(null).asInstanceOf[ArrayData]
@@ -129,16 +108,6 @@ case class LangId(left: Expression, right: Expression)
 
   override protected def nullSafeEval(t: Any, m: Any): Any =
     classify(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("langId", this, classOf[LangId].getName)
-    nullSafeCodeGen(ctx, ev, (t, _) =>
-      s"${ev.value} = $self.classify($t);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LangId =
-    copy(left = newLeft, right = newRight)
 }
 
 object LangId {

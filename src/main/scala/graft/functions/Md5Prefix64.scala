@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** First 8 bytes of md5(utf8(s)) as a big-endian long, with codegen:
@@ -18,24 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen, with BIT-IDENTICAL results (Md5Prefix64Spec
   * pins the equivalences; the DuckDB oracle SQL is untouched).
   */
-case class Md5Prefix64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_md5_bits expects string, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_md5_bits"
+case class Md5Prefix64(child: Expression) extends Kernel1("graft_md5_bits",
+    LongType, Static("graft.functions.Md5Prefix64.hash64"), Arg.string) {
 
   override protected def nullSafeEval(input: Any): Any =
     Md5Prefix64.hash64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Prefix64.hash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Prefix64 =
-    copy(child = newChild)
 }
 
 object Md5Prefix64 {

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** MinHash signature straight off the token array:
   * `graft_minhash(toks, n, k, production)` = array of the k affine
@@ -25,41 +23,15 @@ import org.apache.spark.sql.types._
   * [[graft.dedup.Dedup.minHashCoeffs]] delegates here).
   */
 case class MinHashSig(first: Expression, second: Expression,
-    third: Expression, fourth: Expression) extends QuaternaryExpression {
+    third: Expression, fourth: Expression) extends Kernel4("graft_minhash",
+      ArrayType(LongType, containsNull = false),
+      Static("graft.functions.MinHashSig.sig", nullResult = true),
+      Arg.strings, Arg.int, Arg.int, Arg.boolean) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (ArrayType(StringType, _), IntegerType, IntegerType, BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c, d) => TypeCheckResult.TypeCheckFailure(
-        s"graft_minhash expects (array<string>, int, int, boolean), got " +
-          s"(${a.simpleString}, ${b.simpleString}, ${c.simpleString}, " +
-          s"${d.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_minhash"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val toks = first.eval(input)
-    val n = second.eval(input)
-    val k = third.eval(input)
-    val production = fourth.eval(input)
-    if (toks == null || n == null || k == null || production == null) null
-    else MinHashSig.sig(toks.asInstanceOf[ArrayData], n.asInstanceOf[Int],
+  override protected def nullSafeEval(toks: Any, n: Any, k: Any,
+      production: Any): Any =
+    MinHashSig.sig(toks.asInstanceOf[ArrayData], n.asInstanceOf[Int],
       k.asInstanceOf[Int], production.asInstanceOf[Boolean])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n, k, p) =>
-      s"graft.functions.MinHashSig.sig($t, $n, $k, $p)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression,
-      newFourth: Expression): MinHashSig =
-    copy(first = newFirst, second = newSecond, third = newThird,
-      fourth = newFourth)
 }
 
 object MinHashSig {

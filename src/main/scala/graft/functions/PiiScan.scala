@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,29 +34,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * (character classes, bounded repetition, `\b`; no lookaround or
   * backreferences) so one language drives Spark, DuckDB, and the JVM.
   */
-case class PiiScan(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_pii_scan expects string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_emails", LongType, nullable = false),
-    StructField("n_phones", LongType, nullable = false),
-    StructField("n_ipv4", LongType, nullable = false),
-    StructField("redacted", StringType, nullable = false)))
-  override def prettyName: String = "graft_pii_scan"
+case class PiiScan(child: Expression) extends Kernel1("graft_pii_scan",
+    StructType(Seq(StructField("n_emails", LongType, nullable = false),
+      StructField("n_phones", LongType, nullable = false),
+      StructField("n_ipv4", LongType, nullable = false),
+      StructField("redacted", StringType, nullable = false))),
+    Static("graft.functions.PiiScan.scan"), Arg.string) {
 
   override protected def nullSafeEval(t: Any): Any =
     PiiScan.scan(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PiiScan.scan($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PiiScan =
-    copy(child = newChild)
 }
 
 object PiiScan {

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.DoubleType
 
 /** The engine's portable log2 as ONE codegen'd expression: the same
   * 89-step branchless fold [[graft.text.Analysis.portableLog2]]
@@ -25,24 +23,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * fusion), so results are bit-for-bit the fold's; AnalysisSpec pins
   * native ≡ fold ≡ branchy-reference across the domain.
   */
-case class PortableLog2(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_log2 expects double, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_log2"
+case class PortableLog2(child: Expression) extends Kernel1("graft_log2",
+    DoubleType, Static("graft.functions.PortableLog2.log2"), Arg.double) {
 
   override protected def nullSafeEval(input: Any): Any =
     PortableLog2.log2(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PortableLog2.log2($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PortableLog2 =
-    copy(child = newChild)
 }
 
 object PortableLog2 {

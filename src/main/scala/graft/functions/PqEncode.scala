@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Native PQ encoder: `graft_pq_encode(vec, codebook, norms)` → the
   * 1-based L2-argmin codeword position per subspace, as one fused loop.
@@ -29,41 +27,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * truncate), mirroring [[DotProduct]].
   */
 case class PqEncode(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+    extends Kernel3("graft_pq_encode", ArrayType(IntegerType, containsNull = false),
+      // the call carries the codebook in THIS expression as a reference
+      // object: generated code stays a few lines regardless of PqM·PqK,
+      // which is the point; a dimension mismatch returns null
+      Instance("encode", nullResult = true), Arg.doubles,
+      PqEncode.Codebook.literal(PqEncode.Literals),
+      Arg(ArrayType(ArrayType(DoubleType))).literal(PqEncode.Literals)) {
 
-  private def vec = first
   private def codebook = second
   private def norms = third
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def vecOk(t: DataType) = t match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    def cbOk(t: DataType) = t match {
-      case ArrayType(ArrayType(ArrayType(DoubleType, _), _), _) => true
-      case _ => false
-    }
-    def cnOk(t: DataType) = t match {
-      case ArrayType(ArrayType(DoubleType, _), _) => true
-      case _ => false
-    }
-    if (!vecOk(vec.dataType) || !cbOk(codebook.dataType) || !cnOk(norms.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_pq_encode expects (array<double>, array<array<array<double>>>, " +
-          s"array<array<double>>), got (${vec.dataType.simpleString}, " +
-          s"${codebook.dataType.simpleString}, ${norms.dataType.simpleString})")
-    else if (!codebook.foldable || !norms.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_pq_encode codebook and norms must be literals (a trained " +
-          "codebook is a driver-side constant, never per-row data)")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-  // dimension mismatch produces null even from non-nullable children
-  override def nullable: Boolean = true
 
   /** Codebook as primitive arrays, materialized ONCE from the foldable
     * children (shared by eval and, via a reference object, codegen).
@@ -115,29 +88,12 @@ case class PqEncode(first: Expression, second: Expression, third: Expression)
 
   override protected def nullSafeEval(v: Any, cb: Any, cn: Any): Any =
     encode(v.asInstanceOf[ArrayData])
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the kernel call carries the codebook via THIS expression as a
-    // reference object — generated code stays a few lines regardless
-    // of PqM·PqK, which is the point
-    val self = ctx.addReferenceObj("pqEncode", this, classOf[PqEncode].getName)
-    nullSafeCodeGen(ctx, ev, (v, _, _) => {
-      val res = ctx.freshName("pqCodes")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $res = $self.encode($v);
-         |if ($res == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $res;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): PqEncode =
-    copy(first = newFirst, second = newSecond, third = newThird)
+object PqEncode {
+  val Codebook: Arg = Arg(ArrayType(ArrayType(ArrayType(DoubleType))))
+  val Literals = "codebook and norms must be literals (a trained codebook " +
+    "is a driver-side constant, never per-row data)"
 }
 
 /** Query-side ADC lookup table as the same fused-kernel shape:
@@ -149,35 +105,13 @@ case class PqEncode(first: Expression, second: Expression, third: Expression)
   * whose length differs from Σ subspace dims yields NULL.
   */
 case class PqLut(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends Kernel2("graft_pq_lut",
+      ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false),
+      Instance("lut", nullResult = true), Arg.doubles,
+      PqEncode.Codebook.literal("codebook must be a literal (a trained " +
+        "codebook is a driver-side constant, never per-row data)")) {
 
-  private def vec = left
   private def codebook = right
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def vecOk(t: DataType) = t match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    def cbOk(t: DataType) = t match {
-      case ArrayType(ArrayType(ArrayType(DoubleType, _), _), _) => true
-      case _ => false
-    }
-    if (!vecOk(vec.dataType) || !cbOk(codebook.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_pq_lut expects (array<double>, array<array<array<double>>>), " +
-          s"got (${vec.dataType.simpleString}, ${codebook.dataType.simpleString})")
-    else if (!codebook.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_pq_lut codebook must be a literal (a trained codebook is a " +
-          "driver-side constant, never per-row data)")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def prettyName: String = "graft_pq_lut"
-  override def nullable: Boolean = true
 
   @transient private lazy val cbArr: Array[Array[Array[Double]]] = {
     val ad = codebook.eval(null).asInstanceOf[ArrayData]
@@ -217,23 +151,4 @@ case class PqLut(left: Expression, right: Expression)
 
   override protected def nullSafeEval(v: Any, cb: Any): Any =
     lut(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pqLut", this, classOf[PqLut].getName)
-    nullSafeCodeGen(ctx, ev, (v, _) => {
-      val res = ctx.freshName("pqLut")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $res = $self.lut($v);
-         |if ($res == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $res;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqLut =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -41,33 +39,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * token, empty, and all-stopword inputs.
   */
 case class QualityStats(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends Kernel2("graft_quality_stats", StructType(Seq(
+      StructField("n_chars", LongType, nullable = false),
+      StructField("n_tokens", LongType, nullable = false),
+      StructField("n_distinct", LongType, nullable = false),
+      StructField("n_stopwords", LongType, nullable = false),
+      StructField("token_chars", LongType, nullable = false))),
+      Instance("stats"), Arg.string,
+      Arg.strings.literal("stopwords must be a literal")) {
 
-  private def text = left
   private def stopwords = right
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val stopOk = stopwords.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (text.dataType != StringType || !stopOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_quality_stats expects (string, array<string>), got " +
-          s"(${text.dataType.simpleString}, ${stopwords.dataType.simpleString})")
-    else if (!stopwords.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_quality_stats stopwords must be a literal")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_chars", LongType, nullable = false),
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("n_stopwords", LongType, nullable = false),
-    StructField("token_chars", LongType, nullable = false)))
-  override def prettyName: String = "graft_quality_stats"
 
   /** Stopword set materialized ONCE from the foldable child (shared by
     * eval and, via a reference object, codegen).
@@ -110,19 +91,6 @@ case class QualityStats(left: Expression, right: Expression)
 
   override protected def nullSafeEval(t: Any, sw: Any): Any =
     stats(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the stopword set rides THIS expression as a reference object —
-    // generated code is one call regardless of list size
-    val self = ctx.addReferenceObj("qualityStats", this,
-      classOf[QualityStats].getName)
-    nullSafeCodeGen(ctx, ev, (t, _) =>
-      s"${ev.value} = $self.stats($t);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QualityStats =
-    copy(left = newLeft, right = newRight)
 }
 
 object QualityStats {

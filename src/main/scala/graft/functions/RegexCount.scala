@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Count-only regex scan: `graft_regex_count(text, pattern)` = the
@@ -25,23 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark/DuckDB-shared subset so the oracle compiles the same source.
   */
 case class RegexCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends Kernel2("graft_regex_count", LongType, Instance("count"),
+      Arg.string, Arg.string.literal("pattern must be a literal")) {
 
-  private def text = left
   private def pattern = right
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (text.dataType != StringType || pattern.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_regex_count expects (string, string), got " +
-          s"(${text.dataType.simpleString}, ${pattern.dataType.simpleString})")
-    else if (!pattern.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_regex_count pattern must be a literal")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_regex_count"
 
   @transient private lazy val compiled: java.util.regex.Pattern =
     java.util.regex.Pattern.compile(
@@ -57,17 +42,6 @@ case class RegexCount(left: Expression, right: Expression)
 
   override protected def nullSafeEval(t: Any, p: Any): Any =
     count(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("regexCount", this,
-      classOf[RegexCount].getName)
-    nullSafeCodeGen(ctx, ev, (t, _) =>
-      s"${ev.value} = $self.count($t);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RegexCount =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Hand-compiled automaton of the BPE-ish tokenizer pattern
@@ -87,25 +61,11 @@ case class RegexCount(left: Expression, right: Expression)
   * Parity with `graft_regex_count(text, BpeishPattern)` is spec- and
   * property-pinned; the DuckDB oracle keeps the regex form.
   */
-case class BpeishCount(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bpeish_count expects string, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_bpeish_count"
+case class BpeishCount(child: Expression) extends Kernel1("graft_bpeish_count",
+    LongType, Static("graft.functions.BpeishCount.count"), Arg.string) {
 
   override protected def nullSafeEval(t: Any): Any =
     BpeishCount.count(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeishCount.count($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeishCount =
-    copy(child = newChild)
 }
 
 object BpeishCount {

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,28 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen (the PortableLog2 lesson); this kernel sorts a
   * copied reference array and run-length-scans it in a tight loop.
   */
-case class RunStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"graft_run_stats expects array<string>, got ${t.simpleString}")
-    }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("top", LongType, nullable = false),
-    StructField("dup", LongType, nullable = false)))
-  override def prettyName: String = "graft_run_stats"
+case class RunStats(child: Expression) extends Kernel1("graft_run_stats",
+    StructType(Seq(StructField("top", LongType, nullable = false),
+      StructField("dup", LongType, nullable = false))),
+    Static("graft.functions.RunStats.stats"), Arg.strings) {
 
   override protected def nullSafeEval(input: Any): Any =
     RunStats.stats(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RunStats.stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RunStats =
-    copy(child = newChild)
 }
 
 object RunStats {

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,34 +27,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * `production` selects the per-token hash ([[PortableHash.hash64]]).
   */
 case class Simhash(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_simhash expects (array<string>, boolean), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("simhash", StringType, nullable = false),
-    StructField("ci0", LongType, nullable = false),
-    StructField("ci1", LongType, nullable = false),
-    StructField("ci2", LongType, nullable = false),
-    StructField("ci3", LongType, nullable = false)))
-  override def prettyName: String = "graft_simhash"
+    extends Kernel2("graft_simhash", StructType(Seq(
+      StructField("simhash", StringType, nullable = false),
+      StructField("ci0", LongType, nullable = false),
+      StructField("ci1", LongType, nullable = false),
+      StructField("ci2", LongType, nullable = false),
+      StructField("ci3", LongType, nullable = false))),
+      Static("graft.functions.Simhash.sig"), Arg.strings, Arg.boolean) {
 
   override protected def nullSafeEval(toks: Any, production: Any): Any =
     Simhash.sig(toks.asInstanceOf[ArrayData], production.asInstanceOf[Boolean])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, p) => s"graft.functions.Simhash.sig($t, $p)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Simhash =
-    copy(left = newLeft, right = newRight)
 }
 
 object Simhash {

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprint fused with the gram construction:
@@ -24,32 +22,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * current k-th), hex-encodes only the winners, and stays inside
   * whole-stage codegen (AnalysisSpec pins kernel ≡ HOF form).
   */
-case class WinnowGrams(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(StringType, _), IntegerType, IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_winnow_grams expects (array<string>, int, int), got " +
-          s"(${a.simpleString}, ${b.simpleString}, ${c.simpleString})")
-    }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_winnow_grams"
+case class WinnowGrams(first: Expression, second: Expression, third: Expression)
+    extends Kernel3("graft_winnow_grams", StringType,
+      Static("graft.functions.Winnow.fpGrams"), Arg.strings, Arg.int, Arg.int) {
 
   override protected def nullSafeEval(toks: Any, n: Any, k: Any): Any =
     Winnow.fpGrams(toks.asInstanceOf[ArrayData],
       n.asInstanceOf[Int], k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, n, k) => s"graft.functions.Winnow.fpGrams($t, $n, $k)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): WinnowGrams =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 object Winnow {

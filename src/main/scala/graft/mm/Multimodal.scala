@@ -57,7 +57,7 @@ object Multimodal {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.parquet(s, dir, "documents")
-      .filter(col("text").isNotNull && length(col("text")) > 0)
+      .filter(graft.text.Tokenize.hasText(col("text")))
 
   /** Deterministic media table derived from documents: one media row per
     * doc, kind round-robin over image/audio/video, payload = text bytes.
@@ -83,7 +83,7 @@ object Multimodal {
     * the DuckDB oracle's per-character `unicode(text[i])` matches.
     */
   private def pixelsOf(payload: Column, stride: Int = 1): Column =
-    graft.functions.ByteStrideFunctions.graftByteStride(payload, lit(stride))
+    graft.functions.GraftFunctions.graftByteStride(payload, lit(stride))
 
   /** (media_id, kind, n_bytes, mean_byte, min_byte, max_byte). */
   def decodeStats(m: DataFrame): DataFrame =

@@ -187,7 +187,7 @@ object Sampling {
       .partitionBy("shard").orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    d.filter(col("text").isNotNull && length(col("text")) > 0)
+    d.filter(Tokenize.hasText(col("text")))
       .select(col("doc_id"), shard.as("shard"),
         size(Tokenize.whitespaceTokens).cast("long").as("n_tokens"))
       .withColumn("cum_before",
@@ -242,7 +242,7 @@ object Sampling {
 
   def budgetPlan(d: DataFrame): DataFrame = {
     val perLang = d
-      .filter(col("text").isNotNull && length(col("text")) > 0)
+      .filter(Tokenize.hasText(col("text")))
       .select(col("lang"), size(Tokenize.whitespaceTokens).cast("long").as("n"))
       .groupBy("lang").agg(sum(col("n")).as("avail_tokens"))
     val all = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))

@@ -800,9 +800,8 @@ object Similarity {
     * centroid decides by triangle inequality
     * (θ(q,c) − radius > acos(t) ⇒ no member can match — EXACT, see
     * the kernel scaladoc) whether the bucket's members are scanned at
-    * all; survivors go through the same bit-identical member test as
-    * the flat [[graft.functions.AnyCosineGe]] kernel (AnyCosineSpec
-    * pins three-way parity: chain ≡ flat kernel ≡ cells kernel).
+    * all; survivors go through the same bit-identical member test
+    * (AnyCosineCellsSpec pins parity with the Column chain).
     *
     * Why the history matters at 100 TB: the r11 broadcast nested-loop
     * join paid ~320 ns per PAIR (36 s at sf10); the r12 flat kernel

@@ -31,12 +31,6 @@ object StreamingCounts {
       .groupBy(window(col("ts"), "1 hour").getField("start").as("hour"),
         col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-
-  /** Streaming form: bound state with a watermark so closed windows are
-    * finalized and dropped from state.
-    */
-  def hourlyCountsStreaming(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    hourlyCounts(events.withWatermark("ts", watermark))
 }
 
 /** Streaming twin of the batch `events_anomaly` query: scores each
@@ -57,8 +51,8 @@ object StreamingCounts {
   * per-type constants, so they ride the groupBy as extra keys without
   * changing its cardinality) — joining after the aggregate instead
   * strips the event-time watermark and append mode rejects the plan.
-  * State stays bounded by the watermark exactly as in
-  * [[StreamingCounts.hourlyCountsStreaming]].
+  * State stays bounded by the watermark exactly as for
+  * [[StreamingCounts.hourlyCounts]] over a watermarked stream.
   */
 object StreamingAnomaly {
 
@@ -223,7 +217,7 @@ object StreamingDedup {
     import s.implicits._
     val kept = store.resolve("kept.parquet").toString
     val pairsDf = graft.sources.Tables.parquet(s, dir, "documents")
-      .filter(col("text").isNotNull && length(col("text")) > 0)
+      .filter(graft.text.Tokenize.hasText(col("text")))
       .select(sha2(lower(col("text")), 256).as("_1"),
         col("doc_id").as("_2"))
     val n = pairsDf.count()

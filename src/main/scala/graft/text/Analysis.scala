@@ -58,7 +58,7 @@ object Analysis {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.parquet(s, dir, "documents")
-      .filter(col("text").isNotNull && length(col("text")) > 0)
+      .filter(Tokenize.hasText(col("text")))
 
   /** The fused five-count quality kernel over `text` (stopword list as
     * a foldable literal). Deterministic, so repeated `getField`s on it

@@ -79,14 +79,17 @@ object Tokenize {
     new GenericArrayData(text.toLowerCase(java.util.Locale.ROOT).split("\\s+")
       .filter(_.nonEmpty).map(t => UTF8String.fromString(t): Any))
 
+  /** Present and non-empty: the one admission predicate for text. For
+    * a non-null string `x <> ''` is `length(x) > 0` (what the DuckDB
+    * oracles write), but it reads the byte length (O(1)) where `length`
+    * counts the code points of the whole text.
+    */
+  def hasText(c: Column): Column = c.isNotNull && c =!= ""
+
   /** D4 admission predicate: both fields present and non-empty
-    * (run_chi:62–65). Renames categoryCol → `category`. For a non-null
-    * string `x <> ''` is `length(x) > 0`, but it reads the byte length
-    * (O(1)) where `length` counts the code points of the whole review.
+    * (run_chi:62–65). Renames categoryCol → `category`.
     */
   def admitted_docs(docs: DataFrame, textCol: String, categoryCol: String): DataFrame =
-    docs
-      .filter(col(textCol).isNotNull && col(textCol) =!= "" &&
-        col(categoryCol).isNotNull && col(categoryCol) =!= "")
+    docs.filter(hasText(col(textCol)) && hasText(col(categoryCol)))
       .withColumn("category", col(categoryCol))
 }

@@ -4,12 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins [[AnyCosineGeCells]] (the bucketed EXACT decontam screen)
-  * three ways:
-  *  - verdict parity with the flat [[AnyCosineGe]] kernel (and hence
-  *    with the relational chain AnyCosineSpec pins the flat kernel
-  *    against) for ANY partition of the eval set into cells — the
-  *    triangle-inequality bound may only SKIP cells that provably
+  * four ways:
+  *  - verdict parity with the flat relational formulation,
+  *    [[CosineChain]], for ANY partition of the eval set into cells —
+  *    the triangle-inequality bound may only SKIP cells that provably
   *    contain no match, so the partition never changes the verdict;
+  *  - exact ties and ±1-ulp thresholds, and the one place the kernel
+  *    is deliberately MORE defined than the chain: a zero-norm vector
+  *    makes the chain's division ERROR under ANSI mode, while the
+  *    kernel treats the undefined cosine as no-match;
   *  - parity in a configuration where pruning provably fires (tight
   *    far-apart clusters — the bound math's happy path);
   *  - the conservative fallbacks: a degenerate centroid (null, null
@@ -45,16 +48,8 @@ class AnyCosineCellsSpec extends graft.SparkSpec {
     rows.toDF("id", "v")
   }
 
-  private def flat(corpus: DataFrame, eval: DataFrame, t: Double): Set[Long] = {
-    val evalM = eval.select(col("v"))
-      .withColumn("en", GraftFunctions.graftDot(col("v"), col("v")))
-      .agg(collect_list(struct(col("v").as("ev"), col("en").as("en")))
-        .as("evals"))
-    corpus.crossJoin(broadcast(evalM))
-      .filter(coalesce(GraftFunctions.graftAnyCosineGe(
-        col("v"), col("evals"), lit(t)), lit(false)))
-      .select("id").collect().map(_.getLong(0)).toSet
-  }
+  private def flat(corpus: DataFrame, eval: DataFrame, t: Double): Set[Long] =
+    CosineChain.contaminated(corpus, eval, t)
 
   /** The embDecontaminate index construction, parameterized on an
     * arbitrary bucket key (`id % groups` here — the bound must hold
@@ -389,6 +384,61 @@ class AnyCosineCellsSpec extends graft.SparkSpec {
       0.4) === Set.empty)
   }
 
+  test("kernel == chain on a mixed corpus") {
+    // eval: two directions
+    val eval = vf(Seq(1000L -> Seq(1.0, 0.0, 0.0), 1001L -> Seq(0.0, 1.0, 1.0)))
+    val corpus = vf(Seq(
+      1L -> Seq(2.0, 0.01, 0.0), // near eval 1000 -> contaminated
+      2L -> Seq(0.0, 3.0, 3.1), // near eval 1001 -> contaminated
+      3L -> Seq(-1.0, 0.5, -0.5), // far from both -> clean
+      5L -> Seq(0.0, 0.0, 1.0))) // cos = 1/sqrt(2) < 0.9 -> clean
+    val chain = flat(corpus, eval, 0.9)
+    val kernel = cells(corpus, eval, 2, 3, 0.9)
+    assert(chain === kernel)
+    assert(kernel === Set(1L, 2L), s"got $kernel")
+  }
+
+  test("zero-norm vector: chain errors under ANSI, kernel says clean") {
+    val eval = vf(Seq(1000L -> Seq(1.0, 0.0, 0.0)))
+    val corpus = vf(Seq(4L -> Seq(0.0, 0.0, 0.0)))
+    // the chain's 0/0 division is an ANSI error — the kernel exists
+    // partly so the screen is total
+    intercept[ArithmeticException] { // DIVIDE_BY_ZERO, SQLSTATE 22012
+      flat(corpus, eval, 0.9)
+    }
+    assert(cells(corpus, eval, 1, 3, 0.9) === Set.empty)
+  }
+
+  test("exact ties and ±1-ulp thresholds decide exactly") {
+    // Thresholds AT, just above, and just below a member's exact cosine:
+    // the kernel's fold must be bit-identical to the chain's, or the
+    // 1-ulp cases flip. The one eval vector is its own cell, so the
+    // cell's bound never skips it.
+    val rnd = new scala.util.Random(61)
+    val vs = Seq.fill(6)(Seq.fill(8)(rnd.nextGaussian()))
+    val corpus = vf(vs.zipWithIndex.map { case (v, i) => i.toLong -> v })
+    val ev = Seq.fill(8)(rnd.nextGaussian())
+    val evalDf = vf(Seq(100L -> ev))
+    // the chain's exact arithmetic, replicated operation-for-operation
+    def fold(a: Seq[Double], b: Seq[Double]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < 8) { acc += a(i) * b(i); i += 1 }
+      acc
+    }
+    val en = fold(ev, ev)
+    val cosines = vs.map(v => fold(v, ev) / (math.sqrt(fold(v, v)) * math.sqrt(en)))
+    def kernelAt(tt: Double): Set[Long] = cells(corpus, evalDf, 1, 8, tt)
+    cosines.zipWithIndex.foreach { case (c, i) =>
+      val id = i.toLong
+      assert(kernelAt(c).contains(id), s"tie at member $i must hit (>=)")
+      assert(kernelAt(Math.nextUp(c)) === cosines.zipWithIndex.collect {
+        case (c2, i2) if c2 >= Math.nextUp(c) => i2.toLong
+      }.toSet, s"t = nextUp(cos_$i)")
+      assert(kernelAt(Math.nextDown(c)).contains(id), s"t = nextDown(cos_$i)")
+    }
+  }
+
   test("zero-norm corpus vector is clean (total extension, as flat)") {
     val corpus = vf(Seq(4L -> Seq(0.0, 0.0)))
     assert(cellsLiteral(corpus,
@@ -397,24 +447,20 @@ class AnyCosineCellsSpec extends graft.SparkSpec {
   }
 
   test("the real query matches its flat formulation on the fixture") {
-    // sim_embedding_decontam now runs the bucketed screen; its output
-    // must be ROW-IDENTICAL to the r12 flat-kernel formulation on the
-    // driver fixture (the oracle gate re-checks this against DuckDB).
+    // sim_embedding_decontam runs the bucketed screen; its output must
+    // be ROW-IDENTICAL to the flat Column chain on the driver fixture
+    // (the oracle gate re-checks this against DuckDB).
     val dir = "/root/testdata/sf0.001"
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("label"),
+      .select(col("vec_id").as("id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nrm", GraftFunctions.graftDot(col("v"), col("v")))
-    val evalM = e.filter(col("label") === graft.sim.Similarity.EmbEvalLabel)
-      .agg(collect_list(struct(col("v").as("ev"), col("nrm").as("en")))
-        .as("evals"))
-    val flatQ = e.filter(col("label") =!= graft.sim.Similarity.EmbEvalLabel)
-      .crossJoin(broadcast(evalM))
-      .filter(!coalesce(GraftFunctions.graftAnyCosineGe(
-        col("v"), col("evals"),
-        lit(graft.sim.Similarity.EmbDecontamThreshold)), lit(false)))
-      .select(col("vec_id"), col("label")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    val corpus = e.filter(col("label") =!= graft.sim.Similarity.EmbEvalLabel)
+    val hit = flat(corpus,
+      e.filter(col("label") === graft.sim.Similarity.EmbEvalLabel),
+      graft.sim.Similarity.EmbDecontamThreshold)
+    val flatQ = corpus.select(col("id"), col("label")).orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+      .filterNot(r => hit(r._1)).toSeq
     val bucketed = graft.sim.Similarity.queries("sim_embedding_decontam")(
       spark, dir).collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
     assert(bucketed === flatQ)

@@ -67,7 +67,7 @@ class MultimodalSpec extends SparkSpec {
         .select(col("media_id"), col("payload"),
           col("payload").cast("string").as("txt"))
         .select(
-          graft.functions.ByteStrideFunctions
+          graft.functions.GraftFunctions
             .graftByteStride(col("payload"), lit(stride)).as("fast"),
           slowPixels(col("txt"), stride).as("slow"))
       assert(m.filter(not(col("fast") === col("slow"))).count() === 0,
