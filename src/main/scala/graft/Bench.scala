@@ -10,13 +10,15 @@ import java.util.concurrent.atomic.AtomicLong
   * it AGAIN because the per-iteration "samples" object grew the single
   * JSON line past the driver's tail/parse window):
   *  - the LAST stdout line is the compact canonical handshake —
-  *    {"metric","value","unit","queries","errors","sf"} with %.4f
+  *    {"metric","value","unit","queries","builds","errors","sf"} with %.4f
   *    medians — and nothing else; it stays ~1.5 KB at 44 queries, the
   *    shape that parsed fine in rounds 1–3;
   *  - the full per-iteration samples are emitted as a SEPARATE,
   *    EARLIER stdout line (prefix "BENCH_SAMPLES ") and in the JSON
   *    file (SPARK_GRAFT_BENCH_OUT, default /tmp/graft_bench.json),
-  *    which carries the full record including samples;
+  *    which carries the full record including samples and the build
+  *    part of each sample (`build_samples`: the wall of constructing
+  *    the DataFrame, memoized builds included);
   *  - all numeric formatting uses Locale.ROOT (a comma-decimal default
   *    locale would serialize 1,2345 — invalid JSON);
   *  - a warmup pass (smallest fixture) runs first so the headline numbers
@@ -106,21 +108,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Session.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
-    // Bench knob for the production-hash variant (default: oracle md5).
-    // Validated here, once, at startup: PortableHash.enabled calls
-    // String.toBoolean, so an unvalidated "1"/"yes" would otherwise
-    // surface as an IllegalArgumentException inside EVERY
-    // hash-consulting query at plan-build time.
-    val prodHash = sys.env.get("SPARK_GRAFT_PRODUCTION_HASH")
-      .map(v => Session.parseBool(v, "SPARK_GRAFT_PRODUCTION_HASH"))
     // Dev-only knob: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run to
     // the named queries — for iterating on one query's cost without
     // paying the full-suite wall clock. The driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
+    val selected = Runner.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     // Scan-split knob for the ScaleUp-derived scale fixtures: their
     // corpora are tens of MB across many ~1 MB files, and Spark's
     // default 128 MB maxPartitionBytes packs ALL of them into one scan
@@ -145,79 +137,92 @@ object Bench {
     // and slowed rel_dominant_supplier 25→30 s — the spill relief for
     // wide aggregates came from restructuring the operators instead
     // (see containment's in-bucket verification).
-    val spark = Session("graft-bench", cpus,
+    val runner = Runner("bench",
       maxPartitionBytes.map("spark.sql.files.maxPartitionBytes" -> _.toLong.toString).toMap ++
         pageBytes.map("spark.buffer.pageSize" -> _.toLong.toString))
-    prodHash.foreach(b =>
-      spark.conf.set(graft.functions.PortableHash.ConfKey, b.toString))
+    val spark = runner.spark
 
     // Warmup: run everything once at the smallest scale so codegen,
     // classloading, and shuffle machinery are hot before timing.
     val warmDir = "/root/testdata/sf0.001"
     if (Files.exists(Paths.get(warmDir)))
-      selected.foreach { case (_, fn) =>
-        try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
-      }
+      selected.foreach(name => runner.run(name, warmDir)(build => materialize(build())))
 
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     val listener = new QueryMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    var errors = Vector.empty[(String, String)]
-    var metrics = Vector.empty[(String, Seq[(String, Long)])]
     // Discard build walls the warmup pass recorded (warmDir builds,
     // not the timed fixture's) so per-query drains below attribute
     // only sfDir builds.
     BuildWall.drain()
-    var measuredBuilds = Vector.empty[(String, Double)]
-    val results = selected.toSeq.map { case (name, fn) =>
-      // stderr breadcrumb (never stdout — the handshake line must stay
-      // last): scale runs that die mid-suite (heap OOM, ENOSPC) need
-      // the dying QUERY attributable from the log; the r14 sf100 runs
-      // cost three 25-minute attempts before this existed.
-      Console.err.println(s"[bench] running $name")
+    val results = selected.map { name =>
       System.gc()
       listener.reset()
       HeapPeak.reset()
-      // Scoped conf overrides (wide-agg reduce partitions ∝ data):
-      // set around this query only, then restored — plans are built
-      // lazily inside materialize(), so the override is live at
-      // planning time for every sample.
-      val times =
-        try Session.withScopedConf(spark, SparkEntry.queryConfs(name, sfDir, cpus)) {
-          (1 to iters).map { _ =>
-            // Per-SAMPLE cache barrier: internally-persisted frames are
-            // deduped by logical plan in the CacheManager, so without
-            // this, iterations 2..n of a persisting query measure a
-            // warm cache and the median understates cold cost.
-            spark.catalog.clearCache()
-            val t0 = System.nanoTime()
-            materialize(fn(spark, sfDir))
-            (System.nanoTime() - t0) / 1e9
-          }
-        } catch { case e: Throwable =>
-          errors :+= (name -> String.valueOf(e.getMessage).take(200))
-          Vector.empty[Double]
+      // The query's scoped conf is live at planning time for every
+      // sample: plans are built lazily inside materialize().
+      val samples = runner.run(name, sfDir) { build =>
+        (1 to iters).map { _ =>
+          // Per-SAMPLE cache barrier: internally-persisted frames are
+          // deduped by logical plan in the CacheManager, so without
+          // this, iterations 2..n of a persisting query measure a
+          // warm cache and the median understates cold cost.
+          spark.catalog.clearCache()
+          val t0 = System.nanoTime()
+          val df = build()
+          val t1 = System.nanoTime()
+          materialize(df)
+          Sample((System.nanoTime() - t0) / 1e9, (t1 - t0) / 1e9)
         }
-      metrics :+= (name -> (listener.snapshot() :+
-        ("peak_heap" -> HeapPeak.peakBytes)))
+      }
       // Attribute any cold memoized build this query triggered (the
       // memo sites record their own wall via BuildWall) to this query.
-      val built = BuildWall.drain().values.sum
-      if (built > 0.0) measuredBuilds :+= (name -> built)
-      (name, times)
+      QueryRun(name, samples.getOrElse(Nil), samples.left.toOption.map(_.take(200)),
+        listener.snapshot() :+ ("peak_heap" -> HeapPeak.peakBytes),
+        BuildWall.drain().values.sum)
     }
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .map(c => if (c < ' ') ' ' else c) + "\""
-    def num(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
+    val (line, full) = report(results, iters, sfDir)
+    Files.writeString(Paths.get(outPath), full + "\n")
+    // stop() can throw in local-mode shutdown races; the handshake lines
+    // below MUST still print (a swallowed stop() failure costs nothing,
+    // a missing last line re-breaks the driver's parser).
+    try spark.stop()
+    catch { case e: Throwable => Console.err.println(s"spark.stop: $e") }
+    // Samples first (diagnostic), compact canonical line LAST — the
+    // driver tails stdout and must see the short line at the very end.
+    Console.out.println("BENCH_SAMPLES " + series(results)(_.wall))
+    Console.out.println(line)
+    Console.out.flush()
+  }
+
+  /** One timed sample: its whole wall and the build part of it. */
+  final case class Sample(wall: Double, build: Double)
+
+  /** One query's samples (empty when it failed), its failure, its
+    * resource metrics and the wall of the memoized builds it triggered.
+    */
+  final case class QueryRun(name: String, samples: Seq[Sample], error: Option[String],
+      metrics: Seq[(String, Long)], memoBuilt: Double)
+
+  private def num(d: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
+
+  private def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => s"${Runner.json(k)}:$v" }.mkString("{", ",", "}")
+
+  /** Per-query sample series, `{"<name>":[…],…}`. */
+  private def series(results: Seq[QueryRun])(f: Sample => Double): String =
+    obj(results.map(r => r.name -> r.samples.map(s => num(f(s))).mkString("[", ",", "]")))
+
+  /** The handshake line and the full record. Keys of the handshake, in
+    * order: metric, value, unit, queries, builds, errors, sf; every
+    * number `%.4f`. The full record adds the per-sample walls, their
+    * build parts and the per-query metrics.
+    */
+  def report(results: Seq[QueryRun], iters: Int, sfDir: String): (String, String) = {
     def median(ts: Seq[Double]): Double =
       if (ts.isEmpty) -1.0 else ts.sorted.apply(ts.size / 2)
-    val qs = results.map { case (k, ts) => s"${q(k)}:${num(median(ts))}" }
-      .mkString("{", ",", "}")
-    val samples = results.map { case (k, ts) =>
-      s"${q(k)}:${ts.map(num).mkString("[", ",", "]")}"
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    val walls = results.map(r => r.name -> r.samples.map(_.wall))
     // ONE-TIME BUILD PRICING: the memoized entries' first sample pays
     // a per-(app, dir) build (docsets table / CC label fixpoint /
     // replay-store merge) that samples 2..n read from a cache, so their
@@ -228,37 +233,26 @@ object Bench {
     //  - ITERS == 1: max = median = the one sample and the estimator
     //    degenerates to 0.0 even though the sample PAID the build
     //    (r13's sf100 row read builds:0.0 everywhere). The memo sites'
-    //    own measured walls (BuildWall, drained per query above) become
-    //    the reported split, attributed to the triggering query, and
-    //    are NOT added to the total — the sample already contains them.
+    //    own measured walls (BuildWall, drained per query) become the
+    //    reported split, attributed to the triggering query, and are
+    //    NOT added to the total — the sample already contains them.
     val builds =
       if (iters > 1)
-        results.collect {
+        walls.collect {
           case (k, ts) if SparkEntry.memoizedBuildQueries(k) && ts.nonEmpty =>
             k -> math.max(0.0, ts.max - median(ts))
         }
-      else measuredBuilds
-    val buildsJson = builds.map { case (k, v) => s"${q(k)}:${num(v)}" }
-      .mkString("{", ",", "}")
-    val metricsJson = metrics.map { case (k, ms) =>
-      s"${q(k)}:${ms.map { case (n, v) => s"${q(n)}:$v" }.mkString("{", ",", "}")}"
-    }.mkString("{", ",", "}")
-    val total = results.collect { case (_, ts) if ts.nonEmpty => median(ts) }.sum +
+      else results.collect { case r if r.memoBuilt > 0.0 => r.name -> r.memoBuilt }
+    val total = walls.collect { case (_, ts) if ts.nonEmpty => median(ts) }.sum +
       (if (iters > 1) builds.map(_._2).sum else 0.0)
-    val line =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"builds":$buildsJson,"errors":$errJson,"sf":"$sfDir"}"""
-    val full =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"builds":$buildsJson,"samples":$samples,"metrics":$metricsJson,"errors":$errJson,"sf":"$sfDir"}"""
-    Files.writeString(Paths.get(outPath), full + "\n")
-    // stop() can throw in local-mode shutdown races; the handshake lines
-    // below MUST still print (a swallowed stop() failure costs nothing,
-    // a missing last line re-breaks the driver's parser).
-    try spark.stop()
-    catch { case e: Throwable => Console.err.println(s"spark.stop: $e") }
-    // Samples first (diagnostic), compact canonical line LAST — the
-    // driver tails stdout and must see the short line at the very end.
-    Console.out.println("BENCH_SAMPLES " + samples)
-    Console.out.println(line)
-    Console.out.flush()
+    val head = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":""" +
+      obj(walls.map { case (k, ts) => k -> num(median(ts)) }) +
+      s""","builds":${obj(builds.map { case (k, v) => k -> num(v) })}"""
+    val tail = s""","errors":${obj(results.flatMap(r => r.error.map(e => r.name -> Runner.json(e))))},"sf":${Runner.json(sfDir)}}"""
+    val metrics = obj(results.map(r =>
+      r.name -> obj(r.metrics.map { case (n, v) => n -> v.toString })))
+    (head + tail,
+      head + s""","samples":${series(results)(_.wall)},"build_samples":${series(results)(_.build)},""" +
+        s""""metrics":$metrics""" + tail)
   }
 }

@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths}
 
 /** Writes docs/PLANS.md: the formatted physical plan of each headline
   * query plus the scale-relevant observations to look for in it. Run
-  * after plan-affecting changes: `sbt "runMain graft.PlanDump"`.
+  * after plan-affecting changes: `sbt "runMain graft.PlanDump [sfDir]"`.
+  * With a comma list of query names,
+  * `sbt "runMain graft.PlanDump <sfDir> q1,q2"` prints those queries'
+  * plans to stdout instead and leaves docs/PLANS.md alone.
   */
 object PlanDump {
 
@@ -14,9 +17,9 @@ object PlanDump {
     "dedup_near_apply" ->
       "End-to-end near-dedup with DISTRIBUTED connected components, exact to FIXPOINT since r11: the cap-bounded verified pair table feeds min-label propagation rounds (neighbor min + pointer-doubling label-of-label hop, so convergence is O(log diameter)), each round's node-bounded label table materialized via eager localCheckpoint (or reliable checkpoint when a dir is given) with a changed-flag probe over the fresh blocks deciding convergence; no edge or label crosses the driver, the final label table enters one AQE-broadcast corpus left-join, and the label pass is shared with dedup_cluster_sizes through a per-fixture cache.",
     "chi2_top_terms" ->
-      "One explode of the fused graft_doc_terms tokenizer (no lambda in the Generate) feeds the (term, category) count, whose ONE shuffle NarrowAggExchange keys by term alone, so the t_total window (sum(a) over term) reads it without a second exchange. Two scans: the tokens and the category totals; N is sum(c_total) over those totals, and AQE reuses their exchange (ReusedExchange in the final plan). Category totals and N broadcast; WindowGroupLimit bounds the top-k shuffle, and `coalesce(1)` runs the window-final and the sort in one task over its ≤ k·|cats|·P survivors (no SinglePartition exchange, no range-partition sampling job). 7 Spark jobs per run.",
+      "One explode of the fused graft_doc_terms tokenizer (no lambda in the Generate) feeds the (term, category) count, whose ONE shuffle NarrowAggExchange keys by term alone, so the t_total window (sum(a) over term) reads it without a second exchange. Two scans: the tokens and the category totals. The category totals gather in one task (`coalesce(1)`) that also sums them into N and carries N on every row, so one broadcast holds both (no second read of their exchange, no separate N stage or broadcast); WindowGroupLimit bounds the top-k shuffle, and `coalesce(1)` runs the window-final and the sort in one task over its ≤ k·|cats|·P survivors (no SinglePartition exchange, no range-partition sampling job). 5 Spark jobs per run.",
     "dedup_minhash_candidates" ->
-      "Signature stage is ONE narrow map: the native graft_minhash kernel folds all 16 affine minima per doc straight off the token array (no shingle explode, no doc_id exchange — the column chain kept that shape and is spec-pinned bit-equal in both hash modes); the first shuffle in the whole query is the (band, sig) bucket aggregate, and pair expansion stays in-bucket with the oversized-bucket guard upstream.",
+      "Signature stage is ONE narrow map: the native graft_minhash kernel folds all 16 affine minima per doc straight off the token array, once per doc (no shingle explode, no doc_id exchange — the column chain kept that shape and is spec-pinned bit-equal in both hash modes); docs too short to sign leave through an explode of nothing, which Catalyst cannot push below the signing projection as it would a Filter; the first shuffle in the whole query is the (band, sig) bucket aggregate, and pair expansion stays in-bucket with the oversized-bucket guard upstream.",
     "dedup_ngram_jaccard" ->
       "Linear single-consumer chain: ONE corpus scan, zero joins, by construction (NgramPlanSpec). Per-doc kept hash sets are built once (collect_set straight off the raw shingle multiset — no string-distinct exchange), only PPJoin prefixes re-enter the candidate index, and verification (array_intersect on the carried sets) runs inside the pair expansion — the candidate stream shrinks ~25x vs the exhaustive posting-pair expansion. Disclosed trade: the prefix-index shuffle carries each doc's set ~(1-t)*n times; for very large per-doc n, switch to indexing (doc_id, n, shk) and joining candidates back to the docsets table.",
     "sim_cosine_ann_lsh" ->
@@ -68,60 +71,49 @@ object PlanDump {
     "rel_small_qty_revenue" ->
       "Correlated subquery (qty < 0.2x the part's avg) decorrelated into sum/count windows over ONE l_partkey exchange - lineitem is scanned once where the textbook aggregate+join-back scans and shuffles it twice (RelationalSpec pins the one-scan shape); the predicate stays in exact integer-valued DECIMAL (5*qty*cnt < sum), and the part join is unhinted so AQE broadcasts at fixture scale / shuffles on the already-partitioned key at full scale.")
 
-  /** Expression ids (`#12`), exchange ids (`plan_id=34`) and lambda
-    * variables (`x_5`) come from JVM-wide counters, so they shift with
-    * every query planned before this one. Renumbering each family from 1
-    * in first-appearance order makes a regeneration diff show only real
-    * plan changes.
-    */
-  def renumbered(plan: String): String =
-    Seq("""#(\d+)""" -> "#", """plan_id=(\d+)""" -> "plan_id=", """\bx_(\d+)\b""" -> "x_")
-      .foldLeft(plan) { case (text, (pattern, prefix)) =>
-        val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-        pattern.r.replaceAllIn(text, m =>
-          prefix + ids.getOrElseUpdate(m.group(1), ids.size + 1))
-      }
-
   def main(args: Array[String]): Unit = {
-    val spark = Session("graft-plandump")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-
-    val sb = new StringBuilder
-    sb ++= "# Physical plans of the headline queries\n\n"
-    sb ++= s"Generated by `graft.PlanDump` against `$dir`.\n"
-    sb ++= "Regenerate with `sbt \"runMain graft.PlanDump\"` after plan-affecting changes.\n"
-    sb ++=
-      """
-        |## Eager-at-build registry entries
-        |
-        |The registry contract is lazy-at-build: constructing a query's
-        |DataFrame (what `explain` does) schedules no Spark job beyond the
-        |parquet footer read every `spark.read.parquet` performs. The
-        |entries below are the exceptions each family module declares in
-        |its `specs` map, and this table is generated from them. `Eager`
-        |entries run a bounded job at every build, so `explain` on them
-        |executes Spark work; `Memoized` entries run theirs once per
-        |(app, fixture dir), and later builds of the same fixture schedule
-        |nothing. RegistrySpec listener-counts build-time jobs and fails if
-        |the declarations drift in either direction.
-        |
-        || Entry | Build | What it runs at build | Bound |
-        ||---|---|---|---|
-        |""".stripMargin
-    for ((name, spec) <- SparkEntry.specs.toSeq.sortBy(_._1)) spec.build match {
-      case QuerySpec.Eager(what, bound) => sb ++= s"| `$name` | eager | $what | $bound |\n"
-      case QuerySpec.Memoized(what, bound) => sb ++= s"| `$name` | memoized | $what | $bound |\n"
-      case QuerySpec.Lazy => ()
+    val named = args.lift(1).map(list => Runner.select(Some(list)))
+    val runner = Runner("plandump")
+    def plan(name: String): String =
+      runner.run(name, dir)(build => Runner.explain(build()))
+        .fold(msg => sys.error(s"$name: $msg"), identity)
+    named match {
+      case Some(names) => names.foreach(n => println(s"## $n\n\n${plan(n)}"))
+      case None =>
+        val sb = new StringBuilder
+        sb ++= "# Physical plans of the headline queries\n\n"
+        sb ++= s"Generated by `graft.PlanDump` against `$dir`.\n"
+        sb ++= "Regenerate with `sbt \"runMain graft.PlanDump\"` after plan-affecting changes.\n"
+        sb ++=
+          """
+            |## Eager-at-build registry entries
+            |
+            |The registry contract is lazy-at-build: constructing a query's
+            |DataFrame (what `explain` does) schedules no Spark job beyond the
+            |parquet footer read every `spark.read.parquet` performs. The
+            |entries below are the exceptions each family module declares in
+            |its `specs` map, and this table is generated from them. `Eager`
+            |entries run a bounded job at every build, so `explain` on them
+            |executes Spark work; `Memoized` entries run theirs once per
+            |(app, fixture dir), and later builds of the same fixture schedule
+            |nothing. RegistrySpec listener-counts build-time jobs and fails if
+            |the declarations drift in either direction.
+            |
+            || Entry | Build | What it runs at build | Bound |
+            ||---|---|---|---|
+            |""".stripMargin
+        Runner.builds.foreach {
+          case (name, QuerySpec.Eager(what, bound)) => sb ++= s"| `$name` | eager | $what | $bound |\n"
+          case (name, QuerySpec.Memoized(what, bound)) => sb ++= s"| `$name` | memoized | $what | $bound |\n"
+          case (_, QuerySpec.Lazy) => ()
+        }
+        for ((name, note) <- Headliners)
+          sb ++= s"\n## $name\n\n$note\n\n```\n${plan(name)}```\n"
+        Files.createDirectories(Paths.get("docs"))
+        Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
+        println(s"wrote docs/PLANS.md (${Headliners.size} plans)")
     }
-    for ((name, note) <- Headliners) {
-      val df = SparkEntry.queries(name)(spark, dir)
-      val plan = renumbered(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      sb ++= s"\n## $name\n\n$note\n\n```\n$plan```\n"
-    }
-    Files.createDirectories(Paths.get("docs"))
-    Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
-    println(s"wrote docs/PLANS.md (${Headliners.size} plans)")
-    spark.stop()
+    runner.spark.stop()
   }
 }

@@ -29,6 +29,34 @@ object QuerySpec {
 
   val NoConf: (String, Int) => Map[String, String] = (_, _) => Map.empty
 
+  /** Reduce tasks `table` of fixture `sfDir` asks for at `bytesPerTask`
+    * of its on-disk parquet (0 when absent — sizing falls back to the
+    * session default).
+    */
+  def dataTasks(sfDir: String, table: String, bytesPerTask: Long): Long = {
+    val f = new java.io.File(s"$sfDir/$table.parquet")
+    val bytes = if (f.isDirectory) f.listFiles().map(_.length()).sum else f.length()
+    bytes / bytesPerTask
+  }
+
+  /** A data-sized scoped conf: one shuffle partition per `bytesPerTask`
+    * of `table`, floored at the session's parallelism and capped at
+    * 2048; empty when the floor binds (the default is already right).
+    * AQE's parallelism-first coalescing would re-merge the hand-sized
+    * exchanges right back to ~defaultParallelism (their per-partition
+    * bytes sit far under its 64 MB advisory target), undoing the
+    * override — measured: identical spill with and without the bump
+    * until it was pinned off. Scoped to the declaring queries only;
+    * AQE itself (skew splits, plan re-opt) stays on.
+    */
+  def dataSizedShuffle(table: String, bytesPerTask: Long)(
+      sfDir: String, cpus: Int): Map[String, String] = {
+    val parts = math.max(cpus.toLong, math.min(2048L, dataTasks(sfDir, table, bytesPerTask))).toInt
+    if (parts <= cpus) Map.empty
+    else Map("spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+  }
+
   /** The builds of `specs`, keyed by query name. */
   def builds(specs: Map[String, QuerySpec]): Map[String, (SparkSession, String) => DataFrame] =
     specs.map { case (n, q) => n -> q.df }

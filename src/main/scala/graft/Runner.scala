@@ -1,0 +1,95 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
+/** The one loop over the registry that `Verify`, `Bench` and `PlanDump`
+  * run, and RegistrySpec with them: a tool's session, its query
+  * selection and the per-query run under the query's scoped conf.
+  */
+final class Runner(tool: String, val spark: SparkSession, val cpus: Int) {
+
+  /** Runs `body` on query `name` over `sfDir` under the query's scoped
+    * conf ([[SparkEntry.queryConfs]]); `body` gets the build, so it can
+    * time or repeat it. Writes the `[tool] running <name>` breadcrumb to
+    * stderr first, so a run that dies mid-registry names the query. A
+    * failure is reported on stderr and returned as its message.
+    */
+  def run[T](name: String, sfDir: String)(body: (() => DataFrame) => T): Either[String, T] = {
+    Console.err.println(s"[$tool] running $name")
+    val fn = SparkEntry.queries(name)
+    val build = () => fn(spark, sfDir)
+    try Right(Session.withScopedConf(spark, SparkEntry.queryConfs(name, sfDir, cpus))(body(build)))
+    catch { case e: Throwable =>
+      val msg = String.valueOf(e.getMessage)
+      Console.err.println(s"[$tool] $name failed: $msg")
+      Left(msg)
+    }
+  }
+}
+
+object Runner {
+
+  /** The tool session: `Session(graft-<tool>)` at [[Session.cpus]],
+    * with `SPARK_GRAFT_PRODUCTION_HASH` (the xxhash64 gram-hash mode a
+    * real cluster would run; default the oracle's md5) validated before
+    * Spark starts, so a bad value fails once instead of in every
+    * hash-consulting query.
+    */
+  def apply(tool: String, conf: Map[String, String] = Map.empty): Runner = {
+    val prodHash = sys.env.get("SPARK_GRAFT_PRODUCTION_HASH")
+      .map(v => Session.parseBool(v, "SPARK_GRAFT_PRODUCTION_HASH"))
+    val cpus = Session.cpus
+    val spark = Session(s"graft-$tool", cpus, conf)
+    prodHash.foreach(b => spark.conf.set(functions.PortableHash.ConfKey, b.toString))
+    new Runner(tool, spark, cpus)
+  }
+
+  /** Registered names in the order [[SparkEntry.queries]] yields them
+    * (Bench charges a shared memo build to the first query that runs),
+    * restricted to the comma list `only` when given. An unknown name
+    * fails before any query runs.
+    */
+  def select(only: Option[String]): Seq[String] = {
+    val all = SparkEntry.queries.keys.toSeq
+    only.fold(all) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- all
+      require(unknown.isEmpty, s"unknown query: ${unknown.toSeq.sorted.mkString(", ")}")
+      all.filter(names)
+    }
+  }
+
+  /** The registry's build kinds by name, for PlanDump's eager table. */
+  def builds: Seq[(String, QuerySpec.Build)] =
+    SparkEntry.specs.toSeq.sortBy(_._1).map { case (n, q) => n -> q.build }
+
+  /** A JSON string literal: backslash, quote and every control char
+    * (< 0x20) escaped, so a tab or CR in an oracle SQL or an error
+    * message cannot break the reader's `json.load`.
+    */
+  def json(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The formatted physical plan with expression ids (`#12`), exchange
+    * ids (`plan_id=34`) and lambda variables (`x_5`) renumbered from 1
+    * in first-appearance order. They come from JVM-wide counters, so
+    * they shift with every query planned before this one; renumbered,
+    * a regeneration diff shows only real plan changes.
+    */
+  def explain(df: DataFrame): String =
+    Seq("""#(\d+)""" -> "#", """plan_id=(\d+)""" -> "plan_id=", """\bx_(\d+)\b""" -> "x_")
+      .foldLeft(df.queryExecution.explainString(ExplainMode.fromString("formatted"))) {
+        case (text, (pattern, prefix)) =>
+          val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+          pattern.r.replaceAllIn(text, m =>
+            prefix + ids.getOrElseUpdate(m.group(1), ids.size + 1))
+      }
+}

@@ -1,58 +1,27 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected query's result → parquet
+  * under `outDir/<name>`, plus `oracle_sql.json` with the same queries'
+  * oracle SQL, for the DuckDB compare.
+  *
+  * `sbt "runMain graft.Verify <sfDir> <outDir> [q1,q2,…]"`: the
+  * optional comma list restricts the dump (the sf≥10 oracle runs);
+  * without it every registered query runs. A query that fails leaves
+  * no output dir and a `[verify] <name> failed:` line on stderr.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: sfDir outDir [only] — `only` is an optional comma-list of
-    // query names, used by the sf≥10 oracle runs where dumping all 121
-    // queries (and oracling them in DuckDB) is wall-clock-prohibitive;
-    // the driver's own gate passes no third arg and runs everything.
     val sfDir = args(0)
     val outDir = args(1)
-    val only = args.lift(2)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = Session.cpus
-    val spark = Session("graft-verify", cpus)
-    // Production-hash dump mode (r13, verdict ask #4): the xxhash64
-    // mode a real cluster would run. The DuckDB oracle mirrors md5
-    // only, so dumps made in this mode are compared Spark-vs-Spark
-    // against an md5-mode dump (tools/prod_hash_check.py): the
-    // hash-independent majority must be bit-identical, the documented
-    // hash-dependent set is invariant-checked instead.
-    sys.env.get("SPARK_GRAFT_PRODUCTION_HASH").foreach(v =>
-      spark.conf.set(graft.functions.PortableHash.ConfKey,
-        Session.parseBool(v, "SPARK_GRAFT_PRODUCTION_HASH").toString))
+    val names = Runner.select(args.lift(2))
+    val runner = Runner("verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
-      .foreach { case (name, fn) =>
-        // Scoped conf overrides (wide-agg reduce partitions ∝ data):
-        // a no-op at gate SFs (the floor binds), load-bearing for the
-        // sf≥10 scale-correctness runs. Exact-typed queries only, so
-        // results are partition-count-invariant (spec-pinned).
-        try Session.withScopedConf(spark, SparkEntry.queryConfs(name, sfDir, cpus)) {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    names.foreach(name => runner.run(name, sfDir) { build =>
+      build().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    })
+    val json = SparkEntry.oracleSql.filter { case (k, _) => names.contains(k) }
+      .map { case (k, v) => s"${Runner.json(k)}: ${Runner.json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    runner.spark.stop()
   }
 }

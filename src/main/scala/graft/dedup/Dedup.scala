@@ -164,19 +164,28 @@ object Dedup {
     * expression — ONE narrow map, no shingle explode, no doc_id
     * exchange (the column chain [[minhashSignatures]] keeps that shape
     * and DedupSpec pins the two bit-equal in both hash modes). Docs
-    * too short to shingle return NULL from the kernel and are filtered
-    * here, mirroring the chain's empty explode.
+    * too short to shingle return NULL from the kernel and are dropped
+    * here ([[dropNull]]), mirroring the chain's empty explode.
     */
   private[dedup] def minhashSignaturesKernel(toks: DataFrame): DataFrame = {
     val production = graft.functions.PortableHash.enabled(toks)
-    val sig = toks.select(col("doc_id"),
+    val sig = dropNull(toks.select(col("doc_id"),
         graft.functions.GraftFunctions.graftMinhash(col("toks"),
-          lit(ShingleSize), lit(NumHashes), lit(production)).as("sig"))
-      .filter(col("sig").isNotNull)
+          lit(ShingleSize), lit(NumHashes), lit(production)).as("sig")), "sig")
     sig.select(col("doc_id") +:
       (0 until NumHashes).map(i =>
         element_at(col("sig"), i + 1).as(s"h$i")): _*)
   }
+
+  /** `df` without the rows whose column `c` is NULL. A Filter would do
+    * the same, but Catalyst pushes it below the projection that
+    * computes `c`, and the kernel behind `c` then runs twice per row
+    * (once in the Filter, once in the Project). An explode of nothing
+    * for a NULL drops the row where `c` is already computed.
+    */
+  private def dropNull(df: DataFrame, c: String): DataFrame =
+    df.select(df.columns.toSeq.map(n =>
+      if (n == c) explode(when(col(c).isNotNull, array(col(c)))).as(c) else col(n)): _*)
 
   /** (doc_id, band, sig): banded LSH buckets from the signature. */
   def lshBuckets(mh: DataFrame): DataFrame = {
@@ -212,11 +221,20 @@ object Dedup {
       .agg(collect_list(col("doc_id")).as("members"))
       .filter(size(col("members")).between(2, maxBucketSize))
       .withColumn("arr", array_sort(col("members")))
-      .select(explode(flatten(transform(col("arr"), (x, i) =>
-        transform(slice(col("arr"), i + lit(2), size(col("arr"))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
+      .select(inBucketPairs(col("arr"), "doc_a", "doc_b").as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
+
+  /** Every pair (arr[i], arr[j]), i < j, of a bucket's member array as
+    * `struct(left, right)` rows: the in-bucket pair expansion the
+    * candidate generators share (MinHash bands, SimHash chunks, winnow
+    * anchors, IVF cells). Each caller groups, caps and sorts its own
+    * members into a column (`arr` is read three times per bucket);
+    * sorted members give left < right by construction.
+    */
+  def inBucketPairs(arr: Column, left: String, right: String): Column =
+    explode(flatten(transform(arr, (x, i) =>
+      transform(slice(arr, i + lit(2), size(arr)), y => struct(x.as(left), y.as(right))))))
 
   /** MinHash calibration audit: for every LSH candidate pair, the
     * signature-agreement ESTIMATE of Jaccard (matching components / k)
@@ -248,12 +266,11 @@ object Dedup {
   def minhashCalibration(d: DataFrame,
       maxBucketSize: Int = MaxBucketSize): DataFrame = {
     val production = graft.functions.PortableHash.enabled(d)
-    val feat = toksOf(d).select(col("doc_id"),
+    val feat = dropNull(toksOf(d).select(col("doc_id"),
         array_sort(graft.functions.GraftFunctions.graftGramKeys(
           col("toks"), lit(ShingleSize), lit(production))).as("kset"),
         graft.functions.GraftFunctions.graftMinhash(col("toks"),
-          lit(ShingleSize), lit(NumHashes), lit(production)).as("sig"))
-      .filter(col("sig").isNotNull)
+          lit(ShingleSize), lit(NumHashes), lit(production)).as("sig")), "sig")
       // Materialization barrier: one finished copy for the three
       // consumers below (bucket chain + both verify join-back sides).
       // LAZY localCheckpoint (r17 — the dedup_substring r16 move): the
@@ -403,9 +420,7 @@ object Dedup {
       // as the MinHash buckets
       .filter(size(col("members")).between(2, maxBucketSize))
       .withColumn("arr", array_sort(col("members")))
-      .select(explode(flatten(transform(col("arr"), (x, i) =>
-        transform(slice(col("arr"), i + lit(2), size(col("arr"))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+      .select(inBucketPairs(col("arr"), "a", "b").as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .distinct()
     val ham = (0 until 4)
@@ -741,9 +756,7 @@ object Dedup {
     val cand = anchors.groupBy("anchor")
       .agg(array_sort(collect_set(col("doc_id"))).as("docs"))
       .filter(size(col("docs")) >= 2 && size(col("docs")) <= maxAnchorDf)
-      .select(explode(flatten(transform(col("docs"), (a, i) =>
-        transform(slice(col("docs"), i + lit(2), size(col("docs"))),
-          b => struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
+      .select(inBucketPairs(col("docs"), "doc_a", "doc_b").as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
       .localCheckpoint(false)
@@ -1339,18 +1352,8 @@ object Dedup {
     * change results (every covered query is exact-typed and
     * oracle-checked under the conf).
     */
-  def pairShuffleConf(sfDir: String, cpus: Int): Map[String, String] = {
-    val parts = math.max(cpus.toLong, math.min(2048L,
-      graft.rel.Relational.pathBytes(s"$sfDir/documents.parquet")
-        / PairBytesPerTask)).toInt
-    if (parts <= cpus) Map.empty
-    else Map(
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      // pinned off for the same measured reason as wideAggConf: AQE's
-      // parallelism-first coalescing re-merges the hand-sized
-      // exchanges back to ~defaultParallelism
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-  }
+  val pairShuffleConf: (String, Int) => Map[String, String] =
+    QuerySpec.dataSizedShuffle("documents", PairBytesPerTask)
 
   lazy val specs: Map[String, QuerySpec] = Map(
     // Exact dedup: one row per distinct normalized text, keeper = min id.

@@ -1290,8 +1290,8 @@ object Relational {
     * groups, which spilled 35–51 GB per bench run (r12 metrics). The
     * plans are the right shape (map-side partial collapse below every
     * exchange); only the REDUCE-side partition count needs to track
-    * the data. One reduce task per [[WideAggBytesPerTask]] of lineitem bytes,
-    * floored at the session's parallelism, capped at 2048. Applied by
+    * the data: [[QuerySpec.dataSizedShuffle]] over lineitem at
+    * [[WideAggBytesPerTask]]. Applied by
     * the harnesses around JUST these queries (set, run, restore) —
     * the r12 GLOBAL variant (AQE initialPartitionNum = 8×cores) was
     * measured and rejected (it OOM'd dedup_containment and slowed
@@ -1301,30 +1301,8 @@ object Relational {
     * by re-running at a different count. Returns empty when the floor
     * binds (small fixtures): the default conf is already right.
     */
-  def wideAggConf(sfDir: String, cpus: Int): Map[String, String] = {
-    val parts = math.max(cpus.toLong, math.min(2048L,
-      pathBytes(s"$sfDir/lineitem.parquet") / WideAggBytesPerTask)).toInt
-    if (parts <= cpus) Map.empty
-    else Map(
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      // AQE's parallelism-first coalescing re-merges the hand-sized
-      // exchanges right back to ~defaultParallelism (the per-partition
-      // bytes here sit far under the 64 MB advisory target), undoing
-      // the override — measured: identical spill with and without the
-      // partition bump until this was pinned off. Scoped to these
-      // queries only; AQE itself (skew splits, plan re-opt) stays on.
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-  }
-
-  /** On-disk size of a local fixture path (file or directory of part
-    * files); 0 when absent — sizing falls back to the session default.
-    */
-  private[graft] def pathBytes(p: String): Long = {
-    val f = new java.io.File(p)
-    if (f.isDirectory) f.listFiles().map(_.length()).sum
-    else if (f.isFile) f.length()
-    else 0L
-  }
+  val wideAggConf: (String, Int) => Map[String, String] =
+    QuerySpec.dataSizedShuffle("lineitem", WideAggBytesPerTask)
 
   /** TPC-H Q12 shape for [[specs]]' `rel_ship_lag`: one fact-fact
     * equi-join (inherent to the question — the lag needs a column from

@@ -944,10 +944,7 @@ object Similarity {
       .agg(collect_list(struct(col("vec_id"), col("v"), col("nrm")))
         .as("ms"))
       .withColumn("arr", array_sort(col("ms")))
-    val pairCol = flatten(transform(col("arr"), (x, i) =>
-      transform(slice(col("arr"), i + lit(2), size(col("arr"))),
-        y => struct(x.as("a"), y.as("b")))))
-    val drops = members.select(explode(pairCol).as("p"))
+    val drops = members.select(graft.dedup.Dedup.inBucketPairs(col("arr"), "a", "b").as("p"))
       .filter(cosine(col("p.a.v"), col("p.b.v"),
         col("p.a.nrm"), col("p.b.nrm")) >= SemDedupThreshold)
       .select(col("p.b.vec_id").as("vec_id")).distinct()

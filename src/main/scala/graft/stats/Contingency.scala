@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * dicts (/root/reference/chi_square.py:50–62) or via stringly-tagged key
   * families routed through Hadoop shuffles (/root/reference/run_chi:69–73).
   * Here each count family is its own DataFrame and the "routing" is one
-  * term window + two broadcasts — the skew-prone single-reducer funnel
+  * term window + one broadcast — the skew-prone single-reducer funnel
   * (chi_square.py:46–47) and the fragile metadata-to-reducers trick
   * (run_chi:96–127, SURVEY J5) disappear entirely.
   *
@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   *    partition holds at most |categories| rows, however frequent the
   *    term.
   *  - `catDocs` (G3) has category-many rows → broadcast join (J2).
-  *  - N (G4) is `sum(c_total)` over G3, a 1-row aggregate cross-joined via
-  *    broadcast (J3), keeping the whole plan lazy (no driver-side
-  *    count()). AQE reuses G3's exchange for it, so the documents are
-  *    scanned twice (tokens, category totals), not three times.
+  *  - N (G4) is `sum(c_total)` over G3, summed in the one task that
+  *    gathers G3 for the broadcast and carried on every G3 row (J3),
+  *    keeping the whole plan lazy (no driver-side count()) and the
+  *    documents scanned twice (tokens, category totals).
   */
 object Contingency {
 
@@ -38,33 +38,32 @@ object Contingency {
     * `docs` must be the admitted documents (one row per document, with a
     * `category` column) — it supplies G3/G4 denominators.
     */
-  def table(tokens: DataFrame, docs: DataFrame): DataFrame = {
-    // G3: #docs per category
-    val catDocs = docs.groupBy("category").agg(count("*").as("c_total"))
-    // G1: A = #docs in category containing term (tokens are per-doc distinct)
+  def table(tokens: DataFrame, docs: DataFrame): DataFrame =
+    // G1: A = #docs in category containing term (tokens are per-doc
+    // distinct); G3: #docs per category
     fromCounts(tokens.groupBy("term", "category").agg(count("*").as("a")),
-      catDocs, totalDocs(catDocs))
-  }
-
-  /** G4: N as the sum of the category totals, a 1-row frame that keeps
-    * the DAG fully lazy. Built on the same `catDocs` the join reads, so
-    * AQE reuses its exchange instead of scanning the documents again.
-    */
-  def totalDocs(catDocs: DataFrame): DataFrame = catDocs.agg(sum("c_total").as("n"))
+      docs.groupBy("category").agg(count("*").as("c_total")))
 
   /** The count families → the same 2×2 table: `termCat` (term,
-    * category, a), `catDocs` (category, c_total) and the 1-row `n`. The
-    * batch pipeline counts them from tokens; the streaming maintainer
-    * reads them from its store.
+    * category, a) and `catDocs` (category, c_total). The batch pipeline
+    * counts them from tokens; the streaming maintainer reads them from
+    * its store.
     */
-  def fromCounts(termCat: DataFrame, catDocs: => DataFrame, n: => DataFrame): DataFrame =
+  def fromCounts(termCat: DataFrame, catDocs: DataFrame): DataFrame = {
+    // G4: N = sum(c_total), computed in the one task that gathers the
+    // category totals (category-many rows) and carried on each of them
+    // into the broadcast: no separate 1-row aggregate, exchange or
+    // broadcast for N
+    val totals = catDocs.coalesce(1)
+      .agg(collect_list(struct("category", "c_total")).as("cats"), sum("c_total").as("n"))
+      .select(explode(col("cats")).as("cat"), col("n"))
+      .select(col("cat.category").as("category"), col("cat.c_total").as("c_total"), col("n"))
     // G2: #docs containing term anywhere — a window over G1, not a re-scan
     termCat
       .withColumn("t_total", sum("a").over(Window.partitionBy("term")))
-      // G3 broadcasts (category cardinality is tiny); G4 is a 1-row broadcast
-      .join(broadcast(catDocs), "category")
-      .crossJoin(broadcast(n))
+      .join(broadcast(totals), "category")
       .withColumn("b", col("t_total") - col("a"))
       .withColumn("c", col("c_total") - col("a"))
       .withColumn("d", col("n") - col("t_total") - col("c_total") + col("a"))
+  }
 }

@@ -296,8 +296,7 @@ object StreamingDedup {
     */
   def replayConf(sfDir: String, cpus: Int): Map[String, String] = {
     val parts = math.max(4L, math.min(cpus.toLong,
-      graft.rel.Relational.pathBytes(s"$sfDir/documents.parquet")
-        / graft.dedup.Dedup.PairBytesPerTask)).toInt
+      QuerySpec.dataTasks(sfDir, "documents", graft.dedup.Dedup.PairBytesPerTask))).toInt
     Map("spark.sql.shuffle.partitions" -> parts.toString)
   }
 

@@ -112,8 +112,8 @@ object StreamingChiSquare {
       k: Int = ChiSquarePipeline.DefaultK): DataFrame = {
     val (termCat, catDocs) = latestCounts(spark, storeDir)
       .getOrElse(sys.error(s"empty chi-square store: $storeDir"))
-    ChiSquarePipeline.ranked(ChiSquarePipeline.withChi2(Contingency.fromCounts(
-      termCat, catDocs, Contingency.totalDocs(catDocs))), k)
+    ChiSquarePipeline.ranked(ChiSquarePipeline.withChi2(
+      Contingency.fromCounts(termCat, catDocs)), k)
   }
 
   /** Micro-batch count for [[replayTopTerms]]' deterministic replay. */

@@ -41,33 +41,30 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("every registered query executes at sf0.001 with rows and sane plans") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val df = fn(spark, dir)
-          val plan = df.queryExecution.executedPlan.toString
-          val n = df.count()
-          // No registered query may leave persisted state behind after
-          // its action: internally-persisted frames must be unpersisted
-          // (or never persisted — collect + re-enter) before returning.
-          // An audit/recall query that leaks a corpus-sized cache into a
-          // user session is a defect even when its RESULT is correct.
-          val cacheEmpty = spark.sharedState.cacheManager.isEmpty
-          if (!cacheEmpty) spark.catalog.clearCache() // isolate later queries
-          val problems = Seq(
-            if (n == 0) Some(s"$name: 0 rows") else None,
-            if (!cacheEmpty)
-              Some(s"$name: left cached state behind after its action") else None,
-            // broadcast NL joins are fine (bounded build side: the N
-            // cross-join, query batches, centroids); an unbounded
-            // CartesianProduct never is
-            if (plan.contains("CartesianProduct"))
-              Some(s"$name: CartesianProduct in plan") else None
-          ).flatten
-          problems
-        } catch {
-          case e: Throwable => Seq(s"$name: ${String.valueOf(e.getMessage).take(200)}")
-        }
+    // the per-query run Verify uses: each query under its scoped conf
+    val runner = new Runner("registry", spark, 4)
+    val failures = Runner.select(None).sorted.flatMap { name =>
+      runner.run(name, dir) { build =>
+        val df = build()
+        val plan = df.queryExecution.executedPlan.toString
+        val n = df.count()
+        // No registered query may leave persisted state behind after
+        // its action: internally-persisted frames must be unpersisted
+        // (or never persisted — collect + re-enter) before returning.
+        // An audit/recall query that leaks a corpus-sized cache into a
+        // user session is a defect even when its RESULT is correct.
+        val cacheEmpty = spark.sharedState.cacheManager.isEmpty
+        if (!cacheEmpty) spark.catalog.clearCache() // isolate later queries
+        Seq(
+          if (n == 0) Some(s"$name: 0 rows") else None,
+          if (!cacheEmpty)
+            Some(s"$name: left cached state behind after its action") else None,
+          // broadcast NL joins are fine (bounded build side: query
+          // batches, centroids); an unbounded CartesianProduct never is
+          if (plan.contains("CartesianProduct"))
+            Some(s"$name: CartesianProduct in plan") else None
+        ).flatten
+      }.fold(msg => Seq(s"$name: ${msg.take(200)}"), identity)
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

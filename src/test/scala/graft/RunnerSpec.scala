@@ -1,0 +1,60 @@
+package graft
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
+/** The registry runner's policy: selection, the scoped conf around a
+  * failing query, the JSON escaper and Bench's handshake line.
+  */
+class RunnerSpec extends SparkSpec {
+
+  private val json = new ObjectMapper
+
+  test("selection keeps registry order and fails on an unknown name") {
+    assert(Runner.select(None) === SparkEntry.queries.keys.toSeq)
+    assert(Runner.select(Some(" text_pack,chi2_top_terms ,")) ===
+      SparkEntry.queries.keys.toSeq.filter(Set("text_pack", "chi2_top_terms")))
+    val err = intercept[IllegalArgumentException](
+      Runner.select(Some("chi2_top_terms,no_such_query")))
+    assert(err.getMessage.contains("no_such_query"))
+  }
+
+  test("a query's scoped conf is restored after it throws") {
+    val key = "spark.sql.shuffle.partitions"
+    // the replay conf sets 4 partitions whatever the fixture
+    assert(SparkEntry.queryConfs("chi2_streaming_replay", "/root/testdata/sf0.001", 4)
+      .get(key).contains("4"))
+    Session.withScopedConf(spark, Map(key -> "7")) {
+      var seen = ""
+      val got = new Runner("spec", spark, 4).run("chi2_streaming_replay",
+          "/root/testdata/sf0.001") { _ =>
+        seen = spark.conf.get(key)
+        throw new IllegalStateException("boom")
+      }
+      assert(got === Left("boom"))
+      assert(seen === "4")
+      assert(spark.conf.get(key) === "7")
+    }
+  }
+
+  test("the JSON escaper round-trips control characters, quotes and backslashes") {
+    val s = "a\tb\rc\nd\"e\\f\u0001g"
+    assert(Runner.json(s) === "\"a\\tb\\rc\\nd\\\"e\\\\f\\u0001g\"")
+    assert(json.readValue(Runner.json(s), classOf[String]) === s)
+  }
+
+  test("Bench's handshake line keeps its keys in order with %.4f numbers") {
+    val runs = Seq(
+      Bench.QueryRun("q_ok", Seq(Bench.Sample(1.5, 0.25)), None, Seq("spill_mem" -> 0L), 0.5),
+      Bench.QueryRun("q_bad", Nil, Some("bad\tthing"), Nil, 0.0))
+    val (line, full) = Bench.report(runs, iters = 1, "/data/sf0.001")
+    assert(line === """{"metric":"total","value":1.5000,"unit":"sec",""" +
+      """"queries":{"q_ok":1.5000,"q_bad":-1.0000},"builds":{"q_ok":0.5000},""" +
+      """"errors":{"q_bad":"bad\tthing"},"sf":"/data/sf0.001"}""")
+    def keys(s: String) = json.readTree(s).fieldNames.asScala.toSeq
+    assert(keys(line) === Seq("metric", "value", "unit", "queries", "builds", "errors", "sf"))
+    assert(keys(full) === Seq("metric", "value", "unit", "queries", "builds",
+      "samples", "build_samples", "metrics", "errors", "sf"))
+    assert(json.readTree(full).get("build_samples").get("q_ok").get(0).asDouble === 0.25)
+  }
+}

@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
 
 class DedupSpec extends SparkSpec {
 
@@ -293,6 +294,46 @@ class DedupSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(bloom === exact)
     assert(exact.nonEmpty)
+  }
+
+  test("MinHash signs each document once: one graft_minhash in the executed plans") {
+    // A null test on the signature must not be pushed below the
+    // projection that computes it (that planned the kernel twice). The
+    // executed plans include the minhash_est feature checkpoint's.
+    val dir = "/root/testdata/sf0.001"
+    for (name <- Seq("dedup_minhash_candidates", "dedup_minhash_est")) {
+      val plans = executedPlans(graft.SparkEntry.queries(name)(spark, dir).collect())
+      val signs = plans.map("graft_minhash\\(".r.findAllIn(_).size).sum
+      assert(signs === 1, s"$name:\n${plans.mkString("\n---\n").take(6000)}")
+    }
+  }
+
+  /** The AQE final plans of every query execution `body` runs, the
+    * lazy checkpoints its build planned included.
+    */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = "graft_plans_sentinel"
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        plans.add(qe.executedPlan.toString.split("== Initial Plan ==")(0))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener bus is async but FIFO: once the sentinel's plan is
+      // in, every earlier execution's is too
+      spark.range(1).toDF(sentinel).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_.contains(sentinel)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val got = plans.asScala.toSeq
+    assert(got.exists(_.contains(sentinel)), "listener never observed the sentinel")
+    got.filterNot(_.contains(sentinel))
   }
 
   test("decontamination plans broadcast joins only — the corpus never shuffles to be tested") {

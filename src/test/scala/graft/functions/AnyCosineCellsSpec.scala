@@ -37,6 +37,8 @@ private[functions] case class CellsSpecCell5b(bkt: java.lang.Long,
   subs: Seq[CellsSpecSub4])
 
 class AnyCosineCellsSpec extends graft.SparkSpec {
+  // kernels over `Seq(…).toDF` input run as generated code
+  override def withFixture(test: NoArgTest) = withGeneratedCode(super.withFixture(test))
 
   private type Ev = CellsSpecEv
   private val Ev = CellsSpecEv

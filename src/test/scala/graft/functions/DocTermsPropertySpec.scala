@@ -16,6 +16,8 @@ import org.scalacheck.rng.Seed
   * by code point, then whole token arrays on random documents.
   */
 class DocTermsPropertySpec extends SparkSpec {
+  // kernels over `Seq(…).toDF` input run as generated code
+  override def withFixture(test: NoArgTest) = withGeneratedCode(super.withFixture(test))
 
   private def samples[A](g: Gen[A], n: Int, seed: Long): Seq[A] = {
     val params = Gen.Parameters.default

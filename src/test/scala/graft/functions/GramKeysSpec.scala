@@ -16,6 +16,8 @@ import org.scalacheck.rng.Seed
   * the chain's per-gram base28.
   */
 class GramKeysSpec extends SparkSpec {
+  // kernels over `Seq(…).toDF` input run as generated code
+  override def withFixture(test: NoArgTest) = withGeneratedCode(super.withFixture(test))
 
   private def samples[A](g: Gen[A], n: Int, seed: Long): Seq[A] = {
     val params = Gen.Parameters.default
@@ -116,20 +118,16 @@ class GramKeysSpec extends SparkSpec {
   test("graft_minhash of an array shorter than n is NULL in generated code") {
     val s = spark
     import s.implicits._
-    // keep the projection out of the optimizer's local-relation folding,
-    // so generated code (not eval) computes it
-    graft.Session.withScopedConf(spark, Map(
-        "spark.sql.optimizer.excludedRules" ->
-          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")) {
-      val sig = Seq((1L, Seq("a", "b", "c")), (2L, Seq("a")))
-        .toDF("doc_id", "toks")
-        .select(col("doc_id"), GraftFunctions.graftMinhash(col("toks"),
-          lit(2), lit(4), lit(false)).as("sig"))
-      assert(sig.filter(col("sig").isNull).select("doc_id")
-        .as[Long].collect().toSeq === Seq(2L))
-      assert(sig.filter(col("sig").isNotNull)
-        .select(element_at(col("sig"), 1)).count() === 1)
-    }
+    // the spec's fixture keeps this projection out of the optimizer's
+    // local-relation folding, so generated code (not eval) computes it
+    val sig = Seq((1L, Seq("a", "b", "c")), (2L, Seq("a")))
+      .toDF("doc_id", "toks")
+      .select(col("doc_id"), GraftFunctions.graftMinhash(col("toks"),
+        lit(2), lit(4), lit(false)).as("sig"))
+    assert(sig.filter(col("sig").isNull).select("doc_id")
+      .as[Long].collect().toSeq === Seq(2L))
+    assert(sig.filter(col("sig").isNotNull)
+      .select(element_at(col("sig"), 1)).count() === 1)
   }
 
   test("short arrays and n<=0 yield empty key sets") {

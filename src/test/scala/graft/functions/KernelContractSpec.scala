@@ -246,21 +246,16 @@ class KernelContractSpec extends SparkSpec {
   }
 
   test("interpreted eval returns what generated code returns") {
-    // A projection over a local relation would be evaluated by the
-    // optimizer, never by generated code.
-    val noFold = Map("spark.sql.optimizer.excludedRules" ->
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
     val interpreted = Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
       "spark.sql.codegen.wholeStage" -> "false")
     cases.foreach { c =>
       val schema = StructType(c.input.map { case (n, t) => StructField(n, t) })
-      def run(conf: Map[String, String]) = Session.withScopedConf(spark,
-          noFold ++ conf) {
+      def run(conf: Map[String, String]) = withGeneratedCode(Session.withScopedConf(spark, conf) {
         val df = spark.createDataFrame(c.rows.asJava, schema)
           .select(call_function(c.name, c.args: _*).as("r"))
         (df.collect().toSeq, df.queryExecution.executedPlan.collectFirst {
           case w: WholeStageCodegenExec => w }.isDefined)
-      }
+      })
       val (gen, fused) = run(Map.empty)
       val (evalRows, _) = run(interpreted)
       assert(fused || c.name == "graft_bloom_agg", c.name)

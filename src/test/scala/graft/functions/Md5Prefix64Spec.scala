@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
   * hash bit-identical across engines.
   */
 class Md5Prefix64Spec extends graft.SparkSpec {
+  // kernels over `Seq(…).toDF` input run as generated code
+  override def withFixture(test: NoArgTest) = withGeneratedCode(super.withFixture(test))
 
   test("bit slices equal the hex-digit arithmetic on real corpus tokens") {
     val s = spark

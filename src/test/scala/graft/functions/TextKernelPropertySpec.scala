@@ -16,6 +16,8 @@ import org.scalacheck.rng.Seed
   * between them.
   */
 class TextKernelPropertySpec extends SparkSpec {
+  // kernels over `Seq(…).toDF` input run as generated code
+  override def withFixture(test: NoArgTest) = withGeneratedCode(super.withFixture(test))
 
   private def samples[A](g: Gen[A], n: Int, seed: Long): Seq[A] = {
     val params = Gen.Parameters.default

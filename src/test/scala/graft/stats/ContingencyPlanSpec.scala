@@ -4,8 +4,8 @@ import graft.SparkSpec
 
 /** The paper's job runs one shuffle for its contingency counts: the
   * (term, category) aggregate is keyed by term, so the term-total
-  * window reads it as is, and N is summed from the category totals,
-  * whose exchange AQE reuses. At 100 TB the tokenize→explode→aggregate
+  * window reads it as is, and N is summed from the category totals in
+  * the task that gathers them for their broadcast. At 100 TB the tokenize→explode→aggregate
   * subtree IS the dominant cost, so this spec pins that it is planned
   * once, shuffled once, and that the documents are scanned only twice.
   */
@@ -53,7 +53,7 @@ class ContingencyPlanSpec extends SparkSpec {
 
   private def finalPlanOf(name: String): String = finalPlanAndJobs(name)._1
 
-  test("contingency counts shuffle once by term; two scans; seven jobs") {
+  test("contingency counts shuffle once by term; two scans; five jobs") {
     val (finalPlan, jobs) = finalPlanAndJobs("chi2_top_terms")
     val show = finalPlan.take(4000)
     val termExchanges = """Exchange hashpartitioning\(term#\d+, \d+\)""".r
@@ -61,11 +61,13 @@ class ContingencyPlanSpec extends SparkSpec {
     assert(termExchanges === 1, show)
     assert("""hashpartitioning\(term#\d+, category#""".r.findFirstIn(finalPlan).isEmpty, show)
     assert("FileScan".r.findAllIn(finalPlan).size === 2, show)
-    // N reads the category totals' exchange instead of a third scan
-    assert(finalPlan.contains("ReusedExchange"), show)
+    // N is summed where the category totals gather for their one
+    // broadcast: no re-read of their exchange, no second broadcast
+    assert(!finalPlan.contains("ReusedExchange"), show)
+    assert("BroadcastExchange".r.findAllIn(finalPlan).size === 1, show)
     assert(!finalPlan.contains("Expand"), show)
     assert(!finalPlan.contains("SortMergeJoin"), show)
-    assert(jobs === 7, show)
+    assert(jobs === 5, s"$jobs jobs:\n$show")
   }
 
   test("the tokenizer subtree is planned and shuffled once (AQE final plan)") {
