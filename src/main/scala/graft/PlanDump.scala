@@ -19,9 +19,9 @@ object PlanDump {
     "chi2_top_terms" ->
       "One explode of the fused graft_doc_terms tokenizer (no lambda in the Generate) feeds the (term, category) count, whose ONE shuffle NarrowAggExchange keys by term alone, so the t_total window (sum(a) over term) reads it without a second exchange. Two scans: the tokens and the category totals. The category totals gather in one task (`coalesce(1)`) that also sums them into N and carries N on every row, so one broadcast holds both (no second read of their exchange, no separate N stage or broadcast); WindowGroupLimit bounds the top-k shuffle, and `coalesce(1)` runs the window-final and the sort in one task over its ≤ k·|cats|·P survivors (no SinglePartition exchange, no range-partition sampling job). 5 Spark jobs per run.",
     "dedup_minhash_candidates" ->
-      "Signature stage is ONE narrow map: the native graft_minhash kernel folds all 16 affine minima per doc straight off the token array, once per doc (no shingle explode, no doc_id exchange — the column chain kept that shape and is spec-pinned bit-equal in both hash modes); docs too short to sign leave through an explode of nothing, which Catalyst cannot push below the signing projection as it would a Filter; the first shuffle in the whole query is the (band, sig) bucket aggregate, and pair expansion stays in-bucket with the oversized-bucket guard upstream.",
+      "Signature stage is ONE narrow map: the native graft_minhash kernel folds all 16 affine minima per doc straight off the token array, once per doc (no shingle explode, no doc_id exchange — the column chain kept that shape and is spec-pinned bit-equal in both hash modes); docs too short to sign leave through an explode of nothing, which Catalyst cannot push below the signing projection as it would a Filter; the first shuffle in the whole query is the (band, sig) bucket aggregate, and pairs expand in-bucket through `Candidates.inBucket`, the oversized-bucket guard upstream of the expansion.",
     "dedup_ngram_jaccard" ->
-      "Linear single-consumer chain: ONE corpus scan, zero joins, by construction (NgramPlanSpec). Per-doc kept hash sets are built once (collect_set straight off the raw shingle multiset — no string-distinct exchange), only PPJoin prefixes re-enter the candidate index, and verification (array_intersect on the carried sets) runs inside the pair expansion — the candidate stream shrinks ~25x vs the exhaustive posting-pair expansion. Disclosed trade: the prefix-index shuffle carries each doc's set ~(1-t)*n times; for very large per-doc n, switch to indexing (doc_id, n, shk) and joining candidates back to the docsets table.",
+      "Reads the memoized df-ordered docsets table (one checkpointed row per document: its kept shingle keys sorted by value, the same keys in (df, key) order, and their count), never the corpus: the plan starts at `Scan ExistingRDD`, with no gram-keys kernel and no df count (NgramPlanSpec). Only each document's PPJoin prefix (its n − ⌊t·n⌋ + 1 rarest keys) is exploded, into scalar (shk, doc_id, n) postings; a prefix self-join on shk enumerates the candidates and a distinct collapses pairs that share several prefix keys before any array moves. Exact verification joins both documents' sorted key sets back once per candidate (`Candidates.joinBack`) and intersects them with the two-pointer graft_sorted_ix kernel. Three joins in all, broadcast at fixture scale, and no aggregate holds array state keyed on a shingle.",
     "sim_cosine_ann_lsh" ->
       "Bucket equi-join between the broadcast query batch and the corpus; dot products are the native graft_dot codegen expression.",
     "sim_cosine_ann_ivf" ->
@@ -61,9 +61,9 @@ object PlanDump {
     "events_anomaly" ->
       "Dense type×hour grid (bounded: types × hours, independent of event volume) left-joins the one-shuffle hourly aggregate; per-type moments attach as WINDOW aggregates over event_type on the dense frame — a stats-groupBy joined back planned the whole grid+hourly subtree twice (explain-verified before the rewrite).",
     "dedup_minhash_est" ->
-      "The per-doc feature table (sorted shingle-key set + 16 signature minima, both native kernels off the token array — one narrow map, no explode) is a LAZY localCheckpoint since r17: its three consumers (bucket chain + both verify join-back sides) read the one persisted copy, where the r16 repartition barrier was defeated by column pruning (different pruned exchange children → no exchange reuse → scan+kernels ran twice; plan went 6 scans/16 Exchanges → 0 re-scans/10). Candidate pairs still come from the shared in-bucket expansion; exact verification attaches both docs' sets by joining the checkpointed features, and the two-pointer sorted-intersect kernel replaces array_intersect.",
+      "The per-doc feature table (sorted shingle-key set + 16 signature minima, both native kernels off the token array — one narrow map, no explode) is a LAZY localCheckpoint since r17: its three consumers (bucket chain + both verify join-back sides) read the one persisted copy, where the r16 repartition barrier was defeated by column pruning (different pruned exchange children → no exchange reuse → scan+kernels ran twice; plan went 6 scans/16 Exchanges → 0 re-scans/10). Candidate pairs come from the same `Candidates.inBucket` step as dedup_minhash_candidates; exact verification attaches both docs' key sets and signatures through `Candidates.joinBack` on the checkpointed features, and the two-pointer sorted-intersect kernel replaces array_intersect.",
     "sim_semdedup" ->
-      "Zero-shuffle cell assignment (16 literal centroid dots per row, same narrow map as IVF); ONE cell_id exchange carries both the count-window size guard and the per-cell collect_list, and pairs expand IN-ARRAY inside cap-admitted cells (the a×b self-join planned the assignment subtree four times — 1.75 → 0.92 s at sf0.1); the drop set re-attaches via a left join keyed on vec_id. At scale NumCells is the lever that keeps cells pair-expandable and the cell_id shuffle healthy.",
+      "Zero-shuffle cell assignment (16 literal centroid dots per row, same narrow map as IVF); ONE cell_id exchange carries both the count-window size guard and the per-cell collect_list, and pairs expand IN-ARRAY inside cap-admitted cells through `Candidates.expand` (the count window admits a cell before its 64-double members are collected, so no member array outgrows the cap; the a×b self-join planned the assignment subtree four times — 1.75 → 0.92 s at sf0.1); the drop set re-attaches via a left join keyed on vec_id. At scale NumCells is the lever that keeps cells pair-expandable and the cell_id shuffle healthy.",
     "text_unigram_logprob" ->
       "ORDER-FREE fixed-point form (r16): vocab counts come from a vocabulary-sized aggregate, each term's log2 weight quantizes ONCE to q = floor(log2(cnt)·2^38 + 0.5), and the per-doc score is the exact integer Σ tf·q — commutative, so bit-identical under any partitioning/merge order with NO corpus sort and NO per-doc list materialization (the r15 window+array_sort(collect_list) canonical fold, the sf100 in-suite spill pair, is gone; UnigramPlanSpec asserts zero SortExec). tf attaches q via a hinted shuffled-hash join; the grand total stays a narrow scan-sum on a 1-row broadcast; the portable log2 is the native graft_log2 kernel, evaluated once per VOCAB TERM.",
     "text_filter_funnel" ->

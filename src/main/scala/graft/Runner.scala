@@ -78,15 +78,21 @@ object Runner {
     case c => c.toString
   } + "\""
 
-  /** The formatted physical plan with expression ids (`#12`), exchange
-    * ids (`plan_id=34`) and lambda variables (`x_5`) renumbered from 1
-    * in first-appearance order. They come from JVM-wide counters, so
-    * they shift with every query planned before this one; renumbered,
-    * a regeneration diff shows only real plan changes.
+  /** The formatted physical plan, [[renumber]]ed. */
+  def explain(df: DataFrame): String = renumber(
+    df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+
+  /** `plan` with expression ids (`#12`), exchange ids (`plan_id=34`)
+    * and lambda variables (`x_5`, `y_6`) renumbered from 1 in
+    * first-appearance order, and the line dropped from RDD call sites
+    * (`at Dedup.scala:288`). The ids come from JVM-wide counters and
+    * the lines move with every edit above the call; normalized, a
+    * regeneration diff shows only real plan changes.
     */
-  def explain(df: DataFrame): String =
-    Seq("""#(\d+)""" -> "#", """plan_id=(\d+)""" -> "plan_id=", """\bx_(\d+)\b""" -> "x_")
-      .foldLeft(df.queryExecution.explainString(ExplainMode.fromString("formatted"))) {
+  private[graft] def renumber(plan: String): String =
+    Seq("""#(\d+)""" -> "#", """plan_id=(\d+)""" -> "plan_id=",
+        """\bx_(\d+)\b""" -> "x_", """\by_(\d+)\b""" -> "y_")
+      .foldLeft(""" at (\w+\.scala):\d+""".r.replaceAllIn(plan, " at $1")) {
         case (text, (pattern, prefix)) =>
           val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
           pattern.r.replaceAllIn(text, m =>

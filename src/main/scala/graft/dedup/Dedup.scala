@@ -169,13 +169,15 @@ object Dedup {
     */
   private[dedup] def minhashSignaturesKernel(toks: DataFrame): DataFrame = {
     val production = graft.functions.PortableHash.enabled(toks)
-    val sig = dropNull(toks.select(col("doc_id"),
+    unpackSig(dropNull(toks.select(col("doc_id"),
         graft.functions.GraftFunctions.graftMinhash(col("toks"),
-          lit(ShingleSize), lit(NumHashes), lit(production)).as("sig")), "sig")
-    sig.select(col("doc_id") +:
-      (0 until NumHashes).map(i =>
-        element_at(col("sig"), i + 1).as(s"h$i")): _*)
+          lit(ShingleSize), lit(NumHashes), lit(production)).as("sig")), "sig"))
   }
+
+  /** (doc_id, h0..h{k-1}) from the kernel's `sig` array. */
+  private def unpackSig(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id") +: (0 until NumHashes).map(i =>
+      element_at(col("sig"), i + 1).as(s"h$i")): _*)
 
   /** `df` without the rows whose column `c` is NULL. A Filter would do
     * the same, but Catalyst pushes it below the projection that
@@ -198,43 +200,23 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
+  /** (doc_id, band, sig): each signed doc of `d` in its LSH buckets —
+    * what the MinHash generators and the audit bucket.
+    */
+  private def minhashBucketRows(d: DataFrame): DataFrame =
+    lshBuckets(minhashSignaturesKernel(toksOf(d)))
+
   /** Distinct candidate pairs (doc_a < doc_b) sharing any LSH bucket,
     * with oversized buckets dropped before the pair expansion.
     */
   def minhashCandidates(d: DataFrame,
-      maxBucketSize: Int = MaxBucketSize): DataFrame = {
-    // kernel-path signatures: the whole signature stage is one narrow
-    // map (no shingle explode, no doc_id exchange) — the first shuffle
-    // anywhere in this query is now the (band, sig) bucket aggregate
-    val buckets = lshBuckets(minhashSignaturesKernel(toksOf(d)))
-    bucketPairs(buckets, maxBucketSize)
-  }
+      maxBucketSize: Int = MaxBucketSize): DataFrame =
+    bandPairs(minhashBucketRows(d), maxBucketSize)
 
-  /** Distinct (doc_a < doc_b) pairs from (doc_id, band, sig) bucket
-    * rows: groupBy + in-list pair expansion, not a bucket self-join — a
-    * self-join recomputes the whole signature subtree per branch. The
-    * size filter both caps degenerate buckets and drops singletons.
-    * Shared by [[minhashCandidates]] and [[minhashCalibration]].
-    */
-  private def bucketPairs(buckets: DataFrame, maxBucketSize: Int): DataFrame =
-    buckets.groupBy("band", "sig")
-      .agg(collect_list(col("doc_id")).as("members"))
-      .filter(size(col("members")).between(2, maxBucketSize))
-      .withColumn("arr", array_sort(col("members")))
-      .select(inBucketPairs(col("arr"), "doc_a", "doc_b").as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()
-
-  /** Every pair (arr[i], arr[j]), i < j, of a bucket's member array as
-    * `struct(left, right)` rows: the in-bucket pair expansion the
-    * candidate generators share (MinHash bands, SimHash chunks, winnow
-    * anchors, IVF cells). Each caller groups, caps and sorts its own
-    * members into a column (`arr` is read three times per bucket);
-    * sorted members give left < right by construction.
-    */
-  def inBucketPairs(arr: Column, left: String, right: String): Column =
-    explode(flatten(transform(arr, (x, i) =>
-      transform(slice(arr, i + lit(2), size(arr)), y => struct(x.as(left), y.as(right))))))
+  /** The MinHash bucket step of [[minhashCandidates]] and [[minhashCalibration]]. */
+  private def bandPairs(buckets: DataFrame, maxBucketSize: Int): DataFrame =
+    Candidates.inBucket(buckets, Seq("band", "sig"), col("doc_id"), maxBucketSize,
+      "doc_a", "doc_b")
 
   /** MinHash calibration audit: for every LSH candidate pair, the
     * signature-agreement ESTIMATE of Jaccard (matching components / k)
@@ -286,28 +268,20 @@ object Dedup {
       // build); blocks are not recomputable on executor loss, the
       // documented localCheckpoint trade (see substringPairs).
       .localCheckpoint(false)
-    // Bucket chain reads only the signature columns off the reused
-    // exchange; candidate pairs are identical to minhashCandidates by
-    // construction (same kernel signatures, same banding, same cap).
-    val featH = feat.select(col("doc_id") +:
-      (0 until NumHashes).map(i =>
-        element_at(col("sig"), i + 1).as(s"h$i")): _*)
-    val pairs = bucketPairs(lshBuckets(featH), maxBucketSize)
-    // Exact verification, candidate-sized (the ngramJaccardPairsOn
-    // join-back shape): the tiny pair table attaches each side's
-    // sorted key set and signature; the two-pointer kernel replaces
-    // array_intersect.
-    val a = feat.select(col("doc_id").as("doc_a"), col("kset").as("ka"),
-      col("sig").as("ga"))
-    val b = feat.select(col("doc_id").as("doc_b"), col("kset").as("kb"),
-      col("sig").as("gb"))
-    pairs.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
+    // Bucket chain reads only the signature columns off the checkpoint;
+    // candidate pairs are identical to minhashCandidates by construction
+    // (same kernel signatures, same banding, same cap).
+    val pairs = bandPairs(lshBuckets(unpackSig(feat)), maxBucketSize)
+    // Exact verification, candidate-sized: the tiny pair table attaches
+    // each side's sorted key set and signature; the two-pointer kernel
+    // replaces array_intersect.
+    Candidates.joinBack(pairs, feat, "kset", "sig")
       .select(col("doc_a"), col("doc_b"),
-        size(col("ka")).cast("long").as("n_a"),
-        size(col("kb")).cast("long").as("n_b"),
-        graft.functions.GraftFunctions.graftSortedIx(col("ka"), col("kb"))
+        size(col("kset_a")).cast("long").as("n_a"),
+        size(col("kset_b")).cast("long").as("n_b"),
+        graft.functions.GraftFunctions.graftSortedIx(col("kset_a"), col("kset_b"))
           .cast("long").as("inter_n"),
-        aggregate(zip_with(col("ga"), col("gb"),
+        aggregate(zip_with(col("sig_a"), col("sig_b"),
             (x, y) => when(x === y, 1L).otherwise(0L)),
           lit(0L), (acc, v) => acc + v).as("sig_matches"))
       .withColumn("est_jaccard",
@@ -322,16 +296,13 @@ object Dedup {
     * hex to int64 is NOT portable, bit strings are).
     */
   def simhashSignatures(d: DataFrame): DataFrame =
-    simhashSignaturesWithChunks(d).select("doc_id", "simhash")
+    simhashChunksFromToks(toksOf(d)).select("doc_id", "simhash")
 
   /** Signature plus the four 16-bit chunks as integers (ci0..ci3):
     * the bit string is the cross-engine OUTPUT format; the ints are the
     * compute format (downstream hamming is XOR + bit_count on longs
     * instead of per-character array comparison).
     */
-  private def simhashSignaturesWithChunks(d: DataFrame): DataFrame =
-    simhashChunksFromToks(toksOf(d))
-
   private[dedup] def simhashChunksFromToks(toks: DataFrame): DataFrame = {
     // The whole signature stage is ONE narrow map: the native
     // graft_simhash kernel folds the ±1 bit votes per doc straight off
@@ -388,6 +359,21 @@ object Dedup {
     sums.select(col("doc_id") +: concat(bitChars: _*).as("simhash") +: chunkInts: _*)
   }
 
+  /** (m, chunk_id, chunk): each doc of `d` in its four chunk buckets, `m`
+    * its (doc_id, ci0..ci3) struct — what [[simhashPairs]] and the audit
+    * bucket.
+    */
+  private def simhashBucketRows(d: DataFrame): DataFrame = {
+    val chunkStructs = (0 until 4).map(c =>
+      struct(lit(c).as("chunk_id"), col(s"ci$c").as("chunk")))
+    val member = struct(
+      (col("doc_id") +: (0 until 4).map(c => col(s"ci$c"))): _*)
+    simhashChunksFromToks(toksOf(d))
+      .select(member.as("m"), explode(array(chunkStructs: _*)).as("cs"))
+      .select(col("m"), col("cs.chunk_id").as("chunk_id"),
+        col("cs.chunk").as("chunk"))
+  }
+
   /** Near-dup pairs by SimHash: band the 64-bit signature into 4 16-bit
     * chunks (hamming ≤ 3 ⟹ at least one chunk identical), bucket the
     * docs per chunk, then exact hamming distance via zip_with/aggregate
@@ -400,29 +386,12 @@ object Dedup {
     */
   def simhashPairs(d: DataFrame,
       maxBucketSize: Int = MaxBucketSize): DataFrame = {
-    val sigs = simhashSignaturesWithChunks(d)
-    val chunkStructs = (0 until 4).map(c =>
-      struct(lit(c).as("chunk_id"), col(s"ci$c").as("chunk")))
-    val member = struct(
-      (col("doc_id") +: (0 until 4).map(c => col(s"ci$c"))): _*)
-    val buckets = sigs
-      .select(col("doc_id"), member.as("m"),
-        explode(array(chunkStructs: _*)).as("cs"))
-      .select(col("m"), col("cs.chunk_id").as("chunk_id"),
-        col("cs.chunk").as("chunk"))
-    // members sorted by doc_id → emitted pairs have doc_a < doc_b by
-    // construction; each bucket row expands only its own pairs
-    val pairs = buckets
-      .groupBy("chunk_id", "chunk")
-      .agg(collect_list(col("m")).as("members"))
-      // degenerate chunk values shared by half the corpus generate
-      // quadratic pair counts and zero dedup signal — same cap rationale
-      // as the MinHash buckets
-      .filter(size(col("members")).between(2, maxBucketSize))
-      .withColumn("arr", array_sort(col("members")))
-      .select(inBucketPairs(col("arr"), "a", "b").as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .distinct()
+    // members are (doc_id, ci0..ci3) structs, sorted by doc_id first →
+    // doc_a < doc_b by construction; degenerate chunk values shared by
+    // half the corpus generate quadratic pair counts and zero dedup
+    // signal — same cap rationale as the MinHash buckets
+    val pairs = Candidates.inBucket(simhashBucketRows(d),
+      Seq("chunk_id", "chunk"), col("m"), maxBucketSize, "a", "b")
     val ham = (0 until 4)
       .map(c => bit_count(col(s"a.ci$c").bitwiseXOR(col(s"b.ci$c"))))
       .reduce(_ + _)
@@ -492,7 +461,7 @@ object Dedup {
 
   private def ngramJaccardOn(docsets: DataFrame,
       threshold: Double = JaccardThreshold): DataFrame = {
-    val jac = col("ix").cast("double") / (col("na") + col("nb") - col("ix")).cast("double")
+    val jac = col("ix").cast("double") / (col("n_a") + col("n_b") - col("ix")).cast("double")
     ngramJaccardPairsOn(docsets, threshold)
       .distinct()
       .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
@@ -510,10 +479,8 @@ object Dedup {
     // order — so prefixes hold each doc's RAREST keys and prefix
     // buckets are small by construction (a boilerplate key shared by
     // hundreds of docs sorts last in every doc and never anchors a
-    // bucket). floor instead of the textbook ⌈·⌉ keeps the prefix ≥
-    // required under float rounding of t·n (at most one element longer
-    // — never shorter, which would silently drop true pairs).
-    val plen = col("n") - floor(col("n") * lit(threshold)).cast("int") + 1
+    // bucket).
+    val plen = Candidates.prefixLen(col("n"), threshold)
     // SCALAR prefix postings: jaccard(A,B) ≥ t forces BOTH prefixes to
     // contain a shared key (PPJoin), so a prefix SELF-join on shk
     // yields exactly the candidate pairs — and because the postings
@@ -542,17 +509,18 @@ object Dedup {
     // re-shuffles) and intersect with the two-pointer kernel. The
     // jaccard filter uses the same int-arithmetic-then-double-division
     // the oracle does.
-    val a = docsets.select(col("doc_id").as("doc_a"), col("n").as("na"),
-      col("ks").as("ksa"))
-    val b = docsets.select(col("doc_id").as("doc_b"), col("n").as("nb"),
-      col("ks").as("ksb"))
-    cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
-        graft.functions.GraftFunctions.graftSortedIx(col("ksa"), col("ksb"))
-          .as("ix"))
+    verifyOn(cand, docsets)
       .filter(col("ix").cast("double")
-        / (col("na") + col("nb") - col("ix")).cast("double") >= threshold)
+        / (col("n_a") + col("n_b") - col("ix")).cast("double") >= threshold)
   }
+
+  /** Candidates with both docs' set sizes and their intersection size
+    * (two-pointer [[graft.functions.SortedIntersect]] over `ks`). */
+  private def verifyOn(cand: DataFrame, docsets: DataFrame): DataFrame =
+    Candidates.joinBack(cand, docsets, "n", "ks")
+      .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
+        graft.functions.GraftFunctions.graftSortedIx(col("ks_a"), col("ks_b"))
+          .as("ix"))
 
   /** Containment bar for [[containment]]: the fraction of the SMALLER
     * doc's shingle set that must reappear in the other doc.
@@ -569,8 +537,7 @@ object Dedup {
     * asymmetric form of prefix filtering: if containment(X→partner) ≥ t
     * then X's first |X| − ⌊t·|X|⌋ + 1 keys IN THE GLOBAL ORDER must hit
     * the partner's full set — pigeonhole on X's side alone, no bound on
-    * the partner's size needed (floor keeps the prefix ≥ required under
-    * float rounding — at most one element longer, never shorter). The
+    * the partner's size needed ([[Candidates.prefixLen]]). The
     * global order is (df, key) ascending, so X's prefix holds its
     * RAREST keys: a boilerplate key shared by hundreds of docs is in
     * nobody's prefix, and the big buckets it forms emit NO candidates.
@@ -608,7 +575,7 @@ object Dedup {
 
   private def containmentOn(docsets: DataFrame,
       threshold: Double = ContainmentThreshold): DataFrame = {
-    val plen = col("n") - floor(col("n") * lit(threshold)).cast("int") + 1
+    val plen = Candidates.prefixLen(col("n"), threshold)
     // LIGHT postings: (shk, doc_id, in-prefix flag) — three scalars.
     // pos is posexplode's 0-based index into the df-ORDERED key view,
     // so pos < plen marks exactly the rarest-plen prefix
@@ -638,21 +605,12 @@ object Dedup {
       .select(least(col("pa"), col("pb")).as("doc_a"),
         greatest(col("pa"), col("pb")).as("doc_b"))
       .distinct()
-    // exact verification, candidate-sized: join each side's sorted set
-    // back in (the docsets subtree is re-planned, but its exchanges
-    // partition identically and reuse at runtime) and count the
-    // intersection with the two-pointer kernel
-    val a = docsets.select(col("doc_id").as("doc_a"), col("n").as("na"),
-      col("ks").as("ksa"))
-    val b = docsets.select(col("doc_id").as("doc_b"), col("n").as("nb"),
-      col("ks").as("ksb"))
-    val verified = cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
-        graft.functions.GraftFunctions.graftSortedIx(col("ksa"), col("ksb"))
-          .as("ix"))
-    val cont = col("ix").cast("double") / least(col("na"), col("nb")).cast("double")
-    val jac = col("ix").cast("double") / (col("na") + col("nb") - col("ix")).cast("double")
-    verified
+    // exact verification, candidate-sized (the docsets subtree is
+    // re-planned, but its exchanges partition identically and reuse at
+    // runtime)
+    val cont = col("ix").cast("double") / least(col("n_a"), col("n_b")).cast("double")
+    val jac = col("ix").cast("double") / (col("n_a") + col("n_b") - col("ix")).cast("double")
+    verifyOn(cand, docsets)
       .filter(cont >= threshold)
       .select(col("doc_a"), col("doc_b"), cont.as("containment"), jac.as("jaccard"))
       .orderBy("doc_a", "doc_b")
@@ -723,8 +681,9 @@ object Dedup {
     val anchors = seqs.select(col("doc_id"),
       explode(graft.functions.GraftFunctions.graftWinnowSelect(
         col("ks"), lit(SubstrWinnow))).as("anchor"))
-    // members sorted by doc_id → doc_a < doc_b by construction (the
-    // jaccard/containment bucket discipline). LAZY localCheckpoint
+    // Anchor buckets through the shared candidate step: graft_winnow_select
+    // returns each doc's anchors distinct, so a doc appears once per
+    // bucket and the member list needs no set semantics. LAZY localCheckpoint
     // (r16): `cand` has three consumers (both candDocs legs + the
     // verify join) and `pos` two (the pa/pb self-join sides), and
     // Spark reuses EXCHANGES, not arbitrary subtrees — the r15 plan
@@ -753,12 +712,8 @@ object Dedup {
     // distributed-FS write + read INSIDE every healthy run. A
     // deployment on flaky spot nodes flips to .checkpoint() with
     // sc.setCheckpointDir — one line, values identical.
-    val cand = anchors.groupBy("anchor")
-      .agg(array_sort(collect_set(col("doc_id"))).as("docs"))
-      .filter(size(col("docs")) >= 2 && size(col("docs")) <= maxAnchorDf)
-      .select(inBucketPairs(col("docs"), "doc_a", "doc_b").as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()
+    val cand = Candidates.inBucket(anchors, Seq("anchor"), col("doc_id"), maxAnchorDf,
+        "doc_a", "doc_b")
       .localCheckpoint(false)
     val candDocs = cand.select(explode(array(col("doc_a"), col("doc_b")))
       .as("doc_id")).distinct()
@@ -830,7 +785,7 @@ object Dedup {
     val exact = hashed.filter(isDelta(col("doc_id")))
       .join(corpusH, Seq("text_hash"), "left")
       .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("exact_dup"))
-    val near = lshBuckets(minhashSignaturesKernel(toksOf(d)))
+    val near = minhashBucketRows(d)
       .groupBy("band", "sig")
       .agg(
         collect_list(when(isDelta(col("doc_id")), col("doc_id"))).as("delta_m"),
@@ -841,6 +796,13 @@ object Dedup {
       .select(col("doc_id"), explode(col("corpus_m")).as("partner"))
       .groupBy("doc_id")
       .agg(countDistinct(col("partner")).as("near_partners"))
+    verdicts(exact, near)
+  }
+
+  /** The verdict tail both incremental forms share: near_partners
+    * absent is 0; `exact_dup` > `near_candidate` > `new`.
+    */
+  private def verdicts(exact: DataFrame, near: DataFrame): DataFrame =
     exact.join(near, Seq("doc_id"), "left")
       .select(col("doc_id"), col("exact_dup"),
         coalesce(col("near_partners"), lit(0L)).as("near_partners"),
@@ -848,7 +810,6 @@ object Dedup {
           .when(coalesce(col("near_partners"), lit(0L)) > 0, lit("near_candidate"))
           .otherwise(lit("new")).as("verdict"))
       .orderBy("doc_id")
-  }
 
   /** The standing corpus-side index the daily-ingest reality needs:
     * [[incrementalDedup]] is the right SINGLE-SHOT shape but re-signs
@@ -865,7 +826,7 @@ object Dedup {
 
   def corpusIndex(corpus: DataFrame): CorpusIndex = CorpusIndex(
     corpus.select(sha2(lower(col("text")), 256).as("text_hash")).distinct(),
-    lshBuckets(minhashSignaturesKernel(toksOf(corpus)))
+    minhashBucketRows(corpus)
       .groupBy("band", "sig").agg(collect_list(col("doc_id")).as("corpus_m")))
 
   /** [[incrementalDedup]] against a PRECOMPUTED [[CorpusIndex]] —
@@ -880,20 +841,14 @@ object Dedup {
         sha2(lower(col("text")), 256).as("text_hash"))
       .join(idx.hashes.withColumn("hit", lit(true)), Seq("text_hash"), "left")
       .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("exact_dup"))
-    val near = lshBuckets(minhashSignaturesKernel(toksOf(delta)))
+    val near = minhashBucketRows(delta)
       .join(idx.buckets
         .filter(size(col("corpus_m")).between(1, maxBucketSize)),
         Seq("band", "sig"))
       .select(col("doc_id"), explode(col("corpus_m")).as("partner"))
       .groupBy("doc_id")
       .agg(countDistinct(col("partner")).as("near_partners"))
-    exact.join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("exact_dup"),
-        coalesce(col("near_partners"), lit(0L)).as("near_partners"),
-        when(col("exact_dup"), lit("exact_dup"))
-          .when(coalesce(col("near_partners"), lit(0L)) > 0, lit("near_candidate"))
-          .otherwise(lit("new")).as("verdict"))
-      .orderBy("doc_id")
+    verdicts(exact, near)
   }
 
   /** Fixpoint guard for the label-propagation loops. With the
@@ -1011,12 +966,6 @@ object Dedup {
     */
   def bucketStats(d: DataFrame, maxShingleDf: Int = MaxShingleDf,
       maxBucketSize: Int = MaxBucketSize): DataFrame = {
-    def dropped(sizes: DataFrame, cap: Int, method: String): DataFrame =
-      sizes.filter(col("sz") > cap)
-        .agg(count(lit(1)).as("dropped_buckets"),
-          coalesce(sum(col("sz")), lit(0L)).as("dropped_postings"))
-        .select(lit(method).as("method"),
-          col("dropped_buckets"), col("dropped_postings"))
     // NO persist, NO distinct: the audit is three independent
     // one-shuffle aggregation branches collected in ONE job, running
     // in parallel (r5 persisted toks+sh: 15.9 s; r6 persisted sh only:
@@ -1034,24 +983,15 @@ object Dedup {
     // 100 TB posture: three column-pruned corpus scans, fully
     // pipelined, zero cached state — re-tokenizing per branch beats
     // materializing a corpus-sized table that would spill to disk.
+    // Each branch counts the rows its generator caps (hashedKeyPostings
+    // is the subtree dfOrderedDocsets' df count runs on).
     val production = graft.functions.PortableHash.enabled(d)
-    val mhSizes = lshBuckets(minhashSignaturesKernel(toksOf(d)))
-      .groupBy("band", "sig").agg(count(lit(1)).as("sz"))
-    val chunkStructs = (0 until 4).map(c =>
-      struct(lit(c).as("chunk_id"), col(s"ci$c").as("chunk")))
-    val simSizes = simhashChunksFromToks(toksOf(d))
-      .select(explode(array(chunkStructs: _*)).as("cs"))
-      .groupBy(col("cs.chunk_id"), col("cs.chunk"))
-      .agg(count(lit(1)).as("sz"))
-    // same hashed shingle key and doc-set size ngramJaccard's inverted
-    // index caps on (hashedKeyPostings is the exact subtree
-    // dfOrderedDocsets' df count runs on)
-    val jacSizes = hashedKeyPostings(d, ShingleSize, production)
-      .groupBy("shk")
-      .agg(count(lit(1)).as("sz"))
-    val stats = dropped(jacSizes, maxShingleDf, "jaccard_shingle")
-      .unionByName(dropped(mhSizes, maxBucketSize, "minhash_lsh"))
-      .unionByName(dropped(simSizes, maxBucketSize, "simhash_chunk"))
+    val stats = Candidates.audit(hashedKeyPostings(d, ShingleSize, production),
+        Seq("shk"), maxShingleDf, "jaccard_shingle")
+      .unionByName(Candidates.audit(minhashBucketRows(d),
+        Seq("band", "sig"), maxBucketSize, "minhash_lsh"))
+      .unionByName(Candidates.audit(simhashBucketRows(d),
+        Seq("chunk_id", "chunk"), maxBucketSize, "simhash_chunk"))
       .orderBy("method")
     // The result is EXACTLY three rows (one per method — a bounded
     // audit summary), so it is computed eagerly and re-entered as a

@@ -314,6 +314,16 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
       .sortBy(_._1)
 
+  /** Driver-side dot product: the in-order fold [[dot]] evaluates and
+    * the oracle mirrors, so the driver-trained quantizers stay
+    * bit-identical to both.
+    */
+  private def dotD(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
   /** Lloyd's algorithm on the driver, mirroring [[lloydStep]] /
     * [[trainedCentroids]] operation-for-operation in plain double
     * arithmetic (in-order dot fold, vec_id-ordered mean summation,
@@ -329,11 +339,6 @@ object Similarity {
     */
   private[sim] def lloydDriver(
       sample: Seq[(Long, Array[Double])]): Seq[(Long, Seq[Double], Double)] = {
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     val withN = sample.map { case (id, v) => (id, v, dotD(v, v)) }
     var cents: Seq[(Long, Array[Double], Double)] =
       withN.filter(_._1 < NumCells)
@@ -377,11 +382,6 @@ object Similarity {
     */
   private[sim] def pqTrainDriver(sample: Seq[(Long, Array[Double])])
       : IndexedSeq[IndexedSeq[(Long, Seq[Double], Double)]] = {
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     (0 until PqM).map { m =>
       val sub = sample.map { case (id, v) =>
         (id, v.slice(m * PqSubDim, (m + 1) * PqSubDim))
@@ -481,11 +481,6 @@ object Similarity {
     */
   private[sim] def residualSample(sample: Seq[(Long, Array[Double])],
       cents: Seq[(Long, Seq[Double], Double)]): Seq[(Long, Array[Double])] = {
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     val centArr = cents.map { case (id, cv, cn) => (id, cv.toArray, cn) }
     sample.map { case (id, v) =>
       val n = dotD(v, v)
@@ -549,11 +544,6 @@ object Similarity {
     val cents = lloydDriver(sample)
     val coarse = probeCells(cents)
     val cb = pqTrainDriver(residualSample(sample, cents))
-    def dotD(a: Seq[Double], b: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     // literal lookup tables over the trained constants: cell ids (for
     // the id→position translation), centroid matrix (residual
     // subtraction), centroid norms, and per-(m, cell, code) norm terms
@@ -564,7 +554,7 @@ object Similarity {
     val tLit: IndexedSeq[Column] = (0 until PqM).map { m =>
       typedLit[Seq[Seq[Double]]](cents.map { ct =>
         val csub = ct._2.slice(m * PqSubDim, (m + 1) * PqSubDim)
-        cb(m).map { case (_, cv, cn) => 2.0 * dotD(csub, cv) + cn }.toSeq
+        cb(m).map { case (_, cv, cn) => 2.0 * dotD(csub.toArray, cv.toArray) + cn }.toSeq
       }.toSeq)
     }
     val assign = c
@@ -732,9 +722,7 @@ object Similarity {
       sampleIn: Option[Seq[(Long, Array[Double])]],
       qIn: Option[DataFrame] = None): DataFrame = {
     val cells = probeCells(lloydDriver(sampleIn.getOrElse(collectSample(c))))
-    val assign = c.withColumn("cells", cells)
-      .select(element_at(col("cells"), 1).getField("cell_id").as("cell_id"),
-        col("vec_id"), col("v"), col("nrm"))
+    val assign = cellRows(c, cells)
     // the query side re-derives its probe list from the shared local
     // batch when given one, else from the (pushdown-filtered:
     // vec_id < NumQueries) scan — a *tiny* read, not a corpus pass
@@ -750,40 +738,6 @@ object Similarity {
     rankTopK(pairs, TopK)
   }
 
-  /** SemDeDup (semantic deduplication over embeddings, after Abbas et
-    * al. 2023, arXiv:2303.09540): prune vectors whose embedding is
-    * near-identical to a kept one. Every vector is assigned to its
-    * trained IVF cell by the same zero-shuffle narrow map as
-    * [[ivfTopK]]; within each cap-admitted cell, pairs at cosine ≥
-    * [[SemDedupThreshold]] mark the HIGHER vec_id as a duplicate
-    * (keep-lowest-id — the deterministic keeper rule shared with
-    * `dedup_near_apply`). Output is a per-vector verdict
-    * (vec_id, cell_id, kept) over the whole corpus; vectors in
-    * oversized cells are kept un-expanded (the cap never drops
-    * silently — `sim_bucket_stats`'s `ivf_cell` row counts them).
-    *
-    * Scale notes: assignment is one corpus pass with zero exchanges
-    * (16 literal dots per row); the pair stage shuffles once on
-    * cell_id and expands |cell|²/2 only inside cap-admitted cells —
-    * never corpus×corpus. The cell-size guard is a COUNT WINDOW
-    * stacked on the same cell_id exchange (a size-aggregate joined
-    * back would re-plan the assignment subtree), and pairs expand
-    * IN-ARRAY off a per-cell collect_list of the cap-admitted members
-    * — the a×b self-join formulation planned the 16-dot assignment
-    * four times (size agg + both join sides + the verdict spine;
-    * HOF-laden subtrees defeat exchange reuse) and measured ~2× slower
-    * (1.75 → 0.9 s at sf0.1), the simhashPairs lesson again. At
-    * 100 TB, [[NumCells]] is the lever that keeps cells
-    * pair-expandable AND keeps the cell_id shuffle key-cardinality
-    * healthy (16 keys is fixture-sized; production SemDeDup runs
-    * ~100 k cells over billions of vectors, which also de-skews the
-    * shuffle — and the collect_list only ever sees cap-admitted
-    * cells, so its row size is bounded by [[MaxSemCell]]·dim).
-    * Distance to the cell centroid — the quality signal real SemDeDup
-    * keeps per cluster — is available here as element 1's `neg`; the
-    * keeper rule stays id-based so the verdict is join-order-free and
-    * oracle-stable.
-    */
   /** Embedding-level decontamination: drop every corpus vector whose
     * cosine against ANY eval vector reaches [[EmbDecontamThreshold]] —
     * the semantic leak detector for PARAPHRASED eval contamination that
@@ -930,21 +884,61 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  private def semDedup(s: SparkSession, dir: String): DataFrame = {
-    val c = prepared(s, dir, withBucket = false)
-    val cells = probeCells(centroidLiterals(c))
-    val assign = c.withColumn("cells", cells)
+  /** (cell_id, vec_id, v, nrm): each vector in its IVF cell, element 1
+    * of [[probeCells]] `cells` — what [[ivfTopK]] probes, [[semDedup]]
+    * expands and the `ivf_cell` audit row counts.
+    */
+  private def cellRows(c: DataFrame, cells: Column): DataFrame =
+    c.withColumn("cells", cells)
       .select(element_at(col("cells"), 1).getField("cell_id").as("cell_id"),
         col("vec_id"), col("v"), col("nrm"))
+
+  /** SemDeDup (semantic deduplication over embeddings, after Abbas et
+    * al. 2023, arXiv:2303.09540): prune vectors whose embedding is
+    * near-identical to a kept one. Every vector is assigned to its
+    * trained IVF cell by the same zero-shuffle narrow map as
+    * [[ivfTopK]]; within each cap-admitted cell, pairs at cosine ≥
+    * [[SemDedupThreshold]] mark the HIGHER vec_id as a duplicate
+    * (keep-lowest-id — the deterministic keeper rule shared with
+    * `dedup_near_apply`). Output is a per-vector verdict
+    * (vec_id, cell_id, kept) over the whole corpus; vectors in
+    * oversized cells are kept un-expanded (the cap never drops
+    * silently — `sim_bucket_stats`'s `ivf_cell` row counts them).
+    *
+    * Scale notes: assignment is one corpus pass with zero exchanges
+    * (16 literal dots per row); the pair stage shuffles once on
+    * cell_id and expands |cell|²/2 only inside cap-admitted cells —
+    * never corpus×corpus. The cell-size guard is a COUNT WINDOW
+    * stacked on the same cell_id exchange (a size-aggregate joined
+    * back would re-plan the assignment subtree), and pairs expand
+    * IN-ARRAY off a per-cell collect_list of the cap-admitted members
+    * — the a×b self-join formulation planned the 16-dot assignment
+    * four times (size agg + both join sides + the verdict spine;
+    * HOF-laden subtrees defeat exchange reuse) and measured ~2× slower
+    * (1.75 → 0.9 s at sf0.1), the simhashPairs lesson again. At
+    * 100 TB, [[NumCells]] is the lever that keeps cells
+    * pair-expandable AND keeps the cell_id shuffle key-cardinality
+    * healthy (16 keys is fixture-sized; production SemDeDup runs
+    * ~100 k cells over billions of vectors, which also de-skews the
+    * shuffle — and the collect_list only ever sees cap-admitted
+    * cells, so its row size is bounded by [[MaxSemCell]]·dim).
+    * Distance to the cell centroid — the quality signal real SemDeDup
+    * keeps per cluster — is available here as element 1's `neg`; the
+    * keeper rule stays id-based so the verdict is join-order-free and
+    * oracle-stable.
+    */
+  private def semDedup(s: SparkSession, dir: String): DataFrame = {
+    val c = prepared(s, dir, withBucket = false)
     val byCell = org.apache.spark.sql.expressions.Window.partitionBy("cell_id")
-    val withSz = assign.withColumn("csz", count(lit(1)).over(byCell))
+    val withSz = cellRows(c, probeCells(centroidLiterals(c)))
+      .withColumn("csz", count(lit(1)).over(byCell))
     val members = withSz
       .filter(col("csz").between(2, MaxSemCell))
       .groupBy("cell_id")
       .agg(collect_list(struct(col("vec_id"), col("v"), col("nrm")))
         .as("ms"))
       .withColumn("arr", array_sort(col("ms")))
-    val drops = members.select(graft.dedup.Dedup.inBucketPairs(col("arr"), "a", "b").as("p"))
+    val drops = members.select(graft.dedup.Candidates.expand(col("arr"), "a", "b").as("p"))
       .filter(cosine(col("p.a.v"), col("p.b.v"),
         col("p.a.nrm"), col("p.b.nrm")) >= SemDedupThreshold)
       .select(col("p.b.vec_id").as("vec_id")).distinct()
@@ -1140,21 +1134,10 @@ object Similarity {
     // is eager-at-build like `sim_cosine_ann_ivf` (docs/PLANS.md).
     "sim_bucket_stats" -> QuerySpec((s, dir) => {
       val c = prepared(s, dir, withBucket = true)
-      def audit(sizes: DataFrame, cap: Int, method: String): DataFrame =
-        sizes.filter(col("sz") > cap)
-          .agg(count(lit(1)).as("dropped_buckets"),
-            coalesce(sum(col("sz")), lit(0L)).as("dropped_postings"))
-          .select(lit(method).as("method"),
-            col("dropped_buckets"), col("dropped_postings"))
-      val lsh = audit(c.groupBy("bucket").agg(count(lit(1)).as("sz")),
-        MaxNearDupBucket, "embedding_lsh")
-      val cellOf = element_at(probeCells(centroidLiterals(c)), 1)
-        .getField("cell_id")
-      val ivf = audit(
-        c.withColumn("cell_id", cellOf)
-          .groupBy("cell_id").agg(count(lit(1)).as("sz")),
-        MaxSemCell, "ivf_cell")
-      lsh.unionByName(ivf).orderBy("method")
+      graft.dedup.Candidates.audit(c, Seq("bucket"), MaxNearDupBucket, "embedding_lsh")
+        .unionByName(graft.dedup.Candidates.audit(
+          cellRows(c, probeCells(centroidLiterals(c))), Seq("cell_id"), MaxSemCell, "ivf_cell"))
+        .orderBy("method")
     },
       s"""$bCte$ivfCtes
          |SELECT method, dropped_buckets, dropped_postings FROM (

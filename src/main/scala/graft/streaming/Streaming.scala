@@ -509,7 +509,8 @@ object StreamingAttribution {
   * admitted member list. An arrival emits candidate pairs against the
   * current members plus the in-batch pairs.
   *
-  * Cap semantics (the no-silent-quadratic rule, streamed): within one
+  * Cap semantics (the no-silent-quadratic rule, streamed, in
+  * [[graft.dedup.Candidates.admit]] next to the batch cap): within one
   * invocation, if state ∪ batch exceeds [[graft.dedup.Dedup.MaxBucketSize]]
   * the bucket POISONS itself — emits nothing, forever — which on a
   * one-batch replay is exactly the batch drop-oversized-bucket rule
@@ -533,6 +534,7 @@ object StreamingNearDup {
   case class Cand(doc_a: Long, doc_b: Long)
   case class BucketState(members: List[Long], poisoned: Boolean)
 
+  import graft.dedup.Candidates
   import graft.dedup.Dedup.{Bands, NumHashes, RowsPerBand, ShingleSize}
 
   /** MinHash signature of one document: [[graft.functions.MinHashSig]]
@@ -545,47 +547,35 @@ object StreamingNearDup {
       graft.text.Tokenize.whitespaceTokensOf(text), ShingleSize, NumHashes,
       production = false)).map(_.toLongArray())
 
-  /** Band-bucket keys of one signature: "band|h..|h.." — the string
-    * form of the batch (band, sig) key pair.
+  /** Band-bucket keys of one document: "band|h..|h.." — the string
+    * form of the batch (band, sig) key pair; none for null, empty or
+    * unsignable text.
     */
-  def bucketKeysOf(sig: Array[Long]): Seq[String] =
-    (0 until Bands).map { b =>
-      val slice = (b * RowsPerBand until (b + 1) * RowsPerBand)
-        .map(sig(_)).mkString("|")
-      s"$b|$slice"
+  def bucketKeysOf(text: String): Seq[String] =
+    Option(text).filter(_.nonEmpty).flatMap(sigOf).toSeq.flatMap { sig =>
+      (0 until Bands).map { b =>
+        val slice = (b * RowsPerBand until (b + 1) * RowsPerBand)
+          .map(sig(_)).mkString("|")
+        s"$b|$slice"
+      }
     }
 
   def candidates(docs: Dataset[Doc],
       maxBucketSize: Int = graft.dedup.Dedup.MaxBucketSize): Dataset[Cand] = {
     import docs.sparkSession.implicits._
-    docs
-      .filter(d => d.text != null && d.text.nonEmpty)
-      .flatMap(d => sigOf(d.text).toSeq
-        .flatMap(sig => bucketKeysOf(sig).map(k => (k, d.doc_id))))
+    docs.flatMap(d => bucketKeysOf(d.text).map(k => (k, d.doc_id)))
       .groupByKey(_._1)
       .flatMapGroupsWithState[BucketState, Cand](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, batch: Iterator[(String, Long)],
             state: GroupState[BucketState]) =>
           val st = state.getOption.getOrElse(BucketState(Nil, poisoned = false))
-          // redelivery guard (at-least-once sources, re-crawled ids):
-          // an id already admitted must neither pair with itself nor
-          // count twice toward the cap
-          val arrivals = batch.map(_._2).toSeq.distinct.sorted
-            .filterNot(st.members.toSet)
-          if (st.poisoned || arrivals.isEmpty) Iterator.empty
-          else if (st.members.size + arrivals.size > maxBucketSize) {
-            state.update(BucketState(Nil, poisoned = true))
-            Iterator.empty
-          } else {
-            val inBatch = for {
-              (a, i) <- arrivals.zipWithIndex; b <- arrivals.drop(i + 1)
-            } yield Cand(a, b)
-            val cross = for {
-              a <- arrivals; m <- st.members
-            } yield if (m < a) Cand(m, a) else Cand(a, m)
-            state.update(BucketState(st.members ++ arrivals, poisoned = false))
-            (inBatch ++ cross).iterator
+          Candidates.admit(st.members, st.poisoned, batch.map(_._2).toSeq,
+              maxBucketSize) match {
+            case None => Iterator.empty
+            case Some(next) =>
+              state.update(BucketState(next.members, next.poisoned))
+              next.pairs.iterator.map(Cand.tupled)
           }
       }
   }
@@ -629,10 +619,7 @@ object StreamingNearDup {
       watermarkDelay: String = "0 seconds"): Dataset[Cand] = {
     import docs.sparkSession.implicits._
     require(ttlMs > 0, s"ttlMs must be positive, got $ttlMs")
-    docs
-      .filter(d => d.text != null && d.text.nonEmpty)
-      .flatMap(d => sigOf(d.text).toSeq
-        .flatMap(sig => bucketKeysOf(sig).map(k => (k, d.doc_id, d.ts))))
+    docs.flatMap(d => bucketKeysOf(d.text).map(k => (k, d.doc_id, d.ts)))
       // the watermark goes ON the exploded posting stream: a typed
       // flatMap strips column metadata, so a watermark placed upstream
       // never reaches the stateful operator's input and the analyzer
@@ -662,25 +649,14 @@ object StreamingNearDup {
               state.setTimeoutTimestamp(
                 math.max(touch + ttlMs, state.getCurrentWatermarkMs() + 1))
             }
-            // redelivery guard, as in [[candidates]]
-            val arrivals = rows.map(_._2).distinct.sorted
-              .filterNot(st.members.toSet)
-            if (st.poisoned || arrivals.isEmpty) {
-              lease(st.copy(lastTouchMs = touch))
-              Iterator.empty
-            } else if (st.members.size + arrivals.size > maxBucketSize) {
-              lease(TtlBucketState(Nil, poisoned = true, touch))
-              Iterator.empty
-            } else {
-              val inBatch = for {
-                (a, i) <- arrivals.zipWithIndex; b <- arrivals.drop(i + 1)
-              } yield Cand(a, b)
-              val cross = for {
-                a <- arrivals; m <- st.members
-              } yield if (m < a) Cand(m, a) else Cand(a, m)
-              lease(TtlBucketState(st.members ++ arrivals,
-                poisoned = false, touch))
-              (inBatch ++ cross).iterator
+            Candidates.admit(st.members, st.poisoned, rows.map(_._2),
+                maxBucketSize) match {
+              case None =>
+                lease(st.copy(lastTouchMs = touch))
+                Iterator.empty
+              case Some(next) =>
+                lease(TtlBucketState(next.members, next.poisoned, touch))
+                next.pairs.iterator.map(Cand.tupled)
             }
           }
       }

@@ -163,6 +163,33 @@ class RegistrySpec extends SparkSpec {
     }
   }
 
+  test("data-sized shuffle confs leave every covered query's result unchanged") {
+    // The confs are empty at every committed fixture (the cpus floor
+    // binds), so this is the one run of these queries with the keys
+    // dataSizedShuffle emits above the floor. The docsets and labels
+    // are memoized per (app, dir): the conf'd pass reads a copy of the
+    // fixture, so its memo builds run under the conf too.
+    val sized = SparkEntry.specs.collect {
+      case (n, q) if (q.conf eq dedup.Dedup.pairShuffleConf) || (q.conf eq rel.Relational.wideAggConf) => n
+    }.toSeq.sorted
+    assert(sized === Seq("dedup_cluster_sizes", "dedup_containment", "dedup_near_apply",
+      "dedup_ngram_jaccard", "rel_dominant_supplier", "rel_sole_late_supplier",
+      "rel_supplier_parts", "text_ppl_buckets", "text_unigram_logprob"))
+    val (src, copy) = (Paths.get(dir), TempDir("graft-sized-fixture"))
+    Files.walk(src).skip(1).forEach(p => Files.copy(p, copy.resolve(src.relativize(p))))
+    val conf = QuerySpec.dataSizedShuffle("documents",
+      QuerySpec.dataTasks(dir, "documents", 1L) / 9)(copy.toString, 4)
+    assert(conf.keySet === Set("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled"))
+    assert(conf("spark.sql.shuffle.partitions").toInt > 4)
+    def rows(q: String, d: String) =
+      SparkEntry.queries(q)(spark, d).collect().map(_.toString).sorted.toSeq
+    for (q <- sized) {
+      val atDefault = rows(q, dir)
+      assert(Session.withScopedConf(spark, conf)(rows(q, copy.toString)) === atDefault, q)
+    }
+  }
+
   test("chi2_top_terms_jsonl ignores a complete-looking mirror left by an earlier JVM") {
     // Through r17 the mirror lived at tmpdir/graft_jsonl/<sanitized dir>
     // and any directory there holding _SUCCESS and malformed.json was

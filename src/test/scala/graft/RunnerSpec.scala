@@ -57,4 +57,17 @@ class RunnerSpec extends SparkSpec {
       "samples", "build_samples", "metrics", "errors", "sf"))
     assert(json.readTree(full).get("build_samples").get("q_ok").get(0).asDouble === 0.25)
   }
+
+  test("plan text renumbers lambda variables and drops call-site lines") {
+    val plan =
+      """Arguments: [doc_id#41L, kset#42], MapPartitionsRDD[150] at localCheckpoint at Dedup.scala:288, ExistingRDD
+        |Arguments: explode(flatten(transform(arr#29, lambdafunction(transform(slice(arr#29, (lambda y_24#30 + 2), size(arr#29, false)), lambdafunction(struct(doc_a, lambda x_17#31L, doc_b, lambda x_18#32L), lambda x_18#32L, false)), lambda x_17#31L, lambda y_24#30, false)))), false, [p#33]
+        |Output [1]: [aggregate(v#5, 0.0, lambdafunction((lambda x_4#35 + lambda y_27#36), lambda x_4#35, lambda y_27#36, false)) AS s#34]
+        |""".stripMargin
+    assert(Runner.renumber(plan) ===
+      """Arguments: [doc_id#1L, kset#2], MapPartitionsRDD[150] at localCheckpoint at Dedup.scala, ExistingRDD
+        |Arguments: explode(flatten(transform(arr#3, lambdafunction(transform(slice(arr#3, (lambda y_1#4 + 2), size(arr#3, false)), lambdafunction(struct(doc_a, lambda x_1#5L, doc_b, lambda x_2#6L), lambda x_2#6L, false)), lambda x_1#5L, lambda y_1#4, false)))), false, [p#7]
+        |Output [1]: [aggregate(v#8, 0.0, lambdafunction((lambda x_3#9 + lambda y_2#10), lambda x_3#9, lambda y_2#10, false)) AS s#11]
+        |""".stripMargin)
+  }
 }
