@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 
 /** The one loop over the registry that `Verify`, `Bench` and `PlanDump`
   * run, and RegistrySpec with them: a tool's session, its query
@@ -36,10 +38,10 @@ object Runner {
     * Spark starts, so a bad value fails once instead of in every
     * hash-consulting query.
     */
-  def apply(tool: String, conf: Map[String, String] = Map.empty): Runner = {
+  def apply(tool: String, conf: Map[String, String] = Map.empty,
+      cpus: Int = Session.cpus): Runner = {
     val prodHash = sys.env.get("SPARK_GRAFT_PRODUCTION_HASH")
       .map(v => Session.parseBool(v, "SPARK_GRAFT_PRODUCTION_HASH"))
-    val cpus = Session.cpus
     val spark = Session(s"graft-$tool", cpus, conf)
     prodHash.foreach(b => spark.conf.set(functions.PortableHash.ConfKey, b.toString))
     new Runner(tool, spark, cpus)
@@ -78,24 +80,46 @@ object Runner {
     case c => c.toString
   } + "\""
 
+  /** A plan's shuffle exchanges, broadcast exchanges and scans (file
+    * scans plus checkpointed-RDD scans), subqueries included. */
+  final case class Shape(shuffles: Int, broadcasts: Int, scans: Int) {
+    override def toString = s"shuffles=$shuffles broadcasts=$broadcasts scans=$scans"
+  }
+
+  /** The [[Shape]] of `df`'s plan as AQE first builds it (each
+    * `AdaptiveSparkPlanExec`'s `initialPlan`): the census runs nothing,
+    * and runtime statistics do not move it.
+    */
+  def shape(df: DataFrame): Shape = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.initialPlan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    val all = nodes(df.queryExecution.executedPlan)
+    Shape(all.count(_.isInstanceOf[ShuffleExchangeExec]),
+      all.count(_.isInstanceOf[BroadcastExchangeExec]),
+      all.count(p => p.isInstanceOf[FileSourceScanExec] || p.isInstanceOf[RDDScanExec]))
+  }
+
   /** The formatted physical plan, [[renumber]]ed. */
   def explain(df: DataFrame): String = renumber(
     df.queryExecution.explainString(ExplainMode.fromString("formatted")))
 
-  /** `plan` with expression ids (`#12`), exchange ids (`plan_id=34`)
-    * and lambda variables (`x_5`, `y_6`) renumbered from 1 in
-    * first-appearance order, and the line dropped from RDD call sites
-    * (`at Dedup.scala:288`). The ids come from JVM-wide counters and
-    * the lines move with every edit above the call; normalized, a
-    * regeneration diff shows only real plan changes.
+  /** `plan` with expression ids (`#12`), exchange ids (`plan_id=34`),
+    * lambda variables (`x_5`, `y_6`) and RDD ids (`MapPartitionsRDD[82]`)
+    * renumbered from 1 in first-appearance order, and the line dropped
+    * from RDD call sites (`at Dedup.scala:288`). The ids come from JVM-
+    * and context-wide counters and the lines move with every edit above
+    * the call; normalized, a regeneration diff shows only real plan
+    * changes.
     */
   private[graft] def renumber(plan: String): String =
-    Seq("""#(\d+)""" -> "#", """plan_id=(\d+)""" -> "plan_id=",
-        """\bx_(\d+)\b""" -> "x_", """\by_(\d+)\b""" -> "y_")
+    Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """\b(x_)(\d+)\b""", """\b(y_)(\d+)\b""",
+        """(RDD\[)(\d+)(?=\])""")
       .foldLeft(""" at (\w+\.scala):\d+""".r.replaceAllIn(plan, " at $1")) {
-        case (text, (pattern, prefix)) =>
+        case (text, pattern) =>
           val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
           pattern.r.replaceAllIn(text, m =>
-            prefix + ids.getOrElseUpdate(m.group(1), ids.size + 1))
+            m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1))
       }
 }

@@ -12,6 +12,11 @@ object Session {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** The slot count the test suites and docs/PLANS.md's ledger run at,
+    * so partition-dependent plans and results read the same on any host.
+    */
+  val PinnedCpus = 4
+
   /** Builds (or returns the running) session. `conf` is applied after
     * the defaults, so it may override any of them (e.g. `spark.master`).
     */

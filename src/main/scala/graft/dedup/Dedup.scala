@@ -207,7 +207,9 @@ object Dedup {
     lshBuckets(minhashSignaturesKernel(toksOf(d)))
 
   /** Distinct candidate pairs (doc_a < doc_b) sharing any LSH bucket,
-    * with oversized buckets dropped before the pair expansion.
+    * with oversized buckets dropped before the pair expansion. Signing
+    * is one narrow map ([[minhashSignaturesKernel]]), so the query's
+    * first shuffle is the (band, sig) bucket aggregate.
     */
   def minhashCandidates(d: DataFrame,
       maxBucketSize: Int = MaxBucketSize): DataFrame =
@@ -880,24 +882,15 @@ object Dedup {
     *
     * Scale notes: driver-COORDINATED (bounded Spark jobs at build),
     * never driver-SIDED — no edge or label ever crosses to the driver.
-    * With `checkpointDir` set, rounds cut lineage via RELIABLE
-    * `checkpoint` under that directory (HDFS-able — survives executor
-    * death, the right mode for a long multi-round run on a real
-    * cluster); locally the default `localCheckpoint` (block-manager)
-    * avoids the per-round disk write. Either way the blocks are
-    * RDD-level, not SQL cache, so the registry's
-    * no-cached-state-after-action contract holds.
+    * Rounds cut lineage via `localCheckpoint` (block-manager): no
+    * per-round disk write, and the blocks are RDD-level, not SQL cache,
+    * so the registry's no-cached-state-after-action contract holds.
     */
-  def nearDupLabels(pairs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def mat(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
+  def nearDupLabels(pairs: DataFrame): DataFrame = {
     val e = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val edges = mat(e.unionByName(e.select(col("v").as("u"), col("u").as("v"))))
-    var lab = mat(edges.select(col("u").as("node")).distinct()
-      .withColumn("lbl", col("node")))
+    val edges = e.unionByName(e.select(col("v").as("u"), col("u").as("v"))).localCheckpoint()
+    var lab = edges.select(col("u").as("node")).distinct()
+      .withColumn("lbl", col("node")).localCheckpoint()
     var converged = false
     var round = 0
     while (!converged && round < MaxClusterRounds) {
@@ -908,10 +901,10 @@ object Dedup {
         .select(col("node"), col("hop_lbl").as("lbl"))
       val cand = lab.unionByName(nbr).unionByName(hop)
         .groupBy("node").agg(min("lbl").as("lbl"))
-      val next = mat(lab.select(col("node"), col("lbl").as("prev"))
+      val next = lab.select(col("node"), col("lbl").as("prev"))
         .join(cand, "node")
         .select(col("node"), col("lbl"),
-          (col("lbl") < col("prev")).as("changed")))
+          (col("lbl") < col("prev")).as("changed")).localCheckpoint()
       converged = next.filter(col("changed")).isEmpty // reads the blocks
       lab = next.select("node", "lbl")
       round += 1
@@ -1257,7 +1250,7 @@ object Dedup {
     * `dedup_cluster_sizes`: the shared label table ([[labelsFor]]).
     */
   private val labelsBuild = QuerySpec.Memoized(
-    "NOTHING to the driver: the FIXPOINT label-propagation rounds run as Spark jobs on first build per fixture (edges + each round's node-bounded label table materialized via `localCheckpoint`/reliable `checkpoint`, convergence decided by a changed-flag probe over the fresh blocks); the final labels enter one corpus left-join lazily, and `dedup_near_apply` and `dedup_cluster_sizes` share the cached label table per (app, dir)",
+    "NOTHING to the driver: the FIXPOINT label-propagation rounds run as Spark jobs on first build per fixture (edges + each round's node-bounded label table materialized via `localCheckpoint`, convergence decided by a changed-flag probe over the fresh blocks); the final labels enter one corpus left-join lazily, and `dedup_near_apply` and `dedup_cluster_sizes` share the cached label table per (app, dir)",
     "O(log diameter)+1 distributed jobs on first build; labels ≤ 2·pairs nodes")
 
   /** Reduce-task sizing for [[pairShuffleConf]]: one task per MB of

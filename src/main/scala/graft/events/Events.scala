@@ -43,7 +43,7 @@ object Events {
   /** The gap-based session table behind `events_sessionize` and
     * `events_top_sessions`: lag → gap flag → running-sum session id
     * (two stacked window passes over ONE user_id exchange), then one
-    * aggregate per (user, session).
+    * aggregate per (user, session) on that same partitioning.
     */
   private def sessions(s: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))

@@ -18,9 +18,10 @@ import graft.stats.{ChiSquare, Contingency, TopK}
   * one wide shuffle for the contingency counts (the term-cat aggregate,
   * keyed by term so the term-total window reuses it; see
   * [[graft.functions.NarrowAggExchange]]), one scan and shuffle for the
-  * category totals that N reuses, two broadcasts (category totals, N),
-  * then the group-limited window; only its survivors meet in one
-  * partition for the final order and the formatted lines.
+  * category totals, which gather in one task that also sums them into N,
+  * so one broadcast carries both; then the group-limited window. Only
+  * its survivors meet in one partition for the final order and the
+  * formatted lines.
   */
 object ChiSquarePipeline {
 

@@ -594,7 +594,8 @@ object Relational {
     // brand∧size branches; lineitem: the quantity envelope 1..30) —
     // both reach the scans as pushed filters (RelationalSpec pins it) —
     // and the exact three-branch predicate runs as the post-join
-    // residual. One aggregate row out.
+    // residual. Without the hulls both scans read everything and the OR
+    // evaluates on the full join output. One aggregate row out.
     "rel_disjunctive_revenue" -> QuerySpec((s, dir) => {
       val partHull =
         (col("p_brand") === "Brand#12" && col("p_size").between(1, 5)) ||

@@ -1309,29 +1309,22 @@ object Similarity {
       build = QuerySpec.Eager(
         "the exact top-k side input both ANN variants are scored against (it composes `ivfTopK`, so it also performs the IVF sample collect)",
         "NumQueries·TopK = 50 rows")),
-    // Corpus-level near-dup pairs: per-bucket self-join + exact rescore.
-    // Oversized buckets (degenerate embedding clusters — zero vectors,
-    // templated content) are dropped BEFORE the quadratic self-join,
-    // the same cap discipline as the dedup candidate generators; the
-    // size pass counts only (never collects vectors), and the kept-
-    // bucket list is ≤2^NumPlanes rows → always broadcastable. At real
-    // scale the primary lever is NumPlanes itself (keep avg bucket size
-    // |corpus|/2^planes bounded); the cap is the hard stop under skew.
-    // MaxNearDupBucket does not bind on the fixtures, so results are
-    // unchanged — the oracle applies the identical HAVING cap.
+    // Corpus-level near-dup pairs: in-bucket candidates + exact rescore.
+    // Pairs expand through `Candidates.inBucket`, the dedup generators'
+    // step and cap, so `sim_bucket_stats`'s `embedding_lsh` row audits
+    // exactly what the cap drops (degenerate embedding clusters — zero
+    // vectors, templated content); vectors attach once per candidate
+    // (`Candidates.joinBack`). At real scale the primary lever is
+    // NumPlanes (keep avg bucket size |corpus|/2^planes bounded); the cap
+    // is the hard stop under skew. MaxNearDupBucket does not bind on the
+    // fixtures; the oracle applies the identical HAVING cap.
     "sim_embedding_neardup" -> QuerySpec((s, dir) => {
       val c = prepared(s, dir, withBucket = true)
-      val small = c.groupBy("bucket").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= MaxNearDupBucket).select("bucket")
-      val kept = c.join(broadcast(small), Seq("bucket"))
-      val a = kept.select(col("bucket"), col("vec_id").as("vec_a"),
-        col("v").as("va"), col("nrm").as("na"))
-      val b = kept.select(col("bucket"), col("vec_id").as("vec_b"),
-        col("v").as("vb"), col("nrm").as("nb"))
-      a.join(b, Seq("bucket"))
-        .filter(col("vec_a") < col("vec_b"))
-        .select(col("vec_a"), col("vec_b"),
-          cosine(col("va"), col("vb"), col("na"), col("nb")).as("cos"))
+      val pairs = graft.dedup.Candidates.inBucket(c, Seq("bucket"), col("vec_id"),
+        MaxNearDupBucket, "doc_a", "doc_b")
+      graft.dedup.Candidates.joinBack(pairs, c.withColumnRenamed("vec_id", "doc_id"), "v", "nrm")
+        .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"),
+          cosine(col("v_a"), col("v_b"), col("nrm_a"), col("nrm_b")).as("cos"))
         .filter(col("cos") >= NearDupThreshold)
         .orderBy("vec_a", "vec_b")
     },

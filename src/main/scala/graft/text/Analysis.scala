@@ -374,10 +374,13 @@ object Analysis {
     * documented scoring choice, not an approximation.
     *
     * Scale notes: LINEAR single-consumer chain — one corpus scan. tf is
-    * one (doc_id, term) shuffle off the exploded token stream (map-side
-    * partial counts collapse repeats); df attaches via a COUNT WINDOW
-    * over term on the tf rows (one row per distinct (doc,term)) rather
-    * than a df-aggregate joined back — a tf ⋈ df self-derived join
+    * one shuffle off the exploded token stream (map-side partial counts
+    * collapse repeats), keyed by term alone
+    * ([[graft.functions.NarrowAggExchange]] drops the hash(doc_id, term)
+    * exchange the aggregate would otherwise get); df attaches via a
+    * COUNT WINDOW over term on that same partitioning, over the tf rows
+    * (one row per distinct (doc,term)), rather than a df-aggregate
+    * joined back — a tf ⋈ df self-derived join
     * would plan the scan+tokenize+tf subtree twice (HOF lambdas
     * upstream defeat exchange-reuse canonicalization, measured on this
     * very plan); the window form makes single materialization hold by

@@ -5,10 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.col
 
 /** Whole-registry integrity net: every `SparkEntry.queries` entry must
-  * execute at sf0.001, return rows, and never plan an unbounded
-  * cartesian product (its oracle twin is a mandatory `QuerySpec`
-  * field). Catches a broken registration or a plan regression in ANY
-  * query before the driver does.
+  * execute at sf0.001, return rows, keep the plan shape its row in the
+  * docs/PLANS.md ledger records, and never plan an unbounded cartesian
+  * product (its oracle twin is a mandatory `QuerySpec` field). Catches
+  * a broken registration or a plan regression in ANY query before the
+  * driver does.
   */
 class RegistrySpec extends SparkSpec {
 
@@ -41,12 +42,18 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("every registered query executes at sf0.001 with rows and sane plans") {
-    // the per-query run Verify uses: each query under its scoped conf
-    val runner = new Runner("registry", spark, 4)
-    val failures = Runner.select(None).sorted.flatMap { name =>
+    // the per-query run Verify uses: each query under its scoped conf,
+    // at the slot count PlanDump builds the ledger on
+    val runner = new Runner("registry", spark, Session.PinnedCpus)
+    val ledger = PlanDump.ledger(Files.readString(Paths.get(PlanDump.Path)))
+    val regenerate = s"""run sbt "runMain graft.PlanDump" to regenerate ${PlanDump.Path}"""
+    val stale = (ledger.keySet -- SparkEntry.queries.keySet).toSeq.sorted
+      .map(n => s"$n: ledger row for an unregistered query; $regenerate")
+    val failures = stale ++ Runner.select(None).sorted.flatMap { name =>
       runner.run(name, dir) { build =>
         val df = build()
         val plan = df.queryExecution.executedPlan.toString
+        val shape = Runner.shape(df)
         val n = df.count()
         // No registered query may leave persisted state behind after
         // its action: internally-persisted frames must be unpersisted
@@ -62,7 +69,12 @@ class RegistrySpec extends SparkSpec {
           // broadcast NL joins are fine (bounded build side: query
           // batches, centroids); an unbounded CartesianProduct never is
           if (plan.contains("CartesianProduct"))
-            Some(s"$name: CartesianProduct in plan") else None
+            Some(s"$name: CartesianProduct in plan") else None,
+          ledger.get(name) match {
+            case Some(`shape`) => None
+            case row => Some(s"$name: plan has $shape, ledger " +
+              row.fold("has no row")(r => s"has $r") + s"; $regenerate")
+          }
         ).flatten
       }.fold(msg => Seq(s"$name: ${msg.take(200)}"), identity)
     }

@@ -1,10 +1,13 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions.broadcast
 import scala.jdk.CollectionConverters._
 
 /** The registry runner's policy: selection, the scoped conf around a
-  * failing query, the JSON escaper and Bench's handshake line.
+  * failing query, the JSON escaper, Bench's handshake line, the plan
+  * census and the plan text's renumbering.
   */
 class RunnerSpec extends SparkSpec {
 
@@ -58,6 +61,27 @@ class RunnerSpec extends SparkSpec {
     assert(json.readTree(full).get("build_samples").get("q_ok").get(0).asDouble === 0.25)
   }
 
+  test("the census counts a parquet aggregate's shuffle and scan") {
+    val s = spark; import s.implicits._
+    val path = TempDir("graft-census").resolve("t.parquet").toString
+    Seq((1, "a"), (2, "b"), (3, "a")).toDF("n", "k").write.parquet(path)
+    val df = spark.read.parquet(path).groupBy("k").count()
+    assert(df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+    assert(Runner.shape(df) === Runner.Shape(shuffles = 1, broadcasts = 0, scans = 1))
+  }
+
+  test("the census counts a hinted broadcast join's broadcast") {
+    val df = spark.range(100).join(broadcast(spark.range(10)), "id")
+    assert(Runner.shape(df).broadcasts === 1)
+  }
+
+  test("the census of a local relation with no AQE wrapper is empty") {
+    val s = spark; import s.implicits._
+    val df = Seq(1, 2, 3).toDF("n").filter($"n" > 1)
+    assert(!df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+    assert(Runner.shape(df) === Runner.Shape(0, 0, 0))
+  }
+
   test("plan text renumbers lambda variables and drops call-site lines") {
     val plan =
       """Arguments: [doc_id#41L, kset#42], MapPartitionsRDD[150] at localCheckpoint at Dedup.scala:288, ExistingRDD
@@ -65,7 +89,7 @@ class RunnerSpec extends SparkSpec {
         |Output [1]: [aggregate(v#5, 0.0, lambdafunction((lambda x_4#35 + lambda y_27#36), lambda x_4#35, lambda y_27#36, false)) AS s#34]
         |""".stripMargin
     assert(Runner.renumber(plan) ===
-      """Arguments: [doc_id#1L, kset#2], MapPartitionsRDD[150] at localCheckpoint at Dedup.scala, ExistingRDD
+      """Arguments: [doc_id#1L, kset#2], MapPartitionsRDD[1] at localCheckpoint at Dedup.scala, ExistingRDD
         |Arguments: explode(flatten(transform(arr#3, lambdafunction(transform(slice(arr#3, (lambda y_1#4 + 2), size(arr#3, false)), lambdafunction(struct(doc_a, lambda x_1#5L, doc_b, lambda x_2#6L), lambda x_2#6L, false)), lambda x_1#5L, lambda y_1#4, false)))), false, [p#7]
         |Output [1]: [aggregate(v#8, 0.0, lambdafunction((lambda x_3#9 + lambda y_2#10), lambda x_3#9, lambda y_2#10, false)) AS s#11]
         |""".stripMargin)

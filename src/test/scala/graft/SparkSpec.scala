@@ -20,10 +20,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  /** Four slots whatever the host, so partition-dependent plans and
-    * results read the same everywhere.
-    */
-  lazy val session: SparkSession = Session("graft-test", cpus = 4,
+  /** [[Session.PinnedCpus]] slots whatever the host. */
+  lazy val session: SparkSession = Session("graft-test", cpus = Session.PinnedCpus,
     conf = Map("spark.sql.warehouse.dir" ->
       TempDir("graft-warehouse").toString))
 }

@@ -49,21 +49,6 @@ class DedupSpec extends SparkSpec {
       "distributed fixpoint diverged from driver fixpoint on the deep path")
   }
 
-  test("nearDupLabels with a checkpoint dir takes the reliable-checkpoint path") {
-    val s = spark; import s.implicits._
-    val ckpt = graft.TempDir("graft-ckpt").toString
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val lab = Dedup.nearDupLabels(pairs, checkpointDir = Some(ckpt))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lab == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    // reliable checkpoint data must actually exist under the dir — the
-    // recovery path a cluster run needs when an executor dies mid-rounds
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-    val nFiles = try files.filter(java.nio.file.Files.isRegularFile(_)).count()
-      finally files.close()
-    assert(nFiles > 0, "no reliable checkpoint files written under the dir")
-  }
-
   test("near-dup apply keeps one doc per verified cluster") {
     // verified pairs at 0.8: 0/1 identical (jaccard 1.0) and doc 2's
     // one-word change shares 9/11 trigrams = 0.818 — all three verify
